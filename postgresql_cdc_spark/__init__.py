@@ -53,15 +53,17 @@ def ensure_self_contained_pickling() -> None:
         return
     # Only modules whose functions/classes actually execute inside Python
     # workers: the array-literal parser + its UDF wrapper, the multimodal
-    # Arrow kernels, the streaming data source (+ its pure decoder), and the
-    # stateful dedup. Pure-JVM plan builders never reach a Python worker.
+    # Arrow kernels, the streaming data source (+ its pure decoder and the
+    # core count its batch planner sizes by), and the stateful dedup.
+    # Pure-JVM plan builders never reach a Python worker.
+    from postgresql_cdc_spark import session
     from postgresql_cdc_spark.functions import pg_array_parser, pg_arrays
     from postgresql_cdc_spark.operators import multimodal
     from postgresql_cdc_spark.sources import pgoutput
     from postgresql_cdc_spark.streaming import source, stateful
 
-    for mod in (pg_array_parser, pg_arrays, pgoutput, source, stateful,
-                multimodal):
+    for mod in (pg_array_parser, pg_arrays, pgoutput, session, source,
+                stateful, multimodal):
         try:
             register_pickle_by_value(mod)
         except Exception:  # noqa: BLE001 - best-effort robustness shim

@@ -41,9 +41,10 @@ The newest chunk never merges — relay numbering continues from it.
 from __future__ import annotations
 
 import os
-from typing import List, Optional
+from typing import List
 
 from postgresql_cdc_spark.streaming.source import (
+    _chunk_names,
     _fsync_dir,
     _load_sidecar,
     _write_sidecar,
@@ -56,7 +57,7 @@ def compact_wal_archive(
     """Merge adjacent indexed chunks into runs of up to
     ``target_chunk_bytes``; returns ``{merged_runs, chunks_before,
     chunks_after, merged_bytes}``."""
-    chunks = sorted(n for n in os.listdir(path) if n.endswith(".wal"))
+    chunks = _chunk_names(path)
     before = len(chunks)
     runs: List[List[str]] = []
     run: List[str] = []
@@ -69,16 +70,11 @@ def compact_wal_archive(
         run, run_bytes = [], 0
 
     for name in chunks[:-1]:  # the newest chunk is always left alone
-        fp = os.path.join(path, name)
-        sc = _load_sidecar(fp)
-        size: Optional[int]
-        try:
-            size = os.path.getsize(fp)
-        except OSError:
-            size = None
-        if sc is None or size is None or sc["size"] != size:
+        sc = _load_sidecar(os.path.join(path, name))
+        if sc is None:
             flush()  # unindexed / stale: opaque, never merged
             continue
+        size = sc["size"]
         if run and run_bytes + size > target_chunk_bytes:
             flush()
         run.append(name)

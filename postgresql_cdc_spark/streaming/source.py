@@ -13,9 +13,11 @@ streaming contract:
   ``(op, schema, table, relation_id, lsn, txn_id, columns)``;
 - ``commit(offset)`` persists the flush LSN (the ``setFlushedLSN`` analog) so
   the producer may discard WAL ≤ LSN;
-- the stream is a single input partition — the replication protocol is one
-  ordered socket (SURVEY.md §7); parallelism begins downstream
-  (``repartition`` after ingest keeps decode off the hot path).
+- a micro-batch is a single input partition — the replication protocol is
+  one ordered socket (SURVEY.md §7), and so is the relay feeding the
+  archive. A batch replay of the archive (``spark.read``) splits it at
+  indexed chunk boundaries into up to one partition per core, each starting
+  mid-archive from the sidecar state at its boundary.
 
 Two transports:
 
@@ -43,10 +45,13 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from postgresql_cdc_spark.session import default_parallelism
 from postgresql_cdc_spark.sources.pgoutput import (
     ChangeRecord,
+    ColumnMeta,
     PgOutputDecoder,
     ProtocolError,
+    Relation,
     TxBegin,
     TxCommit,
 )
@@ -61,6 +66,11 @@ ENVELOPE_DDL = (
 # workers need no importable package) and Struct objects cannot pickle.
 _FRAME_FMT = ">qi"
 _FRAME_SIZE = struct.calcsize(_FRAME_FMT)
+# The end LSN of an open-ended read: past any LSN an archive can hold.
+_OPEN_END = 1 << 62
+# The message kinds that carry registry or transaction state. Frames a scan
+# only steps over (at or behind its cursor) decode just these.
+_STATE_TAGS = (b"R", b"B", b"C")
 
 
 def write_wal_archive(path: str, frames: List[Tuple[int, bytes]],
@@ -75,40 +85,60 @@ def write_wal_archive(path: str, frames: List[Tuple[int, bytes]],
     return fp
 
 
-def read_wal_frames(path: str) -> Iterator[Tuple[int, bytes]]:
-    """All frames in the archive in LSN order (chunks sorted by name, frames
-    in file order — producers write in commit order, like WAL itself).
+def _chunk_frames(name: str, data: bytes) -> Iterator[Tuple[int, bytes, int]]:
+    """The archive's one frame parser: ``(lsn, payload, end)`` for each
+    length-framed record of one chunk, ``end`` being the byte offset just
+    past the record. A chunk was parsed cleanly to its end exactly when the
+    last ``end`` equals ``len(data)``.
 
     A chunk may end in a torn frame (relay crash mid-write). Such a frame was
-    never acked — the transport replays it into the next chunk — so the torn
+    never acked — the transport replays it into a later chunk — so the torn
     tail is skipped with a warning rather than yielded as a silently short
     payload or a struct error.
     """
     import warnings
 
-    for name in sorted(os.listdir(path)):
-        if not name.endswith(".wal"):
-            continue
-        with open(os.path.join(path, name), "rb") as f:
-            data = f.read()
-        pos = 0
-        while pos < len(data):
-            if pos + _FRAME_SIZE > len(data):
-                warnings.warn(
-                    f"wal archive {name}: torn frame header at byte {pos}; "
-                    "skipping tail (unacked frames replay into a later chunk)"
-                )
-                break
-            lsn, ln = struct.unpack_from(_FRAME_FMT, data, pos)
-            pos += _FRAME_SIZE
-            if ln < 0 or pos + ln > len(data):
-                warnings.warn(
-                    f"wal archive {name}: torn frame payload at byte {pos} "
-                    f"(declared {ln}, have {len(data) - pos}); skipping tail"
-                )
-                break
-            yield lsn, data[pos:pos + ln]
-            pos += ln
+    pos = 0
+    while pos < len(data):
+        if pos + _FRAME_SIZE > len(data):
+            warnings.warn(
+                f"wal archive {name}: torn frame header at byte {pos}; "
+                "skipping tail (unacked frames replay into a later chunk)"
+            )
+            return
+        lsn, ln = struct.unpack_from(_FRAME_FMT, data, pos)
+        pos += _FRAME_SIZE
+        if ln < 0 or pos + ln > len(data):
+            warnings.warn(
+                f"wal archive {name}: torn frame payload at byte {pos} "
+                f"(declared {ln}, have {len(data) - pos}); skipping tail"
+            )
+            return
+        yield lsn, data[pos:pos + ln], pos + ln
+        pos += ln
+
+
+def _chunk_names(path: str) -> List[str]:
+    """Archive chunk names in LSN order (producers write in commit order,
+    like WAL itself, and number chunks so name order is LSN order)."""
+    return sorted(n for n in os.listdir(path) if n.endswith(".wal"))
+
+
+def read_wal_frames(path: str) -> Iterator[Tuple[int, bytes]]:
+    """All frames in the archive in LSN order, each LSN once.
+
+    A frame at or behind the last yielded LSN is dropped: WAL LSNs strictly
+    increase, so it is a duplicate copy — a re-shipped unacked frame, or a
+    leftover constituent of a chunk merge that crashed before its unlinks
+    (``archive_maintenance``). ``scan_wal_messages`` applies the same guard.
+    """
+    last = -1
+    for name in _chunk_names(path):
+        data = _read_chunk_bytes(os.path.join(path, name))
+        for lsn, payload, _ in _chunk_frames(name, data):
+            if lsn > last:
+                last = lsn
+                yield lsn, payload
 
 
 @dataclass
@@ -133,12 +163,12 @@ class _WalPartition(InputPartition):
 # walks the chunk list from the head, covering each prior chunk either by
 # decoding it or via a sidecar that itself carried the cumulative registry.
 # Sidecar writes are atomic (tmp + rename) and best-effort (a read-only
-# archive simply never gets the speedup); only latestOffset() — driver-side,
-# once per batch — writes them, executors' read() only consumes.
+# archive simply never gets the speedup). Only driver-side calls write them:
+# latestOffset() once per micro-batch, and batch planning
+# (WalArchiveBatchReader.partitions) once per read. Executors' read() only
+# consumes them.
 
 def _registry_to_json(relations) -> dict:
-    from postgresql_cdc_spark.sources.pgoutput import Relation  # noqa: F401
-
     return {
         str(rid): {
             "schema": rel.schema,
@@ -151,8 +181,6 @@ def _registry_to_json(relations) -> dict:
 
 
 def _registry_from_json(obj: dict) -> dict:
-    from postgresql_cdc_spark.sources.pgoutput import ColumnMeta, Relation
-
     out = {}
     for rid, r in obj.items():
         out[int(rid)] = Relation(
@@ -166,11 +194,16 @@ def _registry_from_json(obj: dict) -> dict:
 
 
 def _load_sidecar(chunk_fp: str) -> Optional[dict]:
+    """The chunk's sidecar, or None if it is missing, unparseable, or
+    stale (chunks are append-only: a size mismatch means the chunk grew
+    after it was indexed)."""
     try:
         with open(chunk_fp + ".idx") as f:
             d = json.load(f)
-        if isinstance(d, dict) and {"size", "max_lsn", "txn_open",
-                                    "txn_id", "registry"} <= d.keys():
+        if (isinstance(d, dict)
+                and {"size", "max_lsn", "txn_open", "txn_id",
+                     "registry"} <= d.keys()
+                and d["size"] == os.path.getsize(chunk_fp)):
             return d
     except (OSError, ValueError):
         pass
@@ -281,18 +314,11 @@ def prune_wal_archive(path: str, upto_lsn: Optional[int] = None) -> dict:
                 return {"pruned_chunks": 0, "pruned_bytes": 0,
                         "base_lsn": None}
         upto_lsn = min(flushed)
-    chunks = sorted(n for n in os.listdir(path) if n.endswith(".wal"))
+    chunks = _chunk_names(path)
     prunable: List[str] = []
     last_sidecar: Optional[dict] = None
     for name in chunks[:-1]:  # the newest chunk is always kept
-        fp = os.path.join(path, name)
-        sc = _load_sidecar(fp)
-        if sc is not None:
-            try:
-                if sc["size"] != os.path.getsize(fp):
-                    sc = None
-            except OSError:
-                sc = None
+        sc = _load_sidecar(os.path.join(path, name))
         if sc is None or sc["max_lsn"] > upto_lsn:
             break  # unindexed or still-needed: keep it and everything after
         prunable.append(name)
@@ -347,15 +373,19 @@ def prune_wal_archive(path: str, upto_lsn: Optional[int] = None) -> dict:
 def scan_wal_messages(path: str, decoder, state: dict,
                       skip_upto_lsn: int = -1,
                       write_index: bool = False) -> Iterator[Tuple[int, object]]:
-    """Decode the archive in LSN order, yielding ``(lsn, msg)`` per frame.
+    """Decode the archive in LSN order, yielding ``(lsn, msg)`` for every
+    frame after ``skip_upto_lsn``.
 
     ``state`` (``{"txn_open": bool, "txn_id": int}``) is updated in place
     BEFORE each yield and when a chunk is skipped, so callers always see the
-    transaction state as of the yielded frame. Chunks wholly at or below
-    ``skip_upto_lsn`` with a valid sidecar are skipped: their registry
-    snapshot merges into ``decoder.relations`` and their txn state replaces
-    ``state`` — byte-identical outcomes to decoding them, minus the I/O.
-    With ``write_index`` a sidecar is written for every cleanly-parsed,
+    transaction state as of the yielded frame. Frames at or below
+    ``skip_upto_lsn`` only advance that state and the registry: they are not
+    yielded, and of them only RELATION, BEGIN and COMMIT are decoded (DML is
+    stepped over). Chunks wholly at or below ``skip_upto_lsn`` with a valid
+    sidecar are not even read: their registry snapshot merges into
+    ``decoder.relations`` and their txn state replaces ``state`` —
+    byte-identical outcomes to decoding them, minus the I/O. With
+    ``write_index`` a sidecar is written for every cleanly-parsed,
     fully-consumed chunk (torn-tail chunks and chunks the caller abandons
     mid-iteration are left unindexed).
 
@@ -387,26 +417,20 @@ def scan_wal_messages(path: str, decoder, state: dict,
                 f"{base_lsn}) — the requested WAL has already been removed"
             )
 
+    def _restore(snap: dict, max_lsn: int) -> None:
+        decoder.relations.update(_registry_from_json(snap["registry"]))
+        state["txn_open"] = bool(snap["txn_open"])
+        state["txn_id"] = int(snap["txn_id"])
+        state["max_lsn"] = max_lsn
+
     base = _load_base_snapshot(path)
     if base is not None:
         _guard_pruned_start(int(base["base_lsn"]))
-        decoder.relations.update(_registry_from_json(base["registry"]))
-        state["txn_open"] = bool(base["txn_open"])
-        state["txn_id"] = int(base["txn_id"])
-        state["max_lsn"] = int(base["base_lsn"])
+        _restore(base, int(base["base_lsn"]))
 
-    for name in sorted(os.listdir(path)):
-        if not name.endswith(".wal"):
-            continue
+    for name in _chunk_names(path):
         fp = os.path.join(path, name)
         sidecar = _load_sidecar(fp)
-        if sidecar is not None:
-            try:
-                size_now = os.path.getsize(fp)
-            except OSError:
-                size_now = -1
-            if sidecar["size"] != size_now:
-                sidecar = None  # chunk grew (append) — stale, full rescan
         if sidecar is not None and sidecar["max_lsn"] <= skip_upto_lsn:
             # Monotone application only: a sidecar wholly BEHIND the scan
             # position (a compaction crash window leaves the merged chunk's
@@ -414,12 +438,7 @@ def scan_wal_messages(path: str, decoder, state: dict,
             # regress txn state / max_lsn — its registry is a subset of
             # what the scan already carries, so there is nothing to apply.
             if int(sidecar["max_lsn"]) > state.get("max_lsn", -1):
-                decoder.relations.update(
-                    _registry_from_json(sidecar["registry"])
-                )
-                state["txn_open"] = bool(sidecar["txn_open"])
-                state["txn_id"] = int(sidecar["txn_id"])
-                state["max_lsn"] = int(sidecar["max_lsn"])
+                _restore(sidecar, int(sidecar["max_lsn"]))
             continue
         try:
             data = _read_chunk_bytes(fp)
@@ -439,46 +458,24 @@ def scan_wal_messages(path: str, decoder, state: dict,
             if nb_lsn <= state.get("max_lsn", -1):
                 raise  # deletion not explained by retention — real I/O loss
             _guard_pruned_start(nb_lsn)
-            decoder.relations.update(_registry_from_json(nb["registry"]))
-            state["txn_open"] = bool(nb["txn_open"])
-            state["txn_id"] = int(nb["txn_id"])
-            state["max_lsn"] = nb_lsn
+            _restore(nb, nb_lsn)
             continue
-        pos = 0
-        clean = True
-        saw_frame = False
+        end = 0
+        advanced = False  # some frame moved the scan position
 
         def _index_chunk() -> None:
-            _write_sidecar(fp, {
-                "size": len(data),
-                "max_lsn": state["max_lsn"],
-                "txn_open": state["txn_open"],
-                "txn_id": state["txn_id"],
-                "registry": _registry_to_json(decoder.relations),
-            })
+            # only a chunk parsed cleanly to its last byte gets an index
+            if write_index and advanced and end == len(data):
+                _write_sidecar(fp, {
+                    "size": len(data),
+                    "max_lsn": state["max_lsn"],
+                    "txn_open": state["txn_open"],
+                    "txn_id": state["txn_id"],
+                    "registry": _registry_to_json(decoder.relations),
+                })
 
         try:
-            while pos < len(data):
-                if pos + _FRAME_SIZE > len(data):
-                    warnings.warn(
-                        f"wal archive {name}: torn frame header at byte {pos};"
-                        " skipping tail (unacked frames replay into a later "
-                        "chunk)"
-                    )
-                    clean = False
-                    break
-                lsn, ln = struct.unpack_from(_FRAME_FMT, data, pos)
-                pos += _FRAME_SIZE
-                if ln < 0 or pos + ln > len(data):
-                    warnings.warn(
-                        f"wal archive {name}: torn frame payload at byte {pos}"
-                        f" (declared {ln}, have {len(data) - pos}); skipping "
-                        "tail"
-                    )
-                    clean = False
-                    break
-                msg = decoder.decode(data[pos:pos + ln])
-                pos += ln
+            for lsn, payload, end in _chunk_frames(name, data):
                 if lsn <= state.get("max_lsn", -1):
                     # LSN-monotonicity guard: WAL LSNs strictly increase, so
                     # a frame at or behind the scan position is a DUPLICATE
@@ -486,28 +483,96 @@ def scan_wal_messages(path: str, decoder, state: dict,
                     # crash window can leave a merged chunk's constituents
                     # (or a pruned chunk) on disk alongside the state that
                     # already covers them. The first copy applied every
-                    # state transition; replaying it would double-emit.
-                    # (decode above is idempotent: identical bytes re-apply
-                    # identical RELATION metadata.)
+                    # state transition; replaying it would double-emit (or
+                    # re-apply a RELATION a later one superseded).
                     continue
+                if lsn > skip_upto_lsn or payload[:1] in _STATE_TAGS:
+                    msg = decoder.decode(payload)
+                else:
+                    msg = None  # DML behind the cursor: nothing to emit
                 if isinstance(msg, TxBegin):
                     state["txn_open"] = True
                     state["txn_id"] = msg.xid
                 elif isinstance(msg, TxCommit):
                     state["txn_open"] = False
                     state["txn_id"] = -1
-                saw_frame = True
+                advanced = True
                 state["max_lsn"] = lsn
-                yield lsn, msg
+                if lsn > skip_upto_lsn:
+                    yield lsn, msg
         except GeneratorExit:
             # A caller whose budget lands exactly on a chunk's last frame
             # breaks right after that yield — the chunk IS fully parsed, so
-            # still index it; a mid-chunk abandon (pos < size) is not.
-            if write_index and clean and saw_frame and pos >= len(data):
-                _index_chunk()
-            raise
-        if write_index and clean and saw_frame:
+            # still index it; a mid-chunk abandon (end < size) is not.
             _index_chunk()
+            raise
+        _index_chunk()
+
+
+def _chunk_cuts(path: str) -> Tuple[List[Tuple[int, int]], int]:
+    """``([(bytes through chunk, max LSN)], total bytes)``: the points after
+    indexed chunks where a replay may start mid-archive from the sidecar
+    state. Cut LSNs are a running max from the retention head, so they
+    strictly increase even across a compaction crash window's leftover
+    constituents; no cut follows an unindexed chunk."""
+    base = _load_base_snapshot(path)
+    hi = int(base["base_lsn"]) if base is not None else -1
+    total = 0
+    cuts: List[Tuple[int, int]] = []
+    for name in _chunk_names(path):
+        fp = os.path.join(path, name)
+        sidecar = _load_sidecar(fp)
+        try:
+            total += os.path.getsize(fp)
+        except OSError:  # pruned since the listing
+            continue
+        if sidecar is not None and int(sidecar["max_lsn"]) > hi:
+            hi = int(sidecar["max_lsn"])
+            cuts.append((total, hi))
+    return cuts, total
+
+
+def _split_lsns(cuts: List[Tuple[int, int]], total: int, n: int) -> List[int]:
+    """At most ``n - 1`` of the cut LSNs, splitting the archive into runs of
+    roughly equal bytes: each cut is the one nearest an equal share of the
+    bytes after the previous cut. A cut at the archive's end would open an
+    empty run."""
+    inner = [c for c in cuts if c[0] < total]
+    out: List[int] = []
+    start = i = 0
+    for runs_left in range(n, 1, -1):
+        target = start + (total - start) / runs_left
+        j = min(range(i, len(inner)), default=None,
+                key=lambda j: abs(inner[j][0] - target))
+        if j is None:
+            break
+        out.append(inner[j][1])
+        start, i = inner[j][0], j + 1
+    return out
+
+
+def _read_envelope(partition: _WalPartition) -> Iterator[tuple]:
+    """Envelope rows with ``start_lsn < lsn <= end_lsn``."""
+    decoder = PgOutputDecoder()
+    # txn_id -1 = DML outside any txn: singleton semantics
+    state = {"txn_open": False, "txn_id": -1}
+    for lsn, msg in scan_wal_messages(
+        partition.path, decoder, state, skip_upto_lsn=partition.start_lsn,
+    ):
+        if lsn > partition.end_lsn:
+            break
+        if isinstance(msg, ChangeRecord):
+            yield (
+                msg.op,
+                msg.relation.schema,
+                msg.relation.name,
+                msg.relation.relation_id,
+                lsn,
+                state["txn_id"],
+                msg.columns,
+            )
+        if lsn == partition.end_lsn:
+            break  # the range is done: read no byte of the next chunk
 
 
 class WalArchiveStreamReader(DataSourceStreamReader):
@@ -588,7 +653,7 @@ class WalArchiveStreamReader(DataSourceStreamReader):
         # makes this O(new data + #chunks), not O(archive): chunks wholly
         # behind the cursor are skipped via their sidecars (registry + txn
         # state restored from the snapshot), and this driver-side call is
-        # the one place sidecars get written. A live transport would
+        # where a stream's sidecars get written. A live transport would
         # instead track the socket's last received LSN.
         last = self._last_offset or self.initialOffset()
         start_lsn = last["lsn"]
@@ -601,8 +666,6 @@ class WalArchiveStreamReader(DataSourceStreamReader):
             self.path, decoder, state,
             skip_upto_lsn=start_lsn, write_index=True,
         ):
-            if lsn <= start_lsn:
-                continue  # straddling chunk: pre-cursor frames only advance state
             if isinstance(msg, ChangeRecord):
                 n_dml += 1
             end_lsn = lsn
@@ -629,32 +692,13 @@ class WalArchiveStreamReader(DataSourceStreamReader):
         The relation registry must be complete at the window start (RELATION
         may precede the window, possibly by the whole archive): chunks wholly
         behind the window whose sidecar index exists are skipped via their
-        registry + txn-state snapshots; unindexed head chunks fall back to
-        replay, where the out-of-window path hits the cheap skip branches.
-        Executors only CONSUME sidecars (the driver's latestOffset writes
-        them), so this path never mutates the archive directory.
+        registry + txn-state snapshots; unindexed head chunks fall back to a
+        header-only pass over their frames. Executors only CONSUME sidecars,
+        so this path never mutates the archive directory: the driver writes
+        them, in ``latestOffset`` for a stream and in batch planning
+        (``WalArchiveBatchReader.partitions``) for ``spark.read``.
         """
-        decoder = PgOutputDecoder()
-        # txn_id -1 = DML outside any txn: singleton semantics
-        state = {"txn_open": False, "txn_id": -1}
-        for lsn, msg in scan_wal_messages(
-            partition.path, decoder, state,
-            skip_upto_lsn=partition.start_lsn, write_index=False,
-        ):
-            if lsn > partition.end_lsn:
-                break
-            if msg is None or lsn <= partition.start_lsn:
-                continue
-            if isinstance(msg, ChangeRecord):
-                yield (
-                    msg.op,
-                    msg.relation.schema,
-                    msg.relation.name,
-                    msg.relation.relation_id,
-                    lsn,
-                    state["txn_id"],
-                    msg.columns,
-                )
+        yield from _read_envelope(partition)
 
     # -- ack -----------------------------------------------------------------
 
@@ -678,11 +722,32 @@ class WalArchiveBatchReader(DataSourceReader):
         if not self.path:
             raise ValueError("pgcdc source requires option 'path'")
 
-    def read(self, partition) -> Iterator[tuple]:
-        part = _WalPartition(self.path, -1, 1 << 62)
-        yield from WalArchiveStreamReader(
-            {"path": self.path}
-        ).read(part)
+    def partitions(self) -> List[InputPartition]:
+        """Contiguous runs of whole chunks, of roughly equal bytes, at most
+        ``default_parallelism()`` of them, in LSN order.
+
+        Each run starts at the previous run's last sidecar ``max_lsn``, so
+        its ``read()`` skips the head through sidecars and restores the
+        registry and ``txn_id`` there: a transaction straddling the boundary
+        keeps its id. An archive with no usable boundary (read-only, torn,
+        one chunk) reads as one partition. The last run is open-ended.
+        """
+        # Index the chunks that lack a sidecar, driver-side. Every frame is
+        # behind this scan's cursor, so it is a header-only pass: DML is
+        # stepped over undecoded, and a cold one-shot replay decodes each
+        # change once, in its partition. Indexed chunks are not read.
+        for _ in scan_wal_messages(
+            self.path, PgOutputDecoder(), {"txn_open": False, "txn_id": -1},
+            skip_upto_lsn=_OPEN_END, write_index=True,
+        ):
+            pass
+        cuts, total = _chunk_cuts(self.path)
+        lsns = _split_lsns(cuts, total, default_parallelism())
+        return [_WalPartition(self.path, lo, hi)
+                for lo, hi in zip([-1] + lsns, lsns + [_OPEN_END])]
+
+    def read(self, partition: _WalPartition) -> Iterator[tuple]:
+        yield from _read_envelope(partition)
 
 
 class PgCdcDataSource(DataSource):

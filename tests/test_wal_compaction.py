@@ -16,6 +16,7 @@ from postgresql_cdc_spark.streaming.archive_maintenance import (
 )
 from postgresql_cdc_spark.streaming.source import (
     WalArchiveStreamReader,
+    read_wal_frames,
     scan_wal_messages,
 )
 
@@ -124,6 +125,21 @@ class TestCompaction:
         rows, _ = _drain(r, arch)
         lsns = [t[4] for t in rows]
         assert len(lsns) == len(set(lsns)), "duplicate envelope rows"
+
+    def test_crash_window_raw_frames_yield_once(self, tmp_path):
+        """The same crash window, read as raw frames: the merged chunk and
+        its leftover constituents hold the same frames twice, and
+        read_wal_frames must yield each LSN once, in the original order."""
+        arch = str(tmp_path / "wal")
+        _mk_archive(arch, n_chunks=4, txns_per_chunk=2)
+        want = list(read_wal_frames(arch))
+        with open(os.path.join(arch, "000000.wal"), "ab") as f:
+            for name in ("000001.wal", "000002.wal"):
+                with open(os.path.join(arch, name), "rb") as c:
+                    f.write(c.read())
+        got = list(read_wal_frames(arch))
+        assert got == want
+        assert len({lsn for lsn, _ in got}) == len(got)
 
     def test_prune_then_compact_then_replay(self, tmp_path):
         from postgresql_cdc_spark.streaming.source import prune_wal_archive
