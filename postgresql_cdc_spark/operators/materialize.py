@@ -9,54 +9,50 @@ reduce each primary key to its latest state, honoring:
   map (`PgWalMessageDecoder.java:206-207`) and must inherit the prior image;
 - re-INSERT after DELETE starts a fresh image (no inheritance across deletes).
 
-Performance model (measured at sf0.1, 730k events): Spark's HashAggregate
+Two behaviours:
+
+- ``merge_sparse=True`` — **window-fill merge**: per key, events sort once by
+  LSN; every column gap-fills with ``last(struct(lsn, value), ignoreNulls)``;
+  the final event row per key holds the whole image, with fills older than
+  the key's last INSERT discarded. ONE exchange + ONE sort over skinny scalar
+  columns; the map column never crosses a shuffle; zero aggregate buffers.
+  The fill needs the column set: pass ``columns`` (the table's column
+  registry, SURVEY.md §1.3). Without it the set is derived from the data —
+  the distinct keys of every map — which costs one extra scan of the
+  changelog.
+- ``merge_sparse=False`` (latest-image-wins, reference "absent means absent"
+  semantics): ``row_number() over (partition by key order by lsn desc) = 1``.
+
+Why no aggregate (measured at sf0.1, 730k events): Spark's HashAggregate
 fast path requires fixed-width aggregation buffers. Any aggregate whose
 buffer holds a STRING, struct, or map (``max(string)``, ``max_by(columns,
 lsn)``, ``collect_list``) plans as SortAggregate / ObjectHashAggregate at
 ~20-40µs/row — 15-20x slower than scans, windows, and primitive
 HashAggregates on this data. Three merge formulations were measured:
 collect_list+HOF-fold (~38s warm), explode + per-column string-encoded max
-(~250s: two SortAggregates over 7M entry rows), and the window-fill below
-(~one sort at scan speed). Hence:
+(~250s: two SortAggregates over 7M entry rows), and the window-fill
+(~one sort at scan speed).
 
-- ``merge_sparse=True`` + ``columns`` (the fast path; pass the table's
-  column registry, SURVEY.md §1.3) — **window-fill merge**: per key, events
-  sort once by LSN; a running sum of INSERTs numbers row *generations*
-  (re-INSERT after DELETE starts a new one); every column gap-fills with
-  ``last(struct(gen, value), ignoreNulls)``; the final event row per key
-  holds the whole image, with stale-generation fills discarded by their
-  generation prefix. ONE exchange + ONE sort over skinny scalar columns; the
-  map column never crosses a shuffle; zero aggregate buffers.
-- ``merge_sparse=True`` without ``columns`` — generic fallback for unknown
-  schemas: per-(key, column) argmax with string-encoded
-  ``max(hex(lsn) || tag || value)`` after an early explode. Correct for
-  arbitrary column sets, but pays the SortAggregate toll — prefer passing
-  ``columns``.
-- ``merge_sparse=False`` (latest-image-wins, reference "absent means absent"
-  semantics): ``row_number() over (partition by key order by lsn desc) = 1``.
-
-At 100 TB every path shuffles once on the key, and AQE splits skewed keys;
-nothing collects to the driver.
+At 100 TB both behaviours shuffle once on the key, and AQE splits skewed
+keys; only the derived column names ever reach the driver.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-_SEP = "\x1f"  # unit separator: cannot appear in the numeric/op fields
+
+def _q(name: str) -> str:
+    """Backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def _hexlsn(c: Column) -> Column:
-    """Fixed-width hex encoding of a non-negative LSN: lexicographic order on
-    the result equals numeric order on the LSN."""
-    return F.lpad(F.conv(c.cast("string"), 10, 16), 16, "0")
-
-
-def _dehexlsn(c: Column) -> Column:
-    return F.conv(c, 16, 10).cast("long")
+def _lit(s: str) -> str:
+    """Single-quoted SQL string literal (Spark's backslash escapes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def materialize(
@@ -73,206 +69,98 @@ def materialize(
     Returns ``(table?, op, lsn, <carry cols>, columns)`` with ``columns``
     holding the final image; DELETE-terminal keys dropped.
 
-    Pass ``columns`` (the table's column registry, SURVEY.md §1.3) to take
-    the window-fill fast path — one shuffle, one sort, no aggregate buffers;
-    without it the merge falls back to a generic per-key fold.
+    ``merge_sparse=True`` merges TOAST-sparse images with the window fill;
+    ``merge_sparse=False`` keeps each key's latest image as is. The merge
+    fills exactly ``columns``; omitted, they are the sorted distinct map
+    keys of the changelog (for a multi-table changelog, the union of its
+    tables' columns), at the cost of one extra scan — callers holding the
+    RELATION registry should pass it.
     """
-    key_cols = [
-        F.element_at(F.col(map_col), k).alias(f"__k_{k}") for k in keys
+    m, lsn, op = _q(map_col), _q(lsn_col), _q(op_col)
+    part = [_q("table")] if "table" in changelog.columns else []
+    knames = [f"__k_{i}" for i in range(len(keys))]
+    key_exprs = [
+        f"element_at({m}, {_lit(k)}) AS {n}" for k, n in zip(keys, knames)
     ]
-    knames = [f"__k_{k}" for k in keys]
-    part_cols = ["table"] if "table" in changelog.columns else []
 
     if not merge_sparse:
-        w = Window.partitionBy(*part_cols, *knames).orderBy(F.desc(lsn_col))
+        w = Window.partitionBy(*part, *knames).orderBy(F.desc(lsn_col))
         return (
-            changelog.select("*", *key_cols)
+            changelog.selectExpr("*", *key_exprs)
             .withColumn("__rn", F.row_number().over(w))
             .where((F.col("__rn") == 1) & (F.col(op_col) != "D"))
             .drop("__rn", *knames)
         )
 
-    if columns is not None:
-        return _materialize_window_fill(
-            changelog, keys, columns, lsn_col, op_col, map_col,
-            key_cols, knames, part_cols,
+    if columns is None:
+        columns = sorted(
+            r[0] for r in changelog.selectExpr(f"explode(map_keys({m}))")
+            .distinct().collect()
         )
 
-    carry = [f for f in ("txn_id", "relation_id", "schema") if f in changelog.columns]
-    hex_lsn = _hexlsn(F.col(lsn_col))
-    ev = changelog.select(
-        *part_cols, *key_cols,
-        F.col(lsn_col).alias("__lsn"), F.col(op_col).alias("__op"),
-        F.col(map_col).alias("__m"),
-        # last-event fields, argmax-encoded: hexlsn + op + SEP-joined carry
-        # (explicit concat, NOT concat_ws: concat_ws silently drops NULL
-        # fields, which would shift the positional decode)
-        F.concat(
-            hex_lsn, F.col(op_col),
-            *[
-                x
-                for c in carry
-                for x in (F.lit(_SEP), F.coalesce(F.col(c).cast("string"), F.lit("")))
-            ],
-        ).alias("__last_enc"),
-        F.when(F.col(op_col) != "U", F.concat(hex_lsn, F.col(op_col)))
-        .alias("__reset_enc"),
-    )
-    gcols = [*part_cols, *knames]
-
-    meta = (
-        ev.drop("__m")  # skinny: the map never enters an exchange or sort
-        .groupBy(*gcols)
-        .agg(
-            F.max("__last_enc").alias("__last"),
-            # A key whose changelog holds only UPDATEs (normal when capture
-            # starts mid-stream) has no reset event at all; treat that as an
-            # implicit INSERT at lsn 0 so the key is KEPT — matching the
-            # window-fill path's generation-0 behavior.
-            F.coalesce(F.max("__reset_enc"), F.lit("0" * 16 + "I")).alias("__reset"),
-        )
-        # DELETE-terminal keys drop here (last reset is the 'D')
-        .where(F.substring(F.col("__reset"), 17, 1) == "I")
-        .withColumn("__reset_lsn", _dehexlsn(F.substring("__reset", 1, 16)))
-    )
-
-    # Explode to per-column entries BEFORE any shuffle (narrow stage — the
-    # map column dies at the scan side; only skinny strings shuffle). The
-    # per-(key, column) argmax runs over ALL generations; stale-generation
-    # winners are filtered afterwards against reset_lsn — that defers the
-    # meta join until after reduction (one row per live column, not one per
-    # event), and no sort ever sees a map-typed row.
-    entries = ev.select(
-        *gcols, _hexlsn(F.col("__lsn")).alias("__hex"),
-        F.explode(F.col("__m")).alias("__c", "__val"),
-    )
-    enc_val = F.concat(
-        F.col("__hex"),
-        F.when(F.col("__val").isNull(), F.lit("n"))
-        .otherwise(F.concat(F.lit("v"), F.col("__val"))),
-    )
-    percol = entries.groupBy(*gcols, "__c").agg(F.max(enc_val).alias("__e"))
-    percol = percol.join(meta, gcols).where(
-        _dehexlsn(F.substring("__e", 1, 16)) >= F.col("__reset_lsn")
-    )
-    decoded = F.when(
-        F.substring(F.col("__e"), 17, 1) == "v",
-        F.expr("substring(__e, 18)"),
-    )  # 'n' tag → NULL
-    images = percol.groupBy(*gcols).agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("__c"), decoded.alias("__v")))
-        ).alias(map_col),
-        F.first("__last").alias("__last"),
-    )
-
-    last_parts = F.split(F.col("__last"), _SEP)
-    out = images.select(
-        *part_cols,
-        F.substring(last_parts.getItem(0), 17, 1).alias(op_col),
-        _dehexlsn(F.substring(last_parts.getItem(0), 1, 16)).alias(lsn_col),
-        *[
-            last_parts.getItem(i + 1).cast(
-                "long" if c == "txn_id" else "int" if c == "relation_id" else "string"
-            ).alias(c)
-            for i, c in enumerate(carry)
-        ],
-        F.col(map_col),
-    )
-    return out
-
-
-def _materialize_window_fill(
-    changelog: DataFrame,
-    keys: Sequence[str],
-    columns: Sequence[str],
-    lsn_col: str,
-    op_col: str,
-    map_col: str,
-    key_cols,
-    knames,
-    part_cols,
-) -> DataFrame:
-    """Window-fill merge: ONE shuffle + ONE sort, no aggregate buffers.
-
-    Per key, events sort by LSN. Each column is gap-filled with
-    ``last(struct(lsn, value), ignoreNulls)`` — a present-but-NULL column
-    fills a struct whose ``v`` field is NULL (distinct from NO struct =
-    column absent) — so at the final event row the fill holds each column's
-    latest entry; a stale fill from before the last re-INSERT (re-INSERT
-    after DELETE starts a fresh image) is discarded by comparing its ``l``
-    field against the running last-INSERT-LSN marker. The final row per key
-    is the one with no successor LSN; DELETE-terminal keys drop on its op.
-
-    Everything is a projection except one Exchange + Sort over skinny scalar
-    columns — the map never crosses a shuffle, and no SortAggregate /
-    ObjectHashAggregate appears (string-buffer aggregates fall off the
-    HashAggregate fast path; measured 20-40µs/row vs this plan's scan-speed
-    projections at sf0.1).
-
-    The per-column expressions are emitted as generated SQL and parsed
-    JVM-side in THREE ``selectExpr`` calls (the ``dedup._minhash_exprs``
-    kernel trick): building the same trees Column-by-Column costs ~500 py4j
-    round-trips ≈ 0.6 s of driver time per plan construction — measured at
-    sf0.1, that was a third of the whole warm end-to-end run. Struct fills
-    (not string-packed ``gen||tag||value``) keep the projection free of
-    per-row string allocation and substring decode.
-    """
-    carry = [f for f in ("txn_id", "relation_id", "schema") if f in changelog.columns]
-    part_quoted = [f"`{p}`" for p in part_cols]
-    key_exprs = [
-        f"element_at(`{map_col}`, '{k}') AS `__k_{k}`" for k in keys
+    # Per key, events sort by LSN. Each column is gap-filled with
+    # ``last(struct(lsn, value), ignoreNulls)`` — a present-but-NULL column
+    # fills a struct whose ``v`` field is NULL (distinct from NO struct =
+    # column absent) — so at the final event row the fill holds each
+    # column's latest entry. The final row per key is the one with no
+    # successor LSN; DELETE-terminal keys drop on its op.
+    #
+    # The per-column expressions are emitted as generated SQL and parsed
+    # JVM-side in THREE ``selectExpr`` calls (the ``dedup._minhash_exprs``
+    # kernel trick): building the same trees Column-by-Column costs ~500
+    # py4j round-trips ≈ 0.6 s of driver time per plan construction —
+    # measured at sf0.1, that was a third of the whole warm end-to-end run.
+    # Struct fills (not string-packed ``lsn||tag||value``) keep the
+    # projection free of per-row string allocation and substring decode.
+    # Helper columns are named by position so that any column name is safe.
+    carry = [
+        _q(f) for f in ("txn_id", "relation_id", "schema")
+        if f in changelog.columns
     ]
-    kquoted = [f"`{n}`" for n in knames]
     tagged = [
-        f"CASE WHEN map_contains_key(`{map_col}`, '{c}') THEN "
-        f"named_struct('v', element_at(`{map_col}`, '{c}')) END AS `__t_{c}`"
-        for c in columns
+        f"CASE WHEN map_contains_key({m}, {_lit(c)}) THEN "
+        f"named_struct('v', element_at({m}, {_lit(c)})) END AS __t_{i}"
+        for i, c in enumerate(columns)
     ]
-    pre = changelog.selectExpr(
-        *part_quoted, *key_exprs, f"`{lsn_col}`", f"`{op_col}`",
-        *[f"`{c}`" for c in carry], *tagged,
-    )
+    pre = changelog.selectExpr(*part, *key_exprs, lsn, op, *carry, *tagged)
 
-    by_key = ", ".join([*part_quoted, *kquoted])
+    by_key = ", ".join([*part, *knames])
     over_ord = (
-        f"PARTITION BY {by_key} ORDER BY `{lsn_col}` "
+        f"PARTITION BY {by_key} ORDER BY {lsn} "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
     )
     # Generation tracking WITHOUT a nested window: a fill taken at LSN x is
     # stale at the final row iff a re-INSERT happened after x, i.e.
     # x < max(INSERT lsn so far) — so the running last-INSERT marker replaces
-    # the running INSERT-count generation number and, unlike it, doesn't
-    # feed the fills (no window-in-window), letting EVERY window expression
-    # here — fills, marker, and the lead()-based final-row flag — evaluate
-    # in ONE WindowExec over one sorted pass.
+    # a running INSERT-count generation number and, unlike it, doesn't feed
+    # the fills (no window-in-window), letting EVERY window expression here —
+    # fills, marker, and the lead()-based final-row flag — evaluate in ONE
+    # WindowExec over one sorted pass.
     fills = [
-        f"last(CASE WHEN `__t_{c}` IS NOT NULL THEN "
-        f"named_struct('l', `{lsn_col}`, 'v', `__t_{c}`.v) END, true) "
-        f"OVER ({over_ord}) AS `__f_{c}`"
-        for c in columns
+        f"last(CASE WHEN __t_{i} IS NOT NULL THEN "
+        f"named_struct('l', {lsn}, 'v', __t_{i}.v) END, true) "
+        f"OVER ({over_ord}) AS __f_{i}"
+        for i in range(len(columns))
     ]
-    df2 = pre.selectExpr(
-        *part_quoted, *kquoted, f"`{lsn_col}`", f"`{op_col}`",
-        *[f"`{c}`" for c in carry], *fills,
-        f"max(CASE WHEN `{op_col}` = 'I' THEN `{lsn_col}` END) "
-        f"OVER ({over_ord}) AS __li",
-        f"lead(`{lsn_col}`) OVER (PARTITION BY {by_key} "
-        f"ORDER BY `{lsn_col}`) IS NULL AS __is_last",
-    )
-    final = df2.where(F.col("__is_last") & (F.col(op_col) != "D"))
+    final = pre.selectExpr(
+        *part, *knames, lsn, op, *carry, *fills,
+        f"max(CASE WHEN {op} = 'I' THEN {lsn} END) OVER ({over_ord}) AS __li",
+        f"lead({lsn}) OVER (PARTITION BY {by_key} ORDER BY {lsn}) IS NULL "
+        "AS __is_last",
+    ).where(f"__is_last AND {op} != 'D'")
 
     # A key with no INSERT at all (capture started mid-stream: UPDATEs only)
-    # has NULL __li — every fill is fresh, matching the implicit
-    # insert-at-lsn-0 the generic fallback applies.
+    # has NULL __li — every fill is fresh, as if inserted at lsn 0.
     entries = ", ".join(
-        f"CASE WHEN `__f_{c}` IS NOT NULL AND `__f_{c}`.l >= "
+        f"CASE WHEN __f_{i} IS NOT NULL AND __f_{i}.l >= "
         f"coalesce(__li, CAST(0 AS BIGINT)) THEN "
-        f"named_struct('key', '{c}', 'value', `__f_{c}`.v) END"
-        for c in columns
+        f"named_struct('key', {_lit(c)}, 'value', __f_{i}.v) END"
+        for i, c in enumerate(columns)
     )
-    return final.selectExpr(
-        *part_quoted, f"`{op_col}`", f"`{lsn_col}`",
-        *[f"`{c}`" for c in carry],
-        f"map_from_entries(array_compact(array({entries}))) AS `{map_col}`",
+    # array() of no entries types as ARRAY<VOID>, which map_from_entries
+    # rejects, so an empty column set needs a typed empty map.
+    image = (
+        f"map_from_entries(array_compact(array({entries})))" if columns
+        else "CAST(map() AS map<string,string>)"
     )
+    return final.selectExpr(*part, op, lsn, *carry, f"{image} AS {m}")

@@ -949,23 +949,18 @@ def probe_by_key_list(hist: DataFrame, key: str, ks: list) -> DataFrame:
 # --- latest-wins kv state over the epoch store --------------------------------
 
 def _resolve(rows: DataFrame, key: str) -> DataFrame:
-    """Latest-wins per key, tombstones dropped from the survivors. The
-    window is bounded by versions of ONE key. Tie-break: ``op`` descending
-    after ``lsn`` descending — arbitrary but DETERMINISTIC, so replays and
-    restarts materialize identical state even on (impossible-in-WAL)
-    duplicate LSNs."""
-    w = Window.partitionBy(key).orderBy(F.desc("lsn"), F.desc("op"))
-    return (
-        rows.withColumn("__rn", F.row_number().over(w))
-        .where((F.col("__rn") == 1) & (F.col("op") != "D"))
-        .drop("__rn")
-    )
+    """Latest-wins per key (:func:`collapse_batch`), tombstones dropped from
+    the survivors."""
+    return collapse_batch(rows, key).where(F.col("op") != "D")
 
 
 def collapse_batch(batch: DataFrame, key: str) -> DataFrame:
     """One row per key: the batch's latest change, KEEPING delete
-    tombstones (unlike :func:`_resolve` — the store needs the tombstone to
-    mask earlier epochs' live rows). Same deterministic ordering."""
+    tombstones (the store needs the tombstone to mask earlier epochs' live
+    rows). The window is bounded by versions of ONE key. Tie-break: ``op``
+    descending after ``lsn`` descending — arbitrary but DETERMINISTIC, so
+    replays and restarts materialize identical state even on
+    (impossible-in-WAL) duplicate LSNs."""
     w = Window.partitionBy(key).orderBy(F.desc("lsn"), F.desc("op"))
     return (
         batch.withColumn("__rn", F.row_number().over(w))

@@ -1,18 +1,20 @@
-"""The two materialize code paths must agree on every protocol-valid changelog.
+"""The window-fill merge must equal a sequential replay fold.
 
-``materialize(..., columns=[...])`` takes the window-fill fast path (one
-shuffle + one sort, generation-prefixed gap fill); without ``columns`` it
-falls back to the generic per-(key, column) argmax fold. Both claim the same
-semantics — latest value per column within the current generation, TOAST
-inheritance, NULL-vs-absent distinction, DELETE-terminal drop, implicit
-insert for capture-started-mid-stream keys. This test feeds both a seeded
-random protocol-valid changelog (plus hand-picked adversarial keys) and
-requires identical states.
+``materialize(..., merge_sparse=True)`` merges TOAST-sparse images with one
+LSN-sorted window fill. ``_fold`` below is the obviously-correct reference:
+replay each event in LSN order the way the reference consumer does
+(`CdcEngine.java:132-137`), merging sparse UPDATEs over the prior image
+(`PgWalMessageDecoder.java:206-207`). The semantics both must share: latest
+value per column within the current generation, TOAST inheritance,
+NULL-vs-absent distinction, DELETE-terminal drop, implicit insert for
+capture-started-mid-stream keys. The merge runs with the column set passed
+and with it derived from the data, on a seeded random protocol-valid
+changelog plus hand-picked adversarial keys.
 
 Protocol-valid means what pgoutput can actually emit per key: optional
 mid-stream start (first event may be U or D), I only at start or after D,
-U/D only while a row exists. U-after-D never occurs on a real stream and the
-paths are allowed to differ on it, so the generator never emits it.
+U/D only while a row exists. U-after-D never occurs on a real stream, so the
+generator never emits it.
 """
 
 from __future__ import annotations
@@ -87,45 +89,123 @@ def _adversarial(first_key: int):
         ("I", 10, k + 4, {"id": str(k + 4), "a": "p", "b": "q", "c": "r"}),
         ("U", 11, k + 4, {"id": str(k + 4), "a": "p2"}),
         ("U", 11, k + 4, {"id": str(k + 4), "a": "p2"}),
+        # re-INSERT whose image lacks a column (dropped between the two
+        # lives): the old generation's c must not leak into the new image
+        ("I", 12, k + 5, {"id": str(k + 5), "a": "m", "c": "old"}),
+        ("D", 13, k + 5, {"id": str(k + 5)}),
+        ("I", 14, k + 5, {"id": str(k + 5), "a": "n"}),
     ]
 
 
-def _state(df):
+def _fold(rows, key=lambda r: r[-1]["id"]):
+    """Sequential replay of ``(op, lsn, ..., image)`` rows in LSN order: the
+    reference consumer's semantics. Returns ``{key: (op, lsn, image)}`` for
+    the live keys."""
+    state: dict = {}
+    meta: dict = {}
+    for r in sorted(rows, key=lambda r: r[1]):
+        op, lsn, m, k = r[0], r[1], r[-1], key(r)
+        if op == "I":
+            state[k] = dict(m)
+        elif op == "U":
+            # sparse: absent columns inherit; a mid-stream U implies a row
+            state[k] = {**state.get(k, {}), **m}
+        else:
+            state.pop(k, None)
+        meta[k] = (op, lsn)
+    return {k: (*meta[k], img) for k, img in state.items()}
+
+
+def _state(df, key=lambda r: r["columns"]["id"]):
     out = {}
     for r in df.collect():
-        m = dict(r["columns"])
-        assert m["id"] not in out, f"duplicate final row for key {m['id']}"
-        out[m["id"]] = (r["op"], r["lsn"], m)
+        k = key(r)
+        assert k not in out, f"duplicate final row for key {k}"
+        out[k] = (r["op"], r["lsn"], dict(r["columns"]))
     return out
 
 
 @pytest.mark.parametrize("seed", [7, 42])
-def test_window_fill_matches_generic_fold(spark, seed):
+def test_window_fill_matches_sequential_fold(spark, seed):
     rows = (
         _gen_events(seed, n_keys=120, first_key=10_000)
         + _adversarial(first_key=90_000)
     )
+    log = spark.createDataFrame(rows, SCHEMA)
+    want = _fold(rows)
+    assert _state(materialize(log, keys=["id"], columns=["id", *COLS])) == want
+    assert _state(materialize(log, keys=["id"])) == want  # derived columns
+
+
+def test_derived_columns_span_tables(spark):
+    """Without ``columns`` a multi-table changelog merges over the union of
+    its tables' columns; a column one table lacks never appears in its
+    maps, so each table keeps its own image even where keys collide."""
+    rows = [
+        ("I", 1, "t1", {"id": "1", "a": "a1", "b": "b1"}),
+        ("I", 2, "t2", {"id": "1", "x": "x1", "y": None}),
+        ("U", 3, "t1", {"id": "1", "a": "a2"}),
+        ("U", 4, "t2", {"id": "1", "y": "y2"}),
+        ("I", 5, "t2", {"id": "2", "x": "x3", "y": "y3"}),
+        ("D", 6, "t2", {"id": "2"}),
+    ]
     log = spark.createDataFrame(
-        [(op, lsn, k, m) for op, lsn, k, m in rows], SCHEMA
+        rows, "op string, lsn long, table string, columns map<string,string>"
     )
-    generic = _state(materialize(log, keys=["id"], merge_sparse=True))
-    fast = _state(
-        materialize(
-            log, keys=["id"], merge_sparse=True, columns=["id", *COLS]
-        )
+
+    def by_table(r):
+        return (r["table"], r["columns"]["id"])
+
+    derived = _state(materialize(log, keys=["id"]), by_table)
+    assert derived == _state(
+        materialize(log, keys=["id"], columns=["a", "b", "id", "x", "y"]),
+        by_table,
     )
-    assert set(generic) == set(fast)
-    for key in generic:
-        assert generic[key] == fast[key], (
-            f"key {key}: generic={generic[key]} fast={fast[key]}"
-        )
+    assert derived == _fold(rows, key=lambda r: (r[2], r[-1]["id"]))
+    assert derived == {
+        ("t1", "1"): ("U", 3, {"id": "1", "a": "a2", "b": "b1"}),
+        ("t2", "1"): ("U", 4, {"id": "1", "x": "x1", "y": "y2"}),
+    }
+
+
+def test_quoted_identifiers(spark):
+    """Key, column and envelope names holding a quote, a backslash or a
+    backtick (legal quoted identifiers in PostgreSQL) stay literal in the
+    merge's generated SQL."""
+    k, c1, c2 = "it's", "b\\c", "a`b"
+    rows = [
+        ("I", 1, {k: "1", c1: "x", c2: "y"}),
+        ("U", 2, {k: "1", c2: None}),
+        ("I", 3, {k: "2", c1: "z", c2: "w"}),
+        ("D", 4, {k: "2"}),
+    ]
+    log = spark.createDataFrame(
+        rows, "`o'p` string, `l\\sn` long, `m``ap` map<string,string>"
+    )
+    for cols in ([k, c1, c2], None):
+        got = materialize(
+            log, keys=[k], lsn_col="l\\sn", op_col="o'p", map_col="m`ap",
+            columns=cols,
+        ).collect()
+        assert [tuple(r) for r in got] == [
+            ("U", 2, {k: "1", c1: "x", c2: None})
+        ]
+
+
+def test_empty_column_list(spark):
+    """An empty column set yields empty images, typed like any other."""
+    log = spark.createDataFrame([("I", 1, 0, {"id": "1", "a": "x"})], SCHEMA)
+    st = materialize(log, keys=["id"], columns=[])
+    assert st.schema == materialize(log, keys=["id"]).schema
+    assert [tuple(r) for r in st.collect()] == [("I", 1, 0, {})]
+    # an empty changelog derives an empty column set
+    empty = spark.createDataFrame([], SCHEMA)
+    assert materialize(empty, keys=["id"]).collect() == []
 
 
 def test_adversarial_semantics_pinned(spark):
     """The hand-picked keys also assert the SEMANTICS, not just agreement."""
-    log = spark.createDataFrame(
-        [(op, lsn, k, m) for op, lsn, k, m in _adversarial(0)], SCHEMA
-    )
+    log = spark.createDataFrame(_adversarial(0), SCHEMA)
     st = _state(
         materialize(log, keys=["id"], merge_sparse=True, columns=["id", *COLS])
     )
@@ -140,3 +220,5 @@ def test_adversarial_semantics_pinned(spark):
     assert st["3"] == ("U", 9, {"id": "3", "a": "3", "b": "toast", "c": None})
     # duplicate-LSN replay collapses to ONE final row, TOAST still merged
     assert st["4"] == ("U", 11, {"id": "4", "a": "p2", "b": "q", "c": "r"})
+    # re-insert without c: nothing of the deleted generation survives
+    assert st["5"] == ("I", 14, {"id": "5", "a": "n"})

@@ -1,4 +1,4 @@
-"""Property test: ``materialize`` vs a reference Python fold.
+"""Property test: ``materialize`` vs the reference sequential fold.
 
 The window-fill merge (``operators/materialize.py``) is the subtlest kernel
 in the repo — per-column LOCF over an LSN-sorted window with struct-tagged
@@ -7,8 +7,8 @@ freshness via the running last-INSERT-LSN marker. The fixture-shaped tests
 and the DuckDB oracle pin it on one synthetic distribution; this pins it on
 hypothesis-generated protocol-valid changelogs against the obviously-correct
 sequential fold the reference consumer effectively implements
-(`CdcEngine.java:132-137` replay order; `PgWalMessageDecoder.java:206-207`
-TOAST-absent sparsity).
+(``test_materialize_equivalence._fold``: `CdcEngine.java:132-137` replay
+order; `PgWalMessageDecoder.java:206-207` TOAST-absent sparsity).
 
 Protocol-valid per key: events replay in LSN order; the first event may be
 I, U, or D (capture may start mid-stream); after that I only follows D, and
@@ -26,8 +26,8 @@ except ImportError:  # pragma: no cover
     pytest.skip("hypothesis not installed", allow_module_level=True)
 
 from postgresql_cdc_spark.operators.materialize import materialize
+from tests.test_materialize_equivalence import COLS, _fold, _state
 
-COLS = ["a", "b", "c"]
 SCHEMA = "op string, lsn long, columns map<string,string>"
 
 
@@ -79,54 +79,14 @@ def changelog(draw):
     return rows
 
 
-def _fold(rows):
-    """Sequential replay: the reference consumer's semantics."""
-    state: dict[str, dict] = {}
-    meta: dict[str, tuple] = {}
-    for op, lsn, m in sorted(rows, key=lambda r: r[1]):
-        key = m["id"]
-        if op == "I":
-            state[key] = dict(m)
-        elif op == "U":
-            merged = dict(state.get(key, {"id": key}))  # implicit insert
-            merged.update(m)  # sparse: absent columns inherit
-            state[key] = merged
-        else:
-            state.pop(key, None)
-        meta[key] = (op, lsn)
-    return {
-        key: (meta[key][0], meta[key][1], img)
-        for key, img in state.items()
-    }
-
-
-def _collect(df):
-    return {
-        r["__k_id"] if "__k_id" in r.__fields__ else r["columns"]["id"]: (
-            r["op"], r["lsn"], dict(r["columns"]),
-        )
-        for r in df.collect()
-    }
-
-
 class TestMaterializeProperties:
     @settings(max_examples=30, deadline=None)
     @given(changelog())
     @pytest.mark.slow  # r18 tier split: lifecycle/parity soak; slow tier
     def test_window_fill_matches_sequential_fold(self, spark, rows):
         df = spark.createDataFrame(rows, SCHEMA).repartition(4)
-        got = _collect(
+        got = _state(
             materialize(df, keys=["id"], merge_sparse=True,
                         columns=["id", *COLS])
-        )
-        assert got == _fold(rows)
-
-    @settings(max_examples=10, deadline=None)
-    @given(changelog())
-    @pytest.mark.slow  # r18 tier split: lifecycle/parity soak; slow tier
-    def test_generic_fallback_matches_sequential_fold(self, spark, rows):
-        df = spark.createDataFrame(rows, SCHEMA).repartition(4)
-        got = _collect(
-            materialize(df, keys=["id"], merge_sparse=True)
         )
         assert got == _fold(rows)
