@@ -87,9 +87,10 @@ def incremental_group_agg(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     w_lag = Window.partitionBy(*knames).orderBy("__lsn")
-    # Generation-aware fill (same rule as materialize's window-fill): a
-    # running count of INSERTs numbers row generations, every fill struct
-    # carries the generation it was written in, and a fill read in a LATER
+    # Generation-aware fill (materialize's re-INSERT freshness rule, applied
+    # at every event because IVM needs each event's prior image): a running
+    # count of INSERTs numbers row generations, every fill struct carries
+    # the generation it was written in, and a fill read in a LATER
     # generation is stale — without this, a re-insert after DELETE would
     # inherit pre-delete column values and silently diverge from
     # materialize (the module's pinned correctness contract).

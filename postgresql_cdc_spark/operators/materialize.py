@@ -11,27 +11,27 @@ reduce each primary key to its latest state, honoring:
 
 Two behaviours:
 
-- ``merge_sparse=True`` — **window-fill merge**: per key, events sort once by
-  LSN; every column gap-fills with ``last(struct(lsn, value), ignoreNulls)``;
-  the final event row per key holds the whole image, with fills older than
-  the key's last INSERT discarded. ONE exchange + ONE sort over skinny scalar
-  columns; the map column never crosses a shuffle; zero aggregate buffers.
-  The fill needs the column set: pass ``columns`` (the table's column
-  registry, SURVEY.md §1.3). Without it the set is derived from the data —
-  the distinct keys of every map — which costs one extra scan of the
-  changelog.
+- ``merge_sparse=True`` — **aggregate merge**: one ``groupBy`` on the key.
+  ``max`` over a struct led by the LSN picks, per key, the terminal event
+  (op and carry columns), the last INSERT, and each column's latest present
+  entry; a column enters the image iff that entry is at or after the last
+  INSERT (re-INSERT freshness). The merge needs the column set: pass
+  ``columns`` (the table's column registry, SURVEY.md §1.3). Without it the
+  set is derived from the data — the distinct keys of every map — which
+  costs one extra scan of the changelog.
 - ``merge_sparse=False`` (latest-image-wins, reference "absent means absent"
   semantics): ``row_number() over (partition by key order by lsn desc) = 1``.
 
-Why no aggregate (measured at sf0.1, 730k events): Spark's HashAggregate
-fast path requires fixed-width aggregation buffers. Any aggregate whose
-buffer holds a STRING, struct, or map (``max(string)``, ``max_by(columns,
-lsn)``, ``collect_list``) plans as SortAggregate / ObjectHashAggregate at
-~20-40µs/row — 15-20x slower than scans, windows, and primitive
-HashAggregates on this data. Three merge formulations were measured:
-collect_list+HOF-fold (~38s warm), explode + per-column string-encoded max
-(~250s: two SortAggregates over 7M entry rows), and the window-fill
-(~one sort at scan speed).
+Plan shape: a partial SortAggregate, one Exchange, a final SortAggregate.
+Struct buffers are not fixed width, so the HashAggregate fast path is out,
+but the map-side partial collapses each key's events inside a source
+partition before the shuffle, and the map column never crosses it.
+Measured on 4 vCPU against the 16-column LSN-sorted window fill this
+replaced: perfbench ``backfill_replay`` (30k events, 16 columns) merge
+layer 2.5-2.9 s -> 1.2-1.4 s, end-to-end replay throughput +45-50%; at
+300k events over parquet, a warm materialize + typed_view pass
+11.6-12.0 s -> 3.0-3.3 s. The aggregates measured slow before were other
+shapes: ``collect_list`` with a fold, and an explode to one row per column.
 
 At 100 TB both behaviours shuffle once on the key, and AQE splits skewed
 keys; only the derived column names ever reach the driver.
@@ -69,8 +69,8 @@ def materialize(
     Returns ``(table?, op, lsn, <carry cols>, columns)`` with ``columns``
     holding the final image; DELETE-terminal keys dropped.
 
-    ``merge_sparse=True`` merges TOAST-sparse images with the window fill;
-    ``merge_sparse=False`` keeps each key's latest image as is. The merge
+    ``merge_sparse=True`` merges TOAST-sparse images with one aggregate per
+    key; ``merge_sparse=False`` keeps each key's latest image as is. The merge
     fills exactly ``columns``; omitted, they are the sorted distinct map
     keys of the changelog (for a multi-table changelog, the union of its
     tables' columns), at the cost of one extra scan — callers holding the
@@ -98,62 +98,46 @@ def materialize(
             .distinct().collect()
         )
 
-    # Per key, events sort by LSN. Each column is gap-filled with
-    # ``last(struct(lsn, value), ignoreNulls)`` — a present-but-NULL column
-    # fills a struct whose ``v`` field is NULL (distinct from NO struct =
-    # column absent) — so at the final event row the fill holds each
-    # column's latest entry. The final row per key is the one with no
-    # successor LSN; DELETE-terminal keys drop on its op.
-    #
-    # The per-column expressions are emitted as generated SQL and parsed
-    # JVM-side in THREE ``selectExpr`` calls (the ``dedup._minhash_exprs``
-    # kernel trick): building the same trees Column-by-Column costs ~500
-    # py4j round-trips ≈ 0.6 s of driver time per plan construction —
-    # measured at sf0.1, that was a third of the whole warm end-to-end run.
-    # Struct fills (not string-packed ``lsn||tag||value``) keep the
-    # projection free of per-row string allocation and substring decode.
-    # Helper columns are named by position so that any column name is safe.
+    # One aggregate per key. ``max`` over a struct orders by its first
+    # field, the LSN, so ``__last`` is the terminal event (with its op and
+    # carry columns), ``__li`` the last INSERT, and ``__f_i`` column i's
+    # latest present entry — a present-but-NULL column gives a struct whose
+    # ``v`` is NULL, an absent one gives no struct. The expressions are
+    # generated SQL parsed JVM-side (the ``dedup._minhash_exprs`` trick):
+    # building the same trees Column-by-Column costs hundreds of py4j
+    # round-trips per plan. Helper names are positional, so any column name
+    # is safe.
     carry = [
-        _q(f) for f in ("txn_id", "relation_id", "schema")
+        f for f in ("txn_id", "relation_id", "schema")
         if f in changelog.columns
     ]
-    tagged = [
-        f"CASE WHEN map_contains_key({m}, {_lit(c)}) THEN "
-        f"named_struct('v', element_at({m}, {_lit(c)})) END AS __t_{i}"
+    last = ", ".join(
+        [f"'l', {lsn}", f"'o', {op}"]
+        + [f"'c{i}', {_q(f)}" for i, f in enumerate(carry)]
+    )
+    aggs = [
+        f"max(named_struct({last})) AS __last",
+        f"max(CASE WHEN {op} = 'I' THEN {lsn} END) AS __li",
+    ] + [
+        f"max(CASE WHEN map_contains_key({m}, {_lit(c)}) THEN named_struct("
+        f"'l', {lsn}, 'v', element_at({m}, {_lit(c)})) END) AS __f_{i}"
         for i, c in enumerate(columns)
     ]
-    pre = changelog.selectExpr(*part, *key_exprs, lsn, op, *carry, *tagged)
-
-    by_key = ", ".join([*part, *knames])
-    over_ord = (
-        f"PARTITION BY {by_key} ORDER BY {lsn} "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+    merged = (
+        changelog.selectExpr(*part, *key_exprs, lsn, op, *map(_q, carry), m)
+        .groupBy(*part, *knames)
+        .agg(*(F.expr(a) for a in aggs))
+        .where("__last.o != 'D'")
     )
-    # Generation tracking WITHOUT a nested window: a fill taken at LSN x is
-    # stale at the final row iff a re-INSERT happened after x, i.e.
-    # x < max(INSERT lsn so far) — so the running last-INSERT marker replaces
-    # a running INSERT-count generation number and, unlike it, doesn't feed
-    # the fills (no window-in-window), letting EVERY window expression here —
-    # fills, marker, and the lead()-based final-row flag — evaluate in ONE
-    # WindowExec over one sorted pass.
-    fills = [
-        f"last(CASE WHEN __t_{i} IS NOT NULL THEN "
-        f"named_struct('l', {lsn}, 'v', __t_{i}.v) END, true) "
-        f"OVER ({over_ord}) AS __f_{i}"
-        for i in range(len(columns))
-    ]
-    final = pre.selectExpr(
-        *part, *knames, lsn, op, *carry, *fills,
-        f"max(CASE WHEN {op} = 'I' THEN {lsn} END) OVER ({over_ord}) AS __li",
-        f"lead({lsn}) OVER (PARTITION BY {by_key} ORDER BY {lsn}) IS NULL "
-        "AS __is_last",
-    ).where(f"__is_last AND {op} != 'D'")
 
-    # A key with no INSERT at all (capture started mid-stream: UPDATEs only)
-    # has NULL __li — every fill is fresh, as if inserted at lsn 0.
+    # A column's latest entry belongs to the current generation iff it is
+    # at or after the key's last INSERT: an earlier one means the column
+    # has no entry since the re-INSERT, so the deleted generation's value
+    # must not leak. A key with no INSERT at all (capture started
+    # mid-stream: UPDATEs only) has NULL __li — every entry is current, as
+    # if inserted at lsn 0.
     entries = ", ".join(
-        f"CASE WHEN __f_{i} IS NOT NULL AND __f_{i}.l >= "
-        f"coalesce(__li, CAST(0 AS BIGINT)) THEN "
+        f"CASE WHEN __f_{i}.l >= coalesce(__li, CAST(0 AS BIGINT)) THEN "
         f"named_struct('key', {_lit(c)}, 'value', __f_{i}.v) END"
         for i, c in enumerate(columns)
     )
@@ -163,4 +147,8 @@ def materialize(
         f"map_from_entries(array_compact(array({entries})))" if columns
         else "CAST(map() AS map<string,string>)"
     )
-    return final.selectExpr(*part, op, lsn, *carry, f"{image} AS {m}")
+    return merged.selectExpr(
+        *part, f"__last.o AS {op}", f"__last.l AS {lsn}",
+        *(f"__last.c{i} AS {_q(f)}" for i, f in enumerate(carry)),
+        f"{image} AS {m}",
+    )

@@ -47,10 +47,9 @@ def get_spark(app_name: str = "postgresql-cdc-spark", extra_conf: dict | None = 
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # An engine process serves ~200 registered query shapes; the default
         # 100-entry generated-class cache thrashes when many queries share a
-        # session (measured: the wide window-fill merge pays ~5 s of
-        # recompilation on EVERY bench pass once interleaved with the other
-        # headline queries, vs 2.3 s warm in isolation). Generated classes
-        # are a few KB each — 1000 entries is megabytes, not a memory risk.
+        # session, and every evicted wide plan (materialize's per-column
+        # merge is one) recompiles on its next run. Generated classes are a
+        # few KB each — 1000 entries is megabytes, not a memory risk.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():

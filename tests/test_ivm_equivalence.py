@@ -113,8 +113,8 @@ def test_replay_cases_pinned(spark):
 def test_no_inheritance_across_delete(spark):
     """A re-insert after DELETE starts a fresh generation: a column absent
     from the new image must read NULL, never the pre-delete value (the fill
-    is generation-aware, same rule as materialize's window-fill). Sparse
-    INSERT images are protocol-stretch, but materialize handles them
+    is generation-aware, the same freshness rule as materialize's merge).
+    Sparse INSERT images are protocol-stretch, but materialize handles them
     defensively and the IVM contract is equality with materialize."""
     rows = [
         ("I", 1, 1, {"id": "1", "a": "7.0", "b": "g1"}),

@@ -290,7 +290,7 @@ class TestTypedRoundtripFullPipeline:
 
         inserts → replication transport (fake psycopg stack) → run_wal_relay
         → WAL archive → pgcdc STRUCTURED STREAMING source (micro-batched)
-        → materialize (window-fill merge) → typed_view
+        → materialize (aggregate sparse merge) → typed_view
 
     asserting the reference's value-identity property for all nine logical
     types plus present-but-NULL fidelity. After this, the only code never

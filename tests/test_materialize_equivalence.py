@@ -1,15 +1,18 @@
-"""The window-fill merge must equal a sequential replay fold.
+"""The aggregate sparse merge must equal a sequential replay fold.
 
 ``materialize(..., merge_sparse=True)`` merges TOAST-sparse images with one
-LSN-sorted window fill. ``_fold`` below is the obviously-correct reference:
-replay each event in LSN order the way the reference consumer does
-(`CdcEngine.java:132-137`), merging sparse UPDATEs over the prior image
-(`PgWalMessageDecoder.java:206-207`). The semantics both must share: latest
-value per column within the current generation, TOAST inheritance,
-NULL-vs-absent distinction, DELETE-terminal drop, implicit insert for
-capture-started-mid-stream keys. The merge runs with the column set passed
-and with it derived from the data, on a seeded random protocol-valid
-changelog plus hand-picked adversarial keys.
+aggregate per key: the terminal event, the last INSERT and, per column,
+the latest present entry, each a ``max`` over an LSN-led struct. ``_fold``
+below is the obviously-correct reference: replay each event in LSN order
+the way the reference consumer does (`CdcEngine.java:132-137`), merging
+sparse UPDATEs over the prior image (`PgWalMessageDecoder.java:206-207`).
+The semantics both must share: latest value per column within the current
+generation, TOAST inheritance, NULL-vs-absent distinction, DELETE-terminal
+drop, implicit insert for capture-started-mid-stream keys. The merge runs
+with the column set passed and with it derived from the data, on a seeded
+random protocol-valid changelog plus hand-picked adversarial keys, and on
+the same rows shuffled over several input partitions, so that the final
+aggregate merges partial results that arrive out of LSN order.
 
 Protocol-valid means what pgoutput can actually emit per key: optional
 mid-stream start (first event may be U or D), I only at start or after D,
@@ -126,12 +129,73 @@ def _state(df, key=lambda r: r["columns"]["id"]):
 
 
 @pytest.mark.parametrize("seed", [7, 42])
-def test_window_fill_matches_sequential_fold(spark, seed):
+def test_sparse_merge_matches_sequential_fold(spark, seed):
     rows = (
         _gen_events(seed, n_keys=120, first_key=10_000)
         + _adversarial(first_key=90_000)
     )
     log = spark.createDataFrame(rows, SCHEMA)
+    want = _fold(rows)
+    assert _state(materialize(log, keys=["id"], columns=["id", *COLS])) == want
+    assert _state(materialize(log, keys=["id"])) == want  # derived columns
+
+
+def _split_cases(first_key: int, first_lsn: int, copies: int):
+    """Keys whose events must meet in the final aggregate, repeated so that
+    some copies land split over partitions whatever the placement."""
+    rows = []
+    lsn = first_lsn
+    for j in range(copies):
+        k = first_key + 3 * j
+        r, u, d = str(k), str(k + 1), str(k + 2)
+        rows += [
+            # re-INSERT without b: the old generation's UPDATE of b, merged
+            # from another partition, must not leak into the new image
+            ("I", lsn + 1, k, {"id": r, "a": "a0", "b": "b0", "c": "c0"}),
+            ("U", lsn + 2, k, {"id": r, "b": "b1"}),
+            ("D", lsn + 3, k, {"id": r}),
+            ("I", lsn + 4, k, {"id": r, "a": "a2", "c": None}),
+            # duplicate-LSN terminal UPDATE (at-least-once redelivery)
+            ("I", lsn + 5, k + 1, {"id": u, "a": "a0", "b": "b0", "c": "c0"}),
+            ("U", lsn + 6, k + 1, {"id": u, "a": "a3"}),
+            ("U", lsn + 6, k + 1, {"id": u, "a": "a3"}),
+            # duplicate-LSN terminal DELETE
+            ("I", lsn + 7, k + 2, {"id": d, "a": "a0", "b": "b0", "c": "c0"}),
+            ("D", lsn + 8, k + 2, {"id": d}),
+            ("D", lsn + 8, k + 2, {"id": d}),
+        ]
+        lsn += 10
+    return rows
+
+
+def test_merge_order_across_partitions(spark):
+    """Partial aggregates reach the final one in no particular LSN order;
+    the merge must still equal the sequential fold. The events are
+    shuffled and spread round-robin over four partitions, and the test
+    checks that the split cases really straddle partitions."""
+    from pyspark.sql import functions as F
+
+    copies = 8
+    rows = (
+        _gen_events(11, n_keys=120, first_key=10_000)
+        + _adversarial(first_key=90_000)
+        + _split_cases(first_key=95_000, first_lsn=500_000, copies=copies)
+    )
+    random.Random(11).shuffle(rows)
+    log = spark.createDataFrame(rows, SCHEMA).repartition(4)
+
+    by_key: dict = {}
+    for r in log.select(F.spark_partition_id(), "lsn", "txn_id").collect():
+        by_key.setdefault(r[2], []).append((r[1], r[0]))
+    assert len({p for evs in by_key.values() for _, p in evs}) == 4
+    # (lsn, partition) per split-case key, in LSN order
+    split = [sorted(by_key[k]) for k in range(95_000, 95_000 + 3 * copies)]
+    assert any(ev[1][1] != ev[3][1] for ev in split[0::3]), (
+        "no re-INSERT landed apart from its old generation's UPDATE")
+    for dups in (split[1::3], split[2::3]):
+        assert any(ev[-1][1] != ev[-2][1] for ev in dups), (
+            "no duplicate terminal event split over two partitions")
+
     want = _fold(rows)
     assert _state(materialize(log, keys=["id"], columns=["id", *COLS])) == want
     assert _state(materialize(log, keys=["id"])) == want  # derived columns

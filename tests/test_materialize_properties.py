@@ -1,14 +1,15 @@
 """Property test: ``materialize`` vs the reference sequential fold.
 
-The window-fill merge (``operators/materialize.py``) is the subtlest kernel
-in the repo — per-column LOCF over an LSN-sorted window with struct-tagged
-presence, NULL-vs-absent distinction, TOAST inheritance, and re-INSERT
-freshness via the running last-INSERT-LSN marker. The fixture-shaped tests
-and the DuckDB oracle pin it on one synthetic distribution; this pins it on
-hypothesis-generated protocol-valid changelogs against the obviously-correct
-sequential fold the reference consumer effectively implements
-(``test_materialize_equivalence._fold``: `CdcEngine.java:132-137` replay
-order; `PgWalMessageDecoder.java:206-207` TOAST-absent sparsity).
+The aggregate sparse merge (``operators/materialize.py``) is the subtlest
+kernel in the repo — per key, ``max`` over LSN-led structs for the terminal
+event, the last INSERT and each column's latest present entry, with
+NULL-vs-absent distinction, TOAST inheritance, and re-INSERT freshness via
+the last-INSERT LSN. The fixture-shaped tests and the DuckDB oracle pin it
+on one synthetic distribution; this pins it on hypothesis-generated
+protocol-valid changelogs, spread over four partitions, against the
+obviously-correct sequential fold the reference consumer effectively
+implements (``test_materialize_equivalence._fold``: `CdcEngine.java:132-137`
+replay order; `PgWalMessageDecoder.java:206-207` TOAST-absent sparsity).
 
 Protocol-valid per key: events replay in LSN order; the first event may be
 I, U, or D (capture may start mid-stream); after that I only follows D, and
@@ -83,7 +84,7 @@ class TestMaterializeProperties:
     @settings(max_examples=30, deadline=None)
     @given(changelog())
     @pytest.mark.slow  # r18 tier split: lifecycle/parity soak; slow tier
-    def test_window_fill_matches_sequential_fold(self, spark, rows):
+    def test_sparse_merge_matches_sequential_fold(self, spark, rows):
         df = spark.createDataFrame(rows, SCHEMA).repartition(4)
         got = _state(
             materialize(df, keys=["id"], merge_sparse=True,

@@ -359,22 +359,32 @@ def test_whole_stage_codegen_present(spark, name):
 
 
 def test_materialize_pipeline_shuffle_budget(spark):
-    """cdc_materialize_state (synthesis window + window-fill merge) must plan
+    """cdc_materialize_state (synthesis window + aggregate merge) must plan
     exactly its two inherent shuffles — version-numbering over the raw key
-    columns and latest-wins over the extracted envelope keys — with one sort
-    each. A third Exchange/Sort means a window stopped sharing its
-    partitioning (e.g. the final-row marker regressing to an unordered
-    full-frame window)."""
+    columns and the merge's group-by over the extracted envelope keys.
+    The synthesis is the only window; the merge is one partial/final
+    SortAggregate pair (struct buffers are not fixed width, so no
+    HashAggregate) whose partial brings its own sort, for three sorts in
+    all. A third Exchange means a stage stopped sharing its partitioning;
+    a second Window means the merge regressed to a window fill; an
+    ObjectHashAggregate means it regressed to a collect-style buffer."""
     import re
 
     plan = _plan(spark, "cdc_materialize_state")
     counts = {
         k: len(re.findall(rf"\(\d+\) {k}\b", plan))
-        for k in ("Exchange", "Sort", "Window")
+        for k in ("Exchange", "Sort", "Window", "SortAggregate",
+                  "HashAggregate", "ObjectHashAggregate")
     }
+    aggregates = sum(
+        counts[k]
+        for k in ("SortAggregate", "HashAggregate", "ObjectHashAggregate")
+    )
     assert counts["Exchange"] <= 2, (counts, plan[:1500])
-    assert counts["Sort"] <= 2, (counts, plan[:1500])
-    assert counts["Window"] <= 3, (counts, plan[:1500])
+    assert counts["Sort"] <= 3, (counts, plan[:1500])
+    assert counts["Window"] <= 1, (counts, plan[:1500])
+    assert aggregates == 2, (counts, plan[:1500])
+    assert counts["ObjectHashAggregate"] == 0, (counts, plan[:1500])
 
 
 # --- broadcast-hint boundedness sweep ----------------------------------------
