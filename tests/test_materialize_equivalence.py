@@ -92,11 +92,17 @@ def _adversarial(first_key: int):
         ("I", 10, k + 4, {"id": str(k + 4), "a": "p", "b": "q", "c": "r"}),
         ("U", 11, k + 4, {"id": str(k + 4), "a": "p2"}),
         ("U", 11, k + 4, {"id": str(k + 4), "a": "p2"}),
-        # re-INSERT whose image lacks a column (dropped between the two
-        # lives): the old generation's c must not leak into the new image
+        # re-INSERT whose image lacks columns (dropped between the two
+        # lives): the old generation's b and c must not leak into the new
+        # image, whether from its INSERT or from a later UPDATE
         ("I", 12, k + 5, {"id": str(k + 5), "a": "m", "c": "old"}),
-        ("D", 13, k + 5, {"id": str(k + 5)}),
-        ("I", 14, k + 5, {"id": str(k + 5), "a": "n"}),
+        ("U", 13, k + 5, {"id": str(k + 5), "b": "old"}),
+        ("D", 14, k + 5, {"id": str(k + 5)}),
+        ("I", 15, k + 5, {"id": str(k + 5), "a": "n"}),
+        # at-least-once replay of a terminal DELETE: the key is dropped
+        ("I", 16, k + 6, {"id": str(k + 6), "a": "g", "b": "h", "c": "i"}),
+        ("D", 17, k + 6, {"id": str(k + 6)}),
+        ("D", 17, k + 6, {"id": str(k + 6)}),
     ]
 
 
@@ -128,77 +134,42 @@ def _state(df, key=lambda r: r["columns"]["id"]):
     return out
 
 
+@pytest.mark.parametrize("layout", ["ordered", "shuffled"])
 @pytest.mark.parametrize("seed", [7, 42])
-def test_sparse_merge_matches_sequential_fold(spark, seed):
-    rows = (
-        _gen_events(seed, n_keys=120, first_key=10_000)
-        + _adversarial(first_key=90_000)
-    )
-    log = spark.createDataFrame(rows, SCHEMA)
+def test_sparse_merge_matches_sequential_fold(spark, seed, layout):
+    """``shuffled`` spreads the events in a seeded random order over four
+    partitions, so partial aggregates reach the final one in no particular
+    LSN order; the adversarial keys are repeated so that some copies
+    straddle partitions wherever the rows land, and the test checks that
+    they do."""
+    rows = _gen_events(seed, n_keys=120, first_key=10_000)
+    for j in range(8):
+        rows += _adversarial(first_key=90_000 + 10 * j)
+    if layout == "ordered":
+        log = spark.createDataFrame(rows, SCHEMA)
+    else:
+        random.Random(seed).shuffle(rows)
+        log = spark.createDataFrame(rows, SCHEMA).repartition(4)
+        _assert_straddles(log)
     want = _fold(rows)
     assert _state(materialize(log, keys=["id"], columns=["id", *COLS])) == want
     assert _state(materialize(log, keys=["id"])) == want  # derived columns
 
 
-def _split_cases(first_key: int, first_lsn: int, copies: int):
-    """Keys whose events must meet in the final aggregate, repeated so that
-    some copies land split over partitions whatever the placement."""
-    rows = []
-    lsn = first_lsn
-    for j in range(copies):
-        k = first_key + 3 * j
-        r, u, d = str(k), str(k + 1), str(k + 2)
-        rows += [
-            # re-INSERT without b: the old generation's UPDATE of b, merged
-            # from another partition, must not leak into the new image
-            ("I", lsn + 1, k, {"id": r, "a": "a0", "b": "b0", "c": "c0"}),
-            ("U", lsn + 2, k, {"id": r, "b": "b1"}),
-            ("D", lsn + 3, k, {"id": r}),
-            ("I", lsn + 4, k, {"id": r, "a": "a2", "c": None}),
-            # duplicate-LSN terminal UPDATE (at-least-once redelivery)
-            ("I", lsn + 5, k + 1, {"id": u, "a": "a0", "b": "b0", "c": "c0"}),
-            ("U", lsn + 6, k + 1, {"id": u, "a": "a3"}),
-            ("U", lsn + 6, k + 1, {"id": u, "a": "a3"}),
-            # duplicate-LSN terminal DELETE
-            ("I", lsn + 7, k + 2, {"id": d, "a": "a0", "b": "b0", "c": "c0"}),
-            ("D", lsn + 8, k + 2, {"id": d}),
-            ("D", lsn + 8, k + 2, {"id": d}),
-        ]
-        lsn += 10
-    return rows
-
-
-def test_merge_order_across_partitions(spark):
-    """Partial aggregates reach the final one in no particular LSN order;
-    the merge must still equal the sequential fold. The events are
-    shuffled and spread round-robin over four partitions, and the test
-    checks that the split cases really straddle partitions."""
+def _assert_straddles(log):
     from pyspark.sql import functions as F
 
-    copies = 8
-    rows = (
-        _gen_events(11, n_keys=120, first_key=10_000)
-        + _adversarial(first_key=90_000)
-        + _split_cases(first_key=95_000, first_lsn=500_000, copies=copies)
-    )
-    random.Random(11).shuffle(rows)
-    log = spark.createDataFrame(rows, SCHEMA).repartition(4)
-
-    by_key: dict = {}
-    for r in log.select(F.spark_partition_id(), "lsn", "txn_id").collect():
-        by_key.setdefault(r[2], []).append((r[1], r[0]))
-    assert len({p for evs in by_key.values() for _, p in evs}) == 4
-    # (lsn, partition) per split-case key, in LSN order
-    split = [sorted(by_key[k]) for k in range(95_000, 95_000 + 3 * copies)]
-    assert any(ev[1][1] != ev[3][1] for ev in split[0::3]), (
+    part: dict = {}  # (key, lsn) -> partitions of its events
+    for r in log.select(F.spark_partition_id(), "txn_id", "lsn").collect():
+        part.setdefault((r[1], r[2]), []).append(r[0])
+    assert len({p for ps in part.values() for p in ps}) == 4
+    firsts = [90_000 + 10 * j for j in range(8)]
+    assert any(part[k + 5, 13] != part[k + 5, 15] for k in firsts), (
         "no re-INSERT landed apart from its old generation's UPDATE")
-    for dups in (split[1::3], split[2::3]):
-        assert any(ev[-1][1] != ev[-2][1] for ev in dups), (
-            "no duplicate terminal event split over two partitions")
-
-    want = _fold(rows)
-    assert _state(materialize(log, keys=["id"], columns=["id", *COLS])) == want
-    assert _state(materialize(log, keys=["id"])) == want  # derived columns
+    for k_off, dup_lsn in ((4, 11), (6, 17)):
+        assert any(len(set(part[k + k_off, dup_lsn])) == 2 for k in firsts), (
+            f"no duplicate terminal event at lsn {dup_lsn} split over two "
+            "partitions")
 
 
 def test_derived_columns_span_tables(spark):
@@ -284,5 +255,7 @@ def test_adversarial_semantics_pinned(spark):
     assert st["3"] == ("U", 9, {"id": "3", "a": "3", "b": "toast", "c": None})
     # duplicate-LSN replay collapses to ONE final row, TOAST still merged
     assert st["4"] == ("U", 11, {"id": "4", "a": "p2", "b": "q", "c": "r"})
-    # re-insert without c: nothing of the deleted generation survives
-    assert st["5"] == ("I", 14, {"id": "5", "a": "n"})
+    # re-insert without b and c: nothing of the deleted generation survives
+    assert st["5"] == ("I", 15, {"id": "5", "a": "n"})
+    # duplicate-LSN terminal DELETE still drops the key
+    assert "6" not in st

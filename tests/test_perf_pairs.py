@@ -1,11 +1,14 @@
-"""``tools/perf_pairs.summarize``: the interleaved-pairs gain rule and the
-bound check, on hand-made run results (no Spark)."""
+"""``tools/perf_pairs``: the interleaved-pairs gain rule, the bound check
+and per-side failure accounting, on hand-made run results (no Spark)."""
 
 from __future__ import annotations
 
 import importlib.util
 import json
 import os
+import sys
+
+import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _spec = importlib.util.spec_from_file_location(
@@ -20,6 +23,7 @@ SPEC = [
     {"name": "latency_p50_ms", "unit": "ms", "better": "lower",
      "bound": 0.24},
 ]
+NO_FAILS = {"parent": 0, "change": 0}
 
 
 def _pairs(parent, change, name="throughput_per_s"):
@@ -27,7 +31,7 @@ def _pairs(parent, change, name="throughput_per_s"):
 
 
 def _row(pairs, name="throughput_per_s"):
-    (row,) = [r for r in perf_pairs.summarize(pairs, SPEC)
+    (row,) = [r for r in perf_pairs.summarize(pairs, SPEC, NO_FAILS)
               if r["metric"] == name]
     return row
 
@@ -88,15 +92,33 @@ def test_wide_parent_spread_is_unresolved():
     assert not r["unresolved"]
 
 
+def test_more_failing_change_runs_void_the_gain():
+    pairs = _pairs([100] * 10, [150] * 10)
+    (r,) = perf_pairs.summarize(pairs, SPEC, {"parent": 1, "change": 1})
+    assert r["gain_holds"]
+    (r,) = perf_pairs.summarize(pairs, SPEC, {"parent": 0, "change": 1})
+    assert r["wins"] == 10 and not r["gain_holds"]
+
+
+def test_run_once_keeps_a_failing_runs_result():
+    """A run that exits 1 after printing its result is kept (with its
+    ``failed`` count); one that prints nothing raises."""
+    res = {"correct": False, "attempted": 1, "failed": 1, "metrics": {}}
+    emit = f"print('progress'); print({json.dumps(res)!r}); raise SystemExit(1)"
+    got = perf_pairs.run_once(".", [sys.executable, "-c", emit], "w", 7, 1)
+    assert got == res
+    with pytest.raises(RuntimeError, match="exited 1"):
+        perf_pairs.run_once(".", [sys.executable, "-c", "raise SystemExit(1)"],
+                            "w", 7, 1)
+
+
 def test_missing_metric_is_skipped():
-    rows = perf_pairs.summarize(_pairs([1, 2], [3, 4]), SPEC)
+    rows = perf_pairs.summarize(_pairs([1, 2], [3, 4]), SPEC, NO_FAILS)
     assert [r["metric"] for r in rows] == ["throughput_per_s"]
 
 
 def test_report_groups_logs_by_workload_and_seed(tmp_path, capsys):
     log = tmp_path / "runs.jsonl"
-    bench = tmp_path / "BENCHMARK.json"
-    bench.write_text(json.dumps({"end_to_end": SPEC}))
     with open(log, "w") as f:
         for seed in (7, 11):
             for i in range(3):
@@ -116,9 +138,11 @@ def test_report_groups_logs_by_workload_and_seed(tmp_path, capsys):
     groups = perf_pairs._pairs_from_logs([str(log)])
     assert sorted(groups) == [("w", 7), ("w", 11)]
     pairs, failed = groups[("w", 7)]
-    assert len(pairs) == 3 and failed == 1
+    assert len(pairs) == 3 and failed == {"parent": 1, "change": 0}
     assert pairs[0] == ({"throughput_per_s": 100}, {"throughput_per_s": 150})
-    assert perf_pairs.main(["--report", str(log), "--benchmark", str(bench)]) == 0
+    assert groups[("w", 11)][1] == {"parent": 0, "change": 0}
+    assert perf_pairs.main(["--report", str(log)]) == 0
     out = capsys.readouterr().out
-    assert "w seed 7: 3 pairs, 1 runs with failed > 0" in out
+    assert "w seed 7: 3 pairs, runs with failed > 0: parent 1, change 0" in out
     assert "w seed 11: 3 pairs" in out
+    assert "throughput_per_s" in out

@@ -1,16 +1,16 @@
 """Interleaved A/B pairs of the benchmark of record, with the gain rule.
 
     python tools/perf_pairs.py --parent <checkout> --change <checkout> \\
-        --workload backfill_replay --seed 7 --pairs 10 [--seconds 20] \\
-        [--log runs.jsonl]
+        --workload backfill_replay --seed 7 --pairs 10 [--log runs.jsonl]
     python tools/perf_pairs.py --report runs.jsonl
 
-Runs ``BENCHMARK.json``'s command (``perfbench/run.py``) untraced from each
-checkout in turn, alternating which side goes first. Per end-to-end metric
-it prints each side's median and quartiles, how many pairs the change won,
-and whether a gain may be claimed: at least ten pairs, the change wins at
-least nine in ten (ties count for neither), and the medians differ by more
-than the parent's interquartile range. A metric whose change median is
+Runs ``BENCHMARK.json``'s command (``perfbench/run.py``) untraced for its
+``run_seconds`` from each checkout in turn, alternating which side goes
+first. Per end-to-end metric it prints each side's median and quartiles,
+how many pairs the change won, and whether a gain may be claimed: at least
+ten pairs, the change wins at least nine in ten (ties count for neither),
+the medians differ by more than the parent's interquartile range, and the
+change has no more failing runs (``failed`` > 0) than the parent. A metric whose change median is
 worse than the parent's by more than its ``BENCHMARK.json`` bound is
 flagged WORSE; one whose parent spread (IQR / median) is wider than the
 bound is flagged unresolved unless every change run beats every parent
@@ -41,10 +41,12 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
-def summarize(pairs: list[tuple[dict, dict]], spec: list[dict]) -> list[dict]:
+def summarize(pairs: list[tuple[dict, dict]], spec: list[dict],
+              failed: dict) -> list[dict]:
     """One row per ``BENCHMARK.json`` end-to-end metric, from ``pairs`` of
-    (parent, change) metric dicts. A metric missing from either side of a
-    pair leaves that pair out of the row."""
+    (parent, change) metric dicts and ``failed``, the count of runs with
+    ``failed`` > 0 per side. A metric missing from either side of a pair
+    leaves that pair out of the row."""
     rows = []
     for m in spec:
         name, bound = m["name"], float(m["bound"])
@@ -70,7 +72,8 @@ def summarize(pairs: list[tuple[dict, dict]], spec: list[dict]) -> list[dict]:
             "ratio": cmed / pmed if pmed else float("nan"),
             "wins": wins,
             "gain_holds": (len(got) >= MIN_PAIRS and wins >= 0.9 * len(got)
-                           and gain > iqr),
+                           and gain > iqr
+                           and failed["change"] <= failed["parent"]),
             "worse_than_bound": worse > bound,
             "unresolved": (
                 pmed != 0 and iqr / abs(pmed) > bound
@@ -110,34 +113,37 @@ def _values(metrics: dict) -> dict:
 
 def run_once(checkout: str, command: list[str], workload: str, seed: int,
              seconds: float) -> dict:
-    """One untraced benchmark run from ``checkout``; its final JSON line."""
+    """One untraced benchmark run from ``checkout``; its final JSON line.
+    A failing run still prints its result (with ``failed`` > 0) and exits
+    non-zero; only a run that prints no result raises."""
     argv = [*command, "--workload", workload, "--seed", str(seed),
             "--seconds", str(seconds), "--trace", "0"]
     proc = subprocess.run(argv, cwd=checkout, capture_output=True, text=True)
     lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
-    if proc.returncode != 0 or not lines:
+    try:
+        return json.loads(lines[-1])
+    except (IndexError, ValueError):
         raise RuntimeError(
             f"{' '.join(argv)} in {checkout} exited {proc.returncode}:\n"
             + proc.stderr[-2000:]
-        )
-    return json.loads(lines[-1])
+        ) from None
 
 
-def _pairs_from_logs(paths: list[str]) -> dict[tuple, tuple[list, int]]:
-    """{(workload, seed): (pairs, runs with failed > 0)} from ``--log``
-    files; a pair needs both sides."""
+def _pairs_from_logs(paths: list[str]) -> dict[tuple, tuple[list, dict]]:
+    """{(workload, seed): (pairs, {side: runs with failed > 0})} from
+    ``--log`` files; a pair needs both sides."""
     by_pair: dict[tuple, dict] = {}
-    failed: dict[tuple, int] = {}
+    failed: dict[tuple, dict] = {}
     for path in paths:
         with open(path) as f:
             for line in f:
                 rec = json.loads(line)
                 group = (rec["workload"], rec["seed"])
-                failed[group] = failed.get(group, 0) + (
-                    rec["result"]["failed"] > 0)
+                per_side = failed.setdefault(group, {"parent": 0, "change": 0})
+                per_side[rec["side"]] += rec["result"]["failed"] > 0
                 side = by_pair.setdefault((*group, path, rec["pair"]), {})
                 side[rec["side"]] = _values(rec["result"]["metrics"])
-    out: dict[tuple, tuple[list, int]] = {}
+    out: dict[tuple, tuple[list, dict]] = {}
     for key, v in sorted(by_pair.items()):
         if "parent" in v and "change" in v:
             out.setdefault(key[:2], ([], failed[key[:2]]))[0].append(
@@ -145,11 +151,11 @@ def _pairs_from_logs(paths: list[str]) -> dict[tuple, tuple[list, int]]:
     return out
 
 
-def _report(workload: str, seed: int, pairs: list, failed: int,
+def _report(workload: str, seed: int, pairs: list, failed: dict,
             spec: list[dict]) -> None:
-    print(f"{workload} seed {seed}: {len(pairs)} pairs, "
-          f"{failed} runs with failed > 0")
-    print(format_rows(summarize(pairs, spec)))
+    print(f"{workload} seed {seed}: {len(pairs)} pairs, runs with "
+          f"failed > 0: parent {failed['parent']}, change {failed['change']}")
+    print(format_rows(summarize(pairs, spec, failed)))
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -159,14 +165,12 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--workload")
     ap.add_argument("--seed", type=int)
     ap.add_argument("--pairs", type=int, default=MIN_PAIRS)
-    ap.add_argument("--seconds", type=float)
     ap.add_argument("--log", help="append each run's result to this JSONL")
     ap.add_argument("--report", nargs="+",
                     help="summarize --log files and exit")
-    ap.add_argument("--benchmark", default=os.path.join(ROOT, "BENCHMARK.json"))
     args = ap.parse_args(argv)
 
-    with open(args.benchmark) as f:
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
     spec = bench["end_to_end"]
 
@@ -179,17 +183,16 @@ def main(argv: list[str] | None = None) -> int:
     if not (args.parent and args.change and args.workload
             and args.seed is not None):
         ap.error("--parent, --change, --workload and --seed are required")
-    seconds = args.seconds or bench["run_seconds"]
     sides = {"parent": os.path.abspath(args.parent),
              "change": os.path.abspath(args.change)}
-    pairs, failed = [], 0
+    pairs, failed = [], {"parent": 0, "change": 0}
     for i in range(args.pairs):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         got = {}
         for side in order:
             res = run_once(sides[side], bench["command"], args.workload,
-                           args.seed, seconds)
-            failed += res["failed"] > 0
+                           args.seed, bench["run_seconds"])
+            failed[side] += res["failed"] > 0
             got[side] = _values(res["metrics"])
             if args.log:
                 with open(args.log, "a") as f:
