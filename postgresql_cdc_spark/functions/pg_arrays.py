@@ -21,6 +21,7 @@ from pyspark.sql import Column, functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from postgresql_cdc_spark.functions.pg_array_parser import parse_string_array
+from postgresql_cdc_spark.session import cache_zip_directories
 
 
 def _numeric_array(col: Column, element_type: str) -> Column:
@@ -56,6 +57,7 @@ def pg_string_array(s: pd.Series) -> pd.Series:
     (`PgArrayUtil.java:54-204`): unquoted runs, quoted elements with
     ``\\b \\f \\n \\r \\t \\uXXXX \\" \\\\`` escapes, positional errors.
     """
+    cache_zip_directories()  # runs in a Python worker, once per batch
 
     def parse(v: Optional[str]) -> Optional[List[str]]:
         return parse_string_array(v)

@@ -36,6 +36,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
+# every kernel below runs in a Python worker: each installs the zip-directory
+# cache there before Spark's next per-task invalidate_caches()
+from postgresql_cdc_spark.session import cache_zip_directories
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -101,6 +105,7 @@ def binary_features(df: DataFrame) -> DataFrame:
     """
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cache_zip_directories()
         for pdf in batches:
             payloads = pdf["payload"]
             yield pd.DataFrame(
@@ -126,6 +131,7 @@ def decode_resize(df: DataFrame, target: tuple[int, int] = (32, 32)) -> DataFram
     tw, th = target
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cache_zip_directories()
         for pdf in batches:
             dims = pdf["payload"].map(lambda b: fake_decode_image(bytes(b)))
             w = dims.map(lambda d: d[0]).astype("int32")
@@ -167,6 +173,7 @@ def audio_window_energy(df: DataFrame, window_bytes: int = 64,
     import numpy as np
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cache_zip_directories()
         for pdf in batches:
             ids, wins, sizes, energies = [], [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
@@ -243,6 +250,7 @@ def perceptual_ahash_chunks(df: DataFrame) -> DataFrame:
     import numpy as np
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cache_zip_directories()
         weights = (np.int64(1) << np.arange(16, dtype=np.int64))
         for pdf in batches:
             n = len(pdf)
@@ -354,6 +362,7 @@ def content_defined_chunks(
     W, M = window, mod
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cache_zip_directories()
         weights = np.arange(1, W + 1, dtype=np.int64)
         for pdf in batches:
             out_doc: list[int] = []
@@ -422,6 +431,7 @@ def scene_cut_detect(
     FB, T = frame_bytes, threshold
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cache_zip_directories()
         for pdf in batches:
             ids, nfr, ncut, cuts = [], [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
@@ -475,6 +485,7 @@ def byte_diversity_profile(df: DataFrame) -> DataFrame:
     import numpy as np
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cache_zip_directories()
         for pdf in batches:
             ids, nb, nd, tp, cls = [], [], [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):

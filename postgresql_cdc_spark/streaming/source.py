@@ -10,7 +10,8 @@ streaming contract:
   transaction is open (`CdcEngine.java:132-137` guard), giving at-least-once,
   txn-aligned delivery;
 - ``read()`` decodes pgoutput frames into envelope rows
-  ``(op, schema, table, relation_id, lsn, txn_id, columns)``;
+  ``(op, schema, table, relation_id, lsn, txn_id, columns)``, yielded as
+  Arrow record batches built column by column;
 - ``commit(offset)`` persists the flush LSN (the ``setFlushedLSN`` analog) so
   the producer may discard WAL ≤ LSN;
 - a micro-batch is a single input partition — the replication protocol is
@@ -28,6 +29,20 @@ Two transports:
   ``wal_level=logical``; neither exists in this container. The decode and
   offset logic is transport-independent, so the live transport only swaps the
   frame iterator.
+
+Where a read's fixed cost goes. ``load()``, read planning and every read
+task each run in a Spark Python process, and before each one Spark calls
+``importlib.invalidate_caches()``. On CPython 3.12.1 and earlier that makes
+every zip importer re-read the directory of ``pyspark.zip``: 15 importers at
+about 7.5 ms each, paid again in every reused worker. The data source's
+entry points install ``session.cache_zip_directories``, which re-reads an
+archive only when it changed. Measured on 4 vCPU over a 30k-change archive
+in four partitions (medians of 8 in one warm session): ``load()`` 0.16 s →
+0.04 s, and read → noop 0.75 s → 0.39 s with the cache and the Arrow
+batches together. Of the Python work per 8.4k-row partition, pgoutput
+decode took 0.09 s and Spark's row-tuple-to-Arrow conversion another
+0.09 s; building the Arrow batches here (``_read_envelope``) costs about
+0.02 s instead.
 """
 
 from __future__ import annotations
@@ -36,7 +51,7 @@ import json
 import os
 import struct
 from dataclasses import dataclass
-from typing import Iterator, List, Optional, Tuple
+from typing import TYPE_CHECKING, Iterator, List, Optional, Tuple
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -45,7 +60,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from postgresql_cdc_spark.session import default_parallelism
+from postgresql_cdc_spark.session import cache_zip_directories, default_parallelism
 from postgresql_cdc_spark.sources.pgoutput import (
     ChangeRecord,
     ColumnMeta,
@@ -55,6 +70,9 @@ from postgresql_cdc_spark.sources.pgoutput import (
     TxBegin,
     TxCommit,
 )
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 ENVELOPE_DDL = (
     "op string, schema string, table string, relation_id int, "
@@ -71,6 +89,9 @@ _OPEN_END = 1 << 62
 # The message kinds that carry registry or transaction state. Frames a scan
 # only steps over (at or behind its cursor) decode just these.
 _STATE_TAGS = (b"R", b"B", b"C")
+# Rows per Arrow batch that read() yields: Spark's own Arrow batch size
+# (``spark.sql.execution.arrow.maxRecordsPerBatch``'s default).
+_BATCH_ROWS = 10_000
 
 
 def write_wal_archive(path: str, frames: List[Tuple[int, bytes]],
@@ -230,8 +251,10 @@ def _fsync_dir(path: str) -> None:
     unlink batches: without it a power cut can resurrect an unlinked chunk
     or lose a renamed snapshot's directory entry. Replay stays CORRECT
     either way — the head-snapshot application and the scan's
-    LSN-monotonicity guard drop resurrected duplicates — so this closes a
-    tidiness window, not a correctness one. Best-effort: filesystems that
+    LSN-monotonicity guard drop resurrected duplicates — so there this
+    closes a tidiness window. ``run_wal_relay`` calls it between a new
+    chunk's fsync and its ack, where it is a correctness barrier: the
+    acked WAL is gone upstream. Best-effort: filesystems that
     refuse O_DIRECTORY fsync (some network mounts) degrade to the
     pre-fsync behavior."""
     try:
@@ -551,28 +574,73 @@ def _split_lsns(cuts: List[Tuple[int, int]], total: int, n: int) -> List[int]:
     return out
 
 
-def _read_envelope(partition: _WalPartition) -> Iterator[tuple]:
-    """Envelope rows with ``start_lsn < lsn <= end_lsn``."""
+def _read_envelope(partition: _WalPartition) -> Iterator[pa.RecordBatch]:
+    """Envelope rows with ``start_lsn < lsn <= end_lsn`` in LSN order, as
+    Arrow record batches of at most ``_BATCH_ROWS`` rows typed exactly as
+    ``ENVELOPE_DDL``. Built column by column: handed row tuples, Spark's
+    worker converts each value to Arrow in Python, which cost about as much
+    as the decode itself."""
+    import pyarrow as pa
+
+    cache_zip_directories()
+    str_t = pa.string()
+    schema = pa.schema([
+        ("op", str_t), ("schema", str_t), ("table", str_t),
+        ("relation_id", pa.int32()), ("lsn", pa.int64()),
+        ("txn_id", pa.int64()), ("columns", pa.map_(str_t, str_t)),
+    ])
     decoder = PgOutputDecoder()
     # txn_id -1 = DML outside any txn: singleton semantics
     state = {"txn_open": False, "txn_id": -1}
+    ops: list = []
+    schemas: list = []
+    tables: list = []
+    rel_ids: list = []
+    lsns: list = []
+    txn_ids: list = []
+    # the map column: every row's keys and values end to end, and the
+    # offset where each row's entries end
+    keys: list = []
+    vals: list = []
+    ends = [0]
+
+    def batch() -> pa.RecordBatch:
+        cols = pa.MapArray.from_arrays(pa.array(ends, pa.int32()),
+                                       pa.array(keys, str_t),
+                                       pa.array(vals, str_t))
+        out = pa.RecordBatch.from_arrays(
+            [pa.array(ops, str_t), pa.array(schemas, str_t),
+             pa.array(tables, str_t), pa.array(rel_ids, pa.int32()),
+             pa.array(lsns, pa.int64()), pa.array(txn_ids, pa.int64()), cols],
+            schema=schema,
+        )
+        for buf in (ops, schemas, tables, rel_ids, lsns, txn_ids, keys, vals):
+            buf.clear()
+        del ends[1:]
+        return out
+
     for lsn, msg in scan_wal_messages(
         partition.path, decoder, state, skip_upto_lsn=partition.start_lsn,
     ):
         if lsn > partition.end_lsn:
             break
         if isinstance(msg, ChangeRecord):
-            yield (
-                msg.op,
-                msg.relation.schema,
-                msg.relation.name,
-                msg.relation.relation_id,
-                lsn,
-                state["txn_id"],
-                msg.columns,
-            )
+            rel = msg.relation
+            ops.append(msg.op)
+            schemas.append(rel.schema)
+            tables.append(rel.name)
+            rel_ids.append(rel.relation_id)
+            lsns.append(lsn)
+            txn_ids.append(state["txn_id"])
+            keys.extend(msg.columns)
+            vals.extend(msg.columns.values())
+            ends.append(len(keys))
+            if len(ops) == _BATCH_ROWS:
+                yield batch()
         if lsn == partition.end_lsn:
             break  # the range is done: read no byte of the next chunk
+    if ops:
+        yield batch()
 
 
 class WalArchiveStreamReader(DataSourceStreamReader):
@@ -686,8 +754,9 @@ class WalArchiveStreamReader(DataSourceStreamReader):
             self._last_offset = dict(end)
         return [_WalPartition(self.path, start["lsn"], end["lsn"])]
 
-    def read(self, partition: _WalPartition) -> Iterator[tuple]:
-        """Decode the archive; emit envelope rows with start < lsn <= end.
+    def read(self, partition: _WalPartition) -> Iterator[pa.RecordBatch]:
+        """Decode the archive; emit envelope rows with start < lsn <= end,
+        as Arrow batches (``_read_envelope``).
 
         The relation registry must be complete at the window start (RELATION
         may precede the window, possibly by the whole archive): chunks wholly
@@ -746,7 +815,7 @@ class WalArchiveBatchReader(DataSourceReader):
         return [_WalPartition(self.path, lo, hi)
                 for lo, hi in zip([-1] + lsns, lsns + [_OPEN_END])]
 
-    def read(self, partition: _WalPartition) -> Iterator[tuple]:
+    def read(self, partition: _WalPartition) -> Iterator[pa.RecordBatch]:
         yield from _read_envelope(partition)
 
 
@@ -759,15 +828,22 @@ class PgCdcDataSource(DataSource):
     def name(cls) -> str:
         return "pgcdc"
 
+    # schema(), reader() and streamReader() run in Spark's Python planner
+    # processes, and read() in its workers: each installs the zip-directory
+    # cache there before Spark's next per-call invalidate_caches().
+
     def schema(self) -> str:
+        cache_zip_directories()
         return ENVELOPE_DDL
 
     def streamReader(self, schema) -> WalArchiveStreamReader:
+        cache_zip_directories()
         return WalArchiveStreamReader(
             {k.lower(): v for k, v in self.options.items()}
         )
 
     def reader(self, schema) -> WalArchiveBatchReader:
+        cache_zip_directories()
         return WalArchiveBatchReader(
             {k.lower(): v for k, v in self.options.items()}
         )
@@ -839,6 +915,10 @@ def run_wal_relay(transport, path: str, chunk_frames: int = 1000,
         fp = write_wal_archive(path, buf, chunk=f"{chunk_idx:06d}.wal")
         with open(fp, "rb") as f:  # durability barrier before the ack
             os.fsync(f.fileno())
+        # a new chunk's directory entry is durable only once the directory
+        # is: without this a power cut can lose an acked chunk whose WAL
+        # upstream has already discarded
+        _fsync_dir(path)
         transport.ack(buf[-1][0])
         chunk_idx += 1
         buf = []

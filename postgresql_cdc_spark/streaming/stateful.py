@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
+from postgresql_cdc_spark.session import cache_zip_directories
+
 
 def make_dedup_fn(order_col: str | None, ttl_ms: int | None):
     """State-update function for streaming exact dedup (factored out so its
@@ -47,6 +49,7 @@ def make_dedup_fn(order_col: str | None, ttl_ms: int | None):
         pdfs: Iterable[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        cache_zip_directories()  # runs in a Python worker, once per group
         if ttl_ms is not None and state.hasTimedOut:
             # quiet for >= ttl: forget the key so a future arrival re-emits
             state.remove()

@@ -32,6 +32,7 @@ from postgresql_cdc_spark.streaming.source import (
     scan_wal_messages,
     write_wal_archive,
 )
+from tests.test_parallel_replay import envelope_rows
 
 REL = Relation(
     relation_id=16384,
@@ -164,7 +165,7 @@ def test_multi_slot_drain_races_prune_and_compact(tmp_path_factory, n_txns,
          "ackpath": os.path.join(arch, "__noack")}
     )
     ref_end = ref_reader.latestOffset()
-    ref = list(ref_reader.read(
+    ref = envelope_rows(ref_reader.read(
         ref_reader.partitions({"lsn": -1, "txn_open": False}, ref_end)[0]
     ))
     assert ref_end["lsn"] == head
@@ -185,7 +186,7 @@ def test_multi_slot_drain_races_prune_and_compact(tmp_path_factory, n_txns,
                 warnings.simplefilter("ignore")  # fresh-below-base warning
                 end = self.reader.latestOffset()
                 part = self.reader.partitions(self.cur, end)[0]
-                rows = list(self.reader.read(part))
+                rows = envelope_rows(self.reader.read(part))
             self.reader.commit(end)
             lo = max(self.cur["lsn"], base)
             want = [t for t in ref if lo < t[4] <= end["lsn"]]

@@ -301,6 +301,42 @@ class TestWalRelay:
         assert [lsn for lsn, _ in read_wal_frames(arch)] == [1, 50, 60, 61]
         assert t.acked == [61]
 
+    def test_relay_fsyncs_chunk_then_directory_then_acks(self, tmp_path,
+                                                          monkeypatch):
+        """Every flush makes the new chunk durable, then its directory entry,
+        and only then acks: an ack before the directory fsync lets a power
+        cut lose a chunk whose WAL upstream has already discarded."""
+        import os
+
+        from postgresql_cdc_spark.streaming import source as src
+
+        events = []
+        real_fsync = os.fsync
+
+        def fsync(fd):
+            events.append(("file", os.path.basename(os.readlink(
+                f"/proc/self/fd/{fd}"))))
+            real_fsync(fd)
+
+        monkeypatch.setattr(os, "fsync", fsync)
+        monkeypatch.setattr(src, "_fsync_dir",
+                            lambda path: events.append(("dir", path)))
+
+        class Transport:
+            def frames(self):
+                yield from ((lsn, b"x") for lsn in range(1, 8))
+
+            def ack(self, lsn):
+                events.append(("ack", lsn))
+
+        arch = str(tmp_path / "relay")
+        assert src.run_wal_relay(Transport(), arch, chunk_frames=3) == 7
+        assert events == [
+            ("file", "000000.wal"), ("dir", arch), ("ack", 3),
+            ("file", "000001.wal"), ("dir", arch), ("ack", 6),
+            ("file", "000002.wal"), ("dir", arch), ("ack", 7),
+        ]
+
     def test_torn_tail_frame_is_skipped_not_yielded_short(self, tmp_path):
         """A relay crash mid-chunk leaves a truncated tail frame; the reader
         must not yield a silently short payload for it (the frame was never

@@ -30,6 +30,7 @@ from postgresql_cdc_spark.sources.pgoutput import (
     encode_truncate,
     encode_update,
 )
+from tests.test_parallel_replay import envelope_rows
 
 REL = Relation(
     relation_id=16384,
@@ -153,7 +154,7 @@ class TestWalArchiveReader:
         end1 = r.latestOffset()
         # 3 DML inside txn 101/102: budget hits mid-txn-102 → runs to commit
         assert end1["txn_open"] is False
-        rows1 = list(r.read(r.partitions(start, end1)[0]))
+        rows1 = envelope_rows(r.read(r.partitions(start, end1)[0]))
         ops1 = [(row[0], row[4], row[5]) for row in rows1]
         assert ops1 == [
             ("I", 11, 101), ("I", 12, 101), ("U", 41, 102), ("D", 42, 102),
@@ -167,7 +168,7 @@ class TestWalArchiveReader:
         assert ack["flushed_lsn"] == end1["lsn"]
 
         end2 = r.latestOffset()
-        rows2 = list(r.read(r.partitions(end1, end2)[0]))
+        rows2 = envelope_rows(r.read(r.partitions(end1, end2)[0]))
         assert [(row[0], row[4], row[5]) for row in rows2] == [
             ("I", 70, -1), ("I", 81, 103),
         ]
@@ -197,7 +198,7 @@ class TestWalArchiveReader:
         start = r.initialOffset()
         end = r.latestOffset()
         assert end == {"lsn": 22, "txn_open": False}
-        rows = list(r.read(r.partitions(start, end)[0]))
+        rows = envelope_rows(r.read(r.partitions(start, end)[0]))
         assert [(row[0], row[4]) for row in rows] == [("I", 11)]
         r.commit(end)
         ack = json.load(open(os.path.join(arch, "_flushed_lsn")))
@@ -325,7 +326,7 @@ class TestWalArchiveReader:
         assert r2.initialOffset()["lsn"] == end1["lsn"]
         end2 = r2.latestOffset()
         assert end2["lsn"] >= end1["lsn"]
-        rows = list(r2.read(r2.partitions(end1, end2)[0]))
+        rows = envelope_rows(r2.read(r2.partitions(end1, end2)[0]))
         # only the tail records, no re-emission of batch 1
         assert [(row[0], row[4]) for row in rows] == [("I", 70), ("I", 81)]
 
@@ -428,7 +429,7 @@ class TestStartLsnHandover:
         start = r.initialOffset()
         assert start == {"lsn": 30, "txn_open": False}
         end = r.latestOffset()
-        rows = list(r.read(r.partitions(start, end)[0]))
+        rows = envelope_rows(r.read(r.partitions(start, end)[0]))
         assert [(row[0], row[4]) for row in rows] == [
             ("U", 41), ("D", 42), ("I", 70), ("I", 81),
         ]
@@ -449,7 +450,7 @@ class TestStartLsnHandover:
         )
         assert r.initialOffset()["lsn"] == 60
         end = r.latestOffset()
-        rows = list(r.read(r.partitions(r.initialOffset(), end)[0]))
+        rows = envelope_rows(r.read(r.partitions(r.initialOffset(), end)[0]))
         assert [(row[0], row[4]) for row in rows] == [("I", 70), ("I", 81)]
 
     def test_startlsn_ahead_of_stale_checkpoint_wins(self, tmp_path):

@@ -31,6 +31,7 @@ from postgresql_cdc_spark.streaming.source import (
     scan_wal_messages,
     write_wal_archive,
 )
+from tests.test_parallel_replay import envelope_rows
 
 REL = Relation(
     relation_id=16384,
@@ -75,7 +76,7 @@ def _drain(reader: WalArchiveStreamReader, path: str):
         if end["lsn"] <= start["lsn"]:
             break
         part = reader.partitions(start, end)[0]
-        rows.extend(reader.read(part))
+        rows.extend(envelope_rows(reader.read(part)))
         reader.commit(end)
         start = end
         batches += 1
@@ -164,7 +165,7 @@ class TestSidecarLifecycle:
         c2_first = last - 2 * 4 + 1  # first lsn in chunk 2
         start = c2_first + 1  # after BEGIN (c2_first is BEGIN), after 1st insert?
         part = _WalPartition(arch, start_lsn=start, end_lsn=last)
-        rows = list(WalArchiveStreamReader({"path": arch}).read(part))
+        rows = envelope_rows(WalArchiveStreamReader({"path": arch}).read(part))
         assert rows, "window should contain rows"
         for op, schema, table, rid, lsn, txn_id, cols in rows:
             assert schema == "public" and table == "t" and rid == 16384
@@ -186,7 +187,7 @@ class TestSidecarLifecycle:
         end2 = r.latestOffset()
         assert end2["lsn"] == lsn + 3
         part = _WalPartition(arch, end1["lsn"], end2["lsn"])
-        rows = list(WalArchiveStreamReader({"path": arch}).read(part))
+        rows = envelope_rows(WalArchiveStreamReader({"path": arch}).read(part))
         assert len(rows) == 1 and rows[0][0] == "I"
         assert rows[0][5] == 999 and rows[0][6] == {"id": "999", "v": "late"}
 
@@ -195,15 +196,15 @@ class TestSidecarLifecycle:
         arch = str(tmp_path / "wal")
         last = _mk_archive(arch, n_chunks=3, txns_per_chunk=3)
         part = _WalPartition(arch, -1, last)
-        cold = list(WalArchiveStreamReader({"path": arch}).read(part))
+        cold = envelope_rows(WalArchiveStreamReader({"path": arch}).read(part))
         WalArchiveStreamReader({"path": arch, "readall": "true"}).latestOffset()
-        warm = list(WalArchiveStreamReader({"path": arch}).read(part))
+        warm = envelope_rows(WalArchiveStreamReader({"path": arch}).read(part))
         assert cold == warm
         # and a mid-archive window (head chunks skipped via sidecars)
         mid = last // 2
         part2 = _WalPartition(arch, mid, last)
         direct = [r for r in cold if r[4] > mid]
-        assert list(WalArchiveStreamReader({"path": arch}).read(part2)) == direct
+        assert envelope_rows(WalArchiveStreamReader({"path": arch}).read(part2)) == direct
 
     def test_sidecar_ignored_when_unparseable(self, tmp_path):
         arch = str(tmp_path / "wal")
@@ -212,10 +213,10 @@ class TestSidecarLifecycle:
         with open(os.path.join(arch, "000000.wal.idx"), "w") as f:
             f.write("{corrupt")
         part = _WalPartition(arch, last - 1, last)
-        rows = list(WalArchiveStreamReader({"path": arch}).read(part))
+        rows = envelope_rows(WalArchiveStreamReader({"path": arch}).read(part))
         assert len(rows) == len(
-            [r for r in WalArchiveStreamReader({"path": arch}).read(
-                _WalPartition(arch, -1, last)) if r[4] > last - 1]
+            [r for r in envelope_rows(WalArchiveStreamReader({"path": arch}).read(
+                _WalPartition(arch, -1, last))) if r[4] > last - 1]
         )
 
     def test_scan_state_contract(self, tmp_path):
@@ -322,7 +323,7 @@ class TestIndexThroughSparkStreaming:
 
 class TestArchiveRetention:
     def _replay(self, arch, start, end):
-        return list(WalArchiveStreamReader({"path": arch}).read(
+        return envelope_rows(WalArchiveStreamReader({"path": arch}).read(
             _WalPartition(arch, start, end)))
 
     def test_prune_preserves_retained_window_replay(self, tmp_path):

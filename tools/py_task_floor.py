@@ -1,0 +1,82 @@
+"""The fixed cost of a Python task, next to a JVM-only one.
+
+    python tools/py_task_floor.py
+
+In one local session, prints the median wall time of three things, each
+run ``REPEATS`` times after one warm-up:
+
+- ``jvm_job``: a one-partition job with no Python in it;
+- ``arrow_job``: a one-partition identity ``mapInArrow`` job;
+- ``pgcdc_load``: ``spark.read.format("pgcdc").load()`` of a one-change
+  archive, which plans in a Python process.
+
+The warm-up reads the archive once, so the Python workers the timed jobs
+reuse have already run ``pgcdc`` code. The gap between the first line and
+the other two is what every Python task or planner call pays before doing
+any work. Rerun it after a pyspark or Python upgrade.
+"""
+
+from __future__ import annotations
+
+import os
+import statistics
+import sys
+import tempfile
+import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+REPEATS = 7
+
+
+def _median_s(fn) -> float:
+    fn()  # warm-up
+    times = []
+    for _ in range(REPEATS):
+        t = time.perf_counter()
+        fn()
+        times.append(time.perf_counter() - t)
+    return statistics.median(times)
+
+
+def main() -> None:
+    sys.path.insert(0, ROOT)
+    import postgresql_cdc_spark
+    from postgresql_cdc_spark.session import get_spark
+    from postgresql_cdc_spark.sources.pgoutput import (
+        ColumnMeta,
+        Relation,
+        encode_insert,
+        encode_relation,
+    )
+    from postgresql_cdc_spark.streaming.source import (
+        PgCdcDataSource,
+        write_wal_archive,
+    )
+
+    postgresql_cdc_spark.ensure_self_contained_pickling()
+    spark = get_spark("py-task-floor")
+    spark.dataSource.register(PgCdcDataSource)
+    with tempfile.TemporaryDirectory() as arch:
+        rel = Relation(16384, "public", "t", "d", (ColumnMeta("id", 20, 1),))
+        write_wal_archive(arch, [(1, encode_relation(rel)),
+                                 (2, encode_insert(16384, ["1"]))])
+
+        def load():
+            return spark.read.format("pgcdc").option("path", arch).load()
+
+        if load().count() != 1:
+            raise SystemExit("pgcdc read of the one-change archive failed")
+        one = spark.range(1, numPartitions=1)
+        floors = {
+            "jvm_job": _median_s(lambda: one.collect()),
+            "arrow_job": _median_s(
+                lambda: one.mapInArrow(lambda it: it, one.schema).collect()),
+            "pgcdc_load": _median_s(load),
+        }
+    spark.stop()
+    for name, secs in floors.items():
+        print(f"{name:<12} {secs:.3f} s  (median of {REPEATS})")
+
+
+if __name__ == "__main__":
+    main()
