@@ -56,19 +56,23 @@ Filesystem note: manifest and directory maintenance use local ``os``/
 the same three-step protocol runs against the Hadoop FileSystem API — the
 commit point stays a single atomic rename.
 
-Reader-vs-compactor race: a read that resolves the manifest and then scans
-while a compaction COMMITS in between can see a torn view. The horizon-U
-filter can never double-count (the new base lives at a different reserved
-epoch, invisible to a stale-U filter), but it CAN silently lose the fold:
-a reader that captured U before the commit and lists files after the sweep
-sees neither the old base (swept) nor the new one (filtered out). The
-maintenance passes here therefore run QUIESCENT with respect to serving —
-the streaming gates compact inside foreachBatch (no concurrent serve) or
-after the query terminates — mirroring the WAL compactor's single-
-maintenance-writer assumption. A store that must serve DURING maintenance
-wraps its action in :func:`consistent_epoch_read`, which re-resolves the
-manifest after the action and retries on a horizon move (the WAL reader's
-unexplained-loss retry, one level up).
+Reader-vs-compactor race: a read that resolves the manifest and then
+lists or scans while a compaction COMMITS in between can see a torn view.
+The horizon filter can never double-count (the new base lives at a
+different reserved epoch, outside a stale horizon's :func:`live_range`),
+but it CAN lose the fold: loudly, when the old base is swept between the
+listing and the read, or silently, when the listing runs after the sweep
+and sees neither the old base (swept) nor the new one (filtered out).
+:func:`read_at_horizon` closes both by re-resolving the manifest after the
+read and retrying on a horizon move (the WAL reader's unexplained-loss
+retry, one level up). The kv point read (``join_ivm.probe_key_state``)
+is a serve path built on it, so it is safe to run beside ``maybe_compact``
+without holding off maintenance; :func:`consistent_epoch_read` is the same
+loop for a Spark action. Other serve paths (:func:`read_epoch_store`,
+:func:`epochs_before_compacted`) still run QUIESCENT with respect to
+maintenance — the streaming gates compact inside foreachBatch (no
+concurrent serve) or after the query terminates — mirroring the WAL
+compactor's single-maintenance-writer assumption.
 """
 
 from __future__ import annotations
@@ -78,7 +82,7 @@ import json
 import os
 import re
 import shutil
-from typing import Callable, Optional
+from typing import Callable, Optional, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -87,6 +91,8 @@ from postgresql_cdc_spark.streaming.epoch_io import EPOCH_COL, epoch_overwrite
 BASE_MANIFEST = "_epoch_base.json"
 
 _PART_RE = re.compile(rf"^{EPOCH_COL}=(-?\d+)$")
+
+T = TypeVar("T")
 
 
 def base_upto(path: str) -> int:
@@ -101,14 +107,59 @@ def base_upto(path: str) -> int:
         return int(json.load(f)["upto"])
 
 
-def _store_filter(upto: int):
-    """Live-rows partition predicate for a base horizon: the base partition
-    plus every partial at or above the horizon. Stale partials (< upto) and
-    orphan bases from crashed attempts fall outside both arms. With
-    ``upto = 0`` this degrades to ``>= 0`` — exactly the uncompacted store.
-    Both arms are simple comparisons on the partition column, so the filter
-    prunes at the file level."""
-    return (F.col(EPOCH_COL) == F.lit(-upto)) | (F.col(EPOCH_COL) >= F.lit(upto))
+def live_range(
+    upto: int, before: Optional[int] = None
+) -> tuple[Optional[int], int, Optional[int]]:
+    """The one rule for which partitions a read at base horizon ``upto``
+    sees: ``(base, lo, hi)`` — the base partition ``-upto`` (``None`` while
+    no base is committed: at horizon 0 ``-0`` would alias LIVE epoch 0, which
+    the lifecycle fuzz found) plus the partials in ``[lo, hi)``, ``hi`` being
+    ``before`` (``None``: no upper bound). Stale partials (< upto) and
+    orphan bases from crashed attempts fall outside both. Raises when
+    ``before < upto``: the strictly-earlier state was folded away and the
+    contract is unsatisfiable (the epoch-store analog of the WAL retention
+    ``ProtocolError`` for a cursor below the pruned head)."""
+    upto = int(upto)
+    if before is not None and int(before) < upto:
+        raise ValueError(
+            f"epoch {before} predates the compacted base horizon {upto}: "
+            "the strictly-earlier state no longer exists; compact only up "
+            "to the oldest epoch that may still replay"
+        )
+    return (-upto if upto > 0 else None), upto, (
+        None if before is None else int(before)
+    )
+
+
+def _store_filter(upto: int, before: Optional[int] = None):
+    """:func:`live_range` as a predicate on the partition column. Every arm
+    is a simple comparison, so the filter prunes at the file level."""
+    base, lo, hi = live_range(upto, before)
+    cond = F.col(EPOCH_COL) >= F.lit(lo)
+    if hi is not None:
+        cond = cond & (F.col(EPOCH_COL) < F.lit(hi))
+    if base is not None:
+        cond = (F.col(EPOCH_COL) == F.lit(base)) | cond
+    return cond
+
+
+def live_files(path: str, upto: int, before: Optional[int] = None) -> list[str]:
+    """:func:`live_range` as a file listing: the data files of the
+    partitions a read at horizon ``upto`` sees, skipping names that start
+    with ``_`` or ``.`` as Spark does (``.crc`` checksums, markers). A
+    missing store lists nothing. A partition swept after the directory
+    listing raises ``FileNotFoundError``; :func:`read_at_horizon` retries
+    it."""
+    base, lo, hi = live_range(upto, before)
+    out = []
+    for e in sorted(_partition_epochs(path)):
+        if e == base or (e >= lo and (hi is None or e < hi)):
+            d = os.path.join(path, f"{EPOCH_COL}={e}")
+            out += [
+                os.path.join(d, n) for n in sorted(os.listdir(d))
+                if not n.startswith(("_", "."))
+            ]
+    return out
 
 
 def _store_reader(spark: SparkSession, schema: Optional[str]):
@@ -137,24 +188,55 @@ def epochs_before_compacted(
     spark: SparkSession, path: str, epoch: int, schema: Optional[str] = None
 ) -> DataFrame:
     """The strictly-earlier-epoch probe over a compacted store: base fold +
-    partials in ``[base_upto, epoch)``. Raises when ``epoch < base_upto`` —
-    the pre-``epoch`` state was folded away and the contract is
-    unsatisfiable (the epoch-store analog of the WAL retention
-    ``ProtocolError`` for a cursor below the pruned head)."""
-    upto = base_upto(path)
-    if int(epoch) < upto:
-        raise ValueError(
-            f"epoch {epoch} predates the compacted base horizon {upto}: "
-            "the strictly-earlier state no longer exists; compact only up "
-            "to the oldest epoch that may still replay"
-        )
-    cond = (F.col(EPOCH_COL) >= F.lit(upto)) & (F.col(EPOCH_COL) < int(epoch))
-    # the base arm only exists once a base has been committed: at horizon 0
-    # the literal ``== -0`` would alias LIVE epoch 0, making the probe for
-    # epoch 0 return epoch 0's own rows (found by the lifecycle fuzz)
-    if upto > 0:
-        cond = (F.col(EPOCH_COL) == F.lit(-upto)) | cond
-    return _store_reader(spark, schema).parquet(path).where(cond).drop(EPOCH_COL)
+    partials in ``[base_upto, epoch)``. Raises ``ValueError`` when ``epoch <
+    base_upto`` (:func:`live_range`)."""
+    return (
+        _store_reader(spark, schema).parquet(path)
+        .where(_store_filter(base_upto(path), epoch))
+        .drop(EPOCH_COL)
+    )
+
+
+def read_at_horizon(
+    path: str, read: Callable[[int], T], max_retries: int = 3
+) -> T:
+    """Return ``read(U)`` for the store's committed horizon ``U``, safely
+    against a CONCURRENT compaction: the one retry loop every serve path
+    that cannot quiesce maintenance goes through.
+
+    A horizon-``U`` read can never double-count across a commit (the new
+    base's reserved epoch is outside a stale ``U``'s :func:`live_range`),
+    so the only torn outcomes are LOUD — the old base swept between the
+    listing and the read (``FileNotFoundError``, or a Spark task error) —
+    or SILENT — the listing ran after the sweep while the range still
+    pinned the old horizon, dropping the fold. Both are detected the same
+    way: the manifest moved between the resolve and ``read``'s return.
+    ``read`` must therefore be re-runnable (return a value, don't mutate
+    state). Errors while the manifest stayed put are ``read``'s own and
+    propagate.
+
+    Retries ``max_retries`` times, then raises — a store whose compactor
+    outruns every read attempt needs its maintenance cadence fixed, not a
+    longer spin.
+    """
+    last_exc: Exception | None = None
+    for _ in range(int(max_retries) + 1):
+        upto = base_upto(path)
+        try:
+            out = read(upto)
+        except Exception as exc:  # swept files: OSError, Py4J, Arrow
+            if base_upto(path) != upto:
+                last_exc = exc
+                continue  # loud tear — read again at the new horizon
+            raise
+        if base_upto(path) == upto:
+            return out
+        last_exc = None  # silent tear — result may have lost the base
+    raise RuntimeError(
+        f"epoch store {path!r} was compacted during every read attempt "
+        f"({int(max_retries) + 1}); quiesce maintenance or raise "
+        "max_retries"
+    ) from last_exc
 
 
 def consistent_epoch_read(
@@ -163,47 +245,17 @@ def consistent_epoch_read(
     action: Callable[[DataFrame], object],
     max_retries: int = 3,
 ):
-    """Run ``action(df)`` over the store's live rows, safely against a
-    CONCURRENT compaction — the serving-path variant of
+    """Run ``action(df)`` over the store's live rows through
+    :func:`read_at_horizon` — the serving-path variant of
     :func:`read_epoch_store` for stores that cannot quiesce maintenance.
-
-    Why a wrapper instead of a smarter filter: the horizon-``U`` predicate
-    can never double-count across a commit (the new base's reserved epoch
-    fails both arms of a stale-``U`` filter), so the only torn outcomes are
-    LOUD — the old base's files swept mid-scan (task read error) — or
-    SILENT — the file listing ran after the sweep while the filter still
-    pinned the old horizon, dropping the fold entirely. Both are detected
-    the same way: the manifest moved between the pre-read resolve and the
-    action's completion. ``action`` must therefore be re-runnable (it may
-    execute more than once; return a collected value, don't mutate state).
-
-    Retries ``max_retries`` times, then raises — a store whose compactor
-    outruns every read attempt needs its maintenance cadence fixed, not a
-    longer spin.
-    """
-    last_exc: Exception | None = None
-    for _ in range(int(max_retries) + 1):
-        before = base_upto(path)
-        try:
-            df = (
-                spark.read.parquet(path)
-                .where(_store_filter(before))
-                .drop(EPOCH_COL)
-            )
-            out = action(df)
-        except Exception as exc:  # swept files: Py4J/AnalysisException
-            if base_upto(path) != before:
-                last_exc = exc
-                continue  # loud tear — rebuild against the new horizon
-            raise
-        if base_upto(path) == before:
-            return out
-        last_exc = None  # silent tear — result may have lost the base
-    raise RuntimeError(
-        f"epoch store {path!r} was compacted during every read attempt "
-        f"({int(max_retries) + 1}); quiesce maintenance or raise "
-        "max_retries"
-    ) from last_exc
+    ``action`` may run more than once."""
+    return read_at_horizon(
+        path,
+        lambda upto: action(
+            spark.read.parquet(path).where(_store_filter(upto)).drop(EPOCH_COL)
+        ),
+        max_retries,
+    )
 
 
 def _partition_epochs(path: str) -> list[int]:

@@ -214,3 +214,105 @@ def test_crashed_compactions_stay_invisible_and_converge(
         assert _rows(
             epochs_before_compacted(spark, store, next_epoch)
         ) == want_all
+
+
+# --- point reads at every protocol step ---------------------------------------
+
+_KV_DDL = "id long, v string, op string, lsn long"
+
+_KV_OPS = st.lists(
+    st.one_of(
+        # one kv batch: (key, op) changes, LSNs assigned in stream order
+        st.tuples(
+            st.just("ingest"),
+            st.lists(
+                st.tuples(st.integers(0, 4), st.sampled_from("IUD")),
+                min_size=1, max_size=4,
+            ),
+        ),
+        st.tuples(st.just("compact"), st.floats(0.25, 1.0)),
+    ),
+    min_size=4,
+    max_size=9,
+)
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(ops=_KV_OPS)
+def test_point_reads_between_compaction_steps_match_model(
+    spark, tmp_path_factory, ops
+):
+    """``probe_key_state`` runs after the fold write, after the manifest
+    commit and after the sweep of every compaction — the size-tiered ones
+    inside ``ingest_kv_batch`` and explicit ones — and must equal the
+    latest-wins model each time: no row lost or doubled mid-protocol."""
+    import unittest.mock as mock
+
+    import postgresql_cdc_spark.streaming.epoch_maintenance as em
+    from postgresql_cdc_spark.streaming.join_ivm import (
+        ingest_kv_batch,
+        latest_wins_merge,
+        probe_key_state,
+    )
+
+    store = str(tmp_path_factory.mktemp("els_kv") / "kv")
+    model: dict[int, tuple] = {}  # key -> live (id, v, op, lsn)
+    keys = spark.createDataFrame([(k,) for k in range(6)], "id long")
+    seen: list[str] = []
+    next_epoch, lsn = 0, 0
+
+    def check(step):
+        def after(real):
+            def run(*args, **kwargs):
+                out = real(*args, **kwargs)
+                got = sorted(
+                    tuple(r) for r in
+                    probe_key_state(spark, store, _KV_DDL, "id", keys).collect()
+                )
+                assert got == sorted(model.values()), step
+                seen.append(step)
+                return out
+            return run
+        return after
+
+    hooks = [
+        mock.patch.object(em, name, side_effect=check(name)(getattr(em, name)))
+        for name in ("_fsync_tree", "_commit_manifest", "_sweep_stale")
+    ]
+    for h in hooks:
+        h.start()
+    try:
+        for kind, arg in ops:
+            if kind == "ingest":
+                rows = []
+                for k, op in arg:
+                    lsn += 1
+                    rows.append((k, f"{k}@{lsn}", op, lsn))
+                ingest_kv_batch(
+                    spark, store, "id", next_epoch,
+                    spark.createDataFrame(rows, _KV_DDL), max_live_partials=2,
+                )
+                for row in rows:  # hooks above saw the pre-batch model
+                    if row[2] == "D":
+                        model.pop(row[0], None)
+                    else:
+                        model[row[0]] = row
+                next_epoch += 1
+            elif os.path.isdir(store):
+                prev = base_upto(store)
+                upto = prev + int(round((next_epoch - prev) * arg))
+                if upto > prev:
+                    compact_epochs(
+                        spark, store, upto, merge=latest_wins_merge("id"),
+                        cluster_by=["id"],
+                    )
+    finally:
+        for h in hooks:
+            h.stop()
+    if base_upto(store) > 0:
+        assert {"_fsync_tree", "_commit_manifest", "_sweep_stale"} <= set(seen)

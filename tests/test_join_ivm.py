@@ -899,8 +899,10 @@ class TestJoinIvmReplay:
         serve read I/O tracks |M1|, not |dim|. Pin it the
         test_clustered_base_fold_prunes_probe_scan way: a 100k-dim
         clustered store probed by a 3-row M1 must push the keys into the
-        scan and read a small fraction of the state — while the resolved
-        state stays exactly the probed keys' latest images."""
+        read — the Arrow point read's row-group filter and the Spark
+        scan's pushed predicate (probe_by_keys, the batch probes' path)
+        alike — and read a small fraction of the state, while the
+        resolved state stays exactly the probed keys' latest images."""
         from postgresql_cdc_spark.streaming.epoch_io import epoch_overwrite
         from postgresql_cdc_spark.streaming.epoch_maintenance import (
             compact_epochs,
@@ -951,6 +953,26 @@ class TestJoinIvmReplay:
         plan = probe._jdf.queryExecution().executedPlan().toString()
         assert "PushedFilters: [Or(" in plan or \
             "PushedFilters: [GreaterThanOrEqual" in plan, plan[:1500]
+        # the point read keeps only the row groups whose statistics can
+        # hold a probed key
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        from postgresql_cdc_spark.streaming.epoch_maintenance import (
+            base_upto,
+            live_files,
+        )
+        from postgresql_cdc_spark.streaming.join_ivm import _arrow_key_filter
+
+        cond = _arrow_key_filter("id", pa.int64(), [11, 50_000, N - 3])
+        files = live_files(store, base_upto(store))
+        kept = sum(
+            rg.num_rows
+            for frag in ds.dataset(files, format="parquet").get_fragments()
+            for part in frag.split_by_row_group(filter=cond)
+            for rg in part.row_groups
+        )
+        assert kept <= N // 4, kept
 
     @pytest.mark.slow  # r18 tier split: lifecycle/parity soak; slow tier
     def test_star_spec_double_application_converges(self, spark, tmp_path):

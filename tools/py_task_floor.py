@@ -2,18 +2,25 @@
 
     python tools/py_task_floor.py
 
-In one local session, prints the median wall time of three things, each
+In one local session, prints the median wall time of four things, each
 run ``REPEATS`` times after one warm-up:
 
 - ``jvm_job``: a one-partition job with no Python in it;
 - ``arrow_job``: a one-partition identity ``mapInArrow`` job;
 - ``pgcdc_load``: ``spark.read.format("pgcdc").load()`` of a one-change
-  archive, which plans in a Python process.
+  archive, which plans in a Python process;
+- ``rdd_job``: ``spark.createDataFrame(<16 rows>, "id long").collect()``,
+  a local list that Spark ships as a ``PythonRDD``. Collecting the key
+  list a kv point read is handed costs this, so it is the floor under
+  every ``probe_key_state`` call.
 
 The warm-up reads the archive once, so the Python workers the timed jobs
 reuse have already run ``pgcdc`` code. The gap between the first line and
-the other two is what every Python task or planner call pays before doing
-any work. Rerun it after a pyspark or Python upgrade.
+the others is what every Python task or planner call pays before doing
+any work. ``rdd_job`` stays above ``arrow_job`` even so: a ``PythonRDD``
+task runs no code of this package, so its worker never installs
+``session.cache_zip_directories`` and re-reads ``pyspark.zip`` on every
+task. Rerun it after a pyspark or Python upgrade.
 """
 
 from __future__ import annotations
@@ -72,6 +79,8 @@ def main() -> None:
             "arrow_job": _median_s(
                 lambda: one.mapInArrow(lambda it: it, one.schema).collect()),
             "pgcdc_load": _median_s(load),
+            "rdd_job": _median_s(lambda: spark.createDataFrame(
+                [(i,) for i in range(16)], "id long").collect()),
         }
     spark.stop()
     for name, secs in floors.items():
