@@ -669,8 +669,9 @@ def cdc_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="foreachBatch incremental-upsert sink under REAL micro-batches "
         "(maxRecordsPerBatch=25, txn-aligned), over the r14 DELTA-BACKED "
         "state: each batch writes ONLY its own latest-wins-collapsed rows "
-        "(delete tombstones included) as an ingest_epoch partition via "
-        "dynamic overwrite (join_ivm.ingest_kv_batch), and the materialized "
+        "(delete tombstones included) as an ingest_epoch partition, "
+        "collapsed in Arrow on the driver and renamed in as one fsynced "
+        "parquet file (join_ivm.ingest_kv_batch), and the materialized "
         "table is the per-key latest-LSN resolution over the base fold plus "
         "live partials — the idempotent MERGE pattern on a plain object "
         "store, what Delta/Iceberg do transactionally, with maybe_compact "

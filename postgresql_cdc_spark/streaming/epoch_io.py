@@ -11,20 +11,40 @@ way a streaming dedup index silently corrupts itself. The contract here
   conf juggling): a replayed epoch replaces exactly its own partition —
   including a half-written previous attempt — and never touches other
   epochs' files.
+- ``epoch_replace`` is the same contract for a batch already on the driver
+  as an Arrow table (the kv sink, ``join_ivm.ingest_kv_batch``): one
+  parquet file written into a hidden temp directory, fsynced, and renamed
+  over the partition. See its docstring for the replay protocol.
 - ``epochs_before`` reads back only STRICTLY EARLIER epochs, so a replayed
   probe never sees the replaying batch's own (possibly partial) rows; the
   partition filter prunes at the file level.
 
-Used by the streaming LSH ingest gates (``cdc_stream_incremental_dedup``,
-``cdc_stream_dedup_admission``) and the streaming scale soak; the replay
-semantics are pinned by ``tests/test_epoch_io.py``.
+``epoch_overwrite`` is used by the streaming LSH ingest gates
+(``cdc_stream_incremental_dedup``, ``cdc_stream_dedup_admission``), the
+join view's arrangement partials, the streaming scale soak and the
+compaction fold; the replay semantics are pinned by
+``tests/test_epoch_io.py``.
 """
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
+import uuid
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+if TYPE_CHECKING:
+    import pyarrow as pa
+
 EPOCH_COL = "ingest_epoch"
+
+# A hidden attempt directory of epoch E: ``.ingest_epoch=E.<uuid>``. The
+# leading dot keeps it out of Spark's partition discovery and of every
+# manifest-aware listing, which match ``ingest_epoch=E`` only.
+_HIDDEN_RE = re.compile(rf"^\.{EPOCH_COL}=(-?\d+)\.")
 
 
 def epoch_overwrite(df: DataFrame, path: str, epoch: int) -> None:
@@ -37,6 +57,70 @@ def epoch_overwrite(df: DataFrame, path: str, epoch: int) -> None:
         .partitionBy(EPOCH_COL)
         .parquet(path)
     )
+
+
+def hidden_leftovers(path: str) -> list[tuple[int, str]]:
+    """``(epoch, directory)`` of every hidden attempt directory under
+    ``path``: what a crash inside :func:`epoch_replace` leaves behind."""
+    try:
+        names = os.listdir(path)
+    except OSError:
+        return []
+    return [
+        (int(m.group(1)), os.path.join(path, n))
+        for n in names if (m := _HIDDEN_RE.match(n))
+    ]
+
+
+def epoch_replace(table: "pa.Table", path: str, epoch: int) -> None:
+    """Write ``table`` as partition ``ingest_epoch=epoch`` of ``path``,
+    replacing (only) that partition if it already exists — the
+    :func:`epoch_overwrite` contract without a Spark job.
+
+    The rows go to one parquet file in ``.ingest_epoch=E.<uuid>``, a hidden
+    directory inside the store; the file and that directory are fsynced.
+    An existing ``ingest_epoch=E`` (a replayed epoch's earlier attempt) is
+    renamed aside under another hidden name, the new directory is renamed
+    in, the store directory is fsynced, and only then is the old attempt
+    deleted. Spark's writer never fsyncs; this path does, as
+    ``run_wal_relay`` does before it acks.
+
+    A crash leaves only hidden directories, which no reader lists: before
+    the first rename the old partition is intact; between the two renames
+    epoch E is absent, which is the state before E's first attempt (E is
+    replaying, so it never committed). The next write of E deletes the
+    leftovers of E; the compaction sweep deletes those below its horizon.
+    An empty table writes nothing, as Spark's dynamic overwrite does."""
+    import pyarrow.parquet as pq
+
+    # late: epoch_maintenance imports this module
+    from postgresql_cdc_spark.streaming.epoch_maintenance import (
+        _fsync_dir,
+        _fsync_fd,
+    )
+
+    epoch = int(epoch)
+    if table.num_rows == 0:
+        return
+    for e, d in hidden_leftovers(path):
+        if e == epoch:
+            shutil.rmtree(d, ignore_errors=True)
+    final = os.path.join(path, f"{EPOCH_COL}={epoch}")
+    tmp = os.path.join(path, f".{EPOCH_COL}={epoch}.{uuid.uuid4().hex}")
+    os.makedirs(tmp)
+    with open(os.path.join(tmp, "part-00000.parquet"), "wb") as f:
+        pq.write_table(table, f)
+        f.flush()
+        _fsync_fd(f.fileno())
+    _fsync_dir(tmp)
+    aside = None
+    if os.path.isdir(final):
+        aside = os.path.join(path, f".{EPOCH_COL}={epoch}.{uuid.uuid4().hex}")
+        os.rename(final, aside)
+    os.rename(tmp, final)
+    _fsync_dir(path)
+    if aside is not None:
+        shutil.rmtree(aside, ignore_errors=True)
 
 
 def epochs_before(spark: SparkSession, path: str, epoch: int) -> DataFrame:

@@ -13,9 +13,10 @@ two contracts the streaming gates rely on:
 
 - **replay idempotence** (``epoch_io`` contract): a re-run of any epoch
   ``e >= upto`` must still see exactly the pre-``e`` state through
-  :func:`epochs_before_compacted`, and its own dynamic-overwrite replay
-  still replaces only its own partition (the base lives in the reserved
-  NEGATIVE epoch space no live batch id can collide with).
+  :func:`epochs_before_compacted`, and its own replay (dynamic overwrite,
+  or ``epoch_io.epoch_replace``'s rename for kv stores) still replaces
+  only its own partition (the base lives in the reserved NEGATIVE epoch
+  space no live batch id can collide with).
 - **crash invisibility** (the ``compact_wal_archive`` protocol): a crash at
   any point during compaction leaves readers seeing EITHER the exact
   pre-compaction state or the exact post-compaction state, never a double
@@ -28,11 +29,12 @@ compactor makes — ``streaming/archive_maintenance.py``):
    ``[current_base_upto, upto)`` are folded — optionally through a caller
    ``merge`` aggregate (SUM-mergeable stats partials collapse to one row;
    the default concatenates, which is what postings stores need) — and
-   written under the reserved base partition ``ingest_epoch = -upto`` via
-   the same dynamic partition overwrite the live sink uses, so a crashed
-   earlier attempt at the SAME ``upto`` is replaced wholesale; the base's
-   files are then fsynced — the fold is the only surviving copy once step
-   3 runs, so it must be durable before the commit references it.
+   written under the reserved base partition ``ingest_epoch = -upto`` by
+   Spark's dynamic partition overwrite (``epoch_io.epoch_overwrite``), so
+   a crashed earlier attempt at the SAME ``upto`` is replaced wholesale;
+   the base's files are then fsynced — the fold is the only surviving
+   copy once step 3 runs, so it must be durable before the commit
+   references it.
 2. The manifest ``_epoch_base.json`` (``{"upto": U}``) is replaced
    atomically (tmp + fsync + rename + directory fsync). This is the commit
    point: readers resolve the base partition as ``-U`` and live partials as
@@ -86,7 +88,11 @@ from typing import Callable, Optional, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from postgresql_cdc_spark.streaming.epoch_io import EPOCH_COL, epoch_overwrite
+from postgresql_cdc_spark.streaming.epoch_io import (
+    EPOCH_COL,
+    epoch_overwrite,
+    hidden_leftovers,
+)
 
 BASE_MANIFEST = "_epoch_base.json"
 
@@ -415,7 +421,9 @@ def _sweep_stale(path: str, upto: int) -> int:
     partials below it and any base other than ``-upto`` (old generations
     and orphans of crashed attempts — a future attempt's orphan is
     recreated wholesale by its re-run's dynamic overwrite, so deleting it
-    is always safe)."""
+    is always safe). Hidden attempt directories of epochs below the
+    horizon (``epoch_io.epoch_replace`` crash leftovers) go too; they are
+    not counted, since no reader ever saw them."""
     deleted = 0
     for e in _partition_epochs(path):
         if (0 <= e < upto) or (e < 0 and e != -upto):
@@ -423,6 +431,9 @@ def _sweep_stale(path: str, upto: int) -> int:
                 os.path.join(path, f"{EPOCH_COL}={e}"), ignore_errors=True
             )
             deleted += 1
+    for e, d in hidden_leftovers(path):
+        if e < upto:
+            shutil.rmtree(d, ignore_errors=True)
     if deleted:
         _fsync_dir(path)
     return deleted
@@ -658,7 +669,7 @@ def maybe_compact(
     partition listing — because a crashed earlier attempt at this very
     epoch may have left its own half-written partition behind: a listing-
     derived horizon would fold those partial rows into the base an instant
-    before the replay's dynamic overwrite replaces the live partition,
+    before the replay's overwrite replaces the live partition,
     double-counting the epoch. Capping at the replaying epoch keeps that
     partition live so the overwrite replaces it wholesale (the ``epoch_io``
     contract), which also makes the trigger replay-idempotent: a re-run

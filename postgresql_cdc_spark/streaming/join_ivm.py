@@ -45,10 +45,11 @@ and extrema measures one versioned ``supp_<name>`` table each):
 - ``dim_kv`` / ``fact_kv`` — latest-wins key-value stores backed by the
   epoch store (``streaming/epoch_io.py``): each batch writes ONLY its own
   collapsed rows (delete tombstones included) under
-  ``ingest_epoch=<batch_id>`` via dynamic partition overwrite, and the
-  current state of a key is resolved by a per-key latest-LSN window over
-  the base fold plus the live partials (point reads apply the same rule in
-  Arrow on the driver: :func:`probe_key_state`). ``maybe_compact``
+  ``ingest_epoch=<batch_id>``, collapsed and written in Arrow on the
+  driver (:func:`ingest_kv_batch`), and the current state of a key is
+  resolved by a per-key latest-LSN window over the base fold plus the
+  live partials (point reads apply the same rule in Arrow on the driver:
+  :func:`probe_key_state`). ``maybe_compact``
   (``streaming/epoch_maintenance.py``) folds old epochs into the
   manifest-committed base, so live partials stay bounded by the cap and
   the per-batch write is O(|batch|), never a full-state rewrite.
@@ -80,7 +81,7 @@ Per-batch dataflow (all O(|batch|) shuffle/compute):
 2. Collapse the batch latest-wins per key, write it as the stores' epoch.
 3. Diff ONLY the batch's keys: probe prior state with the batch's
    distinct keys PUSHED into the store scan as literal range predicates
-   (:func:`probe_by_keys` — the key-clustered base fold's min/max
+   (:func:`probe_by_key_list` — the key-clustered base fold's min/max
    envelopes prune the read to the files holding those keys), then
    extract each key's old and new image in ONE ``max_by`` aggregation
    and derive the retract/assert pair from the image pair — one pruned
@@ -102,8 +103,9 @@ current batch id (``epoch_io``'s strictly-earlier-epoch contract for the
 kv/arrangement stores; :func:`prev_version` for the sums), so a crashed
 attempt's partial writes are invisible to its replay — which then
 recomputes byte-identical deltas from the same committed prefix and
-replaces the crashed partitions via dynamic overwrite. Crash windows are
-pinned by ``tests/test_join_ivm.py``; the delta algebra by
+replaces the crashed partitions (dynamic overwrite, or the kv stores'
+rename in ``epoch_io.epoch_replace``). Crash windows are pinned by
+``tests/test_join_ivm.py``; the delta algebra by
 ``tests/test_join_ivm_fuzz.py``; the bounded lifecycle by the retention
 test and ``tools/join_ivm_lifecycle_soak.py``.
 
@@ -121,13 +123,17 @@ import os
 import re
 import shutil
 from dataclasses import dataclass
-from typing import Optional
+from typing import TYPE_CHECKING, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
-from postgresql_cdc_spark.streaming.epoch_io import EPOCH_COL, epoch_overwrite
+from postgresql_cdc_spark.streaming.epoch_io import (
+    EPOCH_COL,
+    epoch_overwrite,
+    epoch_replace,
+)
 from postgresql_cdc_spark.streaming.epoch_maintenance import (
     base_upto,
     epochs_before_compacted,
@@ -138,6 +144,9 @@ from postgresql_cdc_spark.streaming.epoch_maintenance import (
     read_epoch_store,
     sweep_shared_partials,
 )
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 DIM_DDL = "id long, grp int, op string, lsn long"
 FACT_DDL = "fid long, did long, amount int, op string, lsn long"
@@ -961,8 +970,8 @@ def _resolve(rows: DataFrame, key: str) -> DataFrame:
 # The latest-wins order of a key's versions: ``lsn`` descending, then ``op``
 # descending — arbitrary but DETERMINISTIC, so replays and restarts
 # materialize identical state even on (impossible-in-WAL) duplicate LSNs —
-# NULLs last. Every latest-wins path (the window below, the Arrow point
-# read) sorts by it.
+# NULLs last. Every latest-wins path (the window below, and the Arrow
+# collapse the kv write and point read share) sorts by it.
 LATEST_FIRST = (("lsn", "descending"), ("op", "descending"))
 
 
@@ -1079,21 +1088,38 @@ def ingest_kv_batch(
     batch: DataFrame,
     max_live_partials: int = 8,
     target_file_bytes: int = 128 * 1024 * 1024,
-) -> None:
+) -> "pa.Table":
     """Compact-then-write one batch into a latest-wins kv epoch store:
     maintenance first (horizon = the CALLER's batch id, keeping a crashed
     attempt's own partition live for its overwrite), then the collapsed
     batch rows — tombstones included — as partition ``ingest_epoch=epoch``.
-    O(|batch|) written bytes; live partials bounded by the cap. The fold is
-    KEY-CLUSTERED (``cluster_by=[key]``) so the per-batch probe's pushed
-    key ranges prune the base scan instead of reading the whole fold."""
+    Returns the collapsed rows as written. O(|batch|) written bytes; live
+    partials bounded by the cap. The fold is KEY-CLUSTERED
+    (``cluster_by=[key]``) so the per-batch probe's pushed key ranges prune
+    the base scan instead of reading the whole fold.
+
+    The write runs on the driver: one ``batch.toArrow()`` (below the cap,
+    the call's only Spark job), the :data:`LATEST_FIRST` collapse in Arrow
+    (:func:`_collapse_arrow`, the point read's rule), and
+    ``epoch_io.epoch_replace``: one parquet file in a hidden temp directory
+    of the store, fsynced and renamed over ``ingest_epoch=epoch``. A
+    replayed epoch replaces only its own partition; crash leftovers stay
+    hidden until the next write of that epoch or the compaction sweep
+    deletes them. Compaction folds stay in Spark.
+
+    Driver memory: the write holds the batch, O(batch rows), so each
+    caller bounds it with the source's ``maxRecordsPerBatch`` (100 by
+    default; ``latestOffset`` never offers more DML rows than that). A
+    ``readall`` stream offers the whole archive as one batch."""
     epoch = int(epoch)
     maybe_compact(
         spark, store, epoch, max_live_partials,
         merge=latest_wins_merge(key), cluster_by=[key],
         target_file_bytes=target_file_bytes,
     )
-    epoch_overwrite(collapse_batch(batch, key), store, epoch)
+    rows = _collapse_arrow(batch.toArrow(), key)
+    epoch_replace(rows, store, epoch)
+    return rows
 
 
 def key_state(
@@ -1151,7 +1177,7 @@ def probe_key_list(
     not served torn.
 
     Memory bound: every partition of a kv store holds at most one row per
-    key (``collapse_batch`` on each write, :func:`latest_wins_merge` on
+    key (:func:`_collapse_arrow` on each write, :func:`latest_wins_merge` on
     each fold), so the read holds at most ``|keys| x (live partials + 1)``
     rows, and live partials are capped by ``max_live_partials`` — the same
     order as the key list itself."""
@@ -1213,10 +1239,11 @@ def _arrow_key_filter(key: str, ktype, ks: list):
     return cond
 
 
-def _latest_wins_arrow(rows, key: str):
-    """:func:`_resolve` on an Arrow table: each key's first row in
-    :data:`LATEST_FIRST` order (Arrow sorts NULLs last), tombstones dropped
-    (a NULL ``op`` drops too, as Spark's ``op != 'D'`` does). Floating keys
+def _collapse_arrow(rows, key: str):
+    """:func:`collapse_batch` on an Arrow table: each key's first row in
+    :data:`LATEST_FIRST` order (Arrow sorts NULLs last), tombstones KEPT,
+    the survivors sorted by key so a written partial's row-group
+    statistics are tight for the probe's pushed ranges. Floating keys
     group as Spark normalises them: -0.0 with 0.0, every NaN together."""
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -1231,7 +1258,16 @@ def _latest_wins_arrow(rows, key: str):
         .aggregate([("i", "min")])
         .column("i_min")
     )
-    rows = rows.take(first)
+    return rows.take(first).sort_by(key)
+
+
+def _latest_wins_arrow(rows, key: str):
+    """:func:`_resolve` on an Arrow table: :func:`_collapse_arrow`, then
+    tombstones dropped (a NULL ``op`` drops too, as Spark's ``op != 'D'``
+    does)."""
+    import pyarrow.compute as pc
+
+    rows = _collapse_arrow(rows, key)
     return rows.filter(pc.not_equal(rows["op"], "D"))
 
 
@@ -1249,7 +1285,7 @@ def ingest_and_delta(
     """Write the batch into the kv store and return its SIGNED row deltas
     ``(sign, key, *payload)`` vs prior state — O(|batch|): prior state is
     probed with the batch's distinct keys PUSHED into the store scan as
-    literal range predicates (:func:`probe_by_keys` — with the key-
+    literal range predicates (:func:`probe_by_key_list` — with the key-
     clustered base fold, parquet min/max skipping prunes the read to the
     files holding the batch's keys, closing the O(|state|) scan-I/O term
     the r14 broadcast semi-join still paid), and the old-vs-new
@@ -1262,14 +1298,19 @@ def ingest_and_delta(
     review's shape fix). Deterministic given the committed prefix, so a
     replay regenerates identical deltas; same (lsn desc, op desc) winner
     as the store's resolve — ``max`` of the ascending (lsn, op) struct."""
+    from pyspark.sql.types import _parse_datatype_string
+
     epoch = int(epoch)
-    ingest_kv_batch(
+    rows = ingest_kv_batch(
         spark, store, key, epoch, batch, max_live_partials,
         target_file_bytes,
     )
-    written = _read_epoch(spark, store, ddl, epoch)
-    hist = probe_by_keys(
-        _history(spark, store, ddl, epoch), key, written.select(key)
+    # the collapsed batch as written, as a local relation: no re-scan
+    written = spark.createDataFrame(
+        rows.select(_ddl_names(ddl)), _parse_datatype_string(ddl)
+    )
+    hist = probe_by_key_list(
+        _history(spark, store, ddl, epoch), key, rows[key].to_pylist()
     )
     img = F.struct(*[F.col(c) for c in payload], F.col("op"))
     ordk = F.struct(F.col("lsn"), F.col("op"))

@@ -713,10 +713,13 @@ class WalArchiveStreamReader(DataSourceStreamReader):
         return {"lsn": -1, "txn_open": False}
 
     def latestOffset(self) -> dict:
-        """Scan forward from the start; stop ≥ max_records DML past the last
-        offset, preferring a COMMIT boundary (txn_open False) when one lands
-        within the budget window. Never regresses below the highest offset
-        previously offered or committed."""
+        """Scan forward from the start; offer at most max_records DML past
+        the last offset. The end is the last transaction boundary (a
+        COMMIT, or a DML outside any transaction: txn_open False) within
+        that budget that follows a DML; a window with none ends
+        mid-transaction at the budget (txn_open True, the early flush),
+        which ``commit`` does not ack. Never regresses below the highest
+        offset previously offered or committed."""
         # NB: called on the driver once per micro-batch. The chunk index
         # makes this O(new data + #chunks), not O(archive): chunks wholly
         # behind the cursor are skipped via their sidecars (registry + txn
@@ -725,21 +728,26 @@ class WalArchiveStreamReader(DataSourceStreamReader):
         # instead track the socket's last received LSN.
         last = self._last_offset or self.initialOffset()
         start_lsn = last["lsn"]
-        budget = float("inf") if self.read_all else self.max_records
+        budget = float("inf") if self.read_all else max(1, self.max_records)
         decoder = PgOutputDecoder()
         n_dml = 0
-        end_lsn = start_lsn
         state = {"txn_open": False, "txn_id": -1}
+        # boundary: the last txn_open False offset after at least one DML
+        out = boundary = None
         for lsn, msg in scan_wal_messages(
             self.path, decoder, state,
             skip_upto_lsn=start_lsn, write_index=True,
         ):
             if isinstance(msg, ChangeRecord):
+                if n_dml == budget:  # one DML past the budget
+                    out = boundary or out
+                    break
                 n_dml += 1
-            end_lsn = lsn
-            if n_dml >= budget and not state["txn_open"]:
-                break
-        out = {"lsn": end_lsn, "txn_open": state["txn_open"]}
+            out = {"lsn": lsn, "txn_open": state["txn_open"]}
+            if n_dml and not state["txn_open"]:
+                boundary = out
+        if out is None:  # nothing new
+            out = {"lsn": start_lsn, "txn_open": state["txn_open"]}
         self._last_offset = out
         return out
 

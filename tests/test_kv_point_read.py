@@ -24,6 +24,7 @@ from postgresql_cdc_spark.streaming.epoch_maintenance import (
 )
 from postgresql_cdc_spark.streaming.join_ivm import (
     collapse_batch,
+    ingest_kv_batch,
     key_state,
     latest_wins_merge,
     probe_key_list,
@@ -121,8 +122,8 @@ _MIXED = [
 
 
 def _build(spark, store, steps) -> int:
-    """Write ``steps`` the way ``ingest_kv_batch`` does (collapsed batches,
-    tombstones kept; latest-wins folds); returns the next epoch."""
+    """Write ``steps`` through ``ingest_kv_batch`` (collapsed batches,
+    tombstones kept) and latest-wins folds; returns the next epoch."""
     lsn, epoch = 0, 0
     for kind, arg in steps:
         if kind == "batch":
@@ -132,7 +133,7 @@ def _build(spark, store, steps) -> int:
                 # equal (key, lsn, op) means the same change: same payload
                 rows.append((k, f"{k}:{lsn}:{op}", op, lsn))
             batch = spark.createDataFrame(rows, DDL)
-            epoch_overwrite(collapse_batch(batch, "id"), store, epoch)
+            ingest_kv_batch(spark, store, "id", epoch, batch)
             epoch += 1
         elif os.path.isdir(store) and epoch > base_upto(store):
             if kind == "compact":

@@ -152,26 +152,108 @@ class TestWalArchiveReader:
 
         start = r.initialOffset()
         end1 = r.latestOffset()
-        # 3 DML inside txn 101/102: budget hits mid-txn-102 → runs to commit
-        assert end1["txn_open"] is False
+        # budget 3: txn 102's second DML would be the 4th, so the batch
+        # ends at txn 101's COMMIT, the last boundary within the budget
+        assert end1 == {"lsn": 30, "txn_open": False}
         rows1 = envelope_rows(r.read(r.partitions(start, end1)[0]))
-        ops1 = [(row[0], row[4], row[5]) for row in rows1]
-        assert ops1 == [
-            ("I", 11, 101), ("I", 12, 101), ("U", 41, 102), ("D", 42, 102),
+        assert [(row[0], row[4], row[5]) for row in rows1] == [
+            ("I", 11, 101), ("I", 12, 101),
         ]
-        # TOAST columns absent from the update's map
-        upd = rows1[2][6]
-        assert upd == {"id": "1", "v_int": "11"}
 
         r.commit(end1)
         ack = json.load(open(os.path.join(arch, "_flushed_lsn")))
         assert ack["flushed_lsn"] == end1["lsn"]
 
+        # a DML outside any transaction is a boundary too
         end2 = r.latestOffset()
+        assert end2 == {"lsn": 70, "txn_open": False}
         rows2 = envelope_rows(r.read(r.partitions(end1, end2)[0]))
         assert [(row[0], row[4], row[5]) for row in rows2] == [
-            ("I", 70, -1), ("I", 81, 103),
+            ("U", 41, 102), ("D", 42, 102), ("I", 70, -1),
         ]
+        # TOAST columns absent from the update's map
+        assert rows2[0][6] == {"id": "1", "v_int": "11"}
+
+        end3 = r.latestOffset()
+        rows3 = envelope_rows(r.read(r.partitions(end2, end3)[0]))
+        assert [(row[0], row[4], row[5]) for row in rows3] == [
+            ("I", 81, 103),
+        ]
+
+    def test_batch_ends_at_last_commit_within_budget(self, tmp_path):
+        """A COMMIT before the budget ends the batch there: the next
+        transaction does not ride along past ``maxRecordsPerBatch``."""
+        from postgresql_cdc_spark.streaming.source import (
+            WalArchiveStreamReader,
+            write_wal_archive,
+        )
+
+        arch = str(tmp_path / "wal_cap")
+        frames = [
+            (1, encode_relation(REL)),
+            (10, encode_begin(13, 1000, 101)),
+            (11, encode_insert(16384, ["1", "a", "1", "{}"])),
+            (12, encode_insert(16384, ["2", "b", "2", "{}"])),
+            (13, encode_commit(13, 14, 1000)),
+            (20, encode_begin(24, 2000, 102)),
+            (21, encode_insert(16384, ["3", "c", "3", "{}"])),
+            (22, encode_insert(16384, ["4", "d", "4", "{}"])),
+            (23, encode_insert(16384, ["5", "e", "5", "{}"])),
+            (24, encode_commit(24, 25, 2000)),
+            (30, encode_begin(32, 3000, 103)),
+            (31, encode_insert(16384, ["6", "f", "6", "{}"])),
+            (32, encode_commit(32, 33, 3000)),
+        ]
+        write_wal_archive(arch, frames)
+        r = WalArchiveStreamReader({"path": arch, "maxrecordsperbatch": "3"})
+        ends = [r.initialOffset()]
+        for _ in range(3):
+            ends.append(r.latestOffset())
+        assert ends[1:] == [
+            {"lsn": 13, "txn_open": False},
+            {"lsn": 24, "txn_open": False},  # exactly the budget
+            {"lsn": 32, "txn_open": False},
+        ]
+        lsns = [
+            [row[4] for row in envelope_rows(r.read(r.partitions(a, b)[0]))]
+            for a, b in zip(ends, ends[1:])
+        ]
+        assert lsns == [[11, 12], [21, 22, 23], [31]]
+
+    def test_oversize_committed_txn_is_split(self, tmp_path):
+        """A committed transaction larger than the budget is flushed early,
+        mid-transaction, one budget at a time; only its COMMIT is acked."""
+        from postgresql_cdc_spark.streaming.source import (
+            WalArchiveStreamReader,
+            write_wal_archive,
+        )
+
+        arch = str(tmp_path / "wal_split")
+        frames = [
+            (1, encode_relation(REL)),
+            (10, encode_begin(40, 1000, 7)),
+            (11, encode_insert(16384, ["1", "a", "1", "{}"])),
+            (12, encode_insert(16384, ["2", "b", "2", "{}"])),
+            (13, encode_insert(16384, ["3", "c", "3", "{}"])),
+            (40, encode_commit(40, 41, 1000)),
+        ]
+        write_wal_archive(arch, frames)
+        r = WalArchiveStreamReader({"path": arch, "maxrecordsperbatch": "1"})
+        ack = os.path.join(arch, "_flushed_lsn")
+        start = r.initialOffset()
+        got = []
+        for want in ({"lsn": 11, "txn_open": True},
+                     {"lsn": 12, "txn_open": True},
+                     {"lsn": 40, "txn_open": False}):
+            end = r.latestOffset()
+            assert end == want
+            got.append([row[4] for row in
+                        envelope_rows(r.read(r.partitions(start, end)[0]))])
+            r.commit(end)
+            assert os.path.exists(ack) is (not want["txn_open"])
+            start = end
+        assert got == [[11], [12], [13]]
+        assert json.load(open(ack))["flushed_lsn"] == 40
 
     def test_trailing_truncate_txn_still_acks_tail(self, tmp_path):
         """A TRUNCATE-only transaction at the END of the archive contributes
@@ -327,8 +409,10 @@ class TestWalArchiveReader:
         end2 = r2.latestOffset()
         assert end2["lsn"] >= end1["lsn"]
         rows = envelope_rows(r2.read(r2.partitions(end1, end2)[0]))
-        # only the tail records, no re-emission of batch 1
-        assert [(row[0], row[4]) for row in rows] == [("I", 70), ("I", 81)]
+        # only the records after batch 1, no re-emission of it
+        assert [(row[0], row[4]) for row in rows] == [
+            ("U", 41), ("D", 42), ("I", 70),
+        ]
 
         # restart with NO ack (crash before first commit): partitions() clamp
         # adopts the checkpointed end so latestOffset never regresses

@@ -2,7 +2,7 @@
 
     python tools/py_task_floor.py
 
-In one local session, prints the median wall time of four things, each
+In one local session, prints the median wall time of five things, each
 run ``REPEATS`` times after one warm-up:
 
 - ``jvm_job``: a one-partition job with no Python in it;
@@ -12,7 +12,11 @@ run ``REPEATS`` times after one warm-up:
 - ``rdd_job``: ``spark.createDataFrame(<16 rows>, "id long").collect()``,
   a local list that Spark ships as a ``PythonRDD``. Collecting the key
   list a kv point read is handed costs this, so it is the floor under
-  every ``probe_key_state`` call.
+  every ``probe_key_state`` call;
+- ``kv_ingest``: ``join_ivm.ingest_kv_batch`` of a 2,500-row,
+  one-partition batch (``spark.range``, the ``live_tail`` kv columns)
+  into an empty store, so below the compaction cap: the batch's one
+  ``toArrow()`` job, the Arrow collapse and the fsynced parquet write.
 
 The warm-up reads the archive once, so the Python workers the timed jobs
 reuse have already run ``pgcdc`` code. The gap between the first line and
@@ -55,6 +59,7 @@ def main() -> None:
         encode_insert,
         encode_relation,
     )
+    from postgresql_cdc_spark.streaming.join_ivm import ingest_kv_batch
     from postgresql_cdc_spark.streaming.source import (
         PgCdcDataSource,
         write_wal_archive,
@@ -63,7 +68,8 @@ def main() -> None:
     postgresql_cdc_spark.ensure_self_contained_pickling()
     spark = get_spark("py-task-floor")
     spark.dataSource.register(PgCdcDataSource)
-    with tempfile.TemporaryDirectory() as arch:
+    with tempfile.TemporaryDirectory() as arch, \
+            tempfile.TemporaryDirectory() as kv:
         rel = Relation(16384, "public", "t", "d", (ColumnMeta("id", 20, 1),))
         write_wal_archive(arch, [(1, encode_relation(rel)),
                                  (2, encode_insert(16384, ["1"]))])
@@ -74,6 +80,10 @@ def main() -> None:
         if load().count() != 1:
             raise SystemExit("pgcdc read of the one-change archive failed")
         one = spark.range(1, numPartitions=1)
+        batch = spark.range(2500, numPartitions=1).selectExpr(
+            "id", "cast(id % 1000 as int) v_int", "concat('t', id) v_text",
+            "id / 3 v_num", "'I' op", "id lsn")
+        stores = iter(range(REPEATS + 1))
         floors = {
             "jvm_job": _median_s(lambda: one.collect()),
             "arrow_job": _median_s(
@@ -81,6 +91,9 @@ def main() -> None:
             "pgcdc_load": _median_s(load),
             "rdd_job": _median_s(lambda: spark.createDataFrame(
                 [(i,) for i in range(16)], "id long").collect()),
+            "kv_ingest": _median_s(lambda: ingest_kv_batch(
+                spark, os.path.join(kv, str(next(stores))), "id", 0,
+                batch)),
         }
     spark.stop()
     for name, secs in floors.items():
