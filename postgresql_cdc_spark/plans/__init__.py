@@ -12,9 +12,8 @@ from __future__ import annotations
 
 from postgresql_cdc_spark.plans.registry import QUERIES, Query, register
 
-# Importing the modules populates QUERIES in source order; the staleness
-# reorder below then decides the order a budget-capped correctness harness
-# visits queries, so nothing about priority is hard-coded here.
+# Importing the modules populates QUERIES; its order is the order of the
+# imports below and, within a module, of its ``register`` calls.
 from postgresql_cdc_spark.plans import extensions  # noqa: E402,F401
 from postgresql_cdc_spark.plans import extensions2  # noqa: E402,F401
 from postgresql_cdc_spark.plans import extensions3  # noqa: E402,F401
@@ -49,576 +48,5 @@ from postgresql_cdc_spark.plans import scale_patterns  # noqa: E402,F401
 from postgresql_cdc_spark.plans import relational  # noqa: E402,F401
 from postgresql_cdc_spark.plans import relational2  # noqa: E402,F401
 from postgresql_cdc_spark.plans import relational3  # noqa: E402,F401
-
-
-def _unwrap(fn):
-    while hasattr(fn, "__wrapped__"):
-        fn = fn.__wrapped__
-    return fn
-
-
-# module name -> md5 of its source (memoized; tests may seed entries to
-# simulate a helper edit without touching files on disk).
-_MOD_HASH_CACHE: dict[str, str] = {}
-# builder-defining module -> its sorted transitive helper-module closure.
-_CLOSURE_CACHE: dict[str, tuple[str, ...]] = {}
-
-
-def _module_src_fingerprint(modname: str) -> str:
-    h = _MOD_HASH_CACHE.get(modname)
-    if h is None:
-        import hashlib
-        import inspect
-        import sys
-
-        mod = sys.modules.get(modname)
-        try:
-            src = inspect.getsource(mod) if mod is not None else ""
-        except (OSError, TypeError):
-            src = ""
-        h = hashlib.md5(src.encode()).hexdigest()[:10]
-        _MOD_HASH_CACHE[modname] = h
-    return h
-
-
-def _resolve_module(dotted: str):
-    """Longest importable prefix of a dotted package path (the regex scan
-    below can capture ``pkg.module.attr``); imports it if needed — a builder
-    that imports a helper inside its function body leaves the helper out of
-    sys.modules until first call, which must not hide it from the
-    fingerprint."""
-    import importlib
-
-    parts = dotted.split(".")
-    while parts:
-        name = ".".join(parts)
-        try:
-            return importlib.import_module(name)
-        except ImportError:
-            parts.pop()
-    return None
-
-
-def _package_deps(modname: str, seen: set[str],
-                  stop: set[str] | None = None) -> None:
-    """DFS the package-internal module graph: every module the given module
-    (transitively) depends on — via module-level imports (namespace scan)
-    AND via imports inside function bodies (source scan; builders routinely
-    do ``from postgresql_cdc_spark.operators.asof import asof_join`` inside
-    the function, which never surfaces in any module namespace). Modules in
-    ``stop`` are recorded in ``seen`` but not recursed into."""
-    import inspect
-    import re
-    import sys
-
-    if modname in seen:
-        return
-    seen.add(modname)
-    mod = sys.modules.get(modname)
-    if mod is None:
-        mod = _resolve_module(modname)
-        if mod is None:
-            return
-    try:
-        src = inspect.getsource(mod)
-    except (OSError, TypeError):
-        src = ""
-    deps: set[str] = set()
-    for k, v in vars(mod).items():
-        try:
-            dep = v.__name__ if inspect.ismodule(v) else getattr(v, "__module__", None)
-        except Exception:  # noqa: BLE001 — exotic descriptors
-            dep = None
-        if isinstance(dep, str) and dep.startswith("postgresql_cdc_spark."):
-            # Importing pkg.sub sets ``sub`` as an attribute on ``pkg``, so a
-            # PACKAGE namespace accretes whichever submodules happen to be
-            # loaded — process state, not a dependency edge. Counting those
-            # made source_hash depend on import order (gen_inventory recorded
-            # hashes no live process reproduced). A submodule attribute only
-            # counts when the package's own source names it; real deps still
-            # enter via the importer's namespace and the source scans below.
-            if (
-                inspect.ismodule(v)
-                and dep == f"{modname}.{k}"
-                and not re.search(rf"\b{re.escape(k)}\b", src)
-            ):
-                continue
-            deps.add(dep)
-    for dotted in re.findall(
-        r"postgresql_cdc_spark(?:\.[A-Za-z_][A-Za-z0-9_]*)+", src
-    ):
-        sub = _resolve_module(dotted)
-        if sub is not None and sub.__name__ != "postgresql_cdc_spark":
-            deps.add(sub.__name__)
-    # ``from pkg.sub import name`` where name is itself a MODULE (e.g.
-    # ``from ...operators import multimodal as mm``): the dotted regex only
-    # sees ``pkg.sub``, so try each imported name as a submodule too.
-    for base_path, names in re.findall(
-        r"from\s+(postgresql_cdc_spark(?:\.[A-Za-z_][A-Za-z0-9_]*)*)\s+import"
-        r"\s+(\([^)]*\)|[^\n]+)",
-        src,
-    ):
-        for item in names.strip("()").split(","):
-            name = item.split(" as ")[0].split("#")[0].strip()
-            if not name.isidentifier():
-                continue
-            import importlib
-
-            try:
-                sub = importlib.import_module(f"{base_path}.{name}")
-            except ImportError:
-                continue
-            deps.add(sub.__name__)
-    for dep in deps:
-        if dep not in seen:
-            if stop and dep in stop:
-                # Query-defining modules are recorded but NOT recursed into:
-                # their helper imports belong to THEIR builders' closures.
-                # Recursing would leak e.g. operators.similarity into every
-                # query that merely imports a constant from plans.extensions,
-                # flipping ~30 unrelated hashes on any similarity edit.
-                seen.add(dep)
-                continue
-            _package_deps(dep, seen, stop)
-
-
-def _query_defining_modules() -> set[str]:
-    return {
-        m for m in (
-            getattr(_unwrap(q.spark), "__module__", None) for q in QUERIES.values()
-        ) if m
-    }
-
-
-def helper_modules(q: Query) -> tuple[str, ...]:
-    """Transitive package-internal modules a query's builder depends on —
-    ``operators/``, ``functions/``, ``sources/``, ``plans.common``, … —
-    excluding modules that themselves define registered queries (their edits
-    are tracked per-builder by ``source_hash``'s direct source term, so
-    including them wholesale would flip every sibling query on any edit);
-    query-defining modules reached as deps are also not recursed into, so
-    e.g. importing one constant from ``plans.extensions`` does not drag in
-    every helper *its* builders use.
-
-    Granularity is deliberately the defining MODULE, not the builder
-    function: a builder that calls a module-local helper inherits that
-    helper's (possibly function-local) imports, which no per-function source
-    scan sees reliably. The cost is over-approximation — every query in a
-    module carries the union of the module's helper imports, so an edit to
-    one helper re-prioritizes some queries that don't use it. That wastes a
-    little verification budget; the alternative (missing a real dependency)
-    would leave stale green stamps on changed code, which is the failure
-    mode this mechanism exists to prevent."""
-    mod0 = getattr(_unwrap(q.spark), "__module__", None)
-    if not mod0:
-        return ()
-    cached = _CLOSURE_CACHE.get(mod0)
-    if cached is None:
-        qmods = _query_defining_modules()
-        seen: set[str] = set()
-        _package_deps(mod0, seen, stop=qmods - {mod0})
-        cached = tuple(sorted((seen - {mod0}) - qmods))
-        _CLOSURE_CACHE[mod0] = cached
-    return cached
-
-
-def source_hash(q: Query) -> str:
-    """Short fingerprint of a query's builder source + oracle SQL + the
-    source of every transitive helper module the builder depends on.
-
-    Recorded in QUERIES.md by ``tools/gen_inventory.py``; a live registry
-    whose hash differs from the recorded one is treated as *changed since
-    last stamped* by ``_staleness_order`` and re-verifies first. The helper
-    term closes the gap where a semantic edit to e.g. ``operators/text.py``
-    left every dependent query's builder text — and so its recorded hash —
-    unchanged, letting stale green stamps survive the edit.
-
-    Known limitation: a helper defined INSIDE a query-defining plans module
-    (e.g. ``cdc._changelog``) is not fingerprinted — including the whole
-    defining module would flip every sibling query on any edit, defeating
-    the verification-budget prioritization. Edits to such intra-module
-    helpers need a ``_PIN_UNTIL_STAMPED_AFTER`` entry when they change
-    semantics.
-    """
-    import hashlib
-    import inspect
-
-    fn = _unwrap(q.spark)
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):
-        src = getattr(fn, "__name__", "?")
-    blob = src + "\n--oracle--\n" + (q.oracle or "") + "".join(
-        f"\n--helper {m}:{_module_src_fingerprint(m)}--"
-        for m in helper_modules(q)
-    )
-    return hashlib.md5(blob.encode()).hexdigest()[:10]
-
-
-def _recorded_hashes(root: str) -> dict[str, str]:
-    """name -> src hash parsed from the committed QUERIES.md inventory."""
-    import re
-
-    path = __import__("os").path.join(root, "QUERIES.md")
-    out: dict[str, str] = {}
-    try:
-        with open(path) as f:
-            for line in f:
-                m = re.match(r"\|\s*\d+\s*\|\s*`([^`]+)`\s*\|\s*\S+\s*\|\s*([0-9a-f]{10})\s*\|", line)
-                if m:
-                    out[m.group(1)] = m.group(2)
-    except OSError:
-        pass
-    return out
-
-
-def _recorded_since(root: str) -> dict[str, int]:
-    """name -> first-seen round parsed from QUERIES.md's ``since`` column.
-
-    ``gen_inventory`` preserves the value across regenerations, so it records
-    the round a query first entered the committed inventory. Older inventories
-    without the column simply parse to an empty dict (every query then shares
-    the new-query default and the order degrades to source order — exactly the
-    pre-``since`` behavior)."""
-    import re
-
-    path = __import__("os").path.join(root, "QUERIES.md")
-    out: dict[str, int] = {}
-    try:
-        with open(path) as f:
-            for line in f:
-                m = re.match(
-                    r"\|\s*\d+\s*\|\s*`([^`]+)`\s*\|\s*\S+\s*\|\s*"
-                    r"[0-9a-f]{10}\s*\|\s*r(\d+)\s*\|",
-                    line,
-                )
-                if m:
-                    out[m.group(1)] = int(m.group(2))
-    except OSError:
-        pass
-    return out
-
-
-def latest_stamp_round(root: str) -> int:
-    """Highest round number among recorded CORRECTNESS_r*.json stamps (0 if
-    none readable) — ``gen_inventory`` dates new queries as round+1."""
-    import glob
-    import re
-
-    rounds = [0]
-    for path in glob.glob(__import__("os").path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if m:
-            rounds.append(int(m.group(1)))
-    return max(rounds)
-
-
-FIXTURE_TABLES = (
-    "region nation customer supplier part orders lineitem events documents "
-    "embeddings"
-).split()
-
-# Helpers whose *call site* in a builder implies a table the source never
-# names literally (table resolution happens inside the helper).
-_HELPER_TABLES = {
-    "EV(": ("events",),
-    "_near_dup_corpus": ("documents",),
-}
-
-
-def fixture_schema_fingerprints(
-    sf_dirs: list[str] | None = None,
-) -> dict[str, str]:
-    """``table@sfdir`` -> short fingerprint of that parquet's *physical*
-    schema (or ``absent`` / ``unreadable``).
-
-    The driver regenerates fixtures between rounds and has already changed a
-    physical type in place once (events.ts INT64-nanos -> TIMESTAMP(MICROS)),
-    silently invalidating every green stamp that read the column. Recording
-    the arrow schema string (field names + physical/logical types) in
-    QUERIES.md lets ``_staleness_order`` treat a drift exactly like a source
-    change: affected queries re-verify first next round, no hand-editing.
-
-    All ``/root/testdata/sf*`` dirs (plus ``$SPARK_GRAFT_SF_DIR`` if it points
-    elsewhere) contribute. Keys are per (table, dir) so adding or removing a
-    whole scale-factor dir between rounds does NOT perturb the other dirs'
-    fingerprints (the comparison ignores keys present on only one side); a
-    table that is present but UNREADABLE — or recorded but now missing from a
-    still-present dir — fingerprints differently from any schema hash, i.e.
-    is treated as drifted, never silently skipped.
-    """
-    import glob
-    import hashlib
-    import os
-
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover — pyarrow is baked into the env
-        return {}
-    if sf_dirs is None:
-        sf_dirs = sorted(glob.glob("/root/testdata/sf*"))
-        env_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
-        if env_dir and os.path.abspath(env_dir) not in [
-            os.path.abspath(d) for d in sf_dirs
-        ]:
-            sf_dirs.append(env_dir)
-    out: dict[str, str] = {}
-    for d in sf_dirs:
-        if not os.path.isdir(d):
-            continue
-        dname = os.path.basename(d.rstrip("/"))
-        for t in FIXTURE_TABLES:
-            path = os.path.join(d, f"{t}.parquet")
-            key = f"{t}@{dname}"
-            if not os.path.exists(path):
-                out[key] = "absent"
-                continue
-            try:
-                schema = pq.read_schema(path)
-                out[key] = hashlib.md5(
-                    "; ".join(f"{f.name}:{f.type}" for f in schema).encode()
-                ).hexdigest()[:10]
-            except Exception:  # noqa: BLE001 — present but unreadable: drift
-                out[key] = "unreadable"
-    return out
-
-
-def _recorded_fixture_hashes(root: str) -> dict[str, str]:
-    """``table@sfdir`` -> fingerprint parsed from QUERIES.md's fixture-schema
-    section (legacy whole-table keys from older inventories parse too but
-    never match a live per-dir key, so they are inert)."""
-    import re
-
-    path = __import__("os").path.join(root, "QUERIES.md")
-    out: dict[str, str] = {}
-    try:
-        with open(path) as f:
-            for line in f:
-                m = re.match(
-                    r"- fixture `([a-z]+(?:@[A-Za-z0-9._-]+)?)`: "
-                    r"`([0-9a-f]{10}|absent|unreadable)`",
-                    line,
-                )
-                if m:
-                    out[m.group(1)] = m.group(2)
-    except OSError:
-        pass
-    return out
-
-
-def tables_of(q: Query) -> set[str]:
-    """Fixture tables a query reads, inferred from builder source + oracle.
-
-    Literal table names appear either as ``T(spark, sf_dir, "events")``-style
-    string arguments or as FROM/JOIN targets in the oracle SQL; helper calls
-    that hide the name are mapped explicitly. Over-approximation is harmless
-    (one extra early re-verify); under-approximation only delays a stamp by a
-    round.
-    """
-    import inspect
-    import re
-
-    fn = q.spark
-    while hasattr(fn, "__wrapped__"):
-        fn = fn.__wrapped__
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):
-        src = ""
-    blob = src + "\n" + (q.oracle or "")
-    found = {t for t in FIXTURE_TABLES if re.search(rf"\b{t}\b", blob)}
-    for marker, tabs in _HELPER_TABLES.items():
-        if marker in src:
-            found.update(tabs)
-    return found
-
-
-# Queries whose implementation or oracle changed AFTER the round whose driver
-# stamp they carry (so neither a red stamp nor an inventory-hash mismatch can
-# promote them): force them to the absolute front of the verification window
-# until a driver stamp from a LATER round lands, at which point the pin goes
-# inert on its own — no hand-removal needed. name -> round of the now-stale
-# stamp.
-_PIN_UNTIL_STAMPED_AFTER = {
-    # (Pins from r6-r16 that have since gone inert — their targets carry
-    # newer driver stamps; the r16 window stamped every pinned query and
-    # the whole r9 cohort — were pruned in r17; git history preserves the
-    # full ledger.)
-    #
-    # r17: the outer-join gates were REWIRED through the kernel
-    # (JoinViewSpec(join_type=...) replacing the hand-composed M1 + dim
-    # serves — same oracles, wholesale new implementation path), and the
-    # kernel itself was refactored under every adopter (epoch-backed
-    # support folds, the probe-collect collapse, the _fold_view_delta /
-    # _finish_view serve split, prefix-aware string surrogates) — so
-    # every gate running live join_ivm code re-stamps, the r16
-    # convention for comparable refactors. This front-loads 11 slots;
-    # the remaining ~35 restamp the stalest of the r10 cohort, with the
-    # leftover finishing in r18 (the tradeoff is recorded in README's
-    # r17 notes).
-    "cdc_stream_ivm_left_join": 16,
-    "cdc_stream_ivm_right_outer_join": 16,
-    "cdc_stream_ivm_full_outer_join": 16,
-    "cdc_stream_ivm_join_sums": 16,
-    "cdc_stream_ivm_join_revenue": 16,
-    "cdc_stream_ivm_min_maintenance": 16,
-    "cdc_stream_ivm_count_distinct": 16,
-    "cdc_stream_ivm_snowflake": 16,
-    "cdc_stream_ivm_dim_chain": 16,
-    "cdc_stream_ivm_sums_hicard": 16,
-    "cdc_stream_ivm_group_sums": 16,
-    #
-    # r17 OPTIMIZATION round: operator-internal rewrites that keep results
-    # identical but replace the implementation path — MinHash candidate
-    # generation now carries n_sh on bucket rows with the size-ratio prune
-    # in the join and verifies via array_intersect (pairs path), the
-    # LshIndex bucket schema gained n_sh (incremental probe + streaming
-    # index gates), topk_lsh scores before the pair dedupe, and the IVF-PQ
-    # serve fans the corpus encode out. All passed the local full-registry
-    # gate (321/321, OPTIMIZATION_r17.md); these pins guarantee each a
-    # driver stamp in the r17 window.
-    "dedup_minhash_lsh": 16,
-    "dedup_minhash_recall_eval": 16,
-    "dedup_incremental_batch": 16,
-    "decon_fuzzy_minhash": 16,
-    "cdc_stream_incremental_dedup": 16,
-    "cdc_stream_dedup_admission": 16,
-    "sim_topk_lsh": 16,
-    "sim_topk_ivfpq": 16,
-    "ivfpq_recall_eval": 16,
-    "sim_topk_ivfpq_rerank": 16,
-    #
-    # r18: (a) the five riders of the r17 shared reader/operator changes the
-    # rotating window missed (verdict item 6 — local 321/321 only, no r17
-    # driver stamp); (b) the incremental-LSH probe verification was rewired
-    # in r18 (candidate-bounded posting semi-joins + array_intersect in
-    # place of the full-index posting join), so every query running that
-    # path re-stamps.
-    "text_bm25_topk": 17,
-    "hybrid_rrf_fusion": 17,
-    "dedup_ngram_jaccard": 17,
-    "dedup_survivor_selection": 17,
-    "dedup_cluster_labels": 17,
-    "dedup_incremental_batch": 17,
-    "cdc_stream_incremental_dedup": 17,
-    "cdc_stream_dedup_admission": 17,
-    "decon_fuzzy_minhash": 17,
-}
-
-
-def _staleness_order() -> None:
-    """Reorder QUERIES so a budget-capped harness stamps what needs it most.
-
-    The harness visits registration order and checks only a prefix (50 of 90+
-    last rounds), so registration order IS the verification budget policy.
-    Derive it from the recorded driver stamps (``CORRECTNESS_r*.json`` at the
-    repo root) instead of hand-rotating:
-
-    1. the front bucket — active pins, red-at-latest-stamp, or
-       changed-since-inventory queries (new code and known failures always
-       get a driver row next round) — internally ranked never-stamped
-       first, then ACTIVE PINS (the explicit must-stamp ledger; a round
-       that edits a shared operator can flip 50+ fingerprints at once and
-       stalest-changed-first alone would crowd every pin out of a
-       budget-capped prefix), then auto-detected changed/red stalest-first,
-    2. then everything else least-recently-stamped first (no query goes
-       rounds without a fresh stamp while its family mates re-verify),
-    3. ties break on the inventory's ``since`` round (FIFO: a query that has
-       waited since an earlier round outranks one added this round — without
-       this, a batch of new registrations imported mid-package would displace
-       the older never-stamped backlog from a budget-capped prefix),
-    4. final ties keep source registration order (stable sort).
-
-    Missing/unreadable stamp files degrade gracefully to source order.
-    """
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    last_stamp: dict[str, int] = {}
-    last_green: dict[str, bool] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                stamps = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in stamps.items():
-            if not isinstance(row, dict):
-                continue
-            green = bool(row.get("rows_match")) and bool(row.get("schema_match")) and (
-                row.get("hash_match") is not False  # None => rows-only check
-            ) and row.get("err") in (None, "")
-            if rnd >= last_stamp.get(name, -1):
-                last_stamp[name] = rnd
-                last_green[name] = green
-
-    recorded = _recorded_hashes(root)
-    rec_fix = _recorded_fixture_hashes(root)
-    live_fix = fixture_schema_fingerprints() if rec_fix else {}
-    # Per (table, dir) comparison: a recorded key with a DIFFERENT live value
-    # (schema change, now-absent, now-unreadable) marks its table drifted; a
-    # recorded key with NO live counterpart means the whole sf dir was added
-    # or removed between rounds — layout churn, not table drift — and legacy
-    # whole-table keys from pre-split inventories land here too, inert.
-    drifted_tables = {
-        k.split("@", 1)[0]
-        for k, h in rec_fix.items()
-        if k in live_fix and live_fix[k] != h
-    }
-
-    def changed(n: str) -> bool:
-        rec = recorded.get(n)
-        if rec is not None and rec != source_hash(QUERIES[n]):
-            return True
-        # fixture drift counts as a change for every query reading the table
-        return bool(drifted_tables and drifted_tables & tables_of(QUERIES[n]))
-
-    names = list(QUERIES)
-    order = {n: i for i, n in enumerate(names)}
-    since = _recorded_since(root)
-    new_since = latest_stamp_round(root) + 1  # queries not yet in the inventory
-
-    def pin_active(n: str) -> bool:
-        until = _PIN_UNTIL_STAMPED_AFTER.get(n)
-        return until is not None and last_stamp.get(n, -1) <= until
-
-    # Within the front bucket (pins / red / changed), rank: never-stamped
-    # first (a query with no driver row ever outranks everything), then
-    # ACTIVE PINS (the explicit must-stamp-next-window ledger — r17: a
-    # round that edits a shared operator can flip 50+ fingerprints at
-    # once, and stalest-changed-first alone would crowd every pin out of
-    # a budget-capped prefix; the pin ledger is the conscious rebalance
-    # the stamp-window guard asks for), then auto-detected changed/red
-    # queries stalest-first — whatever exceeds the window self-corrects
-    # next round because their inventory hashes stay stale until stamped.
-    def subrank(n: str) -> int:
-        if last_stamp.get(n, -1) < 0:
-            return 0
-        return 1 if pin_active(n) else 2
-
-    names.sort(
-        key=lambda n: (
-            0
-            if (pin_active(n) or not last_green.get(n, False) or changed(n))
-            else 1,
-            subrank(n),
-            last_stamp.get(n, -1),  # then stalest stamp
-            since.get(n, new_since),  # FIFO among equally-stale queries
-            order[n],
-        )
-    )
-    reordered = {n: QUERIES[n] for n in names}
-    QUERIES.clear()
-    QUERIES.update(reordered)
-
-
-_staleness_order()
 
 __all__ = ["QUERIES", "Query", "register"]

@@ -1456,7 +1456,7 @@ def cdc_stream_asof_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="STREAMING incremental view maintenance under real micro-batches "
         "(maxRecordsPerBatch=25), over the r14 delta-backed state: each "
         "foreachBatch writes ONLY its collapsed rows into the epoch-store "
-        "key state and derives SIGNED row deltas from a broadcast probe of "
+        "key state and derives SIGNED row deltas from a driver-side read of "
         "prior state by the BATCH's keys (join_ivm.ingest_and_delta — "
         "O(|batch|), never a full-outer join of full old vs full new "
         "state), then folds the deltas into a tiny persisted (group, "

@@ -493,9 +493,9 @@ def compact_epochs(
     partitioned and sorted on the given columns before the base write
     (``operators/layout.compact``'s re-clustering move applied to the base
     fold), so every base file — and every row group inside it — carries a
-    tight min/max envelope on the store key and a per-batch key probe
-    (``join_ivm.ingest_and_delta``'s pushed key ranges) prunes its scan to
-    the files actually containing the batch's keys. Without it the fold
+    tight min/max envelope on the store key and a keyed read
+    (``join_ivm._key_rows``'s pushed key ranges) prunes its scan to the
+    files and row groups actually containing the probed keys. Without it the fold
     inherits the shuffle layout of ``merge``, where key min/max spans the
     whole domain in every file and a probe must read the entire base.
     File count is sized from the folded partitions' INPUT bytes against

@@ -47,9 +47,12 @@ and extrema measures one versioned ``supp_<name>`` table each):
   collapsed rows (delete tombstones included) under
   ``ingest_epoch=<batch_id>``, collapsed and written in Arrow on the
   driver (:func:`ingest_kv_batch`), and the current state of a key is
-  resolved by a per-key latest-LSN window over the base fold plus the
-  live partials (point reads apply the same rule in Arrow on the driver:
-  :func:`probe_key_state`). ``maybe_compact``
+  its newest row by :data:`LATEST_FIRST` over the base fold plus the
+  live partials. Keyed reads — the batch diff, the kernel's dim-state
+  probes and point reads — apply that rule in Arrow on the driver to
+  only the partitions the manifest names (:func:`_key_rows`,
+  :func:`probe_key_list`); the whole-state read :func:`key_state` is a
+  Spark window. ``maybe_compact``
   (``streaming/epoch_maintenance.py``) folds old epochs into the
   manifest-committed base, so live partials stay bounded by the cap and
   the per-batch write is O(|batch|), never a full-state rewrite.
@@ -79,18 +82,19 @@ Per-batch dataflow (all O(|batch|) shuffle/compute):
    convention of ``epoch_maintenance``: a crashed attempt's own partition
    must stay live so the replay's overwrite replaces it wholesale).
 2. Collapse the batch latest-wins per key, write it as the stores' epoch.
-3. Diff ONLY the batch's keys: probe prior state with the batch's
-   distinct keys PUSHED into the store scan as literal range predicates
-   (:func:`probe_by_key_list` — the key-clustered base fold's min/max
-   envelopes prune the read to the files holding those keys), then
-   extract each key's old and new image in ONE ``max_by`` aggregation
-   and derive the retract/assert pair from the image pair — one pruned
-   store scan, one key shuffle, no window sorts, no join; never a
-   full-outer of full old state against full new state.
-4. ``dF JOIN D_old``: probe ``dim_kv`` with the fact delta's distinct FK
-   values (pushed, batch-bounded) and join the fact delta against the
-   resolved O(|batch|) dim rows — broadcast, so a hot dimension key never
-   becomes a skewed shuffle (the fact delta is not exchanged at all).
+3. Diff ONLY the batch's keys: read their prior rows on the driver
+   through Arrow (:func:`_key_rows` — the keys are pushed as range
+   filters that the key-clustered base fold's row-group statistics prune
+   on), collapse them per key with tombstones kept, then extract each
+   key's old and new image in ONE ``max_by`` aggregation and derive the
+   retract/assert pair from the image pair — one key shuffle, no window
+   sorts, no join; never a full-outer of full old state against full new
+   state.
+4. ``dF JOIN D_old``: read ``dim_kv``'s resolved rows for the fact
+   delta's distinct FK values on the driver (:func:`probe_key_list`,
+   batch-bounded) and join the fact delta against that O(|batch|) local
+   relation — broadcast, so a hot dimension key never becomes a skewed
+   shuffle (the fact delta is not exchanged at all).
 5. ``F_new JOIN dD``: restrict the integrated ``fact_by_did`` arrangement
    to the dim delta's keys (pushed key predicate; consolidation commutes
    with any did restriction because signed rows group by the full triple)
@@ -915,28 +919,14 @@ def _key_ranges(ks: list) -> list[tuple]:
     return bounds
 
 
-def probe_by_keys(hist: DataFrame, key: str, keys_df: DataFrame) -> DataFrame:
-    """Restrict ``hist`` to rows whose ``key`` appears in ``keys_df`` —
-    semantically the broadcast left-semi probe, but with the key set pushed
-    INTO the parquet scan as literal predicates so min/max statistics prune
-    the read (a semi-join's runtime key set never reaches the reader's
-    row-group filter, so the old shape scanned the whole base fold per
-    batch — O(|state|) read I/O even though shuffle/compute were
-    O(|batch|)).
-
-    The key set is collected to the driver: batch-bounded, the same order
-    of driver memory the broadcast relation build already paid (null keys
-    are dropped — a semi-join never matches them either)."""
-    return probe_by_key_list(
-        hist, key, [r[0] for r in keys_df.distinct().collect()]
-    )
-
-
 def probe_by_key_list(hist: DataFrame, key: str, ks: list) -> DataFrame:
-    """:func:`probe_by_keys` with an ALREADY-collected key list, so one
-    driver collect can serve several probes (the N-dim delta rule
-    collects each term carrier's FK columns in ONE job and probes every
-    dimension from that — r16 verdict item 6). Small sets
+    """Restrict ``hist`` to rows whose ``key`` is in ``ks``, with the key
+    set pushed INTO the parquet scan as literal predicates so min/max
+    statistics prune the read (a semi-join's runtime key set never reaches
+    the reader's row-group filter). The join kernel probes the by-FK
+    arrangement this way: its rows are signed and unresolved, so the kv
+    stores' Arrow read (:func:`_key_rows`) does not apply. Null keys are
+    dropped, as a semi-join never matches them either. Small sets
     (<= ``_PROBE_MAX_IN``) stay exact via ``isin`` on top of the pushed
     ranges; larger ones keep the pushed ranges for I/O pruning and
     restore exactness with a broadcast semi-join built from the local
@@ -1008,22 +998,6 @@ def _consolidate(
         .agg(F.sum("sign").cast("int").alias("sign"))
         .where(F.col("sign") != 0)
     )
-
-
-def _history(
-    spark: SparkSession, store: str, ddl: str, before: Optional[int]
-) -> DataFrame:
-    """Rows of the store's live epochs strictly before ``before`` (all live
-    epochs when None), read with an explicit schema: delegates to the
-    manifest-aware ``epoch_maintenance`` readers so the horizon filter —
-    including the subtle negative-zero base-alias guard the lifecycle fuzz
-    found — lives in exactly one place. Only the missing-store guard is
-    local (a table whose first batches were empty has no directory yet)."""
-    if not os.path.isdir(store):
-        return spark.createDataFrame([], ddl)
-    if before is None:
-        return read_epoch_store(spark, store, schema=ddl)
-    return epochs_before_compacted(spark, store, int(before), schema=ddl)
 
 
 def _arr_history(
@@ -1130,8 +1104,17 @@ def key_state(
     before: Optional[int] = None,
 ) -> DataFrame:
     """The kv store's live latest-wins rows (strictly before ``before``;
-    the full materialized state when None)."""
-    return _resolve(_history(spark, store, ddl, before), key)
+    the full materialized state when None), read through Spark with the
+    ``ddl`` schema by the manifest-aware ``epoch_maintenance`` readers, so
+    the horizon rule lives in one place. A store whose first batches were
+    empty has no directory yet and reads as empty."""
+    if not os.path.isdir(store):
+        rows = spark.createDataFrame([], ddl)
+    elif before is None:
+        rows = read_epoch_store(spark, store, schema=ddl)
+    else:
+        rows = epochs_before_compacted(spark, store, int(before), schema=ddl)
+    return _resolve(rows, key)
 
 
 def probe_key_state(
@@ -1162,19 +1145,33 @@ def probe_key_list(
     before: Optional[int] = None,
 ) -> DataFrame:
     """:func:`probe_key_state` with the keys already on the driver, so a
-    caller that holds them (the LEFT-join serve's collected M1) runs no
-    job to collect them again.
+    caller that holds them (the join kernel's collected FK values, the
+    LEFT-join serve's collected M1) runs no job to collect them again:
+    :func:`_key_rows` resolved latest-wins per key, tombstones dropped."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(ddl)
+    rows = _key_rows(store, schema, key, keys, before)
+    return spark.createDataFrame(_latest_wins_arrow(rows, key), schema)
+
+
+def _key_rows(
+    store: str, schema: StructType, key: str, keys: list,
+    before: Optional[int],
+) -> "pa.Table":
+    """Every stored row of ``keys`` in the live epochs strictly before
+    ``before`` (all live epochs when None), as Arrow, unresolved.
 
     One ``pyarrow.dataset`` read of only the partitions the manifest names
-    (``epoch_maintenance.live_files``), with the ``ddl`` schema and the key
-    set pushed as a filter: point ranges (gap-merged runs past
+    (``epoch_maintenance.live_files``), with the store's ``schema`` and the
+    key set pushed as a filter: point ranges (gap-merged runs past
     ``_PROBE_MAX_RANGES`` keys, the :func:`probe_by_key_list` rule) that the
-    row-group statistics of the key-clustered base prune on. Per key the
-    newest row by :data:`LATEST_FIRST` wins and tombstones drop. NULL keys
+    row-group statistics of the key-clustered base prune on. NULL keys
     match nothing; ``double``/``float`` keys compare as Spark normalises
     them (NaN equals NaN, -0.0 equals 0.0). The read runs through
     ``read_at_horizon``, so a compaction committing mid-read is retried,
-    not served torn.
+    not served torn. Raises ``ValueError`` when ``before`` predates the
+    store's compacted horizon.
 
     Memory bound: every partition of a kv store holds at most one row per
     key (:func:`_collapse_arrow` on each write, :func:`latest_wins_merge` on
@@ -1184,9 +1181,7 @@ def probe_key_list(
     import pyarrow as pa
     import pyarrow.dataset as ds
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
 
-    schema = _parse_datatype_string(ddl)
     arrow_schema = to_arrow_schema(schema)
     ks = list({k for k in keys if k is not None})
     fmt = ds.ParquetFileFormat(
@@ -1211,8 +1206,7 @@ def probe_key_list(
             for b in data.to_batches()
         ])
 
-    rows = read_at_horizon(store, read)
-    return spark.createDataFrame(_latest_wins_arrow(rows, key), schema)
+    return read_at_horizon(store, read)
 
 
 def _arrow_key_filter(key: str, ktype, ks: list):
@@ -1284,20 +1278,18 @@ def ingest_and_delta(
 ) -> DataFrame:
     """Write the batch into the kv store and return its SIGNED row deltas
     ``(sign, key, *payload)`` vs prior state — O(|batch|): prior state is
-    probed with the batch's distinct keys PUSHED into the store scan as
-    literal range predicates (:func:`probe_by_key_list` — with the key-
-    clustered base fold, parquet min/max skipping prunes the read to the
-    files holding the batch's keys, closing the O(|state|) scan-I/O term
-    the r14 broadcast semi-join still paid), and the old-vs-new
-    diff is ONE aggregation over the O(|batch|) surviving rows — per key,
-    ``max_by`` extracts the overall latest image (the new state) and the
-    latest HISTORY-only image (the old state; ``max_by`` ignores rows
-    whose ordering expression is NULL, so batch rows drop out), then the
-    retract/assert pair derives from the two images directly. One store
-    scan, one key shuffle, no window sorts, no full-outer join (the r14
-    review's shape fix). Deterministic given the committed prefix, so a
-    replay regenerates identical deltas; same (lsn desc, op desc) winner
-    as the store's resolve — ``max`` of the ascending (lsn, op) struct."""
+    read on the driver for the batch's keys only (:func:`_key_rows`, the
+    point read's Arrow scan; the key-clustered base fold's row-group
+    statistics prune it to the batch's keys) and collapsed per key with
+    tombstones kept, and the old-vs-new diff is ONE aggregation over
+    those rows and the written batch — per key, ``max_by`` extracts the
+    overall latest image (the new state) and the latest HISTORY-only
+    image (the old state; ``max_by`` ignores rows whose ordering
+    expression is NULL, so batch rows drop out), then the retract/assert
+    pair derives from the two images directly. One key shuffle, no window
+    sorts, no full-outer join. Deterministic given the committed prefix,
+    so a replay regenerates identical deltas; same (lsn desc, op desc)
+    winner as the store's resolve — ``max`` of the ascending (lsn, op) struct."""
     from pyspark.sql.types import _parse_datatype_string
 
     epoch = int(epoch)
@@ -1306,11 +1298,15 @@ def ingest_and_delta(
         target_file_bytes,
     )
     # the collapsed batch as written, as a local relation: no re-scan
-    written = spark.createDataFrame(
-        rows.select(_ddl_names(ddl)), _parse_datatype_string(ddl)
-    )
-    hist = probe_by_key_list(
-        _history(spark, store, ddl, epoch), key, rows[key].to_pylist()
+    schema = _parse_datatype_string(ddl)
+    written = spark.createDataFrame(rows.select(_ddl_names(ddl)), schema)
+    # each batch key's newest prior row, tombstones KEPT: a deleted key's
+    # old image is the tombstone, not an older live row
+    hist = spark.createDataFrame(
+        _collapse_arrow(
+            _key_rows(store, schema, key, rows[key].to_pylist(), epoch), key
+        ),
+        schema,
     )
     img = F.struct(*[F.col(c) for c in payload], F.col("op"))
     ordk = F.struct(F.col("lsn"), F.col("op"))
@@ -1652,8 +1648,9 @@ def join_deltas(
       dimension's OLD state — so same-batch changes on any subset of
       relations apply exactly once.
 
-    Every dimension-state read is a ``probe_by_keys`` pushed scan keyed
-    by the carrier's FK values; every dim side joins as a BROADCAST (term
+    Every dimension-state read is a :func:`probe_key_list` Arrow read on
+    the driver keyed by the carrier's FK values, returned as a local
+    relation; every dim side joins as a BROADCAST (term
     carriers are never exchanged, so a hot dimension key never induces a
     skewed shuffle). Dim sides are prefixed ``__d<i>_`` before each join
     (spec column names need not be disjoint from internals). Cross-term
@@ -1731,13 +1728,8 @@ def join_deltas(
         restricted to the carrier's collected FK values (pushed probe;
         the clustered base prunes) as a broadcast side."""
         dim = spec.dims[i]
-        resolved = _resolve(
-            probe_by_key_list(
-                _history(spark, spec.dim_store(base, i), dim.ddl, before),
-                dim.key,
-                keys,
-            ),
-            dim.key,
+        resolved = probe_key_list(
+            spark, spec.dim_store(base, i), dim.ddl, dim.key, keys, before
         )
         return carrier.join(
             F.broadcast(_dim_side(i, resolved)),
@@ -1777,7 +1769,7 @@ def join_deltas(
         terms.append(_out(c, F.col("sign"), set(range(len(spec.dims)))))
 
     # term i per dimension delta. The dim delta's distinct keys are
-    # collected FIRST (they fed probe_by_keys' internal collect anyway);
+    # collected FIRST (the arrangement probe needs them anyway);
     # an UNTOUCHED relation (no keys — the common fact-only CDC trigger)
     # skips its term entirely instead of paying an empty scratch write,
     # a secondary FK collect, and a fatter view-delta plan (r17).

@@ -772,7 +772,7 @@ class TestJoinIvmReplay:
         from postgresql_cdc_spark.streaming.join_ivm import (
             _PROBE_MAX_RANGES,
             latest_wins_merge,
-            probe_by_keys,
+            probe_by_key_list,
         )
 
         SKV_DDL = "id string, grp int, op string, lsn long"
@@ -800,11 +800,10 @@ class TestJoinIvmReplay:
             for j in range(20)
         ]
         assert len(probe_ids) > _PROBE_MAX_RANGES
-        keys = spark.createDataFrame([(k,) for k in probe_ids], "id string")
-        probe = probe_by_keys(
+        probe = probe_by_key_list(
             epochs_before_compacted(spark, store, EPOCHS + 1,
                                     schema=SKV_DDL),
-            "id", keys,
+            "id", probe_ids,
         )
         assert sorted(r.id for r in probe.collect()) == sorted(probe_ids)
         scanned = _scan_output_rows(probe)
@@ -828,7 +827,7 @@ class TestJoinIvmReplay:
         """The r14-verdict optimization target: the per-batch kv probe's
         read I/O must stop tracking |state|. With the base fold KEY-
         CLUSTERED (compact_epochs cluster_by) and the batch's keys pushed
-        as literal range predicates (probe_by_keys), parquet min/max
+        as literal range predicates (probe_by_key_list), parquet min/max
         statistics prune the scan to the files holding the probed keys;
         the same probe against an UNCLUSTERED fold (hash-shuffled by the
         latest-wins window, every file spanning the whole key domain)
@@ -840,7 +839,7 @@ class TestJoinIvmReplay:
         )
         from postgresql_cdc_spark.streaming.join_ivm import (
             latest_wins_merge,
-            probe_by_keys,
+            probe_by_key_list,
         )
 
         N, EPOCHS = 100_000, 4
@@ -864,16 +863,13 @@ class TestJoinIvmReplay:
             merge=latest_wins_merge("id"),
         )
 
-        keys = spark.createDataFrame(
-            [(7,), (8,), (N - 9,)], "id long"
-        )
         scanned = {}
         for name, path in stores.items():
-            probe = probe_by_keys(
+            probe = probe_by_key_list(
                 epochs_before_compacted(
                     spark, path, EPOCHS + 1, schema=KV_DDL
                 ),
-                "id", keys,
+                "id", [7, 8, N - 9],
             )
             assert sorted(r.id for r in probe.collect()) == [7, 8, N - 9]
             scanned[name] = _scan_output_rows(probe)
@@ -900,17 +896,18 @@ class TestJoinIvmReplay:
         test_clustered_base_fold_prunes_probe_scan way: a 100k-dim
         clustered store probed by a 3-row M1 must push the keys into the
         read — the Arrow point read's row-group filter and the Spark
-        scan's pushed predicate (probe_by_keys, the batch probes' path)
-        alike — and read a small fraction of the state, while the
-        resolved state stays exactly the probed keys' latest images."""
+        scan's pushed predicate (probe_by_key_list, the arrangement
+        probe's path) alike — and read a small fraction of the state,
+        while the resolved state stays exactly the probed keys' latest
+        images."""
         from postgresql_cdc_spark.streaming.epoch_io import epoch_overwrite
         from postgresql_cdc_spark.streaming.epoch_maintenance import (
             compact_epochs,
+            read_epoch_store,
         )
         from postgresql_cdc_spark.streaming.join_ivm import (
-            _history,
             latest_wins_merge,
-            probe_by_keys,
+            probe_by_key_list,
             probe_key_state,
         )
 
@@ -939,8 +936,9 @@ class TestJoinIvmReplay:
         # metrics on the exchange-free probe sub-plan (the window resolve
         # above adds an exchange, which hides scan leaves under AQE): the
         # pushed M1 key set must prune the dim read to a small fraction
-        probe = probe_by_keys(
-            _history(spark, store, KV_DDL, None), "id", m1_keys
+        probe = probe_by_key_list(
+            read_epoch_store(spark, store, schema=KV_DDL),
+            "id", [11, 50_000, N - 3],
         )
         scanned = _scan_output_rows(probe)
         # bound with slack for parquet row-group granularity: the fold's

@@ -442,15 +442,16 @@ BROADCAST_HINT_SITES = {
     "plans/streaming_gate.py": {"nation"},                   # (b) 25-row dim
     # (c)-style bounded probe/delta sides of the join-IVM delta rule.
     # ``dd`` (a dim delta) is <= 2|micro-batch| rows by construction
-    # (maxRecordsPerBatch caps the batch); ``keys_local`` (probe_by_keys'
-    # large-batch exactness fallback) is the same batch-bounded key set.
+    # (maxRecordsPerBatch caps the batch); ``keys_local``
+    # (probe_by_key_list's large-key-set exactness fallback, used by the
+    # arrangement probe) is the dim delta's batch-bounded key set.
     # ``_dim_side`` wraps every resolved dim-state join side in the N-ary
-    # rule (r16): each is a probe_by_keys restriction to the CARRIER's
-    # distinct FK values — batch-bounded on the dF term, dim-delta-fan-out-
-    # bounded on the cross terms (the same mass the term's view delta must
-    # carry anyway). Broadcasting them is ALSO the skew fix — a hot FK
-    # value then never induces a skewed shuffle because the carrier side
-    # isn't exchanged.
+    # rule: each is a probe_key_list local relation holding the dim rows
+    # of the CARRIER's distinct FK values — batch-bounded on the dF term,
+    # dim-delta-fan-out-bounded on the cross terms (the same mass the
+    # term's view delta must carry anyway). Broadcasting them is ALSO the
+    # skew fix — a hot FK value then never induces a skewed shuffle
+    # because the carrier side isn't exchanged.
     "streaming/join_ivm.py": {"_dim_side", "dd", "keys_local"},
 }
 

@@ -175,14 +175,6 @@ def main() -> int:
         help="use a vanilla SparkSession (no repo confs), mimicking the "
         "driver's harness — queries must self-provision any conf they need",
     )
-    ap.add_argument(
-        "--changed",
-        action="store_true",
-        help="gate only the current diff: queries whose live source_hash "
-        "differs from the committed QUERIES.md inventory, queries absent "
-        "from the inventory (brand new), and active re-verification pins — "
-        "seconds instead of the ~25 min full-registry pass",
-    )
     args = ap.parse_args()
 
     import __spark_entry__ as entry_mod
@@ -211,21 +203,6 @@ def main() -> int:
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     only = set(args.only.split(",")) if args.only else None
-    if args.changed:
-        import postgresql_cdc_spark.plans as plans
-
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        recorded = plans._recorded_hashes(root)
-        sel = {
-            n
-            for n, q in plans.QUERIES.items()
-            if recorded.get(n) is None  # new since last inventory
-            or recorded[n] != plans.source_hash(q)  # edited since
-        }
-        sel |= set(plans._PIN_UNTIL_STAMPED_AFTER)  # conservative: incl. inert
-        print(f"--changed: {len(sel)} of {len(queries)} queries selected: "
-              f"{', '.join(sorted(sel)) or '(none)'}")
-        only = sel if only is None else (only & sel)
 
     n_pass = n_fail = n_rows_only = 0
     for name, fn in queries.items():

@@ -1,19 +1,10 @@
 """Generate QUERIES.md — the registry inventory (one row per oracle-paired
-query) so SURVEY §2 coverage can be checked line by line. Run:
+query, in registration order) so SURVEY §2 coverage can be checked line by
+line. Run:
 
     python tools/gen_inventory.py        # writes QUERIES.md in place
 
-(It writes the file itself — do NOT shell-redirect stdout onto QUERIES.md:
-the shell truncates the file before the tool can read back the ``since``
-column it must preserve, silently resetting the FIFO that orders the
-never-stamped verification backlog. If the on-disk inventory is missing or
-truncated anyway, the tool falls back to the git-committed copy.)
-
-The ``src`` column is a short hash of the builder's source + oracle SQL.
-``plans._staleness_order`` compares it against the live registry: a mismatch
-means the query changed since the inventory was generated, so it re-registers
-at the front of the correctness budget (same priority as a red stamp).
-Regenerate this file whenever a registered query changes.
+Regenerate it whenever a query is registered, removed or re-documented.
 """
 
 from __future__ import annotations
@@ -21,15 +12,10 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from postgresql_cdc_spark.plans import (  # noqa: E402
-    QUERIES,
-    _recorded_since,
-    fixture_schema_fingerprints,
-    latest_stamp_round,
-    source_hash,
-)
+from postgresql_cdc_spark.plans import QUERIES  # noqa: E402
 
 
 def module_of(q) -> str:
@@ -40,88 +26,30 @@ def module_of(q) -> str:
     return mod.rsplit(".", 1)[-1]
 
 
-def _since_with_git_fallback(root: str) -> dict[str, int]:
-    """``_recorded_since`` from the on-disk inventory, falling back to the
-    git-committed copy when the working file is empty/truncated (the shell
-    has already truncated it if someone ran ``gen_inventory > QUERIES.md``)."""
-    since = _recorded_since(root)
-    if since:
-        return since
-    import subprocess
-
-    try:
-        blob = subprocess.run(
-            ["git", "show", "HEAD:QUERIES.md"],
-            capture_output=True, text=True, cwd=root, timeout=30,
-        ).stdout
-    except (OSError, subprocess.TimeoutExpired):
-        return since
-    import re as _re
-
-    out: dict[str, int] = {}
-    for line in blob.splitlines():
-        m = _re.match(
-            r"\|\s*\d+\s*\|\s*`([^`]+)`\s*\|\s*\S+\s*\|\s*"
-            r"[0-9a-f]{10}\s*\|\s*r(\d+)\s*\|",
-            line,
-        )
-        if m:
-            out[m.group(1)] = int(m.group(2))
-    return out
+def render() -> str:
+    lines = [
+        "# Query inventory",
+        "",
+        f"{len(QUERIES)} oracle-paired queries, in registration order (the "
+        "order of the imports in `plans/__init__.py` and, within a module, "
+        "of its `register` calls). Every entry pairs a Spark DataFrame "
+        "builder with an ANSI-SQL DuckDB twin; the gate hash-compares values.",
+        "",
+        "| # | query | module | what it verifies |",
+        "|---|---|---|---|",
+    ]
+    for i, (name, q) in enumerate(QUERIES.items(), 1):
+        doc = " ".join((q.doc or "").split())
+        lines.append(f"| {i} | `{name}` | {module_of(q)} | {doc} |")
+    return "\n".join(lines) + "\n"
 
 
 def main() -> int:
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        _emit()
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(root, "QUERIES.md")
+    path = os.path.join(ROOT, "QUERIES.md")
     with open(path, "w") as f:
-        f.write(buf.getvalue())
+        f.write(render())
     sys.stderr.write(f"wrote {path}\n")
     return 0
-
-
-def _emit() -> None:
-    print("# Query inventory")
-    print()
-    print(f"{len(QUERIES)} oracle-paired queries, in registration order (the "
-          "order a budget-capped correctness harness visits them — "
-          "staleness-driven: red/changed/never-stamped first, then "
-          "least-recently-stamped; see plans.__init__._staleness_order). "
-          "Every entry pairs a Spark DataFrame builder with an ANSI-SQL "
-          "DuckDB twin; the gate hash-compares values.")
-    print()
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    since = _since_with_git_fallback(root)
-    new_since = latest_stamp_round(root) + 1
-    print("| # | query | module | src | since | what it verifies |")
-    print("|---|---|---|---|---|---|")
-    for i, (name, q) in enumerate(QUERIES.items(), 1):
-        doc = " ".join((q.doc or "").split())
-        # `since` = the round the query first entered the committed inventory;
-        # preserved across regenerations (parsed back from the current file),
-        # new queries dated one past the latest driver stamp. The staleness
-        # rotation uses it to keep the never-stamped backlog FIFO.
-        s = since.get(name, new_since)
-        print(
-            f"| {i} | `{name}` | {module_of(q)} | {source_hash(q)} "
-            f"| r{s} | {doc} |"
-        )
-    print()
-    print("## Fixture schemas")
-    print()
-    print("Physical parquet schema fingerprints at generation time. A driver "
-          "fixture regeneration that changes a type shows up as a mismatch "
-          "here, and `plans._staleness_order` re-verifies every query "
-          "reading the drifted table first (same priority as a source "
-          "change).")
-    print()
-    for t, h in fixture_schema_fingerprints().items():
-        print(f"- fixture `{t}`: `{h}`")
 
 
 if __name__ == "__main__":

@@ -217,14 +217,13 @@ def _probe_scan_rows(spark, state: str, keys: list[int]) -> int:
     )
     from postgresql_cdc_spark.streaming.join_ivm import (
         FACT_DDL,
-        probe_by_keys,
+        probe_by_key_list,
     )
 
-    kdf = spark.createDataFrame([(k,) for k in keys], "fid long")
-    probe = probe_by_keys(
+    probe = probe_by_key_list(
         read_epoch_store(spark, os.path.join(state, "fact_kv"),
                          schema=FACT_DDL),
-        "fid", kdf,
+        "fid", keys,
     )
     return scan_output_rows(probe)
 
@@ -509,7 +508,7 @@ def _star_run(spark, n_fact: int, n_small: int = 40) -> dict:
     from postgresql_cdc_spark.streaming.join_ivm import (
         apply_batch,
         latest_view,
-        probe_by_keys,
+        probe_by_key_list,
     )
     from postgresql_cdc_spark.operators.layout import scan_output_rows
     from postgresql_cdc_spark.streaming.epoch_maintenance import (
@@ -629,13 +628,10 @@ def _star_run(spark, n_fact: int, n_small: int = 40) -> dict:
         )
         assert got == want, (n_fact, got[:5], want[:5])
 
-        kdf = spark.createDataFrame(
-            [(k,) for k in (1, 2, n_fact - 7)], "iid long"
-        )
-        probe = probe_by_keys(
+        probe = probe_by_key_list(
             read_epoch_store(spark, os.path.join(state, "fact_kv"),
                              schema=spec.fact_ddl),
-            "iid", kdf,
+            "iid", [1, 2, n_fact - 7],
         )
         scan = scan_output_rows(probe)
         mid = sorted(times)
