@@ -11,18 +11,21 @@ way a streaming dedup index silently corrupts itself. The contract here
   conf juggling): a replayed epoch replaces exactly its own partition —
   including a half-written previous attempt — and never touches other
   epochs' files.
-- ``epoch_replace`` is the same contract for a batch already on the driver
-  as an Arrow table (the kv sink, ``join_ivm.ingest_kv_batch``): one
-  parquet file written into a hidden temp directory, fsynced, and renamed
-  over the partition. See its docstring for the replay protocol.
+- ``epoch_replace`` is the same contract for rows already on the driver
+  as Arrow tables: one parquet file written into a hidden temp directory,
+  fsynced, and renamed over the partition. The kv stores write through
+  it: each batch (``join_ivm.ingest_kv_batch``) and each compaction fold
+  (``join_ivm.kv_fold``, which streams its tables). See its docstring for
+  the replay protocol.
 - ``epochs_before`` reads back only STRICTLY EARLIER epochs, so a replayed
   probe never sees the replaying batch's own (possibly partial) rows; the
   partition filter prunes at the file level.
 
-``epoch_overwrite`` is used by the streaming LSH ingest gates
-(``cdc_stream_incremental_dedup``, ``cdc_stream_dedup_admission``), the
-join view's arrangement partials, the streaming scale soak and the
-compaction fold; the replay semantics are pinned by
+``epoch_overwrite`` is used by the stores whose rows are not on the driver:
+the streaming LSH ingest gates (``cdc_stream_incremental_dedup``,
+``cdc_stream_dedup_admission``), the join view's arrangement partials, the
+streaming scale soak, and the Spark compaction fold of the stats, postings
+and arrangement stores; the replay semantics are pinned by
 ``tests/test_epoch_io.py``.
 """
 
@@ -32,7 +35,7 @@ import os
 import re
 import shutil
 import uuid
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -72,25 +75,32 @@ def hidden_leftovers(path: str) -> list[tuple[int, str]]:
     ]
 
 
-def epoch_replace(table: "pa.Table", path: str, epoch: int) -> None:
-    """Write ``table`` as partition ``ingest_epoch=epoch`` of ``path``,
+def epoch_replace(tables: "Iterable[pa.Table]", path: str, epoch: int) -> int:
+    """Write ``tables`` as partition ``ingest_epoch=epoch`` of ``path``,
     replacing (only) that partition if it already exists — the
-    :func:`epoch_overwrite` contract without a Spark job.
+    :func:`epoch_overwrite` contract without a Spark job. Returns the number
+    of rows written.
 
-    The rows go to one parquet file in ``.ingest_epoch=E.<uuid>``, a hidden
-    directory inside the store; the file and that directory are fsynced.
-    An existing ``ingest_epoch=E`` (a replayed epoch's earlier attempt) is
-    renamed aside under another hidden name, the new directory is renamed
-    in, the store directory is fsynced, and only then is the old attempt
-    deleted. Spark's writer never fsyncs; this path does, as
-    ``run_wal_relay`` does before it acks.
+    The tables are written in order, each as its own row group(s), through
+    one ``ParquetWriter`` into one file in ``.ingest_epoch=E.<uuid>``, a
+    hidden directory inside the store; ``tables`` may be a generator, so a
+    caller streams a partition larger than it holds (the kv compaction
+    fold). The file and that directory are fsynced. An existing
+    ``ingest_epoch=E`` (a replayed epoch's earlier attempt) is renamed aside
+    under another hidden name, the new directory is renamed in, the store
+    directory is fsynced, and only then is the old attempt deleted. Spark's
+    writer never fsyncs; this path does, as ``run_wal_relay`` does before it
+    acks. An error raised while the tables are produced or written (a
+    generator's ``ValueError``, an fsync's ``EIO``) deletes the hidden
+    directory and leaves the old partition as it was.
 
     A crash leaves only hidden directories, which no reader lists: before
     the first rename the old partition is intact; between the two renames
     epoch E is absent, which is the state before E's first attempt (E is
     replaying, so it never committed). The next write of E deletes the
     leftovers of E; the compaction sweep deletes those below its horizon.
-    An empty table writes nothing, as Spark's dynamic overwrite does."""
+    Tables without rows write nothing and leave an existing partition as it
+    is, as Spark's dynamic overwrite does."""
     import pyarrow.parquet as pq
 
     # late: epoch_maintenance imports this module
@@ -100,19 +110,34 @@ def epoch_replace(table: "pa.Table", path: str, epoch: int) -> None:
     )
 
     epoch = int(epoch)
-    if table.num_rows == 0:
-        return
     for e, d in hidden_leftovers(path):
         if e == epoch:
             shutil.rmtree(d, ignore_errors=True)
     final = os.path.join(path, f"{EPOCH_COL}={epoch}")
     tmp = os.path.join(path, f".{EPOCH_COL}={epoch}.{uuid.uuid4().hex}")
-    os.makedirs(tmp)
-    with open(os.path.join(tmp, "part-00000.parquet"), "wb") as f:
-        pq.write_table(table, f)
+    rows, f, writer = 0, None, None
+    try:
+        for table in tables:
+            if table.num_rows == 0:
+                continue
+            if writer is None:
+                os.makedirs(tmp)
+                f = open(os.path.join(tmp, "part-00000.parquet"), "wb")
+                writer = pq.ParquetWriter(f, table.schema)
+            writer.write_table(table)
+            rows += table.num_rows
+        if writer is None:
+            return 0
+        writer.close()
         f.flush()
         _fsync_fd(f.fileno())
-    _fsync_dir(tmp)
+        f.close()
+        _fsync_dir(tmp)
+    except BaseException:
+        if f is not None:
+            f.close()
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
     aside = None
     if os.path.isdir(final):
         aside = os.path.join(path, f".{EPOCH_COL}={epoch}.{uuid.uuid4().hex}")
@@ -121,6 +146,7 @@ def epoch_replace(table: "pa.Table", path: str, epoch: int) -> None:
     _fsync_dir(path)
     if aside is not None:
         shutil.rmtree(aside, ignore_errors=True)
+    return rows
 
 
 def epochs_before(spark: SparkSession, path: str, epoch: int) -> DataFrame:

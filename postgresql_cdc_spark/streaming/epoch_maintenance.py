@@ -34,7 +34,10 @@ compactor makes — ``streaming/archive_maintenance.py``):
    a crashed earlier attempt at the SAME ``upto`` is replaced wholesale;
    the base's files are then fsynced — the fold is the only surviving
    copy once step 3 runs, so it must be durable before the commit
-   references it.
+   references it. Latest-wins kv stores pass their own ``fold``
+   (``join_ivm.kv_fold``): a key-ordered merge on the driver, written and
+   fsynced through ``epoch_io.epoch_replace``, under the same steps 2
+   and 3.
 2. The manifest ``_epoch_base.json`` (``{"upto": U}``) is replaced
    atomically (tmp + fsync + rename + directory fsync). This is the commit
    point: readers resolve the base partition as ``-U`` and live partials as
@@ -160,12 +163,18 @@ def live_files(path: str, upto: int, before: Optional[int] = None) -> list[str]:
     out = []
     for e in sorted(_partition_epochs(path)):
         if e == base or (e >= lo and (hi is None or e < hi)):
-            d = os.path.join(path, f"{EPOCH_COL}={e}")
-            out += [
-                os.path.join(d, n) for n in sorted(os.listdir(d))
-                if not n.startswith(("_", "."))
-            ]
+            out += partition_files(path, e)
     return out
+
+
+def partition_files(path: str, epoch: int) -> list[str]:
+    """The data files of partition ``ingest_epoch=epoch``, in name order
+    (Spark's part numbers), skipping names that start with ``_`` or ``.``."""
+    d = os.path.join(path, f"{EPOCH_COL}={int(epoch)}")
+    return [
+        os.path.join(d, n) for n in sorted(os.listdir(d))
+        if not n.startswith(("_", "."))
+    ]
 
 
 def _store_reader(spark: SparkSession, schema: Optional[str]):
@@ -467,6 +476,7 @@ def compact_epochs(
     cluster_by: Optional[list[str]] = None,
     target_file_bytes: int = 128 * 1024 * 1024,
     partials_from: Optional[str] = None,
+    fold: Optional[Callable[[list[int], int], bool]] = None,
 ) -> dict:
     """Fold every epoch ``< upto`` (including the current base) into ONE
     base partition ``ingest_epoch = -upto``; returns ``{base_upto_before,
@@ -493,15 +503,23 @@ def compact_epochs(
     partitioned and sorted on the given columns before the base write
     (``operators/layout.compact``'s re-clustering move applied to the base
     fold), so every base file — and every row group inside it — carries a
-    tight min/max envelope on the store key and a keyed read
-    (``join_ivm._key_rows``'s pushed key ranges) prunes its scan to the
-    files and row groups actually containing the probed keys. Without it the fold
-    inherits the shuffle layout of ``merge``, where key min/max spans the
-    whole domain in every file and a probe must read the entire base.
-    File count is sized from the folded partitions' INPUT bytes against
-    ``target_file_bytes`` (the ``operators/layout`` sizing rule — no extra
-    count job; latest-wins folds shrink, so this slightly over-partitions,
-    which only tightens the envelopes)."""
+    tight min/max envelope on the given columns and a keyed read
+    (``join_ivm.probe_by_key_list``'s pushed key ranges) prunes its scan to
+    the files and row groups actually containing the probed keys. Without
+    it the fold inherits the shuffle layout of ``merge``, where key min/max
+    spans the whole domain in every file and a probe must read the entire
+    base. File count is sized from the folded partitions' INPUT bytes
+    against ``target_file_bytes`` (the ``operators/layout`` sizing rule —
+    no extra count job).
+
+    ``fold`` replaces that Spark fold-and-write (step 1) for a store whose
+    fold runs on the driver, the latest-wins kv stores'
+    ``join_ivm.kv_fold``: ``fold(epochs, upto)`` folds the listed
+    partitions of ``path`` (the base ``-base_upto`` first when it exists,
+    then the partials in ascending order) into partition ``-upto``, durably
+    before it returns, and returns whether it wrote that partition (a fold
+    whose every row is a tombstone writes none). The guards, the commit
+    and the sweep are the same for both."""
     upto = int(upto)
     prev = base_upto(path)
     if upto < prev:
@@ -532,19 +550,64 @@ def compact_epochs(
             "folded over invisibly when they do"
         )
 
-    # In shared mode partials strictly below the committed base are NOT
-    # stale leftovers (a sibling store may still need them) and must not be
-    # counted or folded twice; the single-store range keeps its historical
-    # [0, upto) form, where anything below prev is a crash leftover the
-    # reads already filter.
-    part_lo = prev if partials_from else 0
+    # Partials below the committed base are crash leftovers the reads
+    # already filter (single store) or still pending for a sibling store
+    # (shared mode): neither is folded.
     live = sorted(
-        {
-            e for e in _partition_epochs(src)
-            if part_lo <= e < upto
-        }
+        {e for e in _partition_epochs(src) if prev <= e < upto}
         | ({-prev} if prev > 0 and -prev in _partition_epochs(path) else set())
     )
+    # step 1: the fold lands in the reserved negative epoch (a re-run
+    # replaces a crashed attempt at the same horizon wholesale) and is
+    # DURABLE before the commit points readers at it — the folded partials
+    # are deleted in step 3, so page-cache-only base data plus a power cut
+    # would otherwise lose the store's entire history
+    if not live:
+        wrote = False
+    elif fold is not None:
+        wrote = fold(live, upto)
+    else:
+        _spark_fold(spark, path, prev, upto, live, merge, cluster_by,
+                    target_file_bytes, partials_from)
+        wrote = True
+    if not wrote:
+        # nothing to fold (sparse store: no base yet and no partials below
+        # the horizon), or a fold whose every row was a tombstone. Writing
+        # anyway would be WRONG under a global-aggregate merge — df.agg
+        # over zero rows yields one all-null row, a phantom the store would
+        # serve forever. Skip the base entirely (readers' base arm then
+        # matches nothing) and clear any orphan a crashed attempt left at
+        # this horizon, since the commit below would otherwise resurrect it.
+        shutil.rmtree(
+            os.path.join(path, f"{EPOCH_COL}=-{upto}"), ignore_errors=True
+        )
+    # step 2: the commit point
+    _commit_manifest(path, upto)
+    # step 3: the sweep (crash-safe to skip; the next pass finishes it)
+    deleted = _sweep_stale(path, upto)
+    return {
+        "base_upto_before": prev,
+        "base_upto_after": upto,
+        "folded_partitions": len(live),
+        "deleted_partitions": deleted,
+    }
+
+
+def _spark_fold(
+    spark: SparkSession,
+    path: str,
+    prev: int,
+    upto: int,
+    live: list[int],
+    merge: Optional[Callable[[DataFrame], DataFrame]],
+    cluster_by: Optional[list[str]],
+    target_file_bytes: int,
+    partials_from: Optional[str],
+) -> None:
+    """:func:`compact_epochs`' Spark fold-and-write: the base ``-prev`` and
+    the partials in ``[prev, upto)`` read by Spark, merged, optionally
+    key-clustered, written under ``-upto`` by dynamic partition overwrite
+    (``epoch_io.epoch_overwrite``) and fsynced."""
     part_cond = (
         (F.col(EPOCH_COL) >= F.lit(prev)) & (F.col(EPOCH_COL) < F.lit(upto))
     )
@@ -558,40 +621,20 @@ def compact_epochs(
         )
     else:
         parts = []
-        if prev > 0:
+        if prev > 0 and -prev in live:  # -0 would alias live epoch 0
             parts.append(
                 spark.read.parquet(path)
                 .where(F.col(EPOCH_COL) == F.lit(-prev))
                 .drop(EPOCH_COL)
             )
-        if os.path.isdir(src):
+        if any(e >= 0 for e in live):
             parts.append(
-                spark.read.parquet(src).where(part_cond).drop(EPOCH_COL)
+                spark.read.parquet(partials_from).where(part_cond)
+                .drop(EPOCH_COL)
             )
-        # parts is empty iff ``live`` is empty (no base committed and no
-        # shared partial in range), and the sparse-store branch below
-        # returns before ``folded`` is ever touched
-        folded = parts[0] if parts else None
+        folded = parts[0]
         for p in parts[1:]:
             folded = folded.unionByName(p)
-    if not live:
-        # nothing to fold (sparse store: no base yet and no partials below
-        # the horizon). Writing anyway would be WRONG under a global-
-        # aggregate merge — df.agg over zero rows yields one all-null row,
-        # a phantom the store would serve forever. Skip the base entirely
-        # (readers' base arm then matches nothing) and clear any orphan a
-        # pre-guard crashed attempt left at this horizon, since the commit
-        # below would otherwise resurrect it.
-        shutil.rmtree(
-            os.path.join(path, f"{EPOCH_COL}=-{upto}"), ignore_errors=True
-        )
-        _commit_manifest(path, upto)
-        return {
-            "base_upto_before": prev,
-            "base_upto_after": upto,
-            "folded_partitions": 0,
-            "deleted_partitions": _sweep_stale(path, upto),
-        }
     if merge is not None:
         folded = merge(folded)
     cached = None
@@ -624,27 +667,12 @@ def compact_epochs(
         folded = cached.repartitionByRange(
             n_files, *cluster_by
         ).sortWithinPartitions(*cluster_by)
-    # step 1: the fold lands in the reserved negative epoch (dynamic
-    # overwrite replaces a crashed attempt at the same horizon wholesale),
-    # then is made DURABLE before the commit points readers at it — the
-    # folded partials are deleted in step 3, so page-cache-only base data
-    # plus a power cut would otherwise lose the store's entire history
     try:
         epoch_overwrite(folded, path, -upto)
     finally:
         if cached is not None:
             cached.unpersist()
     _fsync_tree(os.path.join(path, f"{EPOCH_COL}=-{upto}"))
-    # step 2: the commit point
-    _commit_manifest(path, upto)
-    # step 3: the sweep (crash-safe to skip; the next pass finishes it)
-    deleted = _sweep_stale(path, upto)
-    return {
-        "base_upto_before": prev,
-        "base_upto_after": upto,
-        "folded_partitions": len(live),
-        "deleted_partitions": deleted,
-    }
 
 
 def maybe_compact(
@@ -656,6 +684,7 @@ def maybe_compact(
     cluster_by: Optional[list[str]] = None,
     target_file_bytes: int = 128 * 1024 * 1024,
     partials_from: Optional[str] = None,
+    fold: Optional[Callable[[list[int], int], bool]] = None,
 ) -> Optional[dict]:
     """Size-tiered compaction trigger: the policy a production foreachBatch
     sink calls at the TOP of every epoch (before the epoch's own writes),
@@ -694,4 +723,5 @@ def maybe_compact(
     return compact_epochs(
         spark, path, upto, merge=merge, cluster_by=cluster_by,
         target_file_bytes=target_file_bytes, partials_from=partials_from,
+        fold=fold,
     )

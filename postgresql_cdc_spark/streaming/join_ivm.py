@@ -54,8 +54,9 @@ and extrema measures one versioned ``supp_<name>`` table each):
   :func:`probe_key_list`); the whole-state read :func:`key_state` is a
   Spark window. ``maybe_compact``
   (``streaming/epoch_maintenance.py``) folds old epochs into the
-  manifest-committed base, so live partials stay bounded by the cap and
-  the per-batch write is O(|batch|), never a full-state rewrite.
+  manifest-committed base through :func:`kv_fold`, a key-ordered merge on
+  the driver, so live partials stay bounded by the cap and the per-batch
+  write is O(|batch|), never a full-state rewrite.
 - ``fact_by_did`` — the by-FOREIGN-KEY arrangement (Materialize's
   "arrangement" / DBSP's indexed Z-set): the batch's SIGNED fact deltas,
   consolidated on compaction (``sum(sign) per (fid, did, amount)``, zero
@@ -84,7 +85,7 @@ Per-batch dataflow (all O(|batch|) shuffle/compute):
 2. Collapse the batch latest-wins per key, write it as the stores' epoch.
 3. Diff ONLY the batch's keys: read their prior rows on the driver
    through Arrow (:func:`_key_rows` — the keys are pushed as range
-   filters that the key-clustered base fold's row-group statistics prune
+   filters that the key-sorted base fold's row-group statistics prune
    on), collapse them per key with tombstones kept, then extract each
    key's old and new image in ONE ``max_by`` aggregation and derive the
    retract/assert pair from the image pair — one key shuffle, no window
@@ -123,6 +124,7 @@ construction.
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import shutil
@@ -144,6 +146,7 @@ from postgresql_cdc_spark.streaming.epoch_maintenance import (
     live_files,
     live_range,
     maybe_compact,
+    partition_files,
     read_at_horizon,
     read_epoch_store,
     sweep_shared_partials,
@@ -980,14 +983,6 @@ def collapse_batch(batch: DataFrame, key: str) -> DataFrame:
     )
 
 
-def latest_wins_merge(key: str):
-    """Schema-preserving ``maybe_compact`` merge for a latest-wins kv store:
-    the fold keeps only each key's newest image and drops keys whose newest
-    change is a delete — safe because surviving partials' LSNs are never
-    below the fold's (stream order; see module docstring)."""
-    return lambda df: _resolve(df, key)
-
-
 def _consolidate(
     df: DataFrame, cols: tuple[str, ...] = ("fid", "did", "amount")
 ) -> DataFrame:
@@ -1061,38 +1056,39 @@ def ingest_kv_batch(
     epoch: int,
     batch: DataFrame,
     max_live_partials: int = 8,
-    target_file_bytes: int = 128 * 1024 * 1024,
 ) -> "pa.Table":
     """Compact-then-write one batch into a latest-wins kv epoch store:
     maintenance first (horizon = the CALLER's batch id, keeping a crashed
     attempt's own partition live for its overwrite), then the collapsed
     batch rows — tombstones included — as partition ``ingest_epoch=epoch``.
     Returns the collapsed rows as written. O(|batch|) written bytes; live
-    partials bounded by the cap. The fold is KEY-CLUSTERED
-    (``cluster_by=[key]``) so the per-batch probe's pushed key ranges prune
-    the base scan instead of reading the whole fold.
+    partials bounded by the cap.
 
-    The write runs on the driver: one ``batch.toArrow()`` (below the cap,
-    the call's only Spark job), the :data:`LATEST_FIRST` collapse in Arrow
-    (:func:`_collapse_arrow`, the point read's rule), and
+    Both run on the driver, and the call's only Spark job is one
+    ``batch.toArrow()``. The write is the :data:`LATEST_FIRST` collapse in
+    Arrow (:func:`_collapse_arrow`, the point read's rule) and
     ``epoch_io.epoch_replace``: one parquet file in a hidden temp directory
     of the store, fsynced and renamed over ``ingest_epoch=epoch``. A
     replayed epoch replaces only its own partition; crash leftovers stay
     hidden until the next write of that epoch or the compaction sweep
-    deletes them. Compaction folds stay in Spark.
+    deletes them. Past the cap, ``maybe_compact`` first folds the store
+    through :func:`kv_fold` under ``compact_epochs``' commit protocol: a
+    key-ordered merge of the base with the collapsed partials into one
+    base file sorted by key.
 
     Driver memory: the write holds the batch, O(batch rows), so each
     caller bounds it with the source's ``maxRecordsPerBatch`` (100 by
-    default; ``latestOffset`` never offers more DML rows than that). A
-    ``readall`` stream offers the whole archive as one batch."""
+    default; ``latestOffset`` never offers more DML rows than that). The
+    fold holds the collapsed partials, at most ``(max_live_partials + 1)``
+    batches, plus one base batch of :data:`_FOLD_ROWS` rows. A ``readall``
+    stream offers the whole archive as one batch."""
     epoch = int(epoch)
     maybe_compact(
         spark, store, epoch, max_live_partials,
-        merge=latest_wins_merge(key), cluster_by=[key],
-        target_file_bytes=target_file_bytes,
+        fold=functools.partial(kv_fold, store, key, batch.schema),
     )
     rows = _collapse_arrow(batch.toArrow(), key)
-    epoch_replace(rows, store, epoch)
+    epoch_replace([rows], store, epoch)
     return rows
 
 
@@ -1166,7 +1162,7 @@ def _key_rows(
     (``epoch_maintenance.live_files``), with the store's ``schema`` and the
     key set pushed as a filter: point ranges (gap-merged runs past
     ``_PROBE_MAX_RANGES`` keys, the :func:`probe_by_key_list` rule) that the
-    row-group statistics of the key-clustered base prune on. NULL keys
+    row-group statistics of the key-sorted base prune on. NULL keys
     match nothing; ``double``/``float`` keys compare as Spark normalises
     them (NaN equals NaN, -0.0 equals 0.0). The read runs through
     ``read_at_horizon``, so a compaction committing mid-read is retried,
@@ -1174,27 +1170,22 @@ def _key_rows(
     store's compacted horizon.
 
     Memory bound: every partition of a kv store holds at most one row per
-    key (:func:`_collapse_arrow` on each write, :func:`latest_wins_merge` on
-    each fold), so the read holds at most ``|keys| x (live partials + 1)``
-    rows, and live partials are capped by ``max_live_partials`` — the same
-    order as the key list itself."""
+    key (:func:`_collapse_arrow` on each write, :func:`kv_fold` on each
+    fold), so the read holds at most ``|keys| x (live partials + 1)`` rows,
+    and live partials are capped by ``max_live_partials`` — the same order
+    as the key list itself."""
     import pyarrow as pa
     import pyarrow.dataset as ds
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(schema)
     ks = list({k for k in keys if k is not None})
-    fmt = ds.ParquetFileFormat(
-        # Spark writes timestamps as INT96 by default: read them at the
-        # schema's microseconds instead of overflowing nanoseconds
-        read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
-    )
 
     def read(upto: int) -> "pa.Table":
         files = live_files(store, upto, before)
         if not files or not ks:
             return arrow_schema.empty_table()
-        data = ds.dataset(files, schema=arrow_schema, format=fmt)
+        data = ds.dataset(files, schema=arrow_schema, format=_parquet_format())
         cond = _arrow_key_filter(key, arrow_schema.field(key).type, ks)
         if all(k == k for k in ks):
             return data.to_table(filter=cond)
@@ -1265,6 +1256,125 @@ def _latest_wins_arrow(rows, key: str):
     return rows.filter(pc.not_equal(rows["op"], "D"))
 
 
+def _parquet_format():
+    """The Arrow read format of a kv store's files. Spark writes timestamps
+    as INT96 by default: read them at the schema's microseconds instead of
+    overflowing nanoseconds."""
+    import pyarrow.dataset as ds
+
+    return ds.ParquetFileFormat(
+        read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+    )
+
+
+# Rows per base batch the kv fold reads, and per row group it writes: the
+# unit the point read's pushed key ranges prune.
+_FOLD_ROWS = 8192
+
+
+def kv_fold(
+    store: str, key: str, schema: StructType, epochs: list[int], upto: int
+) -> bool:
+    """The compaction fold of a latest-wins kv store, run on the driver:
+    ``compact_epochs``' ``fold`` (bind the first three arguments). Folds
+    ``epochs`` — the base ``-prev`` first when there is one, then the
+    partials — into the base partition ``-upto``, keeping each key's newest
+    image (:data:`LATEST_FIRST`) and dropping keys whose newest change is a
+    delete; returns whether any row was written. ``schema`` is the store's
+    row schema.
+
+    The partials are read whole and collapsed (:func:`_collapse_arrow`,
+    tombstones kept, sorted by key): at most ``max_live_partials + 1``
+    batches, the bound the write and the point read already have. The base
+    holds one row per key in key order, and is streamed :data:`_FOLD_ROWS`
+    rows at a time; each base batch merges with the partial rows whose key
+    is at most its last key (:func:`_latest_wins_arrow`), so the driver
+    holds one base batch besides the partials. The merged chunks go in key
+    order through ``epoch_io.epoch_replace`` into one file, at most
+    :data:`_FOLD_ROWS` rows per row group, fsynced and renamed in: the new
+    base is sorted by key and its row-group statistics prune
+    :func:`_key_rows`' pushed ranges. NaN and NULL keys order by no
+    comparison, so their rows merge in the last chunk.
+
+    A base whose keys do not rise across its batches (and files, in name
+    order) raises ``ValueError`` before anything is renamed in: merging it
+    would write duplicate keys. A base Spark wrote before this fold — INT96
+    timestamps, several ``repartitionByRange`` files — reads the same way."""
+    import bisect
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    names = arrow_schema.names
+
+    def ordered(t: "pa.Table"):
+        # the keys the merge orders by comparison: neither NULL nor NaN
+        k = t[key]
+        if pa.types.is_floating(k.type):
+            return pc.and_kleene(pc.is_valid(k), pc.invert(pc.is_nan(k)))
+        return pc.is_valid(k)
+
+    fresh = _collapse_arrow(
+        ds.dataset(
+            [f for e in epochs if e >= 0 for f in partition_files(store, e)],
+            schema=arrow_schema, format=_parquet_format(),
+        ).to_table(),
+        key,
+    )
+    mask = ordered(fresh)
+    fresh_rest = fresh.filter(pc.invert(mask))
+    fresh = fresh.filter(mask)
+    fresh_keys = fresh[key].to_pylist()
+
+    def base_batches():
+        for e in epochs:
+            if e < 0:
+                for f in partition_files(store, e):
+                    pf = pq.ParquetFile(f, coerce_int96_timestamp_unit="us")
+                    for b in pf.iter_batches(_FOLD_ROWS, columns=names):
+                        yield pa.Table.from_batches([b]).select(names).cast(
+                            arrow_schema
+                        )
+
+    def chunks(t: "pa.Table"):
+        t = _latest_wins_arrow(t, key)
+        for i in range(0, t.num_rows, _FOLD_ROWS):
+            yield t.slice(i, _FOLD_ROWS)
+
+    def merged():
+        lo, last, held = 0, None, []
+        for b in base_batches():
+            mask = ordered(b)
+            held.append(b.filter(pc.invert(mask)))
+            b = b.filter(mask)
+            if b.num_rows == 0:
+                continue
+            k = b[key]
+            if (last is not None and not pc.greater(k[0], last).as_py()) or (
+                len(k) > 1
+                and not pc.all(pc.greater(k[1:], k[:-1])).as_py()
+            ):
+                raise ValueError(
+                    f"kv store {store!r}: base keys are not in ascending "
+                    f"order (after {last}); refusing to fold"
+                )
+            last = k[-1]
+            hi = bisect.bisect_right(fresh_keys, last.as_py())
+            yield from chunks(
+                pa.concat_tables([b, fresh.slice(lo, hi - lo)])
+            )
+            lo = hi
+        yield from chunks(
+            pa.concat_tables([*held, fresh.slice(lo), fresh_rest])
+        )
+
+    return epoch_replace(merged(), store, -int(upto)) > 0
+
+
 def ingest_and_delta(
     spark: SparkSession,
     store: str,
@@ -1274,12 +1384,11 @@ def ingest_and_delta(
     epoch: int,
     batch: DataFrame,
     max_live_partials: int = 8,
-    target_file_bytes: int = 128 * 1024 * 1024,
 ) -> DataFrame:
     """Write the batch into the kv store and return its SIGNED row deltas
     ``(sign, key, *payload)`` vs prior state — O(|batch|): prior state is
     read on the driver for the batch's keys only (:func:`_key_rows`, the
-    point read's Arrow scan; the key-clustered base fold's row-group
+    point read's Arrow scan; the key-sorted base fold's row-group
     statistics prune it to the batch's keys) and collapsed per key with
     tombstones kept, and the old-vs-new diff is ONE aggregation over
     those rows and the written batch — per key, ``max_by`` extracts the
@@ -1293,10 +1402,7 @@ def ingest_and_delta(
     from pyspark.sql.types import _parse_datatype_string
 
     epoch = int(epoch)
-    rows = ingest_kv_batch(
-        spark, store, key, epoch, batch, max_live_partials,
-        target_file_bytes,
-    )
+    rows = ingest_kv_batch(spark, store, key, epoch, batch, max_live_partials)
     # the collapsed batch as written, as a local relation: no re-scan
     schema = _parse_datatype_string(ddl)
     written = spark.createDataFrame(rows.select(_ddl_names(ddl)), schema)
@@ -1407,9 +1513,10 @@ def apply_batch(
     or several (star/snowflake). ``d_batch`` is None, one DataFrame, or a
     sequence aligned with ``spec.dims``. Every prior-state read resolves
     strictly below ``batch_id``; every store is size-tiered-compacted at
-    the top of the epoch (base folds key-clustered into
-    ``target_file_bytes``-sized files so the probes prune); versions
-    behind the previous generation are swept — so per-batch cost is
+    the top of the epoch (kv bases fold into one key-sorted file, the
+    arrangements' bases key-clustered into ``target_file_bytes``-sized
+    files, so the probes prune); versions behind the previous generation
+    are swept — so per-batch cost is
     O(|batch| + dim-delta fan-out) and disk objects stay bounded at any
     stream age. SUM-measures fold into the versioned sums table; extrema
     measures additionally fold their (group, value) SUPPORT tables, from
@@ -1436,8 +1543,7 @@ def apply_batch(
 
     f_delta = ingest_and_delta(
         spark, fact_store, spec.fact_ddl, spec.fact_key,
-        list(spec.fact_payload), bid, f_batch,
-        max_live_partials, target_file_bytes,
+        list(spec.fact_payload), bid, f_batch, max_live_partials,
     )
 
     if spec.join_type != "inner":
@@ -1454,7 +1560,7 @@ def apply_batch(
             )
         ingest_kv_batch(
             spark, spec.dim_store(base, 0), spec.dims[0].key, bid,
-            d_batches[0], max_live_partials, target_file_bytes,
+            d_batches[0], max_live_partials,
         )
         cols = [F.col(g) for g in spec.state_group_cols]
         cols.append(F.col("sign").cast("long").alias("dn"))
@@ -1520,8 +1626,7 @@ def apply_batch(
     for i, dim in enumerate(spec.dims):
         d_delta = ingest_and_delta(
             spark, spec.dim_store(base, i), dim.ddl, dim.key,
-            list(dim.payload), bid, d_batches[i],
-            max_live_partials, target_file_bytes,
+            list(dim.payload), bid, d_batches[i], max_live_partials,
         )
         d_deltas.append(_materialize_versioned(
             d_delta, base, spec.dim_delta_prefix(i), bid,

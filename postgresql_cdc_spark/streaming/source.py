@@ -665,7 +665,7 @@ class WalArchiveStreamReader(DataSourceStreamReader):
         # semantics — but surprising for archive replay). The `slot` option
         # namespaces the default ack file per logical consumer; queries that
         # need full isolation pass an explicit `ackpath`.
-        slot = options.get("slot")
+        slot = self.slot = options.get("slot")
         default_ack = (
             f"_flushed_lsn_{slot}" if slot else "_flushed_lsn"
         )
@@ -781,9 +781,16 @@ class WalArchiveStreamReader(DataSourceStreamReader):
 
     def commit(self, end: dict) -> None:
         """Flush-LSN ack — only when no transaction is open at the batch
-        boundary (at-least-once: a mid-txn crash replays the whole txn)."""
+        boundary (at-least-once: a mid-txn crash replays the whole txn).
+        A mid-transaction end acks nothing new, except that a ``slot``
+        reader with no ack yet records its starting offset: a slot shares
+        the archive, and a default ``prune_wal_archive`` (the min over the
+        ack files it finds) would otherwise not see it and could drop the
+        chunks its open transaction still needs."""
         if end.get("txn_open"):
-            return
+            if self.slot is None or os.path.exists(self.ack_path):
+                return
+            end = self.initialOffset()
         tmp = self.ack_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"flushed_lsn": end["lsn"]}, f)

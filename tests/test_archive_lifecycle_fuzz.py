@@ -131,6 +131,34 @@ def test_index_prune_compact_replay_invariant(tmp_path_factory, n_txns,
 
 # --- multi-slot concurrent drain racing prune + compact -----------------------
 
+def test_slot_that_never_acked_holds_prune(tmp_path):
+    """A slot whose first batch ends mid-transaction has acked nothing,
+    yet its open transaction's chunk must survive a default prune that
+    another slot's ack would allow: the fuzz below found the prune
+    dropping it, and the slot's next batch then raising ``ProtocolError``."""
+    arch = str(tmp_path / "arch")
+    frames = _frames(2)
+    _write_chunks(arch, frames, [4])
+    a = WalArchiveStreamReader({"path": arch, "slot": "a",
+                                "maxrecordsperbatch": "1"})
+    b = WalArchiveStreamReader({"path": arch, "slot": "b",
+                                "maxrecordsperbatch": "3"})
+    cur = {}
+    for name, r in (("a", a), ("b", b)):
+        end = r.latestOffset()
+        envelope_rows(r.read(r.partitions(r.initialOffset(), end)[0]))
+        r.commit(end)
+        cur[name] = end
+    assert cur["a"] == {"lsn": 3, "txn_open": True}
+    assert cur["b"] == {"lsn": 5, "txn_open": False}
+    assert prune_wal_archive(arch)["pruned_chunks"] == 0
+    end = a.latestOffset()
+    rows = envelope_rows(a.read(a.partitions(cur["a"], end)[0]))
+    assert [t[4] for t in rows] == [4]
+    a.commit(end)
+    assert prune_wal_archive(arch)["base_lsn"] == 4
+
+
 @settings(max_examples=25, deadline=None)
 @given(
     n_txns=st.integers(min_value=2, max_value=8),

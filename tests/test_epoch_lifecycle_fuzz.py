@@ -247,16 +247,18 @@ _KV_OPS = st.lists(
 def test_point_reads_between_compaction_steps_match_model(
     spark, tmp_path_factory, ops
 ):
-    """``probe_key_state`` runs after the fold write, after the manifest
-    commit and after the sweep of every compaction — the size-tiered ones
-    inside ``ingest_kv_batch`` and explicit ones — and must equal the
-    latest-wins model each time: no row lost or doubled mid-protocol."""
+    """``probe_key_state`` runs after the fold write (``kv_fold``), after
+    the manifest commit and after the sweep of every compaction — the
+    size-tiered ones inside ``ingest_kv_batch`` and explicit ones — and
+    must equal the latest-wins model each time: no row lost or doubled
+    mid-protocol."""
+    import functools
     import unittest.mock as mock
 
     import postgresql_cdc_spark.streaming.epoch_maintenance as em
+    import postgresql_cdc_spark.streaming.join_ivm as ji
     from postgresql_cdc_spark.streaming.join_ivm import (
         ingest_kv_batch,
-        latest_wins_merge,
         probe_key_state,
     )
 
@@ -281,9 +283,12 @@ def test_point_reads_between_compaction_steps_match_model(
         return after
 
     hooks = [
-        mock.patch.object(em, name, side_effect=check(name)(getattr(em, name)))
-        for name in ("_fsync_tree", "_commit_manifest", "_sweep_stale")
+        mock.patch.object(mod, name,
+                          side_effect=check(name)(getattr(mod, name)))
+        for mod, name in ((ji, "kv_fold"), (em, "_commit_manifest"),
+                          (em, "_sweep_stale"))
     ]
+    schema = spark.createDataFrame([], _KV_DDL).schema
     for h in hooks:
         h.start()
     try:
@@ -308,11 +313,11 @@ def test_point_reads_between_compaction_steps_match_model(
                 upto = prev + int(round((next_epoch - prev) * arg))
                 if upto > prev:
                     compact_epochs(
-                        spark, store, upto, merge=latest_wins_merge("id"),
-                        cluster_by=["id"],
+                        spark, store, upto, fold=functools.partial(
+                            ji.kv_fold, store, "id", schema),
                     )
     finally:
         for h in hooks:
             h.stop()
     if base_upto(store) > 0:
-        assert {"_fsync_tree", "_commit_manifest", "_sweep_stale"} <= set(seen)
+        assert {"kv_fold", "_commit_manifest", "_sweep_stale"} <= set(seen)

@@ -24,6 +24,22 @@ ROW_DDL = "tab string, k long, a long, b long, op string, lsn long"
 KV_DDL = "id long, grp int, op string, lsn long"
 
 
+def _kv_fold(spark, store, upto, ddl=KV_DDL):
+    """Compact a kv store through its fold, as ``ingest_kv_batch`` does."""
+    import functools
+
+    from postgresql_cdc_spark.streaming.epoch_maintenance import (
+        compact_epochs,
+    )
+    from postgresql_cdc_spark.streaming.join_ivm import kv_fold
+
+    schema = spark.createDataFrame([], ddl).schema
+    return compact_epochs(
+        spark, store, upto,
+        fold=functools.partial(kv_fold, store, "id", schema),
+    )
+
+
 # the probe plans measured here are pure scan+filter — no exchange — so
 # scan_output_rows sees the FileSourceScan leaves directly
 from postgresql_cdc_spark.operators.layout import (  # noqa: E402
@@ -766,12 +782,10 @@ class TestJoinIvmReplay:
         (r16 verdict item 5)."""
         from postgresql_cdc_spark.streaming.epoch_io import epoch_overwrite
         from postgresql_cdc_spark.streaming.epoch_maintenance import (
-            compact_epochs,
             epochs_before_compacted,
         )
         from postgresql_cdc_spark.streaming.join_ivm import (
             _PROBE_MAX_RANGES,
-            latest_wins_merge,
             probe_by_key_list,
         )
 
@@ -786,11 +800,7 @@ class TestJoinIvmReplay:
                 F.lit("I").alias("op"), F.col("id").alias("lsn"),
             )
             epoch_overwrite(df, store, ep)
-        compact_epochs(
-            spark, store, upto=EPOCHS,
-            merge=latest_wins_merge("id"), cluster_by=["id"],
-            target_file_bytes=64 * 1024,
-        )
+        _kv_fold(spark, store, EPOCHS, SKV_DDL)
 
         # 80 keys (> _PROBE_MAX_RANGES, so the gap merge must engage) in
         # 4 tight clusters across the domain
@@ -826,9 +836,10 @@ class TestJoinIvmReplay:
     def test_clustered_base_fold_prunes_probe_scan(self, spark, tmp_path):
         """The r14-verdict optimization target: the per-batch kv probe's
         read I/O must stop tracking |state|. With the base fold KEY-
-        CLUSTERED (compact_epochs cluster_by) and the batch's keys pushed
-        as literal range predicates (probe_by_key_list), parquet min/max
-        statistics prune the scan to the files holding the probed keys;
+        SORTED (the kv fold: one file of bounded row groups) and the
+        batch's keys pushed as literal range predicates
+        (probe_by_key_list), parquet min/max statistics prune the scan to
+        the row groups holding the probed keys;
         the same probe against an UNCLUSTERED fold (hash-shuffled by the
         latest-wins window, every file spanning the whole key domain)
         reads essentially the entire base."""
@@ -838,7 +849,7 @@ class TestJoinIvmReplay:
             epochs_before_compacted,
         )
         from postgresql_cdc_spark.streaming.join_ivm import (
-            latest_wins_merge,
+            _resolve,
             probe_by_key_list,
         )
 
@@ -853,14 +864,10 @@ class TestJoinIvmReplay:
                     F.lit("I").alias("op"), F.col("id").alias("lsn"),
                 )
                 epoch_overwrite(df, path, ep)
-        compact_epochs(
-            spark, stores["clustered"], upto=EPOCHS,
-            merge=latest_wins_merge("id"), cluster_by=["id"],
-            target_file_bytes=64 * 1024,
-        )
+        _kv_fold(spark, stores["clustered"], EPOCHS)
         compact_epochs(
             spark, stores["plain"], upto=EPOCHS,
-            merge=latest_wins_merge("id"),
+            merge=lambda df: _resolve(df, "id"),
         )
 
         scanned = {}
@@ -902,11 +909,9 @@ class TestJoinIvmReplay:
         images."""
         from postgresql_cdc_spark.streaming.epoch_io import epoch_overwrite
         from postgresql_cdc_spark.streaming.epoch_maintenance import (
-            compact_epochs,
             read_epoch_store,
         )
         from postgresql_cdc_spark.streaming.join_ivm import (
-            latest_wins_merge,
             probe_by_key_list,
             probe_key_state,
         )
@@ -920,11 +925,7 @@ class TestJoinIvmReplay:
                 F.lit("I").alias("op"), F.col("id").alias("lsn"),
             )
             epoch_overwrite(df, store, ep)
-        compact_epochs(
-            spark, store, upto=EPOCHS,
-            merge=latest_wins_merge("id"), cluster_by=["id"],
-            target_file_bytes=64 * 1024,
-        )
+        _kv_fold(spark, store, EPOCHS)
 
         m1_keys = spark.createDataFrame(
             [(11,), (50_000,), (N - 3,)], "id long"

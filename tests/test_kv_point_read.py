@@ -6,6 +6,7 @@ compaction committing in the middle of the read."""
 
 from __future__ import annotations
 
+import functools
 import math
 import os
 import struct
@@ -26,7 +27,7 @@ from postgresql_cdc_spark.streaming.join_ivm import (
     collapse_batch,
     ingest_kv_batch,
     key_state,
-    latest_wins_merge,
+    kv_fold,
     probe_key_list,
     probe_key_state,
 )
@@ -63,10 +64,11 @@ def _keys_df(spark, keys, ktype="long"):
     return spark.createDataFrame([(k,) for k in keys], f"k {ktype}")
 
 
-def _compact(spark, store, upto):
+def _compact(spark, store, upto, ddl=DDL):
+    schema = spark.createDataFrame([], ddl).schema
     return compact_epochs(
-        spark, store, upto, merge=latest_wins_merge("id"),
-        cluster_by=["id"], target_file_bytes=1024,
+        spark, store, upto,
+        fold=functools.partial(kv_fold, store, "id", schema),
     )
 
 
@@ -219,7 +221,7 @@ def test_typed_columns_match_key_state(spark, tmp_path):
             store, ep,
         )
         if ep == 1:
-            _compact(spark, store, 2)
+            _compact(spark, store, 2, TYPED_DDL)
     keys = ["a", "b", "c", "n", "zz", None]
     got = _rows(probe_key_state(
         spark, store, TYPED_DDL, "id", _keys_df(spark, keys, "string")

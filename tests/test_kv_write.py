@@ -8,6 +8,7 @@ writes read back equal to Spark-written ones through every reader."""
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import math
 import os
 import unittest.mock as mock
@@ -22,9 +23,10 @@ from postgresql_cdc_spark.streaming.epoch_maintenance import (
     compact_epochs,
 )
 from postgresql_cdc_spark.streaming.join_ivm import (
+    _resolve,
     ingest_kv_batch,
     key_state,
-    latest_wins_merge,
+    kv_fold,
     probe_key_list,
 )
 
@@ -59,6 +61,15 @@ def _model(spark, batches, ddl):
 def _ingest(spark, store, epoch, rows, ddl=DDL):
     return ingest_kv_batch(
         spark, store, "id", epoch, spark.createDataFrame(rows, ddl)
+    )
+
+
+def _fold(spark, store, upto, ddl=DDL):
+    """The kv store's fold, as ``ingest_kv_batch`` runs it past the cap."""
+    schema = spark.createDataFrame([], ddl).schema
+    return compact_epochs(
+        spark, store, upto,
+        fold=functools.partial(kv_fold, store, "id", schema),
     )
 
 
@@ -145,10 +156,8 @@ def test_crash_leftovers_are_invisible_then_deleted(spark, tmp_path, where):
     # "aside": epoch 2 is gone until its replay lands; "tmp": intact
     before = [B0, B1, B2] if where == "tmp" else [B0, B1]
     assert _state(spark, store) == _model(spark, before, DDL)
-    # the fold's Spark partition discovery skips the hidden directories
-    compact_epochs(
-        spark, store, 2, merge=latest_wins_merge("id"), cluster_by=["id"]
-    )
+    # the fold's partition listing skips the hidden directories
+    _fold(spark, store, 2)
     assert base_upto(store) == 2
     assert _state(spark, store) == _model(spark, before, DDL)
     assert hidden_leftovers(store) == left  # above the horizon: kept
@@ -165,9 +174,7 @@ def test_sweep_deletes_leftovers_below_the_horizon(spark, tmp_path):
     _ingest(spark, store, 1, B1)
     _crash_replay(spark, store, 2, B2, "tmp")
     _crash_replay(spark, store, 1, B1, "tmp")
-    compact_epochs(
-        spark, store, 2, merge=latest_wins_merge("id"), cluster_by=["id"]
-    )
+    _fold(spark, store, 2)
     assert [e for e, _ in hidden_leftovers(store)] == [2]
     assert _state(spark, store) == _model(spark, [B0, B1, B2], DDL)
 
@@ -187,9 +194,11 @@ def _typed(k, n, op, lsn, x=None):
 
 
 def test_pyarrow_partials_read_like_a_spark_base(spark, tmp_path):
-    """A Spark-written base (INT96 timestamps) next to pyarrow-written
-    partials (int64 timestamps, fixed-size decimals): ``key_state``, the
-    probe and a compaction fold all return the model's values."""
+    """A Spark-written base (INT96 timestamps, the fold kv stores ran
+    before the Arrow one) next to pyarrow-written partials (int64
+    timestamps, fixed-size decimals): ``key_state``, the probe and the kv
+    fold on top of that base, then on top of its own, all return the
+    model's values."""
     store = str(tmp_path / "kv")
     nulls = (9, None, None, None, None, None, None, None, None, "I", 3)
     batches = [
@@ -203,20 +212,36 @@ def test_pyarrow_partials_read_like_a_spark_base(spark, tmp_path):
     for ep, rows in enumerate(batches[:2]):
         _ingest(spark, store, ep, rows, TYPED_DDL)
     compact_epochs(
-        spark, store, 2, merge=latest_wins_merge("id"), cluster_by=["id"]
+        spark, store, 2, merge=lambda df: _resolve(df, "id"),
+        cluster_by=["id"],
     )
     for ep, rows in enumerate(batches[2:], start=2):
         _ingest(spark, store, ep, rows, TYPED_DDL)
     want = _model(spark, batches, TYPED_DDL)
     assert _state(spark, store, TYPED_DDL, keys) == want
-    compact_epochs(
-        spark, store, 4, merge=latest_wins_merge("id"), cluster_by=["id"]
-    )
+    _fold(spark, store, 4, TYPED_DDL)
     assert _state(spark, store, TYPED_DDL, keys) == want
+    last = [_typed(6, 10, "I", 11), _typed(1, 11, "D", 12)]
+    _ingest(spark, store, 4, last, TYPED_DDL)
+    _fold(spark, store, 5, TYPED_DDL)
+    want = _model(spark, batches + [last], TYPED_DDL)
+    assert _state(spark, store, TYPED_DDL, keys + [6]) == want
     # the model really holds the special values this test is about
     xs = {r[0]: r[2] for r in want}
     assert xs[2] == ("f", "nan") and xs[4] == ("f", "-0.0")
     assert math.isnan(float(xs[2][1]))
+
+
+def _spark_jobs(spark, tmp_path, run) -> int:
+    """The number of Spark jobs ``run()`` starts."""
+    sc = spark.sparkContext
+    group = f"kv-write-{os.getpid()}-{id(tmp_path)}"
+    sc.setJobGroup(group, "ingest_kv_batch job-count pin")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_one_spark_job_below_the_cap(spark, tmp_path):
@@ -225,12 +250,21 @@ def test_one_spark_job_below_the_cap(spark, tmp_path):
     store = str(tmp_path / "kv")
     _ingest(spark, store, 0, B0)
     batch = spark.createDataFrame(B1, DDL)
-    sc = spark.sparkContext
-    group = f"kv-write-{os.getpid()}-{id(tmp_path)}"
-    sc.setJobGroup(group, "ingest_kv_batch job-count pin")
-    try:
-        ingest_kv_batch(spark, store, "id", 1, batch)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert _spark_jobs(
+        spark, tmp_path, lambda: ingest_kv_batch(spark, store, "id", 1, batch)
+    ) == 1
     assert _state(spark, store) == _model(spark, [B0, B1], DDL)
+
+
+def test_one_spark_job_at_the_cap(spark, tmp_path):
+    """A write that compacts first still runs exactly one Spark job, the
+    batch's ``toArrow()``: the kv fold runs on the driver."""
+    store = str(tmp_path / "kv")
+    for ep, rows in enumerate([B0, B1]):
+        _ingest(spark, store, ep, rows)
+    batch = spark.createDataFrame(B2, DDL)
+    assert _spark_jobs(spark, tmp_path, lambda: ingest_kv_batch(
+        spark, store, "id", 2, batch, max_live_partials=1,
+    )) == 1
+    assert base_upto(store) == 2
+    assert _state(spark, store) == _model(spark, [B0, B1, B2], DDL)

@@ -146,3 +146,64 @@ def test_report_groups_logs_by_workload_and_seed(tmp_path, capsys):
     assert "w seed 7: 3 pairs, runs with failed > 0: parent 1, change 0" in out
     assert "w seed 11: 3 pairs" in out
     assert "throughput_per_s" in out
+
+
+def _checkout(root, body="X = 1\n"):
+    for d in ("postgresql_cdc_spark", "perfbench"):
+        os.makedirs(root / d)
+        (root / d / "mod.py").write_text(body)
+    return str(root)
+
+
+def _pyc_source_size(pyc: str) -> int:
+    """The source size a timestamp ``.pyc`` header records (PEP 552)."""
+    with open(pyc, "rb") as f:
+        return int.from_bytes(f.read(16)[12:16], "little")
+
+
+def test_precompile_writes_current_bytecode(tmp_path):
+    """Both package directories get bytecode, and a stale ``.pyc`` (its
+    source changed since) is rewritten."""
+    import glob
+
+    co = _checkout(tmp_path)
+    perf_pairs.precompile(co, sys.executable)
+    pycs = sorted(glob.glob(os.path.join(co, "*", "__pycache__", "mod.*.pyc")))
+    assert [os.path.basename(os.path.dirname(os.path.dirname(p)))
+            for p in pycs] == ["perfbench", "postgresql_cdc_spark"]
+    src = os.path.join(co, "perfbench", "mod.py")
+    with open(src, "w") as f:
+        f.write("X = 22\n")  # the size changes even within one mtime tick
+    perf_pairs.precompile(co, sys.executable)
+    (pyc,) = glob.glob(os.path.join(co, "perfbench", "__pycache__", "*.pyc"))
+    assert _pyc_source_size(pyc) == os.path.getsize(src) == 7
+
+
+def test_precompile_raises_on_a_broken_source(tmp_path):
+    co = _checkout(tmp_path, body="def (:\n")
+    with pytest.raises(RuntimeError, match="compileall"):
+        perf_pairs.precompile(co, sys.executable)
+
+
+def test_main_precompiles_both_sides_before_the_first_run(
+    tmp_path, monkeypatch, capsys
+):
+    calls = []
+    monkeypatch.setattr(perf_pairs, "precompile",
+                        lambda co, py: calls.append(("compile", co, py)))
+
+    def run_once(co, command, workload, seed, seconds):
+        calls.append(("run", co))
+        return {"failed": 0, "metrics": {
+            "latency_p50_ms": {"value": 1.0, "unit": "ms"}}}
+
+    monkeypatch.setattr(perf_pairs, "run_once", run_once)
+    parent, change = str(tmp_path / "p"), str(tmp_path / "c")
+    assert perf_pairs.main(["--parent", parent, "--change", change,
+                            "--workload", "w", "--seed", "7",
+                            "--pairs", "1"]) == 0
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        python = json.load(f)["command"][0]
+    assert calls[:2] == [("compile", parent, python),
+                         ("compile", change, python)]
+    assert [c[0] for c in calls[2:]] == ["run", "run"]

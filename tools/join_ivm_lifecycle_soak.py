@@ -196,13 +196,13 @@ def main() -> int:
 # apply time. Run at N and 10N: if per-batch cost were O(|state|) (the old
 # layout's full-state rewrite + full-outer diff), the 10N column would be
 # ~10x; the delta-backed layout should hold ~flat, paying only the base-fold
-# scan — which since r15 is itself PRUNED: the fold is key-clustered into
-# target-sized files and the probe pushes the batch's keys as range
+# scan — which is itself PRUNED: the kv fold writes one key-sorted file
+# of bounded row groups and the probe pushes the batch's keys as range
 # predicates, so probe_scan_rows (the fact_kv scan's numOutputRows for a
 # 3-key probe, measured below) must stop tracking |state| too.
-# target_file_bytes here is scaled down (16 KiB) so the soak's MB-sized
-# state splits into multiple base files the way 128 MiB files split TB-sized
-# state — same files-per-state ratio, same pruning geometry.
+# target_file_bytes here is scaled down (16 KiB) so the arrangements'
+# MB-sized state splits into multiple base files the way 128 MiB files
+# split TB-sized state — same files-per-state ratio, same pruning geometry.
 
 _SOAK_FILE_BYTES = 16 * 1024
 
@@ -389,7 +389,6 @@ def _hicard_run(spark, n_keys: int, backend: str, n_small: int = 40) -> dict:
         t0 = time.monotonic()
         delta = ingest_and_delta(
             spark, state_kv, DDL, "id", ["cust", "v"], ep, batch,
-            target_file_bytes=_SOAK_FILE_BYTES,
         ).select(
             "cust",
             F.col("sign").cast("long").alias("dn"),

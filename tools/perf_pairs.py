@@ -17,6 +17,14 @@ bound is flagged unresolved unless every change run beats every parent
 run. ``--log`` appends each run's result as one JSON line, and
 ``--report`` summarizes such logs, per workload and seed, without running
 anything. ``BENCHMARK.json`` is read, never written.
+
+Before the first pair each checkout's ``postgresql_cdc_spark/`` and
+``perfbench/`` are byte-compiled (``python -m compileall -q -f``, with the
+benchmark command's interpreter), so no timed run pays first-import
+compilation and bytecode left stale in one checkout does not skew the
+comparison. ``-f`` rewrites every file: compileall alone trusts a ``.pyc``
+whose recorded mtime matches, even when the source changed size within
+that second.
 """
 
 from __future__ import annotations
@@ -111,6 +119,22 @@ def _values(metrics: dict) -> dict:
     return {k: v["value"] for k, v in metrics.items()}
 
 
+COMPILED = ("postgresql_cdc_spark", "perfbench")
+
+
+def precompile(checkout: str, python: str) -> None:
+    """Byte-compile ``checkout``'s :data:`COMPILED` directories with
+    ``python``; raises when a source does not compile."""
+    dirs = [d for d in COMPILED if os.path.isdir(os.path.join(checkout, d))]
+    proc = subprocess.run([python, "-m", "compileall", "-q", "-f", *dirs],
+                          cwd=checkout, capture_output=True, text=True)
+    if proc.returncode:
+        raise RuntimeError(
+            f"compileall in {checkout} exited {proc.returncode}:\n"
+            + (proc.stdout + proc.stderr)[-2000:]
+        )
+
+
 def run_once(checkout: str, command: list[str], workload: str, seed: int,
              seconds: float) -> dict:
     """One untraced benchmark run from ``checkout``; its final JSON line.
@@ -185,6 +209,8 @@ def main(argv: list[str] | None = None) -> int:
         ap.error("--parent, --change, --workload and --seed are required")
     sides = {"parent": os.path.abspath(args.parent),
              "change": os.path.abspath(args.change)}
+    for checkout in sides.values():
+        precompile(checkout, bench["command"][0])
     pairs, failed = [], {"parent": 0, "change": 0}
     for i in range(args.pairs):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")

@@ -2,8 +2,8 @@
 
     python tools/py_task_floor.py
 
-In one local session, prints the median wall time of five things, each
-run ``REPEATS`` times after one warm-up:
+In one local session, prints the median wall time of these, each run
+``REPEATS`` times after one warm-up:
 
 - ``jvm_job``: a one-partition job with no Python in it;
 - ``arrow_job``: a one-partition identity ``mapInArrow`` job;
@@ -16,7 +16,13 @@ run ``REPEATS`` times after one warm-up:
 - ``kv_ingest``: ``join_ivm.ingest_kv_batch`` of a 2,500-row,
   one-partition batch (``spark.range``, the ``live_tail`` kv columns)
   into an empty store, so below the compaction cap: the batch's one
-  ``toArrow()`` job, the Arrow collapse and the fsynced parquet write.
+  ``toArrow()`` job, the Arrow collapse and the fsynced parquet write;
+- ``kv_compact``: one ``ingest_kv_batch`` of a 2,500-row batch past the
+  compaction cap of a 50,000-key store (a base of about 50,000 keys plus
+  nine live 2,500-row partials): the fold, then the write. Each run starts
+  from a copy of the same store. ``kv_compact_cold`` is the session's
+  first fold (of nine partials, the 50,000-row first batch among them,
+  before any base exists), timed once.
 
 The warm-up reads the archive once, so the Python workers the timed jobs
 reuse have already run ``pgcdc`` code. The gap between the first line and
@@ -37,6 +43,22 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 REPEATS = 7
+KV_KEYS = 50_000
+KV_ROWS = 2_500
+KV_CAP = 8  # ingest_kv_batch's default max_live_partials
+
+
+def _kv_batch(spark, epoch: int, rows: int = KV_ROWS):
+    """Epoch ``epoch``'s batch of the ``kv_compact`` store: ``rows``
+    changes spread over the key space, every fiftieth a delete after epoch
+    0, LSNs above every earlier epoch's."""
+    return spark.range(rows, numPartitions=1).selectExpr(
+        f"(id * 19 + {epoch * KV_ROWS}) % {KV_KEYS} id",
+        "cast(id % 1000 as int) v_int", "concat('t', id) v_text",
+        "id / 3 v_num",
+        "'U' op" if epoch == 0
+        else "case when id % 50 = 49 then 'D' else 'U' end op",
+        f"{epoch} * 1000000 + id lsn")
 
 
 def _median_s(fn) -> float:
@@ -95,9 +117,47 @@ def main() -> None:
                 spark, os.path.join(kv, str(next(stores))), "id", 0,
                 batch)),
         }
+        floors["kv_compact_cold"], floors["kv_compact"] = _kv_compact(
+            spark, kv, ingest_kv_batch)
     spark.stop()
     for name, secs in floors.items():
-        print(f"{name:<12} {secs:.3f} s  (median of {REPEATS})")
+        how = "once" if name.endswith("_cold") else f"median of {REPEATS}"
+        print(f"{name:<16} {secs:.3f} s  ({how})")
+
+
+def _kv_compact(spark, tmp: str, ingest_kv_batch) -> tuple[float, float]:
+    """``(cold, median)`` seconds of an ``ingest_kv_batch`` that folds:
+    the session's first fold, then :data:`REPEATS` folds of a base plus
+    ``KV_CAP + 1`` partials, each on a fresh copy of the same store (the
+    store the first fold left, with ``KV_CAP`` more partials)."""
+    import shutil
+
+    from postgresql_cdc_spark.streaming.epoch_maintenance import base_upto
+
+    def timed(store: str, epoch: int) -> float:
+        batch = _kv_batch(spark, epoch)
+        t = time.perf_counter()
+        ingest_kv_batch(spark, store, "id", epoch, batch)
+        secs = time.perf_counter() - t
+        if base_upto(store) != epoch:
+            raise SystemExit(f"kv_compact: epoch {epoch} did not fold")
+        return secs
+
+    store = os.path.join(tmp, "kv_compact")
+    ingest_kv_batch(spark, store, "id", 0, _kv_batch(spark, 0, KV_KEYS))
+    for e in range(1, KV_CAP + 1):
+        ingest_kv_batch(spark, store, "id", e, _kv_batch(spark, e))
+    cold = timed(store, KV_CAP + 1)  # folds epochs 0..KV_CAP: no base yet
+    first = KV_CAP + 2
+    for e in range(first, first + KV_CAP):
+        ingest_kv_batch(spark, store, "id", e, _kv_batch(spark, e))
+    times = []
+    for i in range(REPEATS):
+        run = os.path.join(tmp, f"kv_compact_{i}")
+        shutil.copytree(store, run)
+        times.append(timed(run, first + KV_CAP))
+        shutil.rmtree(run)
+    return cold, statistics.median(times)
 
 
 if __name__ == "__main__":
