@@ -568,13 +568,13 @@ def cdc_stream_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BEGIN 130 / 20 updates 131..150 / COMMIT 151; the delete txn is BEGIN 152 /
 # 15 deletes 153..167 / COMMIT 168. So:
 #  - head (archive end, final commit)                      = 168
-#  - a 25-DML txn-aligned budget from LSN -1 crosses 25 at txn 2
-#    (10+10+10 inserts) and acks its COMMIT                = 21 + 12*2 = 45
+#  - a 25-DML budget from LSN -1 ends at the last COMMIT within it
+#    (10+10 inserts; txn 2 would make 30) and acks it      = 21 + 12*1 = 33
 #  - chunk split below: c0 = REL+txn0+txn1 (max 33), c1 = txn2+txn3
 #    (max 57), c2 = the rest (max 168); default prune takes
-#    min(fast, slow) = 45 -> only c0 (33 <= 45) is removable = base 33.
+#    min(fast, slow) = 33 -> only c0 (33 <= 33) is removable = base 33.
 _LAG_HEAD = 168
-_LAG_SLOW_ACK = 45
+_LAG_SLOW_ACK = 33
 _LAG_BASE = 33
 
 _SLOT_LAG_ORACLE = f"""
@@ -599,10 +599,11 @@ _SLOT_LAG_ORACLE = f"""
         "for the archive transport, gating the r12 shared-archive retention "
         "semantics end-to-end: two slot consumers drain the same archive "
         "(slot 'fast' to the head; slot 'slow' one 25-DML txn-aligned "
-        "micro-batch, acking the txn-2 COMMIT — the S15 flush-LSN contract, "
+        "micro-batch, acking the txn-1 COMMIT, the last within the budget — "
+        "the S15 flush-LSN contract, "
         "CdcEngine.java:132-137), then the DEFAULT prune_wal_archive pass "
         "takes min over every _flushed_lsn_<slot> ack file, so only the "
-        "chunk wholly behind the SLOWEST consumer (max LSN 33 <= 45) is "
+        "chunk wholly behind the SLOWEST consumer (max LSN 33 <= 33) is "
         "removed and the head snapshot lands at 33 — one chunk pruned, two "
         "retained, and both slots' lag derived from ack files + chunk-index "
         "sidecars alone. The oracle is the closed arithmetic form of the "

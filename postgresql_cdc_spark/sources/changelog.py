@@ -1,4 +1,5 @@
-"""Change-event envelope: schema, text encoding, and deterministic synthesis.
+"""Change-event envelope: text encoding and deterministic synthesis (the
+envelope's schema is ``streaming.source.ENVELOPE_SCHEMA``).
 
 The canonical CDC record (SURVEY.md §1.4, FIXTURES.md §2) mirrors the
 reference's ``TableRecord`` (`wal/TableRecord.java:8-12`): one row-level change
@@ -33,27 +34,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-)
 from pyspark.sql.window import Window
-
-ENVELOPE_SCHEMA = StructType(
-    [
-        StructField("op", StringType()),  # 'I' | 'U' | 'D'
-        StructField("schema", StringType()),
-        StructField("table", StringType()),
-        StructField("relation_id", IntegerType()),
-        StructField("lsn", LongType()),
-        StructField("txn_id", LongType()),
-        StructField("columns", MapType(StringType(), StringType())),
-    ]
-)
 
 # Typed schema of the lineitem payload, used by typed_view after materialize.
 LINEITEM_COLUMNS = {

@@ -12,23 +12,26 @@ archive lifecycle alongside the chunk index (r11) and retention pruning
 Safety protocol (single maintenance writer, same assumption PostgreSQL
 makes for checkpoints):
 
-1. The merged bytes are written to a temp file and fsynced, its sidecar is
-   derived from the LAST constituent's sidecar (sidecar state is cumulative
-   per scan, so the last one covers the whole run) with ``size`` = merged
-   byte length.
-2. The temp file atomically REPLACES the run's FIRST chunk (same name, so
-   chunk-name sort order == LSN order is preserved and relay numbering
-   never reuses a name).
+1. The merged bytes atomically REPLACE the run's FIRST chunk (same name,
+   so chunk-name sort order == LSN order is preserved and relay numbering
+   never reuses a name) through ``durable.replace_file``: temp file,
+   fsync, rename, directory fsync. An ``OSError`` there (an ``EIO`` at
+   either fsync included) skips the run and unlinks nothing.
+2. Its sidecar is derived from the LAST constituent's sidecar (sidecar
+   state is cumulative per scan, so the last one covers the whole run)
+   with ``size`` = merged byte length.
 3. Only then are the remaining constituents (and their sidecars) unlinked.
 
-A crash between (2) and (3) leaves later constituents on disk next to the
+A crash between (1) and (3) leaves later constituents on disk next to the
 merged chunk that already contains their frames — scan_wal_messages'
 LSN-monotonicity guard (``source.py``) drops those duplicate frames, and
 its monotone sidecar application refuses to regress txn state from a
 behind-the-scan sidecar, so every crash window replays byte-identically.
-The directory is fsynced after each run's rename+unlink batch, so a power
-cut cannot resurrect an unlinked constituent either (belt to the guard's
-suspenders — the guard alone already keeps replay correct).
+The directory is fsynced again after the unlinks, so a power cut cannot
+resurrect an unlinked constituent either (belt to the guard's suspenders —
+the guard alone already keeps replay correct). Every fsync follows
+``streaming/durable.py``'s policy: that last directory fsync, too, raises
+on ``EIO`` and tolerates a capability or permission refusal.
 A reader RACING the compactor (its listdir snapshot saw a constituent that
 vanished after the merge landed) fails its task loudly via the unexplained-
 loss check and retries against a fresh listing — never wrong data.
@@ -43,10 +46,11 @@ from __future__ import annotations
 import os
 from typing import List
 
+from postgresql_cdc_spark.streaming.durable import fsync_dir, replace_file
 from postgresql_cdc_spark.streaming.source import (
     _chunk_names,
-    _fsync_dir,
     _load_sidecar,
+    _read_chunk_bytes,
     _write_sidecar,
 )
 
@@ -90,24 +94,14 @@ def compact_wal_archive(
         last_sc = _load_sidecar(os.path.join(path, names[-1]))
         if last_sc is None:  # vanished under us: skip the run
             continue
-        tmp = first_fp + ".cmp.tmp"
         try:
-            with open(tmp, "wb") as out:
-                for name in names:
-                    with open(os.path.join(path, name), "rb") as f:
-                        out.write(f.read())
-                out.flush()
-                os.fsync(out.fileno())
-            total = os.path.getsize(tmp)
             # merged chunk REPLACES the first constituent (atomic), its
             # sidecar carries the run's cumulative end state
-            os.replace(tmp, first_fp)
+            total = replace_file(first_fp, (
+                _read_chunk_bytes(os.path.join(path, name)) for name in names
+            ))
         except OSError:
-            try:
-                os.unlink(tmp)
-            except OSError:
-                pass
-            continue
+            continue  # nothing unlinked: at worst the window before step 3
         _write_sidecar(first_fp, {**last_sc, "size": total})
         for name in names[1:]:
             for victim in (
@@ -121,7 +115,7 @@ def compact_wal_archive(
         merged_runs += 1
         merged_bytes += total
     if merged_runs:
-        _fsync_dir(path)  # renames + unlinks durable (see module docstring)
+        fsync_dir(path)  # unlinks durable (see module docstring)
     after = sum(1 for n in os.listdir(path) if n.endswith(".wal"))
     return {
         "merged_runs": merged_runs,

@@ -13,10 +13,11 @@ way a streaming dedup index silently corrupts itself. The contract here
   epochs' files.
 - ``epoch_replace`` is the same contract for rows already on the driver
   as Arrow tables: one parquet file written into a hidden temp directory,
-  fsynced, and renamed over the partition. The kv stores write through
-  it: each batch (``join_ivm.ingest_kv_batch``) and each compaction fold
-  (``join_ivm.kv_fold``, which streams its tables). See its docstring for
-  the replay protocol.
+  fsynced (``streaming/durable.py``'s policy: ``EIO`` raises, a
+  capability refusal is tolerated), and renamed over the partition. The kv
+  stores write through it: each batch (``join_ivm.ingest_kv_batch``) and
+  each compaction fold (``join_ivm.kv_fold``, which streams its tables).
+  See its docstring for the replay protocol.
 - ``epochs_before`` reads back only STRICTLY EARLIER epochs, so a replayed
   probe never sees the replaying batch's own (possibly partial) rows; the
   partition filter prunes at the file level.
@@ -35,12 +36,13 @@ import os
 import re
 import shutil
 import uuid
-from typing import TYPE_CHECKING, Iterable
+from typing import Iterable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-if TYPE_CHECKING:
-    import pyarrow as pa
+from postgresql_cdc_spark.streaming.durable import fsync_dir, fsync_fd
 
 EPOCH_COL = "ingest_epoch"
 
@@ -75,7 +77,7 @@ def hidden_leftovers(path: str) -> list[tuple[int, str]]:
     ]
 
 
-def epoch_replace(tables: "Iterable[pa.Table]", path: str, epoch: int) -> int:
+def epoch_replace(tables: Iterable[pa.Table], path: str, epoch: int) -> int:
     """Write ``tables`` as partition ``ingest_epoch=epoch`` of ``path``,
     replacing (only) that partition if it already exists — the
     :func:`epoch_overwrite` contract without a Spark job. Returns the number
@@ -89,10 +91,13 @@ def epoch_replace(tables: "Iterable[pa.Table]", path: str, epoch: int) -> int:
     ``ingest_epoch=E`` (a replayed epoch's earlier attempt) is renamed aside
     under another hidden name, the new directory is renamed in, the store
     directory is fsynced, and only then is the old attempt deleted. Spark's
-    writer never fsyncs; this path does, as ``run_wal_relay`` does before it
-    acks. An error raised while the tables are produced or written (a
-    generator's ``ValueError``, an fsync's ``EIO``) deletes the hidden
-    directory and leaves the old partition as it was.
+    writer never fsyncs; this path does, under the policy
+    (``streaming/durable.py``) that ``run_wal_relay`` acks under. An error
+    raised while the tables are produced or written (a generator's
+    ``ValueError``, an fsync's ``EIO``) deletes the hidden directory and
+    leaves the old partition as it was; an ``EIO`` at the store
+    directory's fsync raises after the rename, before the old attempt is
+    deleted.
 
     A crash leaves only hidden directories, which no reader lists: before
     the first rename the old partition is intact; between the two renames
@@ -101,14 +106,6 @@ def epoch_replace(tables: "Iterable[pa.Table]", path: str, epoch: int) -> int:
     leftovers of E; the compaction sweep deletes those below its horizon.
     Tables without rows write nothing and leave an existing partition as it
     is, as Spark's dynamic overwrite does."""
-    import pyarrow.parquet as pq
-
-    # late: epoch_maintenance imports this module
-    from postgresql_cdc_spark.streaming.epoch_maintenance import (
-        _fsync_dir,
-        _fsync_fd,
-    )
-
     epoch = int(epoch)
     for e, d in hidden_leftovers(path):
         if e == epoch:
@@ -130,9 +127,9 @@ def epoch_replace(tables: "Iterable[pa.Table]", path: str, epoch: int) -> int:
             return 0
         writer.close()
         f.flush()
-        _fsync_fd(f.fileno())
+        fsync_fd(f.fileno())
         f.close()
-        _fsync_dir(tmp)
+        fsync_dir(tmp)
     except BaseException:
         if f is not None:
             f.close()
@@ -143,7 +140,7 @@ def epoch_replace(tables: "Iterable[pa.Table]", path: str, epoch: int) -> int:
         aside = os.path.join(path, f".{EPOCH_COL}={epoch}.{uuid.uuid4().hex}")
         os.rename(final, aside)
     os.rename(tmp, final)
-    _fsync_dir(path)
+    fsync_dir(path)
     if aside is not None:
         shutil.rmtree(aside, ignore_errors=True)
     return rows

@@ -32,18 +32,19 @@ compactor makes — ``streaming/archive_maintenance.py``):
    written under the reserved base partition ``ingest_epoch = -upto`` by
    Spark's dynamic partition overwrite (``epoch_io.epoch_overwrite``), so
    a crashed earlier attempt at the SAME ``upto`` is replaced wholesale;
-   the base's files are then fsynced — the fold is the only surviving
-   copy once step 3 runs, so it must be durable before the commit
-   references it. Latest-wins kv stores pass their own ``fold``
-   (``join_ivm.kv_fold``): a key-ordered merge on the driver, written and
-   fsynced through ``epoch_io.epoch_replace``, under the same steps 2
-   and 3.
+   the base's files are then fsynced (``durable.fsync_tree``) — the fold
+   is the only surviving copy once step 3 runs, so it must be durable
+   before the commit references it. Latest-wins kv stores pass their
+   own ``fold`` (``join_ivm.kv_fold``): a key-ordered merge on the driver,
+   written and fsynced through ``epoch_io.epoch_replace``, under the same
+   steps 2 and 3.
 2. The manifest ``_epoch_base.json`` (``{"upto": U}``) is replaced
-   atomically (tmp + fsync + rename + directory fsync). This is the commit
-   point: readers resolve the base partition as ``-U`` and live partials as
-   ``>= U``, so before the rename they see the old base + old partials
-   (the orphan new base is outside both ranges), and after it the new base
-   + surviving partials — never both generations of the same row.
+   atomically by ``durable.replace_file`` (tmp + fsync + rename +
+   directory fsync). This is the commit point: readers resolve the base
+   partition as ``-U`` and live partials as ``>= U``, so before the rename
+   they see the old base + old partials (the orphan new base is outside
+   both ranges), and after it the new base + surviving partials — never
+   both generations of the same row.
 3. Only then are the folded partition directories (old base and partials
    ``< upto``) deleted; a crash between 2 and 3 leaves stale directories
    that every manifest-aware read filters out, and a re-run of
@@ -55,6 +56,11 @@ batch whose checkpoint commit did not land), so compacting up to — but not
 beyond — the latest committed epoch is always safe; the streaming gates
 compact ``upto = <last epoch>`` after the query terminates, keeping the
 newest epoch live (the WAL compactor's newest-chunk convention).
+
+Every fsync goes through ``streaming/durable.py``, the policy the WAL
+archive shares: an ``EIO`` (lost writeback) aborts the pass before its
+commit point or before its sweep; a capability or permission refusal is
+tolerated.
 
 Filesystem note: manifest and directory maintenance use local ``os``/
 ``shutil`` calls like the WAL archive transport does; on a cluster store
@@ -82,7 +88,6 @@ compactor's single-maintenance-writer assumption.
 
 from __future__ import annotations
 
-import errno
 import json
 import os
 import re
@@ -91,6 +96,9 @@ from typing import Callable, Optional, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from postgresql_cdc_spark.streaming.durable import fsync_dir, fsync_tree, replace_file
+# the warn-once set, which tests reset through this module
+from postgresql_cdc_spark.streaming.durable import _PERM_TOLERATED_WARNED  # noqa: F401
 from postgresql_cdc_spark.streaming.epoch_io import (
     EPOCH_COL,
     epoch_overwrite,
@@ -286,143 +294,14 @@ def _partition_epochs(path: str) -> list[int]:
     return out
 
 
-# fsync refusals a maintenance pass may tolerate: CAPABILITY errors only
-# (some network mounts reject fsync on a directory fd, or lack the syscall —
-# the WAL transport's convention; durability then narrows to what the mount
-# gives). A genuine WRITE failure — EIO means the kernel LOST dirty pages —
-# must abort the compaction BEFORE the manifest commit references the fold
-# as the only surviving copy of the store's history; swallowing it was
-# exactly the data-loss window the fold fsync exists to close (r13 advice).
-_FSYNC_CAPABILITY_ERRNOS = frozenset(
-    e for e in (
-        getattr(errno, "EINVAL", None),
-        getattr(errno, "ENOTSUP", None),
-        getattr(errno, "EOPNOTSUPP", None),
-        getattr(errno, "ENOSYS", None),
-    )
-    if e is not None
-)
-
-# open() refusals the fsync walk may tolerate: PERMISSION conditions, not
-# lost writeback. On ACL-restricted or FUSE mounts the driver may be unable
-# to re-open executor-written parquet files read-only; aborting there would
-# crash-loop every compaction with no data actually at risk — durability
-# then narrows to what the mount grants, the same contract as a capability
-# fsync refusal. EIO at open stays fatal: it is the kernel reporting lost
-# dirty pages for data the sweep is about to orphan (r15 advice).
-_OPEN_PERMISSION_ERRNOS = frozenset(
-    e for e in (
-        getattr(errno, "EACCES", None),
-        getattr(errno, "EPERM", None),
-    )
-    if e is not None
-)
-
-# (directory, errno) pairs the permission-tolerance branch already warned
-# for: tolerating EACCES/EPERM at the fsync walk's open narrows durability
-# to what the mount grants, and doing so SILENTLY would make 'compaction
-# proceeded without fsyncing the fold' indistinguishable from a healthy
-# walk (r16 advice). Deduplication is per DIRECTORY, not per file — every
-# compaction rewrites the folded base under fresh part-file names, so
-# per-file dedup would both flood the log each compaction AND grow the set
-# without bound over a stream's life (r16 review); store directories are
-# bounded by the pipeline's store count.
-_PERM_TOLERATED_WARNED: set[tuple[str, int]] = set()
-
-
-def _warn_perm_tolerated(path: str, exc: OSError) -> None:
-    key = (os.path.dirname(path) or path, exc.errno or 0)
-    if key in _PERM_TOLERATED_WARNED:
-        return
-    _PERM_TOLERATED_WARNED.add(key)
-    import warnings
-
-    warnings.warn(
-        f"fsync walk could not re-open {path!r} "
-        f"(errno {exc.errno}: {exc.strerror}); durability under "
-        f"{key[0]!r} narrows to what the mount grants — compaction "
-        "proceeds, but folded bases may not be fsynced here (warned once "
-        "per directory)",
-        RuntimeWarning,
-        stacklevel=3,
-    )
-
-
-def _fsync_fd(fd: int) -> None:
-    """fsync with the capability/write-failure discrimination above."""
-    try:
-        os.fsync(fd)
-    except OSError as exc:
-        if exc.errno not in _FSYNC_CAPABILITY_ERRNOS:
-            raise
-
-
-def _fsync_dir(path: str) -> None:
-    """fsync a DIRECTORY so a rename/unlink inside it survives power loss.
-    Capability refusal tolerated; real write failures re-raise (see
-    ``_FSYNC_CAPABILITY_ERRNOS``). The open itself gets the same
-    discrimination: a GONE directory (ENOENT/ENOTDIR — nothing of ours
-    left to make durable) and a permission refusal (EACCES/EPERM — a
-    capability condition, not lost writeback) are tolerable; an EIO at
-    open is the same lost-writeback signal as an EIO at fsync."""
-    try:
-        fd = os.open(path, os.O_RDONLY | getattr(os, "O_DIRECTORY", 0))
-    except OSError as exc:
-        if exc.errno in (errno.ENOENT, errno.ENOTDIR):
-            return
-        if exc.errno in _OPEN_PERMISSION_ERRNOS:
-            _warn_perm_tolerated(path, exc)
-            return
-        raise
-    try:
-        _fsync_fd(fd)
-    finally:
-        os.close(fd)
-
-
-def _fsync_tree(path: str) -> None:
-    """fsync every regular file under ``path`` plus the directories: Spark's
-    local parquet writes land in the page cache only, so the folded base
-    must be durable BEFORE the manifest commit points readers at it — the
-    folded partials are deleted right after, and unlike the WAL archive
-    (replayable from upstream) a stats store has nothing to rebuild from.
-    Capability refusals are tolerated; a genuine fsync failure (EIO)
-    propagates so the compaction aborts before its commit point."""
-    for root, _dirs, files in os.walk(path):
-        for name in files:
-            try:
-                fd = os.open(os.path.join(root, name), os.O_RDONLY)
-            except OSError as exc:
-                if exc.errno == errno.ENOENT:
-                    continue  # vanished mid-walk: not part of the fold
-                if exc.errno in _OPEN_PERMISSION_ERRNOS:
-                    # can't re-open, nothing lost (r15 advice) — but say
-                    # so once, loudly (r16 advice)
-                    _warn_perm_tolerated(os.path.join(root, name), exc)
-                    continue
-                # EIO on a file that EXISTS is a durability failure for
-                # fold data the sweep is about to orphan — abort before
-                # the commit point, same as an fsync failure (r14 review)
-                raise
-            try:
-                _fsync_fd(fd)
-            finally:
-                os.close(fd)
-        _fsync_dir(root)
-
-
 def _commit_manifest(path: str, upto: int) -> None:
     # shared-partials mode (r18) can commit a horizon for a base store that
     # never wrote a partition of its own (sparse fold): create the dir
     os.makedirs(path, exist_ok=True)
-    fp = os.path.join(path, BASE_MANIFEST)
-    tmp = fp + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"upto": int(upto)}, f)
-        f.flush()
-        _fsync_fd(f.fileno())
-    os.replace(tmp, fp)
-    _fsync_dir(path)
+    replace_file(
+        os.path.join(path, BASE_MANIFEST),
+        [json.dumps({"upto": int(upto)}).encode()],
+    )
 
 
 def _sweep_stale(path: str, upto: int) -> int:
@@ -444,7 +323,7 @@ def _sweep_stale(path: str, upto: int) -> int:
         if e < upto:
             shutil.rmtree(d, ignore_errors=True)
     if deleted:
-        _fsync_dir(path)
+        fsync_dir(path)
     return deleted
 
 
@@ -464,7 +343,7 @@ def sweep_shared_partials(path: str, below: int) -> int:
             )
             deleted += 1
     if deleted:
-        _fsync_dir(path)
+        fsync_dir(path)
     return deleted
 
 
@@ -672,7 +551,7 @@ def _spark_fold(
     finally:
         if cached is not None:
             cached.unpersist()
-    _fsync_tree(os.path.join(path, f"{EPOCH_COL}=-{upto}"))
+    fsync_tree(os.path.join(path, f"{EPOCH_COL}=-{upto}"))
 
 
 def maybe_compact(

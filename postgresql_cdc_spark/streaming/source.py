@@ -59,6 +59,7 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
+from pyspark.sql import types as T
 
 from postgresql_cdc_spark.session import cache_zip_directories, default_parallelism
 from postgresql_cdc_spark.sources.pgoutput import (
@@ -70,13 +71,17 @@ from postgresql_cdc_spark.sources.pgoutput import (
     TxBegin,
     TxCommit,
 )
+from postgresql_cdc_spark.streaming.durable import fsync_dir, fsync_fd, replace_file
 
 if TYPE_CHECKING:
     import pyarrow as pa
 
-ENVELOPE_DDL = (
-    "op string, schema string, table string, relation_id int, "
-    "lsn bigint, txn_id bigint, columns map<string,string>"
+# The one spelling of the envelope row; read()'s Arrow schema derives from it.
+ENVELOPE_SCHEMA = (
+    T.StructType().add("op", "string").add("schema", "string")
+    .add("table", "string").add("relation_id", "integer")
+    .add("lsn", "long").add("txn_id", "long")
+    .add("columns", T.MapType(T.StringType(), T.StringType()))
 )
 
 # lsn, payload length. A plain format string, NOT struct.Struct: the
@@ -232,6 +237,8 @@ def _load_sidecar(chunk_fp: str) -> Optional[dict]:
 
 
 def _write_sidecar(chunk_fp: str, meta: dict) -> None:
+    # Not fsynced: not a commit point but an index the next scan rebuilds,
+    # written on the trigger path (latestOffset).
     tmp = chunk_fp + ".idx.tmp"
     try:
         with open(tmp, "w") as f:
@@ -242,31 +249,6 @@ def _write_sidecar(chunk_fp: str, meta: dict) -> None:
             os.unlink(tmp)
         except OSError:
             pass
-
-
-def _fsync_dir(path: str) -> None:
-    """fsync a DIRECTORY so renames/unlinks inside it survive power loss.
-
-    Maintenance passes (prune, compaction) use this after their rename/
-    unlink batches: without it a power cut can resurrect an unlinked chunk
-    or lose a renamed snapshot's directory entry. Replay stays CORRECT
-    either way — the head-snapshot application and the scan's
-    LSN-monotonicity guard drop resurrected duplicates — so there this
-    closes a tidiness window. ``run_wal_relay`` calls it between a new
-    chunk's fsync and its ack, where it is a correctness barrier: the
-    acked WAL is gone upstream. Best-effort: filesystems that
-    refuse O_DIRECTORY fsync (some network mounts) degrade to the
-    pre-fsync behavior."""
-    try:
-        fd = os.open(path, os.O_RDONLY | getattr(os, "O_DIRECTORY", 0))
-    except OSError:
-        return
-    try:
-        os.fsync(fd)
-    except OSError:
-        pass
-    finally:
-        os.close(fd)
 
 
 def _read_chunk_bytes(fp: str) -> bytes:
@@ -309,10 +291,13 @@ def prune_wal_archive(path: str, upto_lsn: Optional[int] = None) -> dict:
     the newest chunk is always kept so relay chunk numbering stays
     monotone. Before deleting, the last pruned chunk's cumulative sidecar
     state (relation registry + txn state + max LSN) is promoted to a head
-    snapshot (``_archive_base.json``, atomic) that ``scan_wal_messages``
-    loads before the first chunk — replays of the RETAINED window keep a
+    snapshot (``_archive_base.json``) that ``scan_wal_messages`` loads
+    before the first chunk — replays of the RETAINED window keep a
     complete registry even though the RELATION frames left with the
-    pruned history. Returns ``{pruned_chunks, pruned_bytes, base_lsn}``.
+    pruned history. The snapshot is written by ``durable.replace_file``
+    (temp file, fsync, rename, directory fsync); an ``EIO`` at either
+    fsync raises before any chunk is unlinked. Returns ``{pruned_chunks,
+    pruned_bytes, base_lsn}``.
     """
     if upto_lsn is None:
         try:
@@ -364,13 +349,10 @@ def prune_wal_archive(path: str, upto_lsn: Optional[int] = None) -> dict:
         "txn_id": int(last_sidecar["txn_id"]),
         "registry": merged_registry,
     }
-    tmp = os.path.join(path, _BASE_SNAPSHOT + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(snap, f)
-        f.flush()
-        os.fsync(f.fileno())  # snapshot durable BEFORE any chunk dies
-    os.replace(tmp, os.path.join(path, _BASE_SNAPSHOT))
-    _fsync_dir(path)  # snapshot's directory entry durable BEFORE chunks die
+    # the snapshot and its directory entry durable BEFORE any chunk dies;
+    # a failed fsync raises here, and no chunk is unlinked
+    replace_file(os.path.join(path, _BASE_SNAPSHOT),
+                 [json.dumps(snap).encode()])
     pruned_bytes = 0
     for name in prunable:
         fp = os.path.join(path, name)
@@ -385,7 +367,7 @@ def prune_wal_archive(path: str, upto_lsn: Optional[int] = None) -> dict:
                 pass
     # prunable is non-empty here (early return above): unlinks durable so
     # no pruned chunk resurrects after a power cut
-    _fsync_dir(path)
+    fsync_dir(path)
     return {
         "pruned_chunks": len(prunable),
         "pruned_bytes": pruned_bytes,
@@ -577,18 +559,15 @@ def _split_lsns(cuts: List[Tuple[int, int]], total: int, n: int) -> List[int]:
 def _read_envelope(partition: _WalPartition) -> Iterator[pa.RecordBatch]:
     """Envelope rows with ``start_lsn < lsn <= end_lsn`` in LSN order, as
     Arrow record batches of at most ``_BATCH_ROWS`` rows typed exactly as
-    ``ENVELOPE_DDL``. Built column by column: handed row tuples, Spark's
+    ``ENVELOPE_SCHEMA``. Built column by column: handed row tuples, Spark's
     worker converts each value to Arrow in Python, which cost about as much
     as the decode itself."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     cache_zip_directories()
     str_t = pa.string()
-    schema = pa.schema([
-        ("op", str_t), ("schema", str_t), ("table", str_t),
-        ("relation_id", pa.int32()), ("lsn", pa.int64()),
-        ("txn_id", pa.int64()), ("columns", pa.map_(str_t, str_t)),
-    ])
+    schema = to_arrow_schema(ENVELOPE_SCHEMA)
     decoder = PgOutputDecoder()
     # txn_id -1 = DML outside any txn: singleton semantics
     state = {"txn_open": False, "txn_id": -1}
@@ -665,7 +644,7 @@ class WalArchiveStreamReader(DataSourceStreamReader):
         # semantics — but surprising for archive replay). The `slot` option
         # namespaces the default ack file per logical consumer; queries that
         # need full isolation pass an explicit `ackpath`.
-        slot = self.slot = options.get("slot")
+        slot = options.get("slot")
         default_ack = (
             f"_flushed_lsn_{slot}" if slot else "_flushed_lsn"
         )
@@ -782,13 +761,14 @@ class WalArchiveStreamReader(DataSourceStreamReader):
     def commit(self, end: dict) -> None:
         """Flush-LSN ack — only when no transaction is open at the batch
         boundary (at-least-once: a mid-txn crash replays the whole txn).
-        A mid-transaction end acks nothing new, except that a ``slot``
-        reader with no ack yet records its starting offset: a slot shares
-        the archive, and a default ``prune_wal_archive`` (the min over the
-        ack files it finds) would otherwise not see it and could drop the
-        chunks its open transaction still needs."""
+        A mid-transaction end acks nothing new, except that a reader with
+        no ack yet records its starting offset: the archive may be shared,
+        and a default ``prune_wal_archive`` (the min over the ack files it
+        finds) would otherwise not see the reader and could drop the
+        chunks its open transaction still needs. Not fsynced: Spark's
+        checkpoint is the offset of record, not this trigger-path file."""
         if end.get("txn_open"):
-            if self.slot is None or os.path.exists(self.ack_path):
+            if os.path.exists(self.ack_path):
                 return
             end = self.initialOffset()
         tmp = self.ack_path + ".tmp"
@@ -847,9 +827,9 @@ class PgCdcDataSource(DataSource):
     # processes, and read() in its workers: each installs the zip-directory
     # cache there before Spark's next per-call invalidate_caches().
 
-    def schema(self) -> str:
+    def schema(self) -> T.StructType:
         cache_zip_directories()
-        return ENVELOPE_DDL
+        return ENVELOPE_SCHEMA
 
     def streamReader(self, schema) -> WalArchiveStreamReader:
         cache_zip_directories()
@@ -900,7 +880,10 @@ def run_wal_relay(transport, path: str, chunk_frames: int = 1000,
     chunk files (numbered so ``read_wal_frames`` replays them in order) and
     the transport is acked only AFTER a chunk is durably on disk — the
     at-least-once contract (`CdcEngine.java:132-137`): a relay crash between
-    write and ack replays the chunk, never loses it.
+    write and ack replays the chunk, never loses it. Each flush fsyncs the
+    chunk, then the archive directory, then acks; a failed fsync
+    (``EIO``, under ``streaming/durable.py``'s policy) raises before the
+    ack, so the transport redelivers the chunk's frames.
 
     Returns the number of frames relayed (``max_frames`` bounds the run for
     tests / drain-and-stop usage; a live deployment omits it and runs
@@ -929,11 +912,11 @@ def run_wal_relay(transport, path: str, chunk_frames: int = 1000,
             return
         fp = write_wal_archive(path, buf, chunk=f"{chunk_idx:06d}.wal")
         with open(fp, "rb") as f:  # durability barrier before the ack
-            os.fsync(f.fileno())
+            fsync_fd(f.fileno())
         # a new chunk's directory entry is durable only once the directory
         # is: without this a power cut can lose an acked chunk whose WAL
         # upstream has already discarded
-        _fsync_dir(path)
+        fsync_dir(path)
         transport.ack(buf[-1][0])
         chunk_idx += 1
         buf = []

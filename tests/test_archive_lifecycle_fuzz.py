@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from postgresql_cdc_spark.sources.pgoutput import (
@@ -131,16 +132,21 @@ def test_index_prune_compact_replay_invariant(tmp_path_factory, n_txns,
 
 # --- multi-slot concurrent drain racing prune + compact -----------------------
 
-def test_slot_that_never_acked_holds_prune(tmp_path):
-    """A slot whose first batch ends mid-transaction has acked nothing,
+@pytest.mark.parametrize("slot", ["a", None])
+def test_slot_that_never_acked_holds_prune(tmp_path, slot):
+    """A reader whose first batch ends mid-transaction has acked nothing,
     yet its open transaction's chunk must survive a default prune that
     another slot's ack would allow: the fuzz below found the prune
-    dropping it, and the slot's next batch then raising ``ProtocolError``."""
+    dropping it, and the reader's next batch then raising
+    ``ProtocolError``. A reader without ``slot`` (the default ack file)
+    is held the same way."""
     arch = str(tmp_path / "arch")
     frames = _frames(2)
     _write_chunks(arch, frames, [4])
-    a = WalArchiveStreamReader({"path": arch, "slot": "a",
-                                "maxrecordsperbatch": "1"})
+    opts = {"path": arch, "maxrecordsperbatch": "1"}
+    if slot is not None:
+        opts["slot"] = slot
+    a = WalArchiveStreamReader(opts)
     b = WalArchiveStreamReader({"path": arch, "slot": "b",
                                 "maxrecordsperbatch": "3"})
     cur = {}

@@ -1,6 +1,6 @@
 """``read()`` builds Arrow record batches column by column; they must hold
 exactly the envelope rows the row-tuple read produced, in LSN order, typed
-as the Arrow data Spark itself makes of ``ENVELOPE_DDL`` rows.
+as the Arrow data Spark itself makes of ``ENVELOPE_SCHEMA`` rows.
 
 The tuple read is kept here only as the oracle. Spark-free: the conversion
 Spark's worker applies to tuples (``records_to_arrow_batches``) runs in
@@ -25,7 +25,7 @@ from postgresql_cdc_spark.sources.pgoutput import (
 from postgresql_cdc_spark.streaming.source import (
     _BATCH_ROWS,
     _OPEN_END,
-    ENVELOPE_DDL,
+    ENVELOPE_SCHEMA,
     PgCdcDataSource,
     WalArchiveBatchReader,
     _read_envelope,
@@ -62,7 +62,7 @@ def _tuple_envelope(partition: _WalPartition):
 
 def _spark_arrow(rows: list) -> pa.Table:
     """What Spark's worker made of the tuple rows: its own tuple-to-Arrow
-    conversion against the ``ENVELOPE_DDL`` schema."""
+    conversion against the ``ENVELOPE_SCHEMA`` schema."""
     from pyspark.sql.types import (
         IntegerType,
         LongType,
@@ -78,9 +78,7 @@ def _spark_arrow(rows: list) -> pa.Table:
     rtype = (StructType().add("op", s).add("schema", s).add("table", s)
              .add("relation_id", IntegerType()).add("lsn", LongType())
              .add("txn_id", LongType()).add("columns", MapType(s, s)))
-    # parsing the DDL needs a JVM; check the hand-built type against it
-    ddl = ",".join(f.replace(" ", ":", 1) for f in ENVELOPE_DDL.split(", "))
-    assert rtype.simpleString() == f"struct<{ddl}>"
+    assert rtype == ENVELOPE_SCHEMA
     batches = list(records_to_arrow_batches(iter(rows), _BATCH_ROWS, rtype,
                                             PgCdcDataSource({})))
     return pa.Table.from_batches(batches, schema=batches[0].schema)

@@ -319,7 +319,7 @@ class TestWalRelay:
             real_fsync(fd)
 
         monkeypatch.setattr(os, "fsync", fsync)
-        monkeypatch.setattr(src, "_fsync_dir",
+        monkeypatch.setattr(src, "fsync_dir",
                             lambda path: events.append(("dir", path)))
 
         class Transport:

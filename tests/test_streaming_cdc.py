@@ -222,7 +222,9 @@ class TestWalArchiveReader:
 
     def test_oversize_committed_txn_is_split(self, tmp_path):
         """A committed transaction larger than the budget is flushed early,
-        mid-transaction, one budget at a time; only its COMMIT is acked."""
+        mid-transaction, one budget at a time; only its COMMIT is acked:
+        until then the ack holds the reader's starting offset, never a
+        mid-transaction LSN."""
         from postgresql_cdc_spark.streaming.source import (
             WalArchiveStreamReader,
             write_wal_archive,
@@ -250,7 +252,8 @@ class TestWalArchiveReader:
             got.append([row[4] for row in
                         envelope_rows(r.read(r.partitions(start, end)[0]))])
             r.commit(end)
-            assert os.path.exists(ack) is (not want["txn_open"])
+            acked = json.load(open(ack))["flushed_lsn"]
+            assert acked == (-1 if want["txn_open"] else want["lsn"])
             start = end
         assert got == [[11], [12], [13]]
         assert json.load(open(ack))["flushed_lsn"] == 40
@@ -305,8 +308,10 @@ class TestWalArchiveReader:
         end = r.latestOffset()
         assert end["txn_open"] is True  # stream ends inside the txn
         r.commit(end)
-        # mid-transaction offsets are never acked (CdcEngine.java:132 guard)
-        assert not os.path.exists(os.path.join(arch, "_flushed_lsn"))
+        # mid-transaction offsets are never acked (CdcEngine.java:132
+        # guard): the ack holds the reader's starting offset
+        ack = json.load(open(os.path.join(arch, "_flushed_lsn")))
+        assert ack["flushed_lsn"] == -1
 
     def test_batch_replay_and_materialize(self, spark, tmp_path):
         from postgresql_cdc_spark.operators.materialize import materialize
