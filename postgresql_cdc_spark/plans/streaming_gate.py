@@ -671,7 +671,7 @@ def cdc_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "state: each batch writes ONLY its own latest-wins-collapsed rows "
         "(delete tombstones included) as an ingest_epoch partition, "
         "collapsed in Arrow on the driver and renamed in as one fsynced "
-        "parquet file (join_ivm.ingest_kv_batch), and the materialized "
+        "parquet file (kv_store.ingest_kv_batch), and the materialized "
         "table is the per-key latest-LSN resolution over the base fold plus "
         "live partials — the idempotent MERGE pattern on a plain object "
         "store, what Delta/Iceberg do transactionally, with maybe_compact "
@@ -691,7 +691,7 @@ def cdc_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from postgresql_cdc_spark.streaming.join_ivm import (
+    from postgresql_cdc_spark.streaming.kv_store import (
         ingest_kv_batch,
         key_state,
     )
@@ -1457,7 +1457,7 @@ def cdc_stream_asof_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(maxRecordsPerBatch=25), over the r14 delta-backed state: each "
         "foreachBatch writes ONLY its collapsed rows into the epoch-store "
         "key state and derives SIGNED row deltas from a driver-side read of "
-        "prior state by the BATCH's keys (join_ivm.ingest_and_delta — "
+        "prior state by the BATCH's keys (kv_store.ingest_and_delta — "
         "O(|batch|), never a full-outer join of full old vs full new "
         "state), then folds the deltas into a tiny persisted (group, "
         "count, sum) table — the running aggregate is never recomputed "
@@ -1487,10 +1487,8 @@ def cdc_stream_ivm_group_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     STATE_DDL = "id long, v_int int, op string, lsn long"
 
     def ivm_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from postgresql_cdc_spark.streaming.join_ivm import (
-            fold_versioned,
-            ingest_and_delta,
-        )
+        from postgresql_cdc_spark.streaming.join_ivm import fold_versioned
+        from postgresql_cdc_spark.streaming.kv_store import ingest_and_delta
 
         ss = batch_df.sparkSession
         bid = int(batch_id)
@@ -2527,13 +2525,13 @@ def cdc_stream_ivm_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(state)
 
     spec = join_ivm.JoinViewSpec(
-        dim_ddl="pid long, cat int, tier int, op string, lsn long",
-        dim_key="pid",
-        dim_payload=("cat", "tier"),
         fact_ddl="iid long, pid long, price int, qty int, op string, lsn long",
         fact_key="iid",
-        fact_fk="pid",
         fact_payload=("pid", "price", "qty"),
+        dims=(join_ivm.DimSpec(
+            ddl="pid long, cat int, tier int, op string, lsn long",
+            key="pid", payload=("cat", "tier"), fact_fk="pid",
+        ),),
         group_cols=("cat", "tier"),
         measures=(("revenue", "price * qty"), ("units", "qty")),
     )
@@ -3566,13 +3564,13 @@ def cdc_stream_ivm_count_distinct(
     os.makedirs(state)
 
     spec = join_ivm.JoinViewSpec(
-        dim_ddl="pid long, cat int, tier int, op string, lsn long",
-        dim_key="pid",
-        dim_payload=("cat", "tier"),
         fact_ddl="iid long, pid long, price int, qty int, op string, lsn long",
         fact_key="iid",
-        fact_fk="pid",
         fact_payload=("pid", "price", "qty"),
+        dims=(join_ivm.DimSpec(
+            ddl="pid long, cat int, tier int, op string, lsn long",
+            key="pid", payload=("cat", "tier"), fact_fk="pid",
+        ),),
         group_cols=("cat",),
         measures=(("revenue", "price * qty"),),
         extrema=(("max_price", "max", "price", "int"),),
@@ -3763,7 +3761,7 @@ def _chain_frames() -> list:
         "the FIRST (cus.nk -> nat.nk), not off the fact: the star "
         "kernel's fact-FK joins cannot express it directly. Maintained "
         "by VIEW COMPOSITION, the algebra IVM engines stack on "
-        "(join_ivm.apply_stacked_batch — the one recipe this gate, the "
+        "(join_ivm.apply_chain_batch — the one recipe this gate, the "
         "kernel fuzz and the scale soak all drive): the composite "
         "dimension customers x nations is itself a maintained KEYED "
         "view (JoinViewSpec grouped by the customer key with the "
@@ -3826,9 +3824,12 @@ def cdc_stream_ivm_dim_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at("columns", "amount").cast("int").alias("amount"),
             "op", "lsn",
         )
-        join_ivm.apply_stacked_batch(
-            ss, comp_state, fact_state, batch_id,
-            n_batch, c_batch, o_batch, comp_spec, fact_spec,
+        join_ivm.apply_chain_batch(
+            ss,
+            [(comp_state, comp_spec, c_batch),
+             (fact_state, fact_spec, o_batch)],
+            batch_id,
+            top_d_batch=n_batch,
         )
 
     stream = (

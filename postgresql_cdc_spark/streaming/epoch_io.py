@@ -14,20 +14,22 @@ way a streaming dedup index silently corrupts itself. The contract here
 - ``epoch_replace`` is the same contract for rows already on the driver
   as Arrow tables: one parquet file written into a hidden temp directory,
   fsynced (``streaming/durable.py``'s policy: ``EIO`` raises, a
-  capability refusal is tolerated), and renamed over the partition. The kv
-  stores write through it: each batch (``join_ivm.ingest_kv_batch``) and
-  each compaction fold (``join_ivm.kv_fold``, which streams its tables).
-  See its docstring for the replay protocol.
+  capability refusal is tolerated), and renamed over the partition. The
+  kv stores write through it, each batch (``kv_store.ingest_kv_batch``)
+  and each compaction fold (``kv_store.kv_fold``, which streams its
+  tables), and so does the join view's shared fact-delta store
+  (``join_ivm.apply_batch`` writes the fact delta the kv diff holds). See
+  its docstring for the replay protocol.
 - ``epochs_before`` reads back only STRICTLY EARLIER epochs, so a replayed
   probe never sees the replaying batch's own (possibly partial) rows; the
   partition filter prunes at the file level.
 
 ``epoch_overwrite`` is used by the stores whose rows are not on the driver:
 the streaming LSH ingest gates (``cdc_stream_incremental_dedup``,
-``cdc_stream_dedup_admission``), the join view's arrangement partials, the
-streaming scale soak, and the Spark compaction fold of the stats, postings
-and arrangement stores; the replay semantics are pinned by
-``tests/test_epoch_io.py``.
+``cdc_stream_dedup_admission``), the join view's epoch-backed sums and
+support stores (``join_ivm.fold_epoch_store``), the streaming scale soak,
+and the Spark compaction fold of the stats, postings and arrangement
+stores; the replay semantics are pinned by ``tests/test_epoch_io.py``.
 """
 
 from __future__ import annotations

@@ -35,7 +35,7 @@ compactor makes — ``streaming/archive_maintenance.py``):
    the base's files are then fsynced (``durable.fsync_tree``) — the fold
    is the only surviving copy once step 3 runs, so it must be durable
    before the commit references it. Latest-wins kv stores pass their
-   own ``fold`` (``join_ivm.kv_fold``): a key-ordered merge on the driver,
+   own ``fold`` (``kv_store.kv_fold``): a key-ordered merge on the driver,
    written and fsynced through ``epoch_io.epoch_replace``, under the same
    steps 2 and 3.
 2. The manifest ``_epoch_base.json`` (``{"upto": U}``) is replaced
@@ -76,7 +76,7 @@ listing and the read, or silently, when the listing runs after the sweep
 and sees neither the old base (swept) nor the new one (filtered out).
 :func:`read_at_horizon` closes both by re-resolving the manifest after the
 read and retrying on a horizon move (the WAL reader's unexplained-loss
-retry, one level up). The kv point read (``join_ivm.probe_key_state``)
+retry, one level up). The kv point read (``kv_store.probe_key_state``)
 is a serve path built on it, so it is safe to run beside ``maybe_compact``
 without holding off maintenance; :func:`consistent_epoch_read` is the same
 loop for a Spark action. Other serve paths (:func:`read_epoch_store`,
@@ -334,7 +334,9 @@ def sweep_shared_partials(path: str, below: int) -> int:
     caller must compute as the MINIMUM committed ``base_upto`` across every
     consumer — a partial below that horizon is folded into all of them.
     Crash-safe to interrupt (the next pass finishes it); a partial some
-    consumer has not folded yet stays by construction of the minimum."""
+    consumer has not folded yet stays by construction of the minimum.
+    Hidden ``epoch_io.epoch_replace`` crash leftovers below it go too, as
+    in :func:`_sweep_stale`."""
     deleted = 0
     for e in _partition_epochs(path):
         if 0 <= e < int(below):
@@ -342,6 +344,9 @@ def sweep_shared_partials(path: str, below: int) -> int:
                 os.path.join(path, f"{EPOCH_COL}={e}"), ignore_errors=True
             )
             deleted += 1
+    for e, d in hidden_leftovers(path):
+        if e < int(below):
+            shutil.rmtree(d, ignore_errors=True)
     if deleted:
         fsync_dir(path)
     return deleted
@@ -393,7 +398,7 @@ def compact_epochs(
 
     ``fold`` replaces that Spark fold-and-write (step 1) for a store whose
     fold runs on the driver, the latest-wins kv stores'
-    ``join_ivm.kv_fold``: ``fold(epochs, upto)`` folds the listed
+    ``kv_store.kv_fold``: ``fold(epochs, upto)`` folds the listed
     partitions of ``path`` (the base ``-base_upto`` first when it exists,
     then the partials in ascending order) into partition ``-upto``, durably
     before it returns, and returns whether it wrote that partition (a fold

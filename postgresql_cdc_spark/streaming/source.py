@@ -844,29 +844,6 @@ class PgCdcDataSource(DataSource):
         )
 
 
-def live_replication_frames(dsn: str, slot: str, publication: str):
-    """Live-socket transport: slot + publication DDL, replication-mode
-    connection, poll loop with reconnect/backoff — see
-    ``streaming.replication`` (unit-tested against a fake psycopg stream;
-    the real path needs psycopg2 + a PostgreSQL with wal_level=logical,
-    neither present in this container).
-
-    Yields ``(lsn, payload)`` frames — the same shape ``read_wal_frames``
-    produces, so decode and offset logic are transport-agnostic; the consumer
-    acks via ``transport.ack(flush_lsn)`` from ``commit()`` — the reference's
-    setFlushedLSN path (`CdcEngine.java:132-137`).
-    """
-    from postgresql_cdc_spark.streaming.replication import (
-        LiveReplicationTransport,
-        ReplicationConfig,
-        psycopg2_connection_factory,
-    )
-
-    cfg = ReplicationConfig(dsn=dsn, slot=slot, publication=publication)
-    transport = LiveReplicationTransport(psycopg2_connection_factory(cfg), cfg)
-    return transport.frames()
-
-
 def run_wal_relay(transport, path: str, chunk_frames: int = 1000,
                   max_frames: Optional[int] = None) -> int:
     """Drain a replication transport into the WAL-archive format the pgcdc

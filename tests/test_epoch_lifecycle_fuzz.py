@@ -256,8 +256,8 @@ def test_point_reads_between_compaction_steps_match_model(
     import unittest.mock as mock
 
     import postgresql_cdc_spark.streaming.epoch_maintenance as em
-    import postgresql_cdc_spark.streaming.join_ivm as ji
-    from postgresql_cdc_spark.streaming.join_ivm import (
+    import postgresql_cdc_spark.streaming.kv_store as kvs
+    from postgresql_cdc_spark.streaming.kv_store import (
         ingest_kv_batch,
         probe_key_state,
     )
@@ -285,7 +285,7 @@ def test_point_reads_between_compaction_steps_match_model(
     hooks = [
         mock.patch.object(mod, name,
                           side_effect=check(name)(getattr(mod, name)))
-        for mod, name in ((ji, "kv_fold"), (em, "_commit_manifest"),
+        for mod, name in ((kvs, "kv_fold"), (em, "_commit_manifest"),
                           (em, "_sweep_stale"))
     ]
     schema = spark.createDataFrame([], _KV_DDL).schema
@@ -314,7 +314,7 @@ def test_point_reads_between_compaction_steps_match_model(
                 if upto > prev:
                     compact_epochs(
                         spark, store, upto, fold=functools.partial(
-                            ji.kv_fold, store, "id", schema),
+                            kvs.kv_fold, store, "id", schema),
                     )
     finally:
         for h in hooks:

@@ -31,7 +31,7 @@ def _kv_fold(spark, store, upto, ddl=KV_DDL):
     from postgresql_cdc_spark.streaming.epoch_maintenance import (
         compact_epochs,
     )
-    from postgresql_cdc_spark.streaming.join_ivm import kv_fold
+    from postgresql_cdc_spark.streaming.kv_store import kv_fold
 
     schema = spark.createDataFrame([], ddl).schema
     return compact_epochs(
@@ -313,12 +313,10 @@ class TestJoinIvmReplay:
         exchange on the FK — a hot key then never induces a skewed shuffle
         because the fact side is simply not exchanged."""
         from postgresql_cdc_spark.streaming.join_ivm import (
-            _read_epoch,
-            ingest_and_delta,
+            ARR_DDL,
             join_deltas,
         )
-        from postgresql_cdc_spark.streaming.epoch_io import epoch_overwrite
-        from postgresql_cdc_spark.streaming.join_ivm import ARR_DDL
+        from postgresql_cdc_spark.streaming.kv_store import ingest_and_delta
 
         state = str(tmp_path / "state")
         os.makedirs(state)
@@ -343,23 +341,16 @@ class TestJoinIvmReplay:
             "id long, grp int, op string, lsn long", "id", ["grp"], 2,
             d_batch,
         )
-        f_delta = spark.createDataFrame([], "sign int, fid long, did long, amount int")
-        epoch_overwrite(
-            f_delta.select("fid", "did", "amount", "sign"),
-            os.path.join(state, "fact_delta"), 2,  # r18 shared-epoch layout
-        )
-        f_delta_w = _read_epoch(
-            spark, os.path.join(state, "fact_delta"), ARR_DDL, 2
-        )
+        # an empty fact delta, the local relation apply_batch holds
+        f_delta = spark.createDataFrame([], ARR_DDL)
         plan = (
-            join_deltas(spark, state, 2, d_delta, f_delta_w)
+            join_deltas(spark, state, 2, d_delta, f_delta)
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "BroadcastHashJoin" in plan, plan[:2000]
         # no sort-merge join anywhere: the FK joins broadcast their
         # batch-bounded sides (a hot key must never become a skewed
-        # shuffle) and since the r14 max_by diff rewrite the delta
-        # derivation has no join at all
+        # shuffle), and the delta derivation runs on the driver
         assert "SortMergeJoin" not in plan, plan[:2000]
 
     @pytest.mark.slow  # r18 tier split: lifecycle/parity soak; slow tier
@@ -784,10 +775,8 @@ class TestJoinIvmReplay:
         from postgresql_cdc_spark.streaming.epoch_maintenance import (
             epochs_before_compacted,
         )
-        from postgresql_cdc_spark.streaming.join_ivm import (
-            _PROBE_MAX_RANGES,
-            probe_by_key_list,
-        )
+        from postgresql_cdc_spark.streaming.join_ivm import probe_by_key_list
+        from postgresql_cdc_spark.streaming.kv_store import _PROBE_MAX_RANGES
 
         SKV_DDL = "id string, grp int, op string, lsn long"
         N, EPOCHS = 100_000, 4
@@ -848,10 +837,8 @@ class TestJoinIvmReplay:
             compact_epochs,
             epochs_before_compacted,
         )
-        from postgresql_cdc_spark.streaming.join_ivm import (
-            _resolve,
-            probe_by_key_list,
-        )
+        from postgresql_cdc_spark.streaming.join_ivm import probe_by_key_list
+        from postgresql_cdc_spark.streaming.kv_store import _resolve
 
         N, EPOCHS = 100_000, 4
         per = N // EPOCHS
@@ -911,10 +898,8 @@ class TestJoinIvmReplay:
         from postgresql_cdc_spark.streaming.epoch_maintenance import (
             read_epoch_store,
         )
-        from postgresql_cdc_spark.streaming.join_ivm import (
-            probe_by_key_list,
-            probe_key_state,
-        )
+        from postgresql_cdc_spark.streaming.join_ivm import probe_by_key_list
+        from postgresql_cdc_spark.streaming.kv_store import probe_key_state
 
         N, EPOCHS = 100_000, 4
         per = N // EPOCHS
@@ -961,7 +946,7 @@ class TestJoinIvmReplay:
             base_upto,
             live_files,
         )
-        from postgresql_cdc_spark.streaming.join_ivm import _arrow_key_filter
+        from postgresql_cdc_spark.streaming.kv_store import _arrow_key_filter
 
         cond = _arrow_key_filter("id", pa.int64(), [11, 50_000, N - 3])
         files = live_files(store, base_upto(store))

@@ -98,13 +98,11 @@ def test_hot_fk_schedules_stay_exact(spark, tmp_path_factory, ops, cuts):
 # expression measures) — the r15 kernel parameterization must keep the
 # SAME schedules exact through a structurally different view
 _REV_SPEC = JoinViewSpec(
-    dim_ddl="pid long, cat int, tier int, op string, lsn long",
-    dim_key="pid",
-    dim_payload=("cat", "tier"),
     fact_ddl="iid long, pid long, price int, qty int, op string, lsn long",
     fact_key="iid",
-    fact_fk="pid",
     fact_payload=("pid", "price", "qty"),
+    dims=(DimSpec(ddl="pid long, cat int, tier int, op string, lsn long",
+                  key="pid", payload=("cat", "tier"), fact_fk="pid"),),
     group_cols=("cat", "tier"),
     measures=(("revenue", "price * qty"), ("units", "qty")),
 )
@@ -509,7 +507,7 @@ def _run_schedule(spark, tmp_path_factory, ops, cuts):
 # maintains as a view whose deltas — adapted through
 # changelog_from_view_deltas — are the dim STREAM of the fact view.
 # The spec pair and the stacked recipe are the SHIPPED ones
-# (join_ivm.chain_spec_pair / apply_stacked_batch — kernel-side, so
+# (join_ivm.chain_spec_pair / apply_chain_batch — kernel-side, so
 # this suite does not import the plans registry), pinning exactly the
 # shape the gate drives.
 from postgresql_cdc_spark.streaming.join_ivm import chain_spec_pair
@@ -563,7 +561,7 @@ def test_chain_composition_schedules_stay_exact(
     and the adapter must replay deterministically."""
     from pyspark.sql import functions as F
 
-    from postgresql_cdc_spark.streaming.join_ivm import apply_stacked_batch
+    from postgresql_cdc_spark.streaming.join_ivm import apply_chain_batch
 
     root = tmp_path_factory.mktemp("jivm_fuzz_chain")
     comp_state = str(root / "comp")
@@ -632,9 +630,11 @@ def test_chain_composition_schedules_stay_exact(
             F.col("b").cast("int").alias("amount"),
             "op", "lsn",
         )
-        apply_stacked_batch(
-            spark, comp_state, fact_state, bid, n_batch, c_batch, f_batch,
-            _CHAIN_COMP_SPEC, _CHAIN_FACT_SPEC, max_live_partials=2,
+        apply_chain_batch(
+            spark,
+            [(comp_state, _CHAIN_COMP_SPEC, c_batch),
+             (fact_state, _CHAIN_FACT_SPEC, f_batch)],
+            bid, top_d_batch=n_batch, max_live_partials=2,
         )
 
     bid = 0

@@ -1,4 +1,4 @@
-"""The kv store's compaction fold (``join_ivm.kv_fold`` under
+"""The kv store's compaction fold (``kv_store.kv_fold`` under
 ``compact_epochs``): a key-ordered merge of the base with the collapsed
 partials, on the driver, into one base file sorted by key. It must equal
 ``key_state``'s Spark resolve over the same rows, refuse a base whose keys
@@ -18,13 +18,13 @@ import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 import postgresql_cdc_spark.streaming.epoch_maintenance as em
-import postgresql_cdc_spark.streaming.join_ivm as ji
+import postgresql_cdc_spark.streaming.kv_store as kvs
 from postgresql_cdc_spark.streaming.epoch_io import EPOCH_COL, hidden_leftovers
 from postgresql_cdc_spark.streaming.epoch_maintenance import (
     base_upto,
     compact_epochs,
 )
-from postgresql_cdc_spark.streaming.join_ivm import (
+from postgresql_cdc_spark.streaming.kv_store import (
     _resolve,
     ingest_kv_batch,
     key_state,
@@ -221,7 +221,7 @@ def test_base_is_one_sorted_file_of_bounded_row_groups(spark, tmp_path):
     it has read at most n base batches, and every row group holds at most
     ``_FOLD_ROWS`` rows of a key range above the previous one."""
     store = str(tmp_path / "kv")
-    n = 3 * ji._FOLD_ROWS + 100
+    n = 3 * kvs._FOLD_ROWS + 100
     _ingest(spark, store, 0, [(2 * i, "a", "I", 1) for i in range(n)])
     _fold(spark, store, 1)
     _ingest(spark, store, 1, [(2 * i + 1, "b", "I", 2) for i in range(0, n, 7)])
@@ -251,7 +251,7 @@ def test_base_is_one_sorted_file_of_bounded_row_groups(spark, tmp_path):
          meta.row_group(i).column(0).statistics.max)
         for i in range(meta.num_row_groups)
     ]
-    assert all(meta.row_group(i).num_rows <= ji._FOLD_ROWS
+    assert all(meta.row_group(i).num_rows <= kvs._FOLD_ROWS
                for i in range(meta.num_row_groups))
     assert all(a[1] < b[0] for a, b in zip(bounds, bounds[1:])), bounds
     ids = pq.read_table(_base_dir(store, 2))["id"].to_pylist()
@@ -274,7 +274,7 @@ def test_all_tombstone_fold_leaves_no_base(spark, tmp_path):
     os.makedirs(orphan)
     with open(os.path.join(orphan, "part-00000.parquet"), "wb") as f:
         pq.write_table(
-            ji._collapse_arrow(
+            kvs._collapse_arrow(
                 spark.createDataFrame([(9, "ghost", "I", 1)], DDL).toArrow(),
                 "id"),
             f,

@@ -1,4 +1,4 @@
-"""The kv point read (``join_ivm.probe_key_state``): an Arrow read on the
+"""The kv point read (``kv_store.probe_key_state``): an Arrow read on the
 driver of only the partitions the manifest names, which must return
 exactly ``key_state`` restricted to the probed keys — under crash
 leftovers, compaction, typed columns, Spark's float-key equality, and a
@@ -16,14 +16,14 @@ import pytest
 from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 import postgresql_cdc_spark.streaming.epoch_maintenance as em
-import postgresql_cdc_spark.streaming.join_ivm as ji
+import postgresql_cdc_spark.streaming.kv_store as kvs
 from postgresql_cdc_spark.streaming.epoch_io import epoch_overwrite
 from postgresql_cdc_spark.streaming.epoch_maintenance import (
     _commit_manifest,
     base_upto,
     compact_epochs,
 )
-from postgresql_cdc_spark.streaming.join_ivm import (
+from postgresql_cdc_spark.streaming.kv_store import (
     collapse_batch,
     ingest_kv_batch,
     key_state,
@@ -272,7 +272,7 @@ def test_key_filter_is_exact_past_the_range_cap():
     ``is_in`` restores exactness, zeros and NaN included."""
     import pyarrow as pa
 
-    from postgresql_cdc_spark.streaming.join_ivm import _arrow_key_filter
+    from postgresql_cdc_spark.streaming.kv_store import _arrow_key_filter
 
     ids = pa.table({"id": pa.array(range(1000), pa.int64())})
     keys = list(range(0, 1000, 7))
@@ -314,7 +314,7 @@ def _listing(on_call):
         calls.append(upto)
         return on_call(len(calls), lambda: real(path, upto, before))
 
-    return mock.patch.object(ji, "live_files", side_effect=listing), calls
+    return mock.patch.object(kvs, "live_files", side_effect=listing), calls
 
 
 def test_loud_tear_retries(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""The kv sink's write (``join_ivm.ingest_kv_batch`` through
+"""The kv sink's write (``kv_store.ingest_kv_batch`` through
 ``epoch_io.epoch_replace``): one ``toArrow()`` of the batch, the
 latest-wins collapse in Arrow, and one parquet file renamed over
 ``ingest_epoch=E``. A replay replaces only its own partition, crash
@@ -14,6 +14,7 @@ import os
 import unittest.mock as mock
 from decimal import Decimal
 
+import pyarrow as pa
 import pytest
 
 import postgresql_cdc_spark.streaming.epoch_io as eio
@@ -21,9 +22,13 @@ from postgresql_cdc_spark.streaming.epoch_io import EPOCH_COL, hidden_leftovers
 from postgresql_cdc_spark.streaming.epoch_maintenance import (
     base_upto,
     compact_epochs,
+    sweep_shared_partials,
 )
-from postgresql_cdc_spark.streaming.join_ivm import (
+import postgresql_cdc_spark.streaming.join_ivm as ji
+import postgresql_cdc_spark.streaming.kv_store as kvs
+from postgresql_cdc_spark.streaming.kv_store import (
     _resolve,
+    ingest_and_delta,
     ingest_kv_batch,
     key_state,
     kv_fold,
@@ -179,6 +184,27 @@ def test_sweep_deletes_leftovers_below_the_horizon(spark, tmp_path):
     assert _state(spark, store) == _model(spark, [B0, B1, B2], DDL)
 
 
+def test_shared_partial_sweep_deletes_leftovers_below(tmp_path):
+    """The join view's shared fact-delta store is written through
+    ``epoch_replace`` too: its retention pass deletes the hidden crash
+    leftovers below its horizon with the partials, and keeps those
+    above."""
+    store = str(tmp_path / "fact_delta")
+    rows = pa.table({"fid": pa.array([1], pa.int64())})
+    for ep in range(3):
+        eio.epoch_replace([rows], store, ep)
+    for ep in (1, 2):  # each replay dies before its rename
+        with mock.patch.object(eio.os, "rename", side_effect=_Crash(ep)):
+            with pytest.raises(_Crash):
+                eio.epoch_replace([rows], store, ep)
+    assert sorted(e for e, _ in hidden_leftovers(store)) == [1, 2]
+    assert sweep_shared_partials(store, 2) == 2
+    assert [e for e, _ in hidden_leftovers(store)] == [2]
+    assert [n for n in os.listdir(store) if not n.startswith(".")] == [
+        f"{EPOCH_COL}=2"
+    ]
+
+
 TYPED_DDL = (
     "id long, i int, x double, s string, b boolean, d date, ts timestamp, "
     "m decimal(12,2), a array<string>, op string, lsn long"
@@ -268,3 +294,29 @@ def test_one_spark_job_at_the_cap(spark, tmp_path):
     )) == 1
     assert base_upto(store) == 2
     assert _state(spark, store) == _model(spark, [B0, B1, B2], DDL)
+
+
+def test_ingest_and_delta_runs_one_spark_job(spark, tmp_path):
+    """The batch diff runs on the driver and returns a local relation:
+    ``ingest_and_delta(...).collect()`` runs exactly one Spark job, the
+    batch's ``toArrow()``."""
+    store = str(tmp_path / "kv")
+    for ep, rows in enumerate([B0, B1]):
+        _ingest(spark, store, ep, rows)
+    batch = spark.createDataFrame(
+        [(1, "a3", "U", 6), (3, None, "D", 7), (5, "e", "I", 8)], DDL
+    )
+    out = []
+    assert _spark_jobs(spark, tmp_path, lambda: out.extend(ingest_and_delta(
+        spark, store, DDL, "id", ["v"], 2, batch,
+    ).collect())) == 1
+    assert sorted(tuple(r) for r in out) == [
+        (-1, 1, "a2"), (-1, 3, "c"), (1, 1, "a3"), (1, 5, "e"),
+    ]
+
+
+def test_join_ivm_reexports_the_kv_store():
+    """``perfbench/live_tail.py`` imports the kv sink from ``join_ivm``:
+    those names must be the ``kv_store`` functions themselves."""
+    for name in ("ingest_kv_batch", "key_state", "probe_key_state"):
+        assert getattr(ji, name) is getattr(kvs, name), name

@@ -363,11 +363,11 @@ def _hicard_run(spark, n_keys: int, backend: str, n_small: int = 40) -> dict:
     from postgresql_cdc_spark.streaming.join_ivm import (
         fold_epoch_store,
         fold_versioned,
-        ingest_and_delta,
         prev_version,
         read_folded_groups,
         version_dir,
     )
+    from postgresql_cdc_spark.streaming.kv_store import ingest_and_delta
 
     DDL = "id long, cust long, v int, op string, lsn long"
     SUMS = "cust long, dn long, dq long"
@@ -692,7 +692,7 @@ def _chain_run(spark, n_ord: int, n_small: int = 40) -> dict:
     from pyspark.sql import functions as F
 
     from postgresql_cdc_spark.streaming.join_ivm import (
-        apply_stacked_batch,
+        apply_chain_batch,
         latest_view,
     )
 
@@ -731,9 +731,10 @@ def _chain_run(spark, n_ord: int, n_small: int = 40) -> dict:
 
     def stacked_apply(bid, rows):
         n_b, c_b, f_b = route(rows)
-        apply_stacked_batch(
-            spark, comp_state, fact_state, bid, n_b, c_b, f_b,
-            comp_spec, fact_spec,
+        apply_chain_batch(
+            spark,
+            [(comp_state, comp_spec, c_b), (fact_state, fact_spec, f_b)],
+            bid, top_d_batch=n_b,
             max_live_partials=CAP, target_file_bytes=_SOAK_FILE_BYTES,
         )
 

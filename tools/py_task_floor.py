@@ -13,7 +13,7 @@ In one local session, prints the median wall time of these, each run
   a local list that Spark ships as a ``PythonRDD``. Collecting the key
   list a kv point read is handed costs this, so it is the floor under
   every ``probe_key_state`` call;
-- ``kv_ingest``: ``join_ivm.ingest_kv_batch`` of a 2,500-row,
+- ``kv_ingest``: ``kv_store.ingest_kv_batch`` of a 2,500-row,
   one-partition batch (``spark.range``, the ``live_tail`` kv columns)
   into an empty store, so below the compaction cap: the batch's one
   ``toArrow()`` job, the Arrow collapse and the fsynced parquet write;
@@ -81,7 +81,7 @@ def main() -> None:
         encode_insert,
         encode_relation,
     )
-    from postgresql_cdc_spark.streaming.join_ivm import ingest_kv_batch
+    from postgresql_cdc_spark.streaming.kv_store import ingest_kv_batch
     from postgresql_cdc_spark.streaming.source import (
         PgCdcDataSource,
         write_wal_archive,
