@@ -144,10 +144,21 @@ def _chunk_frames(name: str, data: bytes) -> Iterator[Tuple[int, bytes, int]]:
         pos += ln
 
 
+def _chunk_order(name: str) -> tuple:
+    stem = name[:-4]
+    if stem.isascii() and stem.isdigit():
+        return (0, int(stem), name)
+    return (1, 0, name)
+
+
 def _chunk_names(path: str) -> List[str]:
-    """Archive chunk names in LSN order (producers write in commit order,
-    like WAL itself, and number chunks so name order is LSN order)."""
-    return sorted(n for n in os.listdir(path) if n.endswith(".wal"))
+    """Archive chunk names in LSN order. Producers write in commit order,
+    like WAL itself, and number chunks (``run_wal_relay`` continues from
+    the highest number), so a numeric stem's value is LSN order: chunk
+    ``1000000`` follows ``999999``, which a string sort would invert.
+    Other names follow the numbered chunks, in name order."""
+    return sorted((n for n in os.listdir(path) if n.endswith(".wal")),
+                  key=_chunk_order)
 
 
 def read_wal_frames(path: str) -> Iterator[Tuple[int, bytes]]:

@@ -8,6 +8,8 @@ backoff, and the flush-LSN ack.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from postgresql_cdc_spark.streaming.replication import (
@@ -300,6 +302,71 @@ class TestWalRelay:
         # frames replay in LSN order because the new chunk sorts last
         assert [lsn for lsn, _ in read_wal_frames(arch)] == [1, 50, 60, 61]
         assert t.acked == [61]
+
+    def test_chunks_past_999999_keep_lsn_order(self, spark, tmp_path):
+        """The relay's chunk numbers outgrow their six-digit padding:
+        ``1000000.wal`` sorts before ``999998.wal`` as a string, and the
+        scan's LSN guard then dropped every lower chunk's frames as
+        duplicates. Chunks are ordered by number, so the frame read, a
+        batch ``pgcdc`` read and the chunk compactor see every frame across
+        the boundary, in LSN order."""
+        from postgresql_cdc_spark.sources.pgoutput import (
+            encode_begin,
+            encode_commit,
+            encode_insert,
+            encode_relation,
+        )
+        from postgresql_cdc_spark.streaming.archive_maintenance import (
+            compact_wal_archive,
+        )
+        from postgresql_cdc_spark.streaming.source import (
+            PgCdcDataSource,
+            WalArchiveStreamReader,
+            read_wal_frames,
+            run_wal_relay,
+            write_wal_archive,
+        )
+        from tests.test_streaming_cdc import REL
+
+        def txn(i):
+            lsn = 10 * (i + 1)
+            return [(lsn, encode_begin(lsn + 2, 0, i + 1)),
+                    (lsn + 1, encode_insert(
+                        16384, [str(i), f"v{i}", str(i), "{}"])),
+                    (lsn + 2, encode_commit(lsn + 2, lsn + 3, 0))]
+
+        class OneShotTransport:
+            def __init__(self, frames):
+                self._frames = frames
+
+            def frames(self):
+                yield from self._frames
+
+            def ack(self, lsn):
+                pass
+
+        arch = str(tmp_path / "wrapped")
+        head = [(1, encode_relation(REL))] + txn(0)
+        write_wal_archive(arch, head, chunk="999998.wal")
+        tail = [f for i in range(1, 5) for f in txn(i)]
+        run_wal_relay(OneShotTransport(tail), arch, chunk_frames=3)
+        names = sorted(n for n in os.listdir(arch) if n.endswith(".wal"))
+        assert names == ["1000000.wal", "1000001.wal", "1000002.wal",
+                         "999998.wal", "999999.wal"]
+        want = [lsn for lsn, _ in head + tail]
+        assert [lsn for lsn, _ in read_wal_frames(arch)] == want
+
+        spark.dataSource.register(PgCdcDataSource)
+        rows = spark.read.format("pgcdc").option("path", arch).load().collect()
+        assert sorted(int(r.columns["id"]) for r in rows) == list(range(5))
+
+        WalArchiveStreamReader({"path": arch, "readall": "true"}).latestOffset()
+        stats = compact_wal_archive(arch)
+        assert stats["merged_runs"] == 1
+        # the run starts at the lowest-numbered chunk; the newest stays
+        assert sorted(n for n in os.listdir(arch) if n.endswith(".wal")) == [
+            "1000002.wal", "999998.wal"]
+        assert [lsn for lsn, _ in read_wal_frames(arch)] == want
 
     def test_relay_fsyncs_chunk_then_directory_then_acks(self, tmp_path,
                                                           monkeypatch):

@@ -23,6 +23,14 @@ In one local session, prints the median wall time of these, each run
   from a copy of the same store. ``kv_compact_cold`` is the session's
   first fold (of nine partials, the 50,000-row first batch among them,
   before any base exists), timed once.
+- ``trigger_commit``: the median over ``TRIGGER_BATCHES`` micro-batches of
+  ``walCommit`` + ``commitOffsets``, the two checkpoint-log writes of a
+  trigger, for a ``pgcdc`` stream of one-insert transactions into a no-op
+  ``foreachBatch``, under the session's checkpoint manager.
+  ``trigger_commit_file_context`` is the same stream with Spark's default
+  ``FileContextBasedCheckpointFileManager`` set at runtime: without
+  Hadoop's native library its local rename forks ``readlink`` and its
+  create forks ``chmod``.
 
 The warm-up reads the archive once, so the Python workers the timed jobs
 reuse have already run ``pgcdc`` code. The gap between the first line and
@@ -46,6 +54,11 @@ REPEATS = 7
 KV_KEYS = 50_000
 KV_ROWS = 2_500
 KV_CAP = 8  # ingest_kv_batch's default max_live_partials
+TRIGGER_BATCHES = 60
+FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
 
 
 def _kv_batch(spark, epoch: int, rows: int = KV_ROWS):
@@ -78,6 +91,8 @@ def main() -> None:
     from postgresql_cdc_spark.sources.pgoutput import (
         ColumnMeta,
         Relation,
+        encode_begin,
+        encode_commit,
         encode_insert,
         encode_relation,
     )
@@ -119,10 +134,52 @@ def main() -> None:
         }
         floors["kv_compact_cold"], floors["kv_compact"] = _kv_compact(
             spark, kv, ingest_kv_batch)
+        txns = [(1, encode_relation(rel))]
+        for i in range(TRIGGER_BATCHES):
+            lsn = 10 * (i + 1)
+            txns += [(lsn, encode_begin(lsn + 2, 0, i + 1)),
+                     (lsn + 1, encode_insert(16384, [str(i)])),
+                     (lsn + 2, encode_commit(lsn + 2, lsn + 3, 0))]
+        floors["trigger_commit"] = _trigger_commit(spark, kv, "default", txns)
+        spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+                       FILE_CONTEXT_MANAGER)
+        floors["trigger_commit_file_context"] = _trigger_commit(
+            spark, kv, "file_context", txns)
     spark.stop()
     for name, secs in floors.items():
-        how = "once" if name.endswith("_cold") else f"median of {REPEATS}"
-        print(f"{name:<16} {secs:.3f} s  ({how})")
+        how = ("once" if name.endswith("_cold")
+               else f"median of {TRIGGER_BATCHES} batches"
+               if name.startswith("trigger_")
+               else f"median of {REPEATS}")
+        print(f"{name:<27} {secs:.3f} s  ({how})")
+
+
+def _trigger_commit(spark, tmp: str, name: str, txns) -> float:
+    """Median seconds of ``walCommit`` + ``commitOffsets`` per micro-batch
+    of a one-transaction-per-batch ``pgcdc`` stream of ``txns`` into a
+    no-op ``foreachBatch``. Each run gets its own archive (a reader's ack
+    file would start the next one at the end) and checkpoint."""
+    from postgresql_cdc_spark.streaming.source import write_wal_archive
+
+    arch = os.path.join(tmp, f"txns_{name}")
+    write_wal_archive(arch, txns)
+    q = (spark.readStream.format("pgcdc").option("path", arch)
+         .option("maxRecordsPerBatch", "1").load()
+         .writeStream.foreachBatch(lambda df, batch_id: None)
+         .option("checkpointLocation", os.path.join(tmp, f"ckpt_{name}"))
+         .start())
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    # a no-op sink never runs the read, so numInputRows stays 0: a batch is
+    # a trigger that wrote the offset log
+    ms = [p.durationMs["walCommit"] + p.durationMs["commitOffsets"]
+          for p in q.recentProgress if "walCommit" in p.durationMs]
+    if len(ms) != TRIGGER_BATCHES:
+        raise SystemExit(f"trigger_commit: {len(ms)} batches, "
+                         f"not {TRIGGER_BATCHES}")
+    return statistics.median(ms) / 1e3
 
 
 def _kv_compact(spark, tmp: str, ingest_kv_batch) -> tuple[float, float]:
