@@ -701,9 +701,9 @@ def cdc_stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     ledger_dir = os.path.join(base, "ledger")
 
-    from postgresql_cdc_spark.streaming.epoch_io import (
-        epoch_overwrite,
-        epochs_before,
+    from postgresql_cdc_spark.streaming.epoch_io import epoch_overwrite
+    from postgresql_cdc_spark.streaming.epoch_maintenance import (
+        epochs_before_compacted,
     )
 
     def ingest(batch: DataFrame, epoch: int) -> None:
@@ -714,9 +714,9 @@ def cdc_stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         ep = int(epoch)
         if os.path.isdir(idx["buckets"]):
             ci = dd.LshIndex(
-                epochs_before(sp, idx["buckets"], ep),
-                epochs_before(sp, idx["sizes"], ep),
-                epochs_before(sp, idx["postings"], ep),
+                epochs_before_compacted(sp, idx["buckets"], ep),
+                epochs_before_compacted(sp, idx["sizes"], ep),
+                epochs_before_compacted(sp, idx["postings"], ep),
             )
             matched = (
                 dd.minhash_lsh_incremental(

@@ -126,9 +126,9 @@ def cdc_stream_ivf_recall_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from postgresql_cdc_spark.operators import similarity as sim
-    from postgresql_cdc_spark.streaming.epoch_io import (
-        epoch_overwrite,
-        epochs_before,
+    from postgresql_cdc_spark.streaming.epoch_io import epoch_overwrite
+    from postgresql_cdc_spark.streaming.epoch_maintenance import (
+        epochs_before_compacted,
     )
 
     e = T(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -196,7 +196,7 @@ def cdc_stream_ivf_recall_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     for ep in range(_N_EPOCHS):
         # the maintained index as of epoch ep: the strictly-earlier probe
         # of epoch ep+1 — per-epoch time travel off one store
-        posts = epochs_before(spark, postings, ep + 1)
+        posts = epochs_before_compacted(spark, postings, ep + 1)
         w = Window.partitionBy("query_id").orderBy(
             F.desc("cos_sim"), F.asc("neighbor_id")
         )

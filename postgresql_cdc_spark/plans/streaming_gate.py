@@ -1459,22 +1459,23 @@ def cdc_stream_asof_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
         "key state and derives SIGNED row deltas from a driver-side read of "
         "prior state by the BATCH's keys (kv_store.ingest_and_delta — "
         "O(|batch|), never a full-outer join of full old vs full new "
-        "state), then folds the deltas into a tiny persisted (group, "
-        "count, sum) table — the running aggregate is never recomputed "
-        "from history, only adjusted, and groups whose count reaches zero "
-        "are deleted (counting IVM, the batch twin is operators/ivm.py). "
-        "Lifecycle is CLOSED: maybe_compact bounds the kv store's live "
-        "partials behind a manifest-committed base fold, and sums versions "
-        "behind the previous generation are swept (fold_versioned) — "
-        "previously every batch rewrote the full key state and no version "
-        "was ever deleted, the r13 verdict's scale-killer. Replay "
-        "contract: every prior-state read resolves STRICTLY BELOW the "
-        "batch id, so a crashed attempt's partial writes are invisible to "
-        "its replay and a checkpoint restart reconstructs from disk. The "
-        "FINAL sums table must equal the grouped one-shot "
-        "materialization's closed form. Scale: per-batch state I/O is "
-        "O(|batch|); the sums fold touches |groups| + |changed rows| "
-        "rows, independent of state size.",
+        "state), then writes the deltas, grouped, as the batch's epoch of "
+        "a (group, count, sum) epoch store (fold_epoch_store) — the "
+        "running aggregate is never recomputed from history, only "
+        "adjusted, and groups whose count nets zero are dropped at serve "
+        "(read_folded_groups; counting IVM, the batch twin is "
+        "operators/ivm.py). Lifecycle is CLOSED: maybe_compact bounds the "
+        "kv store's and the sums store's live partials behind "
+        "manifest-committed base folds — previously every batch rewrote "
+        "the full key state and no version was ever deleted. Replay "
+        "contract: every prior-state read "
+        "resolves STRICTLY BELOW the batch id and a replayed epoch's "
+        "overwrite replaces its own partition, so a crashed attempt's "
+        "partial writes are invisible to its replay and a checkpoint "
+        "restart reconstructs from disk. The served sums must equal the "
+        "grouped one-shot materialization's closed form. Scale: per-batch "
+        "state I/O is O(|batch|); the sums fold writes the batch's "
+        "|changed groups| rows, independent of state size.",
 )
 def cdc_stream_ivm_group_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
@@ -1485,9 +1486,11 @@ def cdc_stream_ivm_group_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     arch = os.path.join(base, "wal")
     _build_archive(arch)
     STATE_DDL = "id long, v_int int, op string, lsn long"
+    SUMS_DDL = "grp int, dn long, dq long"
+    sums_store = os.path.join(base, "sums_es")
 
     def ivm_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from postgresql_cdc_spark.streaming.join_ivm import fold_versioned
+        from postgresql_cdc_spark.streaming.join_ivm import fold_epoch_store
         from postgresql_cdc_spark.streaming.kv_store import ingest_and_delta
 
         ss = batch_df.sparkSession
@@ -1506,10 +1509,7 @@ def cdc_stream_ivm_group_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sign").cast("long").alias("dn"),
             (F.col("sign") * F.col("v_int")).cast("long").alias("dq"),
         )
-        fold_versioned(
-            ss, base, "sums", "grp int, dn long, dq long", ["grp"],
-            bid, deltas, drop_when_zero="dn",
-        )
+        fold_epoch_store(ss, sums_store, SUMS_DDL, ["grp"], bid, deltas)
 
     stream = (
         spark.readStream.format("pgcdc")
@@ -1524,19 +1524,13 @@ def cdc_stream_ivm_group_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _drain_bounded(q)
 
-    from postgresql_cdc_spark.streaming.join_ivm import (
-        prev_version,
-        version_dir,
-    )
+    from postgresql_cdc_spark.streaming.join_ivm import read_folded_groups
 
-    last = prev_version(base, "sums", None)
-    if last is None:
+    if not os.path.isdir(sums_store):
         raise RuntimeError("no micro-batch reached the IVM sink")
-    return (
-        spark.read.schema("grp int, dn long, dq long")
-        .parquet(version_dir(base, "sums", last))
-        .select("grp", F.col("dn").alias("n_rows"), F.col("dq").alias("total"))
-    )
+    return read_folded_groups(
+        spark, sums_store, SUMS_DDL, ["grp"], drop_when_zero="dn"
+    ).select("grp", F.col("dn").alias("n_rows"), F.col("dq").alias("total"))
 
 
 # --- streaming session windows -----------------------------------------------
@@ -2217,8 +2211,9 @@ def _ivm_join_frames() -> list:
         "vs full new state — the F_new-by-FK leg reads a SIGNED by-did "
         "arrangement (consolidation-compacted Z-set, correct under FK "
         "re-pointing where a did-filtered latest-wins would resurrect "
-        "stale rows), and sums versions behind the previous generation "
-        "are swept. Every prior-state read still resolves STRICTLY "
+        "stale rows), and the sums fold writes only the batch's grouped "
+        "deltas into a compacted epoch store. Every prior-state read "
+        "still resolves STRICTLY "
         "BELOW the current id (streaming/join_ivm.py), so a crashed "
         "batch's partial writes are invisible to its replay and a "
         "checkpoint restart reconstructs state purely from disk — the "
@@ -2228,8 +2223,8 @@ def _ivm_join_frames() -> list:
         "equal the closed-form one-shot join aggregate. Scale: per-batch "
         "state I/O is O(|batch|); the delta joins BROADCAST their batch-"
         "bounded sides, so a hot dimension key never induces a skewed "
-        "shuffle; the sums fold touches |groups| + |delta| rows, "
-        "independent of state size.",
+        "shuffle; the sums fold writes the batch's |changed groups| "
+        "rows, independent of state and group-domain size.",
 )
 def cdc_stream_ivm_join_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
@@ -2315,12 +2310,13 @@ def cdc_stream_ivm_join_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gives the WRONG answer and only the support multiset converges "
         "to the one-shot closed form. Lifecycle unchanged: epoch-store "
         "kv state (O(|batch|) writes, maybe_compact-bounded partials), "
-        "batch-keyed pruned probes, swept support/sums versions, "
+        "batch-keyed pruned probes, epoch-store support/sums folds, "
         "strictly-below-batch-id resolution throughout (replay/restart-"
         "safe; the kernel's fuzz drives extrema schedules). Scale: the "
         "support table is bounded by distinct (group, value) pairs — "
         "orders of magnitude smaller than the state — and the per-batch "
-        "fold touches |delta| + |supports| rows; every step is a key-"
+        "fold writes the batch's |changed (group, value)| rows; every "
+        "step is a key-"
         "partitioned equi-operation.",
 )
 def cdc_stream_ivm_min_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2650,20 +2646,19 @@ def _hc_frames() -> list:
     FROM state GROUP BY 1
     """,
     doc="STREAMING maintained aggregate with a HIGH-CARDINALITY group "
-        "domain (per-customer: ~120 groups over 150 keys — the r14 "
-        "verdict's 'what's wrong #2' cardinality class, where "
-        "fold_versioned's full-version rewrite would be O(|groups|) per "
-        "trigger and a customer-grained view at 100x would rewrite "
-        "millions of rows per micro-batch). The sums are instead backed "
-        "by the EPOCH STORE — since r16 selected INSIDE the kernel via "
-        "JoinViewSpec(sums_backend='epoch'), so the gate is a "
+        "domain (per-customer: ~120 groups over 150 keys — the "
+        "cardinality class where a full-version rewrite of the sums "
+        "would be O(|groups|) per trigger and a customer-grained view at "
+        "100x would rewrite "
+        "millions of rows per micro-batch). The sums are backed by the "
+        "EPOCH STORE, the kernel's one aggregate layout, so the gate is a "
         "dimensionless spec driven by the same apply_batch as every "
         "join/star view: each batch writes only its own grouped signed "
         "deltas as the store's epoch — O(|batch groups|) rows — and "
         "maybe_compact SUM-merges old epochs behind the "
-        "manifest-committed base, clustered by the group column; serving "
-        "re-groups base + bounded partials (read_folded_groups), "
-        "dropping groups whose count nets zero. "
+        "manifest-committed base; serving re-groups base + bounded "
+        "partials (read_folded_groups), dropping groups whose count "
+        "nets zero. "
         "The fold's merge keeps rows any measure of which is nonzero "
         "(a transient partial can net dn=0 with dq!=0 after an "
         "amount-only update), so zero-drop-out applies at serve time "
@@ -2691,18 +2686,14 @@ def cdc_stream_ivm_sums_hicard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from postgresql_cdc_spark.streaming import join_ivm
 
-    # since r16 this runs THROUGH the kernel's spec: sums_backend='epoch'
-    # selects the epoch-store fold inside apply_batch, so the gate is a
-    # dimensionless spec with a per-customer group domain — no bespoke
-    # maintenance code left (the min gate's r16 rewire, repeated for the
-    # high-cardinality backend)
+    # runs THROUGH the kernel's spec: a dimensionless spec with a
+    # per-customer group domain — no bespoke maintenance code left
     spec = join_ivm.JoinViewSpec(
         fact_ddl="id long, cust long, v int, op string, lsn long",
         fact_key="id",
         fact_payload=("cust", "v"),
         group_cols=("cust",),
         measures=(("dq", "v"),),
-        sums_backend="epoch",
     )
 
     def ivm_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -2754,15 +2745,14 @@ def cdc_stream_ivm_sums_hicard(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM state GROUP BY 1
     """,
     doc="STREAMING maintenance of COUNT(DISTINCT) and MAX over a "
-        "HIGH-CARDINALITY group domain (per-customer) — the r16 "
-        "verdict's top item: support tables now ride the EPOCH STORE "
-        "when sums_backend='epoch', so the one remaining "
-        "O(|state|)-per-trigger write class is gone — each batch writes "
-        "only its own grouped signed support deltas (O(|batch|) rows), "
-        "maybe_compact SUM-merges old epochs behind the group-clustered "
-        "base, and the serve re-derives the live (cust, v) multiset "
-        "from base + bounded partials. Crash consistency generalizes "
-        "the versioned anchoring: supports fold BEFORE sums, and every "
+        "HIGH-CARDINALITY group domain (per-customer): support tables "
+        "ride the EPOCH STORE like the sums, so no "
+        "O(|state|)-per-trigger write class is left — "
+        "each batch writes only its own grouped signed support deltas "
+        "(O(|batch|) rows), maybe_compact SUM-merges old epochs behind "
+        "the manifest-committed base, and the serve re-derives the live "
+        "(cust, v) multiset from base + bounded partials. Crash "
+        "consistency: supports fold BEFORE sums, and every "
         "serve-time support read is bounded by the sums store's newest "
         "committed epoch, so a crashed attempt's support partial is "
         "invisible until its sums commit (pinned by "
@@ -2800,7 +2790,6 @@ def cdc_stream_ivm_distinct_hicard(
         measures=(("dq", "v"),),
         extrema=(("max_v", "max", "v", "int"),),
         distincts=(("n_vals", "v", "int"),),
-        sums_backend="epoch",
     )
 
     def ivm_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -2911,7 +2900,6 @@ def cdc_stream_ivm_topk_per_group(
         group_cols=("cust",),
         measures=(("dq", "v"),),
         topks=(("top", "v", "int", 3, "max"),),
-        sums_backend="epoch",
     )
 
     def ivm_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -3040,7 +3028,6 @@ def _run_outer_join_gate(
             key="id", payload=("grp",), fact_fk="did",
         ),),
         join_type=join_type,
-        sums_backend="epoch",
     )
 
     def ivm_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -3543,9 +3530,9 @@ def cdc_stream_ivm_outer_join_extrema(
         "schedules too. NULL semantics match SQL: NULL values never "
         "enter the supports and an all-NULL group serves 0. Scale: "
         "support tables are bounded by distinct (group, value) pairs "
-        "and fold with |delta| + |supports| rows per batch — same "
-        "lifecycle (epoch-store kv state, pruned probes, swept "
-        "versions, strictly-below replay) as every kernel gate.",
+        "and each batch writes only its |changed (group, value)| rows — "
+        "same lifecycle (epoch-store kv and aggregate state, pruned "
+        "probes, strictly-below replay) as every kernel gate.",
 )
 def cdc_stream_ivm_count_distinct(
     spark: SparkSession, sf_dir: str

@@ -20,8 +20,9 @@ way a streaming dedup index silently corrupts itself. The contract here
   tables), and so does the join view's shared fact-delta store
   (``join_ivm.apply_batch`` writes the fact delta the kv diff holds). See
   its docstring for the replay protocol.
-- ``epochs_before`` reads back only STRICTLY EARLIER epochs, so a replayed
-  probe never sees the replaying batch's own (possibly partial) rows; the
+- ``epoch_maintenance.epochs_before_compacted`` reads back only STRICTLY
+  EARLIER epochs (and a compacted store's base), so a replayed probe
+  never sees the replaying batch's own (possibly partial) rows; the
   partition filter prunes at the file level.
 
 ``epoch_overwrite`` is used by the stores whose rows are not on the driver:
@@ -42,7 +43,7 @@ from typing import Iterable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from postgresql_cdc_spark.streaming.durable import fsync_dir, fsync_fd
 
@@ -147,12 +148,3 @@ def epoch_replace(tables: Iterable[pa.Table], path: str, epoch: int) -> int:
         shutil.rmtree(aside, ignore_errors=True)
     return rows
 
-
-def epochs_before(spark: SparkSession, path: str, epoch: int) -> DataFrame:
-    """All rows of epochs STRICTLY before ``epoch`` (partition-pruned),
-    without the epoch column."""
-    return (
-        spark.read.parquet(path)
-        .where(F.col(EPOCH_COL) < int(epoch))
-        .drop(EPOCH_COL)
-    )

@@ -107,6 +107,10 @@ from postgresql_cdc_spark.streaming.epoch_io import (
 
 BASE_MANIFEST = "_epoch_base.json"
 
+# Size of one file of a key-clustered Spark fold (``cluster_by``): the
+# ``operators/layout`` sizing rule, applied to the folded input bytes.
+TARGET_FILE_BYTES = 128 * 1024 * 1024
+
 _PART_RE = re.compile(rf"^{EPOCH_COL}=(-?\d+)$")
 
 T = TypeVar("T")
@@ -199,7 +203,8 @@ def read_epoch_store(
 ) -> DataFrame:
     """Every live row of a (possibly compacted) epoch store — the base fold
     plus all surviving partials — without the epoch column. The serve-path
-    twin of ``epoch_io.epochs_before``; crash leftovers are invisible."""
+    twin of :func:`epochs_before_compacted`; crash leftovers are
+    invisible."""
     return (
         _store_reader(spark, schema).parquet(path)
         .where(_store_filter(base_upto(path)))
@@ -358,7 +363,6 @@ def compact_epochs(
     upto: int,
     merge: Optional[Callable[[DataFrame], DataFrame]] = None,
     cluster_by: Optional[list[str]] = None,
-    target_file_bytes: int = 128 * 1024 * 1024,
     partials_from: Optional[str] = None,
     fold: Optional[Callable[[list[int], int], bool]] = None,
 ) -> dict:
@@ -393,8 +397,8 @@ def compact_epochs(
     it the fold inherits the shuffle layout of ``merge``, where key min/max
     spans the whole domain in every file and a probe must read the entire
     base. File count is sized from the folded partitions' INPUT bytes
-    against ``target_file_bytes`` (the ``operators/layout`` sizing rule —
-    no extra count job).
+    against :data:`TARGET_FILE_BYTES` (the ``operators/layout`` sizing
+    rule — no extra count job).
 
     ``fold`` replaces that Spark fold-and-write (step 1) for a store whose
     fold runs on the driver, the latest-wins kv stores'
@@ -452,7 +456,7 @@ def compact_epochs(
         wrote = fold(live, upto)
     else:
         _spark_fold(spark, path, prev, upto, live, merge, cluster_by,
-                    target_file_bytes, partials_from)
+                    partials_from)
         wrote = True
     if not wrote:
         # nothing to fold (sparse store: no base yet and no partials below
@@ -485,7 +489,6 @@ def _spark_fold(
     live: list[int],
     merge: Optional[Callable[[DataFrame], DataFrame]],
     cluster_by: Optional[list[str]],
-    target_file_bytes: int,
     partials_from: Optional[str],
 ) -> None:
     """:func:`compact_epochs`' Spark fold-and-write: the base ``-prev`` and
@@ -541,7 +544,7 @@ def _spark_fold(
         bytes_in = _bytes_of(path)
         if partials_from is not None:
             bytes_in += _bytes_of(partials_from)
-        n_files = max(1, min(4096, -(-bytes_in // int(target_file_bytes))))
+        n_files = max(1, min(4096, -(-bytes_in // TARGET_FILE_BYTES)))
         # repartitionByRange runs a separate SAMPLING job over its child
         # to compute range boundaries — without a persist the whole fold
         # subtree (full store scan + merge aggregate) would execute twice
@@ -566,7 +569,6 @@ def maybe_compact(
     max_live_partials: int = 8,
     merge: Optional[Callable[[DataFrame], DataFrame]] = None,
     cluster_by: Optional[list[str]] = None,
-    target_file_bytes: int = 128 * 1024 * 1024,
     partials_from: Optional[str] = None,
     fold: Optional[Callable[[list[int], int], bool]] = None,
 ) -> Optional[dict]:
@@ -606,6 +608,5 @@ def maybe_compact(
         return None
     return compact_epochs(
         spark, path, upto, merge=merge, cluster_by=cluster_by,
-        target_file_bytes=target_file_bytes, partials_from=partials_from,
-        fold=fold,
+        partials_from=partials_from, fold=fold,
     )

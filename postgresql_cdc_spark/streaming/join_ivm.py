@@ -25,11 +25,11 @@ maintained through per-expression SUPPORT tables ((group, value) ->
 live count; the textbook eviction-safe construction) folded from the
 same signed view deltas and re-derived at serve time (extrema as
 MIN/MAX over the live values, distinct counts as the number of live
-values, top-k as the k best). Support folds ride either backend:
-versioned (small group domains) or the epoch store
-(``sums_backend='epoch'`` — O(|batch|) writes per trigger for
-high-cardinality domains, serve reads anchored to the sums store's
-newest committed epoch).
+values, top-k as the k best). The sums and every support table fold
+through the epoch store (:func:`fold_epoch_store`): each trigger writes
+only its own grouped signed deltas, O(|batch groups|) rows whatever the
+group domain, and serve-time support reads anchor to the sums store's
+newest committed epoch.
 
 OUTER joins (``JoinViewSpec(join_type='left'|'right'|'full')``) use the
 FACTORIZED construction instead of the delta rule: the per-FK fact
@@ -40,7 +40,7 @@ either side surface exactly as SQL's outer semantics require.
 
 State layout (all under one base directory; multi-dim specs keep one
 ``dim_<name>_kv`` and one ``fact_by_<name>`` arrangement PER dimension,
-and extrema measures one versioned ``supp_<name>`` table each):
+and each support expression one ``supp_<i>_es`` store):
 
 - ``dim_kv`` / ``fact_kv`` — latest-wins key-value stores
   (``streaming/kv_store.py``, which owns their write, point read, fold
@@ -63,11 +63,12 @@ and extrema measures one versioned ``supp_<name>`` table each):
   base + manifest, folds the shared partials above its own horizon
   (``compact_epochs(..., partials_from=...)``), and the shared store is
   swept below the MINIMUM committed horizon across the dimensions.
-- ``sums_v<batch_id>`` — the maintained aggregate, tiny (|groups| rows),
-  versioned per batch with the previous generation retained and everything
-  older SWEPT (:func:`sweep_versions`): Structured Streaming replays at
-  most the last uncommitted batch, and a replay resolves strictly below
-  its own id, so latest-committed + in-flight is the whole replay window.
+- ``sums_es`` / ``supp_<i>_es`` — the maintained aggregate and its
+  support tables as epoch stores: each batch writes its grouped signed
+  deltas under ``ingest_epoch=<batch_id>``, ``maybe_compact`` SUM-merges
+  the partials behind a manifest-committed base (so the live partial
+  count stays bounded by the cap), and the serve re-groups base +
+  partials (:func:`read_folded_groups`).
 
 Per-batch dataflow (all O(|batch|) shuffle/compute):
 
@@ -94,17 +95,17 @@ Per-batch dataflow (all O(|batch|) shuffle/compute):
    to the dim delta's keys (pushed key predicate; consolidation commutes
    with any did restriction because signed rows group by the full triple)
    and join against the broadcast dim delta.
-6. Fold the signed (grp, dn, dq) deltas into the previous sums version,
-   write ``sums_v<bid>``, sweep versions behind the previous generation.
+6. Group the signed (grp, dn, dq) deltas and write them as the batch's
+   epoch of ``sums_es``, each support table's store first.
 
 Replay contract: every prior-state read resolves STRICTLY BELOW the
 current batch id (``epoch_io``'s strictly-earlier-epoch contract for the
-kv/arrangement stores; :func:`prev_version` for the sums), so a crashed
-attempt's partial writes are invisible to its replay — which then
-recomputes byte-identical deltas from the same committed prefix and
-replaces the crashed partitions (dynamic overwrite, or the rename in
-``epoch_io.epoch_replace`` for the kv stores and the shared fact-delta
-store). Crash windows are pinned by
+kv/arrangement stores; the sums and support folds read no prior state),
+so a crashed attempt's partial writes are invisible to its replay —
+which then recomputes byte-identical deltas from the same committed
+prefix and replaces the crashed partitions (dynamic overwrite, or the
+rename in ``epoch_io.epoch_replace`` for the kv stores and the shared
+fact-delta store). Crash windows are pinned by
 ``tests/test_join_ivm.py``; the delta algebra by
 ``tests/test_join_ivm_fuzz.py``; the bounded lifecycle by the retention
 test and ``tools/join_ivm_lifecycle_soak.py``. The kv stores' ordering
@@ -291,16 +292,9 @@ class JoinViewSpec:
     # ever running an outer join incrementally. Support tables (extrema /
     # COUNT(DISTINCT)) are keyed by M1's key too, so dim changes never
     # touch them; serve re-derives per final group THROUGH the dim join.
-    # Requires exactly one dim, fact-only measure/extrema/distinct
-    # expressions, and sums_backend='epoch' (M1's key domain is the FK
-    # domain — high-cardinality by construction).
+    # Requires exactly one dim and fact-only measure/extrema/distinct
+    # expressions.
     join_type: str = "inner"
-    # 'versioned' (default): full-rewrite sums versions — right when
-    # |groups| << |keys|. 'epoch': the epoch-store fold
-    # (:func:`fold_epoch_store`) — O(|batch groups|) writes per trigger,
-    # for HIGH-CARDINALITY group domains (per-customer views, keyed
-    # join-table views) where a full rewrite is O(|groups|) every batch.
-    sums_backend: str = "versioned"
 
     def __post_init__(self):
         """Validate the spec's invariants at construction, so a malformed
@@ -396,11 +390,6 @@ class JoinViewSpec:
                     f"extrema {name!r}: kind must be 'min' or 'max', got "
                     f"{kind!r}"
                 )
-        if self.sums_backend not in ("versioned", "epoch"):
-            raise ValueError(
-                f"sums_backend must be 'versioned' or 'epoch', got "
-                f"{self.sums_backend!r}"
-            )
         if self.join_type not in ("inner", "left", "right", "full"):
             raise ValueError(
                 f"join_type must be one of inner/left/right/full, got "
@@ -413,14 +402,6 @@ class JoinViewSpec:
                     f"dim (got {len(self.dims)}): the factorized "
                     "construction maintains ONE per-FK fact aggregate "
                     "against ONE dim state"
-                )
-            if self.sums_backend != "epoch":
-                raise ValueError(
-                    f"join_type={self.join_type!r} requires "
-                    "sums_backend='epoch': the maintained M1 aggregate is "
-                    "keyed by the foreign key — a high-cardinality domain "
-                    "where the versioned full-rewrite fold is O(|keys|) "
-                    "per trigger"
                 )
             dim_cols = {c.lower() for c in self.dims[0].payload}
             dim_cols.add(self.dims[0].key.lower())
@@ -609,7 +590,7 @@ DEFAULT_SPEC = JoinViewSpec(
 )
 
 
-# --- versioned small-table helpers (sums / supports) --------------------------
+# --- per-batch versioned directories ------------------------------------------
 
 def version_dir(base: str, prefix: str, bid: int) -> str:
     return os.path.join(base, f"{prefix}_v{int(bid)}")
@@ -639,7 +620,7 @@ def prev_version(base: str, prefix: str, below: Optional[int]) -> Optional[int]:
 
 def sweep_versions(base: str, prefix: str, keep_from: int) -> int:
     """Delete version dirs strictly below ``keep_from`` — the retention pass
-    the versioned layout needs to stay bounded. Retaining the latest
+    ``<prefix>_v<N>`` directories need to stay bounded. Retaining the latest
     committed generation plus the in-flight one covers the whole replay
     window: Structured Streaming replays at most the last uncommitted batch,
     whose reads resolve strictly below itself, i.e. the retained previous
@@ -663,61 +644,6 @@ def sweep_versions(base: str, prefix: str, keep_from: int) -> int:
     return deleted
 
 
-def fold_versioned(
-    spark: SparkSession,
-    base: str,
-    prefix: str,
-    ddl: str,
-    group_cols: list[str],
-    epoch: int,
-    deltas: DataFrame,
-    drop_when_zero: str,
-) -> None:
-    """Fold signed deltas into the previous committed version of a small
-    grouped table (sums, support counts): union, re-group, drop groups whose
-    ``drop_when_zero`` sum reaches zero, write ``<prefix>_v<epoch>``, then
-    sweep versions behind the previous generation. Per-batch cost is
-    |groups| + |delta| rows — the table is bounded by the group domain, so
-    full-version rewrite is the cheap, simple choice here (the KEY state is
-    where O(|state|) rewrites hurt; that lives in the epoch stores).
-
-    Raises when the retention floor was swept PAST the replayed batch —
-    ``prev_version`` finds nothing below ``epoch`` while committed versions
-    at or above it exist (a version AT ``epoch`` alone is the normal crashed
-    attempt a replay overwrites; STRICTLY NEWER versions mean later batches
-    committed and swept, so the replay's prior state is gone). Restarting
-    the aggregate from empty there would be silent corruption; the kv path
-    already raises loudly on the analogous misuse
-    (``epochs_before_compacted``'s below-base ValueError — r15 advice)."""
-    epoch = int(epoch)
-    pv = prev_version(base, prefix, epoch)
-    if pv is None:
-        newest = prev_version(base, prefix, None)
-        if newest is not None and newest > epoch:
-            raise ValueError(
-                f"versioned table {prefix!r} at {base!r}: batch {epoch} "
-                f"replayed after the retention sweep passed it (newest "
-                f"committed version {newest}); its previous generation no "
-                "longer exists — a committed micro-batch must never re-run"
-            )
-    if pv is not None:
-        prev = spark.read.schema(ddl).parquet(version_dir(base, prefix, pv))
-        deltas = prev.unionByName(deltas)
-    st = StructType.fromDDL(ddl)
-    aggs = [
-        F.sum(f.name).cast(f.dataType).alias(f.name)
-        for f in st.fields
-        if f.name not in group_cols
-    ]
-    out = (
-        deltas.groupBy(*group_cols)
-        .agg(*aggs)
-        .where(F.col(drop_when_zero) != 0)
-    )
-    out.write.mode("overwrite").parquet(version_dir(base, prefix, epoch))
-    sweep_versions(base, prefix, pv if pv is not None else epoch)
-
-
 def fold_epoch_store(
     spark: SparkSession,
     store: str,
@@ -726,35 +652,29 @@ def fold_epoch_store(
     epoch: int,
     deltas: DataFrame,
     max_live_partials: int = 8,
-    target_file_bytes: int = 128 * 1024 * 1024,
 ) -> None:
-    """Epoch-store-backed grouped-aggregate fold for HIGH-CARDINALITY
-    group domains — the r14 verdict's "what's wrong #2": a maintained
-    view grouped by e.g. customer has |groups| ~ |keys|, so
-    :func:`fold_versioned`'s full-version rewrite is O(|groups|) per
-    trigger. Here each batch writes ONLY its own grouped signed deltas as
-    the store's epoch (O(|batch groups|) rows, the
-    ``cdc_stream_bm25_stats`` partial-stats shape), ``maybe_compact``
-    SUM-merges old epochs behind the manifest-committed base (clustered
-    by the group columns so point lookups prune), and
-    :func:`read_folded_groups` serves the aggregate as base + partials
-    re-grouped.
+    """Fold signed group deltas into an epoch-store aggregate table (the
+    view's sums and every support table): each batch writes ONLY its own
+    grouped signed deltas as the store's epoch — O(|batch groups|) rows
+    whatever the group domain, the ``cdc_stream_bm25_stats``
+    partial-stats shape — ``maybe_compact`` SUM-merges old epochs behind
+    the manifest-committed base, and :func:`read_folded_groups` serves the
+    aggregate as base + partials re-grouped. The base is not clustered:
+    every reader takes the store whole.
 
     The compaction merge drops only ALL-ZERO rows: a transient partial
     may legitimately net one measure to zero while another still carries
     an adjustment (dn = 0 with dq != 0 after an amount-only update), so
-    the zero-group drop-out of the full-aggregate layout applies at SERVE
-    time, not in the fold. Replay contract: the deltas are deterministic
-    given the committed prefix (``ingest_and_delta``), so a replayed
-    epoch's dynamic overwrite replaces its crashed attempt wholesale.
+    the zero-group drop-out applies at SERVE time, not in the fold.
+    Replay contract: the deltas are deterministic given the committed
+    prefix (``ingest_and_delta``), so a replayed epoch's dynamic
+    overwrite replaces its crashed attempt wholesale.
 
     Raises when ``epoch`` lands below the store's compacted base horizon:
     the partition would be written where every manifest-aware read
     (``read_folded_groups`` / ``read_epoch_store``) filters it out, so
-    the replayed deltas would VANISH silently — the same misuse class
-    ``fold_versioned`` raises on for the versioned layout and
-    ``epochs_before_compacted`` rejects for reads (r15 advice, extended
-    to the write side here per r16 advice)."""
+    the replayed deltas would VANISH silently — the write-side twin of
+    ``epochs_before_compacted``'s below-base read guard."""
     epoch = int(epoch)
     floor = base_upto(store)
     if epoch < floor:
@@ -778,10 +698,7 @@ def fold_epoch_store(
             nonzero = arm if nonzero is None else (nonzero | arm)
         return df.groupBy(*group_cols).agg(*aggs).where(nonzero)
 
-    maybe_compact(
-        spark, store, epoch, max_live_partials, merge=merge,
-        cluster_by=list(group_cols), target_file_bytes=target_file_bytes,
-    )
+    maybe_compact(spark, store, epoch, max_live_partials, merge=merge)
     grouped = deltas.groupBy(*group_cols).agg(*[
         F.sum(f.name).cast(f.dataType).alias(f.name) for f in measure_cols
     ])
@@ -797,9 +714,8 @@ def read_folded_groups(
 ) -> DataFrame:
     """The served aggregate of a :func:`fold_epoch_store` table: base fold
     + live partials re-grouped, groups whose ``drop_when_zero`` sum
-    reaches zero dropped (the full-aggregate semantics
-    :func:`fold_versioned` applies on every rewrite, applied lazily
-    here)."""
+    reaches zero dropped (the full-aggregate semantics the fold's merge
+    defers to the serve)."""
     st = StructType.fromDDL(ddl)
     aggs = [
         F.sum(f.name).cast(f.dataType).alias(f.name)
@@ -946,7 +862,6 @@ def apply_batch(
     d_batch,
     f_batch: DataFrame,
     max_live_partials: int = 8,
-    target_file_bytes: int = 128 * 1024 * 1024,
     spec: JoinViewSpec = DEFAULT_SPEC,
     return_delta: bool = False,
     fold_sums: bool = True,
@@ -958,13 +873,18 @@ def apply_batch(
     sequence aligned with ``spec.dims``. Every prior-state read resolves
     strictly below ``batch_id``; every store is size-tiered-compacted at
     the top of the epoch (kv bases fold into one key-sorted file, the
-    arrangements' bases key-clustered into ``target_file_bytes``-sized
-    files, so the probes prune); versions behind the previous generation
-    are swept — so per-batch cost is
-    O(|batch| + dim-delta fan-out) and disk objects stay bounded at any
-    stream age. SUM-measures fold into the versioned sums table; extrema
-    measures additionally fold their (group, value) SUPPORT tables, from
-    the same view-delta rows.
+    arrangements' bases key-clustered into
+    ``epoch_maintenance.TARGET_FILE_BYTES``-sized files, so the probes
+    prune) — so per-batch cost is O(|batch| + dim-delta fan-out) and disk
+    objects stay bounded at any stream age. SUM-measures fold into the
+    ``sums_es`` epoch store; support-backed measures additionally fold
+    their (group, value) SUPPORT stores, from the same view-delta rows.
+
+    Raises ``ValueError`` on a ``base`` that holds a ``sums_v<N>``
+    directory: that is the per-batch sums layout older releases wrote,
+    and folding onto an empty ``sums_es`` beside it would serve sums
+    that miss every earlier batch. Rebuild such a view in a fresh
+    directory.
 
     With ``return_delta=True`` the batch's signed view deltas are
     returned, materialized when they come from joins (versioned per
@@ -980,6 +900,13 @@ def apply_batch(
         raise ValueError(
             "fold_sums=False without return_delta=True maintains a view "
             "nobody can read — the deltas are the only remaining output"
+        )
+    if prev_version(base, "sums", None) is not None:
+        raise ValueError(
+            f"view state at {base!r} holds sums_v<N> directories from the "
+            "per-batch sums layout; the sums now fold into sums_es, which "
+            "would start empty here and miss every earlier batch — "
+            "rebuild the view in a fresh directory"
         )
     bid = int(batch_id)
     fact_store = os.path.join(base, "fact_kv")
@@ -1021,7 +948,7 @@ def apply_batch(
         for prefix, expr, vtype, _named in spec.supp_tables:
             cols.append(F.expr(expr).cast(vtype).alias(prefix))
         _fold_view_delta(spark, base, bid, f_delta.select(*cols), spec,
-                         max_live_partials, target_file_bytes)
+                         max_live_partials)
         return None
 
     # persist the fact delta ONCE as the SHARED arrangement epoch (r18):
@@ -1037,7 +964,6 @@ def apply_batch(
                 spark, spec.arr_store(base, i), bid, max_live_partials,
                 merge=lambda df: _consolidate(df, arr_cols),
                 cluster_by=[spec.dims[i].fact_fk],
-                target_file_bytes=target_file_bytes,
                 partials_from=shared,
             )
         # shared partials every dimension's base has folded are dead; the
@@ -1074,13 +1000,12 @@ def apply_batch(
         # neither the sums nor any support table would ever be read. The
         # marker makes latest_view raise even when the SAME directory
         # previously folded sums (a caller migrating to the composition
-        # recipe mid-stream) — without it, a stale sums_v<N> would serve
-        # frozen batch-N aggregates silently (r16 review).
+        # recipe mid-stream) — without it, the stale sums store would
+        # serve frozen batch-N aggregates silently.
         with open(os.path.join(base, "_sums_disabled"), "w") as fh:
             fh.write(str(bid))
         return view_delta
-    _fold_view_delta(spark, base, bid, view_delta, spec,
-                     max_live_partials, target_file_bytes)
+    _fold_view_delta(spark, base, bid, view_delta, spec, max_live_partials)
     return view_delta if return_delta else None
 
 
@@ -1091,21 +1016,16 @@ def _fold_view_delta(
     view_delta: DataFrame,
     spec: JoinViewSpec,
     max_live_partials: int,
-    target_file_bytes: int,
 ) -> None:
     """Fold one batch's signed view deltas into the maintained aggregate
-    state: every support table first, then the sums — shared by the inner
+    state: every support store first, then the sums — shared by the inner
     delta-rule path and the factorized outer path.
 
     Supports fold BEFORE sums so a crash between folds can never serve
-    batch-N counts next to batch-(N-1) extrema: the versioned backend
-    keys every serve-time support read off the newest committed SUMS
-    version (r16 review), and the epoch backend anchors them to the sums
-    STORE's newest committed epoch (the same ordering argument — a
-    committed sums epoch implies its supports committed first), which is
-    what lifts the r16 'no supports on the epoch backend' restriction:
-    high-cardinality COUNT(DISTINCT)/extrema state now folds
-    O(|batch|) per trigger instead of a full |supports| rewrite."""
+    batch-N counts next to batch-(N-1) extrema: :func:`latest_view`
+    anchors every support read to the sums store's newest committed
+    epoch, and a committed sums epoch implies its supports committed
+    first."""
     groups = list(spec.state_group_cols)
     for prefix, _expr, vtype, _named in spec.supp_tables:
         supp_delta = view_delta.select(
@@ -1113,39 +1033,18 @@ def _fold_view_delta(
             F.col(prefix).alias("__v"),
             F.col("dn").alias("cnt"),
         ).where(F.col(prefix).isNotNull())
-        if spec.sums_backend == "epoch":
-            fold_epoch_store(
-                spark, os.path.join(base, f"{prefix}_es"),
-                spec.supp_ddl(vtype), [*groups, "__v"], bid, supp_delta,
-                max_live_partials=max_live_partials,
-                target_file_bytes=target_file_bytes,
-            )
-        else:
-            fold_versioned(
-                spark, base, prefix, spec.supp_ddl(vtype),
-                [*groups, "__v"], bid, supp_delta,
-                drop_when_zero="cnt",
-            )
+        fold_epoch_store(
+            spark, os.path.join(base, f"{prefix}_es"),
+            spec.supp_ddl(vtype), [*groups, "__v"], bid, supp_delta,
+            max_live_partials=max_live_partials,
+        )
     sums_delta = view_delta.select(
         *groups, "dn", *[n for n, _ in spec.measures]
     )
-    if spec.sums_backend == "epoch":
-        # high-cardinality group domains: each batch writes only its own
-        # grouped signed deltas as the store's epoch (O(|batch groups|)),
-        # maybe_compact SUM-merges behind the clustered base — never a
-        # full |groups| rewrite per trigger
-        fold_epoch_store(
-            spark, os.path.join(base, "sums_es"), spec.sums_ddl,
-            groups, bid, sums_delta,
-            max_live_partials=max_live_partials,
-            target_file_bytes=target_file_bytes,
-        )
-    else:
-        fold_versioned(
-            spark, base, "sums", spec.sums_ddl, groups, bid,
-            sums_delta,
-            drop_when_zero="dn",
-        )
+    fold_epoch_store(
+        spark, os.path.join(base, "sums_es"), spec.sums_ddl,
+        groups, bid, sums_delta, max_live_partials=max_live_partials,
+    )
     # a completed sums fold re-enables serving (the symmetric case of the
     # composition-only marker: a directory switching back to a served view)
     marker = os.path.join(base, "_sums_disabled")
@@ -1369,8 +1268,9 @@ def join_deltas(
 def _newest_epoch(store: str) -> int:
     """The store's newest COMMITTED epoch: the largest LIVE partial id,
     or (base horizon - 1) when the base fold is newer than every
-    surviving partial. This is the serve-time anchor for epoch-backed
-    support reads — the epoch analog of ``prev_version(.., sums + 1)``.
+    surviving partial. Read off ``sums_es``, this is the serve-time
+    anchor for every support read: supports fold first, so a sums epoch
+    N implies support epochs up to N.
 
     Partials BELOW the base horizon are stale sweep leftovers (a
     compaction may crash between its manifest commit and the sweep —
@@ -1481,19 +1381,22 @@ def _null_safe_group_join(left: DataFrame, right: DataFrame,
 def latest_view(
     spark: SparkSession, base: str, spec: JoinViewSpec = DEFAULT_SPEC
 ) -> DataFrame:
-    """The maintained view after the stream: the newest committed sums
-    version — (group_cols, dn, *measures) — plus, for specs with extrema
-    or distinct-count measures, every such aggregate re-derived from its
-    support table (MIN/MAX over the live (group, value) multiset; COUNT
-    of its live values for distincts; one small left join per DISTINCT
-    support expression, keyed null-safely on the group columns).
+    """The maintained view after the stream: the ``sums_es`` store
+    re-grouped — (group_cols, dn, *measures), groups whose count nets
+    zero dropped — plus, for specs with extrema, distinct-count or top-k
+    measures, every such aggregate re-derived from its support store
+    (MIN/MAX over the live (group, value) multiset; COUNT of its live
+    values for distincts; one small left join per DISTINCT support
+    expression, keyed null-safely on the group columns).
 
-    Version consistency: every support read resolves the newest support
-    version AT OR BELOW the sums version. ``apply_batch`` folds supports
-    BEFORE sums, so a committed ``sums_v<N>`` implies supports at N exist
-    — a crash between folds leaves sums at N-1 and this serve reads the
-    matching N-1 supports, never batch-N counts next to stale extrema
-    (r16 review). Output columns keep the spec's declaration order."""
+    Epoch consistency: every support read takes the support store's base
+    and its partials AT OR BELOW the sums store's newest committed epoch
+    (:func:`_newest_epoch`). ``apply_batch`` folds supports BEFORE sums,
+    so a committed sums epoch N implies supports at N exist — a crash
+    between folds leaves sums at N-1 and this serve ignores the crashed
+    attempt's support partial at N, never serving batch-N counts next to
+    stale extrema. Output columns keep the spec's
+    declaration order."""
     if os.path.exists(os.path.join(base, "_sums_disabled")):
         raise RuntimeError(
             f"view at {base!r} runs composition-only (fold_sums=False): "
@@ -1501,56 +1404,28 @@ def latest_view(
             "or re-enable the fold"
         )
     groups = list(spec.state_group_cols)
+    store = os.path.join(base, "sums_es")
+    if not os.path.isdir(store):
+        raise RuntimeError(
+            f"no batch reached the join-IVM sink at {base!r}"
+        )
+    out = read_folded_groups(
+        spark, store, spec.sums_ddl, groups, drop_when_zero="dn",
+    )
     supp_lives: list[tuple] = []  # (prefix, named, live (groups, __v) rows)
-    if spec.sums_backend == "epoch":
-        store = os.path.join(base, "sums_es")
-        if not os.path.isdir(store):
-            raise RuntimeError(
-                f"no batch reached the join-IVM sink at {base!r}"
-            )
-        out = read_folded_groups(
-            spark, store, spec.sums_ddl, groups, drop_when_zero="dn",
+    h = _newest_epoch(store)
+    for prefix, _expr, vtype, named in spec.supp_tables:
+        rows = _read_store_upto(
+            spark, os.path.join(base, f"{prefix}_es"),
+            spec.supp_ddl(vtype), h,
         )
-        if spec.supp_tables:
-            # anchor every support read to the sums STORE's newest
-            # committed epoch: supports fold first, so 'sums epoch N
-            # exists' implies 'supports at N exist' — the epoch-backend
-            # generalization of the versioned prev_version(.., sums + 1)
-            # anchoring (a crashed attempt's supports-at-N+1 partial
-            # stays invisible until its sums commit)
-            h = _newest_epoch(store)
-            for prefix, _expr, vtype, named in spec.supp_tables:
-                rows = _read_store_upto(
-                    spark, os.path.join(base, f"{prefix}_es"),
-                    spec.supp_ddl(vtype), h,
-                )
-                live = (
-                    rows.groupBy(*groups, "__v")
-                    .agg(F.sum("cnt").cast("long").alias("cnt"))
-                    .where(F.col("cnt") != 0)
-                    .drop("cnt")
-                )
-                supp_lives.append((prefix, named, live))
-    else:
-        sums = prev_version(base, "sums", None)
-        if sums is None:
-            raise RuntimeError(
-                f"no batch reached the join-IVM sink at {base!r}"
-            )
-        out = spark.read.schema(spec.sums_ddl).parquet(
-            version_dir(base, "sums", sums)
+        live = (
+            rows.groupBy(*groups, "__v")
+            .agg(F.sum("cnt").cast("long").alias("cnt"))
+            .where(F.col("cnt") != 0)
+            .drop("cnt")
         )
-        for prefix, _expr, vtype, named in spec.supp_tables:
-            sv = prev_version(base, prefix, sums + 1)
-            if sv is None:
-                raise RuntimeError(
-                    f"no support versions at or below sums_v{sums} for "
-                    f"{prefix!r} at {base!r}"
-                )
-            live = spark.read.schema(spec.supp_ddl(vtype)).parquet(
-                version_dir(base, prefix, sv)
-            ).drop("cnt")
-            supp_lives.append((prefix, named, live))
+        supp_lives.append((prefix, named, live))
     if spec.join_type != "inner":
         return _serve_outer(spark, base, spec, out, supp_lives)
     for _prefix, named, live in supp_lives:
@@ -1766,7 +1641,6 @@ def apply_chain_batch(
     batch_id: int,
     top_d_batch=None,
     max_live_partials: int = 8,
-    target_file_bytes: int = 128 * 1024 * 1024,
 ) -> None:
     """One foreachBatch step of an ARBITRARY-DEPTH dimension chain
     maintained as stacked views. ``hops`` is a top-down sequence of
@@ -1853,14 +1727,12 @@ def apply_chain_batch(
         if i == len(hops) - 1:
             apply_batch(
                 spark, state, bid, dim_stream, f_batch,
-                max_live_partials=max_live_partials,
-                target_file_bytes=target_file_bytes, spec=spec,
+                max_live_partials=max_live_partials, spec=spec,
             )
             return
         delta = apply_batch(
             spark, state, bid, dim_stream, f_batch,
             max_live_partials=max_live_partials,
-            target_file_bytes=target_file_bytes,
             spec=spec, return_delta=True, fold_sums=False,
         )
         payload = [g for g in spec.group_cols if g != spec.fact_key]

@@ -7,9 +7,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from postgresql_cdc_spark.streaming.epoch_io import (
-    epoch_overwrite,
-    epochs_before,
+from postgresql_cdc_spark.streaming.epoch_io import epoch_overwrite
+from postgresql_cdc_spark.streaming.epoch_maintenance import (
+    epochs_before_compacted,
 )
 
 
@@ -68,16 +68,17 @@ class TestEpochOverwrite:
                 p, ep,
             )
         got = sorted(
-            tuple(r) for r in epochs_before(spark, p, 2).collect()
+            tuple(r) for r in epochs_before_compacted(spark, p, 2).collect()
         )
         assert got == [(0, "v0"), (1, "v1")]
         # the probe frame carries no epoch column
-        assert epochs_before(spark, p, 2).columns == ["id", "v"]
+        assert epochs_before_compacted(spark, p, 2).columns == ["id", "v"]
 
     def test_partition_pruning_reaches_scan(self, spark, tmp_path):
-        """epochs_before must prune at the FILE level (PartitionFilters),
-        not post-filter a full scan — at a month of micro-batches the
-        difference is reading one day vs the whole index history."""
+        """epochs_before_compacted must prune at the FILE level
+        (PartitionFilters), not post-filter a full scan — at a month of
+        micro-batches the difference is reading one day vs the whole index
+        history."""
         p = str(tmp_path / "idx")
         for ep in range(4):
             epoch_overwrite(
@@ -85,7 +86,7 @@ class TestEpochOverwrite:
                 p, ep,
             )
         plan = (
-            epochs_before(spark, p, 2)
+            epochs_before_compacted(spark, p, 2)
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "PartitionFilters" in plan and "ingest_epoch" in plan, plan

@@ -199,7 +199,7 @@ class TestCompactEpochs:
 
     def test_partition_pruning_reaches_scan(self, spark, tmp_path):
         """The manifest-aware read must prune at the FILE level, like the
-        raw epochs_before probe — a year-old store reads its base + tail,
+        strictly-earlier probe — a year-old store reads its base + tail,
         not every stale leftover."""
         p = str(tmp_path / "store")
         _seed(spark, p, 4)

@@ -158,8 +158,8 @@ class TestJoinIvmReplay:
         """Direct pin of the strictly-below contract in the epoch-store
         layout: a half-written attempt at batch 2 — garbage rows in the kv
         stores' ``ingest_epoch=2`` partitions, a garbage arrangement epoch,
-        and a garbage ``sums_v2`` — must be invisible to the replay of
-        batch 2, whose dynamic overwrite replaces it wholesale."""
+        and a garbage ``sums_es`` partial at epoch 2 — must be invisible to
+        the replay of batch 2, whose overwrite replaces it wholesale."""
         from postgresql_cdc_spark.streaming.epoch_io import epoch_overwrite
 
         waves, want = _waves()
@@ -168,6 +168,8 @@ class TestJoinIvmReplay:
         for ep, w in enumerate(waves[:2]):
             _route_and_apply(spark.createDataFrame(w, ROW_DDL), ep, state)
         # crashed attempt at batch 2: plausible-schema garbage, all four
+        # (batch 2 changes groups 0 and 1, so its sums fold rewrites the
+        # whole epoch-2 partition)
         epoch_overwrite(
             spark.createDataFrame(
                 [(999, 2, "I", 999)], "id long, grp int, op string, lsn long"
@@ -187,9 +189,12 @@ class TestJoinIvmReplay:
             ),
             os.path.join(state, "fact_delta"), 2,  # r18 shared-epoch layout
         )
-        spark.createDataFrame(
-            [(2, 99, 99999)], "grp int, dn long, dq long"
-        ).write.mode("overwrite").parquet(os.path.join(state, "sums_v2"))
+        epoch_overwrite(
+            spark.createDataFrame(
+                [(2, 99, 99999)], "grp int, dn long, dq long"
+            ),
+            os.path.join(state, "sums_es"), 2,
+        )
 
         _route_and_apply(spark.createDataFrame(waves[2], ROW_DDL), 2, state)
         got = sorted(
@@ -202,10 +207,11 @@ class TestJoinIvmReplay:
     def test_lifecycle_bounded_disk_and_swept_versions(self, spark, tmp_path):
         """The r13-verdict fix: state must not grow with stream age. Drive
         the same schedule through MANY small batches with a tight compaction
-        cap and assert (a) the answer is still exact, (b) only the last two
-        sums generations survive the sweep, (c) every epoch store's live
-        partial count is bounded by the cap (older epochs folded into the
-        manifest-committed base)."""
+        cap and assert (a) the answer is still exact, (b) the sums live in
+        the ``sums_es`` epoch store, with no per-batch ``sums_v*``
+        directory, (c) every epoch store's live partial count, the sums
+        store's included, is bounded by the cap (older epochs folded into
+        the manifest-committed base)."""
         from postgresql_cdc_spark.streaming.epoch_maintenance import base_upto
 
         waves, want = _waves()
@@ -238,13 +244,8 @@ class TestJoinIvmReplay:
         )
         assert got == want, got
 
-        last = len(batches) - 1
-        sums_vs = sorted(
-            int(n[len("sums_v"):])
-            for n in os.listdir(state) if n.startswith("sums_v")
-        )
-        assert sums_vs == [last - 1, last], sums_vs
-        for store in ("dim_kv", "fact_kv", "fact_by_did"):
+        assert not [n for n in os.listdir(state) if n.startswith("sums_v")]
+        for store in ("dim_kv", "fact_kv", "fact_by_did", "sums_es"):
             path = os.path.join(state, store)
             upto = base_upto(path)
             assert upto > 0, f"{store}: compaction never committed a base"
@@ -556,8 +557,8 @@ class TestJoinIvmReplay:
 
     def test_outer_spec_validations(self, spark):
         """join_type validation surface: outer views require exactly one
-        dim, the epoch sums backend, and FACT-only aggregate
-        expressions (M1 must stay invariant under dim changes)."""
+        dim and FACT-only aggregate expressions (M1 must stay invariant
+        under dim changes)."""
         import pytest
 
         from postgresql_cdc_spark.streaming.join_ivm import (
@@ -573,13 +574,11 @@ class TestJoinIvmReplay:
             group_cols=("grp",), measures=(("dq", "amount"),),
         )
         with pytest.raises(ValueError, match="exactly one dim"):
-            JoinViewSpec(join_type="left", sums_backend="epoch", dims=(),
+            JoinViewSpec(join_type="left", dims=(),
                          **{**kw, "group_cols": ("did",)})
-        with pytest.raises(ValueError, match="sums_backend='epoch'"):
-            JoinViewSpec(join_type="full", dims=(dim,), **kw)
         with pytest.raises(ValueError, match="FACT side only"):
             JoinViewSpec(
-                join_type="full", sums_backend="epoch", dims=(dim,),
+                join_type="full", dims=(dim,),
                 **{**kw, "measures": (("dq", "amount * grp"),)},
             )
         with pytest.raises(ValueError, match="join_type"):
@@ -587,69 +586,35 @@ class TestJoinIvmReplay:
         # the M1 key (the FK) is reserved for outer specs
         with pytest.raises(ValueError, match="collide"):
             JoinViewSpec(
-                join_type="left", sums_backend="epoch", dims=(dim,),
+                join_type="left", dims=(dim,),
                 **{**kw, "measures": (("did", "amount"),)},
             )
         # valid outer spec constructs, and its maintained M1 state is
         # keyed by the FK while the served view keeps the dim group
-        ok = JoinViewSpec(join_type="left", sums_backend="epoch",
-                          dims=(dim,), **kw)
+        ok = JoinViewSpec(join_type="left", dims=(dim,), **kw)
         assert ok.state_group_cols == ("did",)
         assert ok.sums_ddl.startswith("did ")
 
-    def test_fold_versioned_raises_when_replay_predates_retention(
-        self, spark, tmp_path
-    ):
-        """r15 advice: a replay of a batch the retention sweep already
-        passed must raise LOUDLY (mirroring epochs_before_compacted's
-        below-base ValueError) instead of quietly restarting the aggregate
-        from empty — while a crashed attempt's own version AT the replayed
-        epoch stays the normal, overwritable case."""
+    def test_per_batch_sums_layout_raises(self, spark, tmp_path):
+        """A state directory that holds ``sums_v<N>`` from the per-batch
+        sums layout must fail loudly: folding onto a fresh, empty
+        ``sums_es`` beside it would serve sums missing every earlier
+        batch. The guard fires before any store is written."""
         import pytest
 
-        from postgresql_cdc_spark.streaming.join_ivm import (
-            SUMS_DDL,
-            fold_versioned,
-            latest_sums,
+        from postgresql_cdc_spark.streaming.join_ivm import SUMS_DDL
+
+        waves, _want = _waves()
+        state = str(tmp_path / "state")
+        os.makedirs(state)
+        spark.createDataFrame([(1, 4, 40)], SUMS_DDL).write.parquet(
+            os.path.join(state, "sums_v3")
         )
-
-        base = str(tmp_path / "state")
-        os.makedirs(base)
-
-        def deltas(g, n, q):
-            return spark.createDataFrame([(g, n, q)], SUMS_DDL)
-
-        for ep in range(3):  # versions 0..2; sweep keeps {1, 2}
-            fold_versioned(
-                spark, base, "sums", SUMS_DDL, ["grp"], ep,
-                deltas(1, 1, 10), drop_when_zero="dn",
+        with pytest.raises(ValueError, match="sums_v"):
+            _route_and_apply(
+                spark.createDataFrame(waves[0], ROW_DDL), 4, state
             )
-        with pytest.raises(ValueError, match="retention sweep"):
-            fold_versioned(
-                spark, base, "sums", SUMS_DDL, ["grp"], 0,
-                deltas(1, 1, 10), drop_when_zero="dn",
-            )
-        # the legitimate replay window is untouched
-        fold_versioned(
-            spark, base, "sums", SUMS_DDL, ["grp"], 2,
-            deltas(1, 1, 10), drop_when_zero="dn",
-        )
-        got = [(r.grp, r.n_rows, r.total) for r in
-               latest_sums(spark, base).collect()]
-        assert got == [(1, 3, 30)], got
-
-        # fresh table whose FIRST batch crashed: its own orphan version at
-        # the replayed epoch must not trip the guard
-        base2 = str(tmp_path / "state2")
-        os.makedirs(base2)
-        deltas(2, 5, 50).write.parquet(os.path.join(base2, "sums_v0"))
-        fold_versioned(
-            spark, base2, "sums", SUMS_DDL, ["grp"], 0,
-            deltas(1, 1, 10), drop_when_zero="dn",
-        )
-        got2 = [(r.grp, r.n_rows, r.total) for r in
-                latest_sums(spark, base2).collect()]
-        assert got2 == [(1, 1, 10)], got2
+        assert sorted(os.listdir(state)) == ["sums_v3"]
 
     def test_fold_epoch_store_replays_and_compacts_exactly(
         self, spark, tmp_path
@@ -707,9 +672,8 @@ class TestJoinIvmReplay:
         """r16 advice: a replay below the epoch-backed sums store's
         compacted base horizon must raise LOUDLY — epoch_overwrite would
         land the partition where read_folded_groups/read_epoch_store
-        silently filter it out, vanishing the replayed deltas (the exact
-        misuse class fold_versioned raises on and epochs_before_compacted
-        rejects for reads)."""
+        silently filter it out, vanishing the replayed deltas (the misuse
+        class epochs_before_compacted rejects for reads)."""
         import pytest
 
         from postgresql_cdc_spark.streaming.join_ivm import (
@@ -1110,53 +1074,65 @@ class TestJoinIvmReplay:
         }
         assert once == twice
 
-    def test_epoch_sums_backend_through_kernel(self, spark, tmp_path):
-        """sums_backend='epoch' inside apply_batch: a per-key-grained
-        group domain folds through the epoch store (O(|batch groups|)
-        writes, compaction-bounded partials) and serves the same answers
-        as the versioned backend, including under key re-points, deletes
-        and an at-least-once replay of the last batch."""
+    def test_epoch_sums_through_kernel(self, spark, tmp_path):
+        """The epoch-store sums inside apply_batch: a per-key-grained
+        group domain folds through ``sums_es`` (O(|batch groups|) writes,
+        compaction-bounded partials) and serves the hand-computed
+        aggregate, including under key re-points, deletes and an
+        at-least-once replay of the last batch."""
+        from postgresql_cdc_spark.streaming.epoch_maintenance import (
+            base_upto,
+        )
         from postgresql_cdc_spark.streaming.join_ivm import (
             JoinViewSpec,
             apply_batch,
             latest_view,
         )
 
-        def build(backend, state):
-            spec = JoinViewSpec(
-                fact_ddl="id long, cust long, v int, op string, lsn long",
-                fact_key="id",
-                fact_payload=("cust", "v"),
-                group_cols=("cust",),
-                measures=(("total", "v"),),
-                sums_backend=backend,
-            )
-            os.makedirs(state)
-            DDL = "id long, cust long, v int, op string, lsn long"
-            waves = [
-                [(i, i % 7, 10 + i, "I", 10 + i) for i in range(12)],
-                [(3, 5, 99, "U", 30), (6, None, None, "D", 31)],
-                [(0, 0, 1, "U", 40), (9, None, None, "D", 41)],
-            ]
-            for bid, w in enumerate(waves):
-                apply_batch(
-                    spark, state, bid, None,
-                    spark.createDataFrame(w, DDL),
-                    max_live_partials=2, spec=spec,
-                )
-            # at-least-once: replay the final batch
+        spec = JoinViewSpec(
+            fact_ddl="id long, cust long, v int, op string, lsn long",
+            fact_key="id",
+            fact_payload=("cust", "v"),
+            group_cols=("cust",),
+            measures=(("total", "v"),),
+        )
+        state = str(tmp_path / "es")
+        os.makedirs(state)
+        DDL = "id long, cust long, v int, op string, lsn long"
+        waves = [
+            [(i, i % 7, 10 + i, "I", 10 + i) for i in range(12)],
+            [(3, 5, 99, "U", 30), (6, None, None, "D", 31)],
+            [(0, 0, 1, "U", 40), (9, None, None, "D", 41)],
+            [(13, 2, 7, "I", 50)],
+        ]
+        for bid, w in enumerate(waves):
             apply_batch(
-                spark, state, 2, None,
-                spark.createDataFrame(waves[2], DDL),
+                spark, state, bid, None, spark.createDataFrame(w, DDL),
                 max_live_partials=2, spec=spec,
             )
-            return sorted(
-                (r.cust, r.dn, r.total)
-                for r in latest_view(spark, state, spec).collect()
-            )
-
-        got = build("epoch", str(tmp_path / "es"))
-        want = build("versioned", str(tmp_path / "vs"))
+        # at-least-once: replay the final batch
+        apply_batch(
+            spark, state, len(waves) - 1, None,
+            spark.createDataFrame(waves[-1], DDL),
+            max_live_partials=2, spec=spec,
+        )
+        assert base_upto(os.path.join(state, "sums_es")) > 0
+        rows: dict = {}
+        for w in waves:
+            for i, cust, v, op, _lsn in w:
+                if op == "D":
+                    rows.pop(i, None)
+                else:
+                    rows[i] = (cust, v)
+        agg: dict = {}
+        for cust, v in rows.values():
+            n, t = agg.get(cust, (0, 0))
+            agg[cust] = (n + 1, t + v)
+        want = sorted((c, n, t) for c, (n, t) in agg.items())
+        got = sorted(
+            (r.cust, r.dn, r.total)
+            for r in latest_view(spark, state, spec).collect()
+        )
         assert got == want, (got, want)
 
     def test_double_application_converges(self, spark, tmp_path):

@@ -41,7 +41,6 @@ def _outer_spec(join_type: str) -> JoinViewSpec:
         dims=(DimSpec(ddl=DIM_DDL, key="id", payload=("grp",),
                       fact_fk="did"),),
         join_type=join_type,
-        sums_backend="epoch",
     )
 
 
@@ -171,7 +170,6 @@ class TestEpochBackedSupports:
             measures=(("dq", "v"),),
             extrema=(("max_v", "max", "v", "int"),),
             distincts=(("n_v", "v", "int"),),
-            sums_backend="epoch",
         )
 
     def _apply(self, spark, state, bid, rows, spec):
@@ -181,9 +179,8 @@ class TestEpochBackedSupports:
         apply_batch(spark, state, bid, None, batch, spec=spec)
 
     def test_hicard_distincts_fold_and_serve(self, spark, tmp_path):
-        """r16 verdict item 1: supports now ride the epoch store when
-        sums_backend='epoch', so a per-customer COUNT(DISTINCT) folds
-        O(|batch|) per trigger. Value updates, re-points and deletes
+        """Supports ride the epoch store, so a
+        per-customer COUNT(DISTINCT) folds O(|batch|) per trigger. Value updates, re-points and deletes
         must all maintain the live multiset exactly."""
         spec = self._spec()
         state = str(tmp_path / "state")
@@ -234,8 +231,7 @@ class TestEpochBackedSupports:
         """Crash between the support fold and the sums fold: the
         support store carries a NEWER epoch than the sums store, and a
         serve in that window must ignore it — batch-N distinct counts
-        must never appear next to batch-(N-1) sums (the epoch-backend
-        generalization of the versioned prev_version anchoring)."""
+        must never appear next to batch-(N-1) sums."""
         from postgresql_cdc_spark.streaming.join_ivm import (
             fold_epoch_store,
         )
@@ -265,8 +261,7 @@ class TestEpochBackedSupports:
 
 
 class TestTopkPerGroup:
-    @pytest.mark.parametrize("backend", ["versioned", "epoch"])
-    def test_topk_tracks_evictions(self, spark, tmp_path, backend):
+    def test_topk_tracks_evictions(self, spark, tmp_path):
         """K-extrema through the support construction: the top-3
         distinct values per group must survive deletes evicting the
         current maximum (the case a max-only or sketch maintenance gets
@@ -279,11 +274,10 @@ class TestTopkPerGroup:
             group_cols=("cust",),
             distincts=(("n_v", "v", "int"),),
             topks=(("top", "v", "int", 3, "max"),),
-            sums_backend=backend,
         )
         # one physical support table backs both aggregates
         assert len(spec.supp_tables) == 1
-        state = str(tmp_path / f"state_{backend}")
+        state = str(tmp_path / "state")
         os.makedirs(state)
 
         def batch(rows):
@@ -322,9 +316,8 @@ class TestTopkPerGroup:
 
 
 class TestGlobalAggregateServe:
-    @pytest.mark.parametrize("backend", ["versioned", "epoch"])
     def test_group_less_view_serves_zero_row_after_drain(
-        self, spark, tmp_path, backend
+        self, spark, tmp_path
     ):
         """r16 advice #3: a group-less (global-aggregate) view whose
         state nets empty must serve SQL's one global row — COUNT 0,
@@ -337,9 +330,8 @@ class TestGlobalAggregateServe:
             measures=(("dq", "v"),),
             extrema=(("max_v", "max", "v", "int"),),
             distincts=(("n_v", "v", "int"),),
-            sums_backend=backend,
         )
-        state = str(tmp_path / f"state_{backend}")
+        state = str(tmp_path / "state")
         os.makedirs(state)
 
         def batch(rows):

@@ -45,14 +45,12 @@ def _fold(spark, store, upto, ddl=DDL, key="id"):
     )
 
 
-def _legacy_spark_fold(spark, store, upto, key="id", target_file_bytes=None):
+def _legacy_spark_fold(spark, store, upto, key="id"):
     """The fold kv stores ran before this one: Spark's latest-wins window,
     range-partitioned and sorted by key (INT96 timestamps)."""
-    kw = {} if target_file_bytes is None else {
-        "target_file_bytes": target_file_bytes}
     return compact_epochs(
         spark, store, upto, merge=lambda df: _resolve(df, key),
-        cluster_by=[key], **kw,
+        cluster_by=[key],
     )
 
 
@@ -185,7 +183,9 @@ def test_unsorted_base_raises_before_the_rename(spark, tmp_path):
     assert hidden_leftovers(store) == []
 
 
-def test_legacy_multi_file_spark_base_folds_in_part_order(spark, tmp_path):
+def test_legacy_multi_file_spark_base_folds_in_part_order(
+    spark, tmp_path, monkeypatch
+):
     """A base Spark's ``repartitionByRange`` fold wrote — several files,
     each a key range, INT96 timestamps — folds in part-number order into
     one sorted file that equals the Spark resolve."""
@@ -197,7 +197,8 @@ def test_legacy_multi_file_spark_base_folds_in_part_order(spark, tmp_path):
             (i, f"v{i}@{ep}", t0 + dt.timedelta(seconds=i), "I", ep * 1000 + i)
             for i in range(ep * 300, ep * 300 + 500)
         ], ddl)
-    _legacy_spark_fold(spark, store, 3, target_file_bytes=2048)
+    monkeypatch.setattr(em, "TARGET_FILE_BYTES", 2048)
+    _legacy_spark_fold(spark, store, 3)
     files = sorted(os.listdir(_base_dir(store, 3)))
     parts = [f for f in files if f.startswith("part-")]
     assert len(parts) > 2, files

@@ -9,12 +9,13 @@ ENTIRE new state every micro-batch (O(|state|) compute per trigger).
 The r14 rewrite backs the key states with epoch stores (per-batch write =
 the batch's collapsed rows only, ``maybe_compact`` folds old epochs
 behind a manifest-committed base), derives deltas from batch-keyed
-broadcast probes, and sweeps sums versions behind the previous
-generation. This soak drives 120 micro-batches — 12x the deterministic
+broadcast probes, and folds the sums into a compacted epoch store
+(``sums_es``). This soak drives 120 micro-batches — 12x the deterministic
 gate's stream age — and reports, at checkpoints along the stream's life:
 
-- disk objects (version dirs, live epoch partitions, parquet files) —
-  must stay BOUNDED, not grow with batch count;
+- disk objects (``sums_es`` partitions, the kv and arrangement stores'
+  epoch partitions, parquet files) — must stay BOUNDED, not grow with
+  batch count;
 - per-batch apply latency (median of the trailing window) — must stay
   FLAT, not grow with state/stream age;
 - and verifies the maintained sums EQUAL a driver-side one-shot
@@ -106,24 +107,25 @@ def _model_sums(dims: dict, facts: dict) -> list:
     return sorted((g, n, t) for g, (n, t) in agg.items() if n)
 
 
+def _partitions(store: str) -> int:
+    if not os.path.isdir(store):
+        return 0
+    return sum(1 for n in os.listdir(store) if n.startswith("ingest_epoch="))
+
+
 def _disk(state: str) -> dict:
-    """Bounded-lifecycle metrics: versioned dirs, live epoch partitions,
+    """Bounded-lifecycle metrics: the sums store's partitions (base +
+    live partials), the kv and arrangement stores' epoch partitions,
     parquet file count across the whole state tree."""
-    version_dirs = sum(
-        1 for n in os.listdir(state) if "_v" in n and not n.endswith("_kv")
+    partitions = sum(
+        _partitions(os.path.join(state, store))
+        for store in ("dim_kv", "fact_kv", "fact_by_did", "fact_delta")
     )
-    partitions = 0
-    for store in ("dim_kv", "fact_kv", "fact_by_did", "fact_delta"):
-        p = os.path.join(state, store)
-        if os.path.isdir(p):
-            partitions += sum(
-                1 for n in os.listdir(p) if n.startswith("ingest_epoch=")
-            )
     files = 0
     for root, _dirs, names in os.walk(state):
         files += sum(1 for n in names if n.endswith(".parquet"))
     return {
-        "version_dirs": version_dirs,
+        "sums_partitions": _partitions(os.path.join(state, "sums_es")),
         "epoch_partitions": partitions,
         "parquet_files": files,
     }
@@ -200,11 +202,18 @@ def main() -> int:
 # of bounded row groups and the probe pushes the batch's keys as range
 # predicates, so probe_scan_rows (the fact_kv scan's numOutputRows for a
 # 3-key probe, measured below) must stop tracking |state| too.
-# target_file_bytes here is scaled down (16 KiB) so the arrangements'
-# MB-sized state splits into multiple base files the way 128 MiB files
-# split TB-sized state — same files-per-state ratio, same pruning geometry.
+# The compare modes scale epoch_maintenance.TARGET_FILE_BYTES down (16 KiB)
+# so the arrangements' MB-sized state splits into multiple base files the
+# way 128 MiB files split TB-sized state — same files-per-state ratio, same
+# pruning geometry.
 
 _SOAK_FILE_BYTES = 16 * 1024
+
+
+def _use_soak_geometry() -> None:
+    from postgresql_cdc_spark.streaming import epoch_maintenance
+
+    epoch_maintenance.TARGET_FILE_BYTES = _SOAK_FILE_BYTES
 
 
 def _probe_scan_rows(spark, state: str, keys: list[int]) -> int:
@@ -264,7 +273,6 @@ def _scale_run(
                 F.col("k").alias("fid"), F.col("a").alias("did"),
                 F.col("b").cast("int").alias("amount"), "op", "lsn"),
             max_live_partials=CAP,
-            target_file_bytes=_SOAK_FILE_BYTES,
         )
         # then n_small SMALL batches of fixed size against the big state
         lsn0 = 10 + n_dim + n_fact
@@ -300,7 +308,6 @@ def _scale_run(
                     F.col("k").alias("fid"), F.col("a").alias("did"),
                     F.col("b").cast("int").alias("amount"), "op", "lsn"),
                 max_live_partials=CAP,
-                target_file_bytes=_SOAK_FILE_BYTES,
             )
             times.append(time.monotonic() - t0)
         got = sorted(
@@ -328,6 +335,7 @@ def _scale_run(
 def scale_compare() -> int:
     from postgresql_cdc_spark.session import get_spark
 
+    _use_soak_geometry()
     spark = get_spark("join-ivm-scale-compare")
     out = {}
     for n in (5_000, 50_000):
@@ -346,26 +354,20 @@ def scale_compare() -> int:
     return 0
 
 
-# --- high-cardinality sums-backend comparison (--hicard-compare) --------------
+# --- high-cardinality sums comparison (--hicard-compare) ---------------------
 # Pins r15's fold_epoch_store claim: per-batch sums I/O must be
 # O(|batch groups|), independent of the group-domain size. A customer-
-# grained view (one group per key) is maintained twice — once on
-# fold_versioned (full-version rewrite: |groups| rows written per batch)
-# and once on fold_epoch_store (the batch's grouped deltas only) — at G
-# and 10G groups. The versioned column's rows-written-per-batch tracks G;
-# the epoch-backed column stays at |batch|.
+# grained view (one group per key) is maintained at G and 10G groups; the
+# rows written per batch must stay at |batch| in both.
 
-def _hicard_run(spark, n_keys: int, backend: str, n_small: int = 40) -> dict:
+def _hicard_run(spark, n_keys: int, n_small: int = 40) -> dict:
     import tempfile as _tf
 
     from pyspark.sql import functions as F
 
     from postgresql_cdc_spark.streaming.join_ivm import (
         fold_epoch_store,
-        fold_versioned,
-        prev_version,
         read_folded_groups,
-        version_dir,
     )
     from postgresql_cdc_spark.streaming.kv_store import ingest_and_delta
 
@@ -394,25 +396,13 @@ def _hicard_run(spark, n_keys: int, backend: str, n_small: int = 40) -> dict:
             F.col("sign").cast("long").alias("dn"),
             (F.col("sign") * F.col("v")).cast("long").alias("dq"),
         )
-        if backend == "versioned":
-            fold_versioned(
-                spark, base, "sums", SUMS, ["cust"], ep, delta,
-                drop_when_zero="dn",
-            )
-            written = spark.read.schema(SUMS).parquet(
-                version_dir(base, "sums", ep)
-            ).count()
-        else:
-            fold_epoch_store(
-                spark, sums_store, SUMS, ["cust"], ep, delta,
-                target_file_bytes=_SOAK_FILE_BYTES,
-            )
-            written = (
-                spark.read.schema(SUMS + ", ingest_epoch int")
-                .parquet(sums_store)
-                .where(F.col("ingest_epoch") == ep)
-                .count()
-            )
+        fold_epoch_store(spark, sums_store, SUMS, ["cust"], ep, delta)
+        written = (
+            spark.read.schema(SUMS + ", ingest_epoch int")
+            .parquet(sums_store)
+            .where(F.col("ingest_epoch") == ep)
+            .count()
+        )
         return time.monotonic() - t0, written
 
     apply(0, [(i, (i * 7) % 13) for i in range(n_keys)])
@@ -424,18 +414,12 @@ def _hicard_run(spark, n_keys: int, backend: str, n_small: int = 40) -> dict:
         times.append(t)
         rows_written.append(w)
 
-    if backend == "versioned":
-        last = prev_version(base, "sums", None)
-        served = spark.read.schema(SUMS).parquet(
-            version_dir(base, "sums", last)
-        )
-    else:
-        served = read_folded_groups(
-            spark, sums_store, SUMS, ["cust"], drop_when_zero="dn"
-        )
+    served = read_folded_groups(
+        spark, sums_store, SUMS, ["cust"], drop_when_zero="dn"
+    )
     got = sorted((r.cust, r.dn, r.dq) for r in served.collect())
     want = sorted((i, 1, v) for i, v in model.items())
-    assert got == want, (backend, n_keys, got[:5], want[:5])
+    assert got == want, (n_keys, got[:5], want[:5])
     shutil.rmtree(base, ignore_errors=True)
     ts, ws = sorted(times), sorted(rows_written)
     return {
@@ -453,6 +437,7 @@ def batch_compare() -> int:
     these sizes; what it must NOT do is pick up an O(|state|) term."""
     from postgresql_cdc_spark.session import get_spark
 
+    _use_soak_geometry()
     spark = get_spark("join-ivm-batch-compare")
     out = {}
     for scale in (1, 10):
@@ -567,8 +552,7 @@ def _star_run(spark, n_fact: int, n_small: int = 40) -> dict:
         model_apply(seed)
         dims_b, fact_b = route(seed)
         apply_batch(spark, state, 0, dims_b, fact_b,
-                    max_live_partials=CAP,
-                    target_file_bytes=_SOAK_FILE_BYTES, spec=spec)
+                    max_live_partials=CAP, spec=spec)
 
         times = []
         jobs = []
@@ -604,8 +588,7 @@ def _star_run(spark, n_fact: int, n_small: int = 40) -> dict:
             t0 = time.monotonic()
             try:
                 apply_batch(spark, state, ep, dims_b, fact_b,
-                            max_live_partials=CAP,
-                            target_file_bytes=_SOAK_FILE_BYTES, spec=spec)
+                            max_live_partials=CAP, spec=spec)
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
             times.append(time.monotonic() - t0)
@@ -651,6 +634,7 @@ def _star_run(spark, n_fact: int, n_small: int = 40) -> dict:
 def star_compare() -> int:
     from postgresql_cdc_spark.session import get_spark
 
+    _use_soak_geometry()
     spark = get_spark("join-ivm-star-compare")
     out = {}
     for n in (5_000, 50_000):
@@ -735,7 +719,7 @@ def _chain_run(spark, n_ord: int, n_small: int = 40) -> dict:
             spark,
             [(comp_state, comp_spec, c_b), (fact_state, fact_spec, f_b)],
             bid, top_d_batch=n_b,
-            max_live_partials=CAP, target_file_bytes=_SOAK_FILE_BYTES,
+            max_live_partials=CAP,
         )
 
     try:
@@ -811,6 +795,7 @@ def _chain_run(spark, n_ord: int, n_small: int = 40) -> dict:
 def chain_compare() -> int:
     from postgresql_cdc_spark.session import get_spark
 
+    _use_soak_geometry()
     spark = get_spark("join-ivm-chain-compare")
     out = {}
     for n in (5_000, 50_000):
@@ -824,13 +809,11 @@ def chain_compare() -> int:
     return 0
 
 
-def _distinct_run(spark, n_keys: int, backend: str,
-                  n_small: int = 40) -> dict:
+def _distinct_run(spark, n_keys: int, n_small: int = 40) -> dict:
     """COUNT(DISTINCT)/MAX over a high-cardinality group domain driven
     through the REAL kernel path (apply_batch with a support-bearing
     spec): measures per-trigger support rows written, batch seconds and
-    Spark job counts, for the versioned backend (full |supports| rewrite
-    per trigger) vs the epoch backend (r17: O(|batch|) per trigger)."""
+    Spark job counts (O(|batch|) per trigger)."""
     import tempfile as _tf
 
     from pyspark.sql import functions as F
@@ -839,8 +822,6 @@ def _distinct_run(spark, n_keys: int, backend: str,
         JoinViewSpec,
         apply_batch,
         latest_view,
-        prev_version,
-        version_dir,
     )
 
     DDL = "id long, cust long, v int, op string, lsn long"
@@ -852,7 +833,6 @@ def _distinct_run(spark, n_keys: int, backend: str,
         measures=(("dq", "v"),),
         extrema=(("max_v", "max", "v", "int"),),
         distincts=(("n_v", "v", "int"),),
-        sums_backend=backend,
     )
     prefix = spec.supp_tables[0][0]
     base = _tf.mkdtemp(prefix=f"jivm_dx_{uuid.uuid4().hex[:8]}_")
@@ -873,24 +853,18 @@ def _distinct_run(spark, n_keys: int, backend: str,
         sc.setLocalProperty("spark.jobGroup.id", tag)
         t0 = time.monotonic()
         try:
-            apply_batch(spark, state, ep, None, batch,
-                        target_file_bytes=_SOAK_FILE_BYTES, spec=spec)
+            apply_batch(spark, state, ep, None, batch, spec=spec)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         dt = time.monotonic() - t0
         n_jobs = len(sc.statusTracker().getJobIdsForGroup(tag))
-        if backend == "versioned":
-            written = spark.read.schema(spec.supp_ddl("int")).parquet(
-                version_dir(state, prefix, ep)
-            ).count()
-        else:
-            written = (
-                spark.read
-                .schema(spec.supp_ddl("int") + ", ingest_epoch int")
-                .parquet(os.path.join(state, f"{prefix}_es"))
-                .where(F.col("ingest_epoch") == ep)
-                .count()
-            )
+        written = (
+            spark.read
+            .schema(spec.supp_ddl("int") + ", ingest_epoch int")
+            .parquet(os.path.join(state, f"{prefix}_es"))
+            .where(F.col("ingest_epoch") == ep)
+            .count()
+        )
         return dt, written, n_jobs
 
     try:
@@ -915,9 +889,7 @@ def _distinct_run(spark, n_keys: int, backend: str,
             (r.cust, r.dn, r.dq, r.max_v, r.n_v)
             for r in latest_view(spark, state, spec).collect()
         )
-        assert got == want, (backend, n_keys, got[:5], want[:5])
-        if backend == "versioned":
-            assert prev_version(state, prefix, None) is not None
+        assert got == want, (n_keys, got[:5], want[:5])
         ts, ws, js = sorted(times), sorted(written), sorted(jobs)
         return {
             "support_domain_rows": n_keys,
@@ -931,30 +903,21 @@ def _distinct_run(spark, n_keys: int, backend: str,
 
 def distinct_compare() -> int:
     """r16 verdict item 1's done bar: at 10x the support domain, the
-    epoch backend's per-trigger support writes must stay ~1.0x (it
-    writes only the batch's grouped deltas) while the versioned
-    backend's scale with the domain (the full-rewrite class this
-    round removed from the hot path)."""
+    per-trigger support writes must stay ~1.0x (each trigger writes only
+    the batch's grouped deltas)."""
     from postgresql_cdc_spark.session import get_spark
 
     spark = get_spark("join-ivm-distinct-compare")
     out: dict = {}
-    for backend in ("versioned", "epoch"):
-        for n in (500, 5_000):
-            print(f"  {backend} @ {n} support rows ...",
-                  file=sys.stderr, flush=True)
-            out[f"{backend}_{n}"] = _distinct_run(spark, n, backend)
-    out["versioned_supp_rows_ratio_10x"] = round(
-        out["versioned_5000"]["supp_rows_written_median"]
-        / max(1, out["versioned_500"]["supp_rows_written_median"]), 2,
+    for n in (500, 5_000):
+        print(f"  {n} support rows ...", file=sys.stderr, flush=True)
+        out[n] = _distinct_run(spark, n)
+    out["supp_rows_ratio_10x"] = round(
+        out[5_000]["supp_rows_written_median"]
+        / max(1, out[500]["supp_rows_written_median"]), 2,
     )
-    out["epoch_supp_rows_ratio_10x"] = round(
-        out["epoch_5000"]["supp_rows_written_median"]
-        / max(1, out["epoch_500"]["supp_rows_written_median"]), 2,
-    )
-    out["epoch_batch_s_ratio_10x"] = round(
-        out["epoch_5000"]["batch_s_median"]
-        / out["epoch_500"]["batch_s_median"], 2,
+    out["batch_s_ratio_10x"] = round(
+        out[5_000]["batch_s_median"] / out[500]["batch_s_median"], 2,
     )
     print(json.dumps({"join_ivm_distinct_compare": out}, indent=2))
     return 0
@@ -965,21 +928,15 @@ def hicard_compare() -> int:
 
     spark = get_spark("join-ivm-hicard-compare")
     out: dict = {}
-    for backend in ("versioned", "epoch"):
-        for n in (500, 5_000):
-            print(f"  {backend} @ {n} groups ...", file=sys.stderr, flush=True)
-            out[f"{backend}_{n}"] = _hicard_run(spark, n, backend)
-    out["versioned_rows_ratio_10x_groups"] = round(
-        out["versioned_5000"]["sums_rows_written_median"]
-        / max(1, out["versioned_500"]["sums_rows_written_median"]), 2,
+    for n in (500, 5_000):
+        print(f"  {n} groups ...", file=sys.stderr, flush=True)
+        out[n] = _hicard_run(spark, n)
+    out["rows_ratio_10x_groups"] = round(
+        out[5_000]["sums_rows_written_median"]
+        / max(1, out[500]["sums_rows_written_median"]), 2,
     )
-    out["epoch_rows_ratio_10x_groups"] = round(
-        out["epoch_5000"]["sums_rows_written_median"]
-        / max(1, out["epoch_500"]["sums_rows_written_median"]), 2,
-    )
-    out["epoch_batch_s_ratio_10x_groups"] = round(
-        out["epoch_5000"]["batch_s_median"]
-        / out["epoch_500"]["batch_s_median"], 2,
+    out["batch_s_ratio_10x_groups"] = round(
+        out[5_000]["batch_s_median"] / out[500]["batch_s_median"], 2,
     )
     print(json.dumps({"join_ivm_hicard_compare": out}, indent=2))
     return 0

@@ -198,9 +198,9 @@ def _stream_ingest_soak(spark, sf_dir: str) -> dict:
     matches_dir = os.path.join(base, "matches")
     batch_s: list = []  # driver-side: foreachBatch runs in this process
 
-    from postgresql_cdc_spark.streaming.epoch_io import (
-        epoch_overwrite,
-        epochs_before,
+    from postgresql_cdc_spark.streaming.epoch_io import epoch_overwrite
+    from postgresql_cdc_spark.streaming.epoch_maintenance import (
+        epochs_before_compacted,
     )
 
     def ingest(batch: DataFrame, epoch: int) -> None:
@@ -210,9 +210,9 @@ def _stream_ingest_soak(spark, sf_dir: str) -> dict:
         ep = int(epoch)
         if os.path.isdir(idx["buckets"]):
             ci = dd.LshIndex(
-                epochs_before(sp, idx["buckets"], ep),
-                epochs_before(sp, idx["sizes"], ep),
-                epochs_before(sp, idx["postings"], ep),
+                epochs_before_compacted(sp, idx["buckets"], ep),
+                epochs_before_compacted(sp, idx["sizes"], ep),
+                epochs_before_compacted(sp, idx["postings"], ep),
             )
             epoch_overwrite(
                 dd.minhash_lsh_incremental(
